@@ -239,7 +239,7 @@ def _calib_worker(_: int) -> float:
 _MC_PROBE_N = 8
 
 
-def _epoch_calib_mc(n: int = _MC_PROBE_N) -> dict:
+def _epoch_calib_mc(n: int = _MC_PROBE_N) -> dict | None:
     """Multi-core epoch probe (r16 judge item 1b): the single-thread
     probe measured 0.609–0.715 s across runs whose MULTI-core
     throughput differed by 2x+ — it cannot detect effective-core
@@ -247,20 +247,31 @@ def _epoch_calib_mc(n: int = _MC_PROBE_N) -> dict:
     Run the same pure-CPU loop in ``n`` concurrent processes: on an
     uncontended host wall ~= the solo time and eff_cores ~= n; under
     core collapse wall stretches and eff_cores = n*solo/wall drops.
-    ~1 s total; runs outside every timed region."""
+    ~1 s total; runs outside every timed region.
+
+    The pool is spawned, not forked: forking a process with live py4j
+    threads can deadlock the child. Any probe failure returns None
+    (recorded as null), so the probe can never lose the bench artifact."""
     import concurrent.futures
     import multiprocessing
 
-    solo = _calib_worker(0)
-    ctx = multiprocessing.get_context("fork")
-    with concurrent.futures.ProcessPoolExecutor(
-        max_workers=n, mp_context=ctx
-    ) as pool:
-        # warm the pool so process fork/startup stays outside the window
-        list(pool.map(int, range(n)))
-        t0 = time.perf_counter()
-        list(pool.map(_calib_worker, range(n)))
-        wall = time.perf_counter() - t0
+    try:
+        solo = _calib_worker(0)
+        ctx = multiprocessing.get_context("spawn")
+        with concurrent.futures.ProcessPoolExecutor(
+            max_workers=n, mp_context=ctx
+        ) as pool:
+            # warm the pool so process startup stays outside the window
+            list(pool.map(int, range(n)))
+            t0 = time.perf_counter()
+            list(pool.map(_calib_worker, range(n)))
+            wall = time.perf_counter() - t0
+    except Exception:  # noqa: BLE001 — a probe must not kill the bench
+        import traceback
+
+        print("# multi-core epoch probe failed:", file=sys.stderr)
+        traceback.print_exc()
+        return None
     return {
         "n": n,
         "solo_s": round(solo, 3),
@@ -292,8 +303,8 @@ def main() -> int:
     calib_mc_start = _epoch_calib_mc()
     print(
         f"# epoch calibration: {calib_start}s single,"
-        f" {calib_mc_start['eff_cores']} effective cores"
-        f" ({calib_mc_start['n']} procs)",
+        f" {(calib_mc_start or {}).get('eff_cores')} effective cores"
+        f" ({_MC_PROBE_N} procs)",
         file=sys.stderr,
     )
 

@@ -17,13 +17,17 @@ default) and yields frames containing only COMPLETE groups, holding
 back just the one group that may straddle the batch boundary — the
 upstream ``repartition(keys) + sortWithinPartitions(keys, ...)``
 guarantees group contiguity and in-group row order, so a single carry
-buffer suffices. Peak Python-side memory: one Arrow batch + one group
+buffer suffices. The carry is a list of batch slices, concatenated once
+per yielded chunk, so a group spanning many batches costs O(group), not
+O(group²/batch). Peak Python-side memory: one Arrow batch + one group
 (a group larger than a batch accumulates until it completes — holding
-one whole group is inherent to any per-group kernel). Group-internal
-row order is preserved (carry rows precede the next batch's rows), so
-order-sensitive kernels (KLL insertion order) are unaffected, and each
-group lands in exactly one yielded chunk, so per-group results are
-identical to the whole-partition form.
+one whole group is inherent to any per-group kernel). Group boundaries
+come from ``group_bounds``, which the kernels also use to walk groups
+inside a chunk; null keys (None/NaN/NaT) form one group, as in SQL.
+Group-internal row order is preserved (carry rows precede the next
+batch's rows), so order-sensitive kernels (KLL insertion order) are
+unaffected, and each group lands in exactly one yielded chunk, so
+per-group results are identical to the whole-partition form.
 """
 
 from __future__ import annotations
@@ -34,16 +38,27 @@ import numpy as np
 import pandas as pd
 
 
+def group_bounds(*keys: np.ndarray) -> np.ndarray:
+    """Start index of every run of equal consecutive keys, plus the
+    length as a final sentinel, so ``zip(b[:-1], b[1:])`` walks the
+    groups. Null keys (None/NaN/NaT) compare equal to each other, as
+    in a SQL GROUP BY. Requires group-contiguous rows."""
+    n = len(keys[0])
+    if n == 0:
+        return np.zeros(1, dtype=np.intp)
+    differs = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        d = k[1:] != k[:-1]
+        if k.dtype.kind in "fcmMO":
+            na = pd.isna(k)
+            d &= ~(na[1:] & na[:-1])
+        differs |= d
+    return np.flatnonzero(np.r_[True, differs, True])
+
+
 def _last_group_start(pdf: pd.DataFrame, cols: Sequence[str]) -> int:
-    """Index where the frame's LAST group (== last row's key) begins.
-    Requires group-contiguous rows; works for any column dtype."""
-    differs = None
-    for c in cols:
-        vals = pdf[c].to_numpy()
-        d = vals != vals[-1]
-        differs = d if differs is None else (differs | d)
-    idx = np.flatnonzero(differs)
-    return int(idx[-1]) + 1 if idx.size else 0
+    """Index where the frame's LAST group (== last row's key) begins."""
+    return int(group_bounds(*(pdf[c].to_numpy() for c in cols))[-2])
 
 
 def complete_group_chunks(
@@ -51,17 +66,24 @@ def complete_group_chunks(
 ) -> Iterator[pd.DataFrame]:
     """Re-chunk an iterator of group-contiguous pandas frames into
     frames of complete ``cols``-groups (see module docstring)."""
-    carry: pd.DataFrame | None = None
+    carry: list[pd.DataFrame] = []  # the held-back group, one frame per batch
     for pdf in batches:
         if not len(pdf):
             continue
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
         cut = _last_group_start(pdf, cols)
-        if cut > 0:
-            yield pdf.iloc[:cut]
+        if cut == 0 and carry:
+            seam = pd.concat([carry[-1].iloc[-1:], pdf.iloc[:1]])
+            if _last_group_start(seam, cols) == 0:
+                carry.append(pdf)  # the held-back group continues
+                continue
+        done = carry + [pdf.iloc[:cut]] if cut else carry
+        if done:
+            yield _concat(done)
         # the trailing group may continue in the next batch: hold it
-        carry = pdf.iloc[cut:]
-    if carry is not None and len(carry):
-        yield carry
+        carry = [pdf.iloc[cut:]]
+    if carry:
+        yield _concat(carry)
+
+
+def _concat(frames: list[pd.DataFrame]) -> pd.DataFrame:
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)

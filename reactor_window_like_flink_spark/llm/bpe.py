@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -141,7 +142,7 @@ def learn_bpe_merges(
     6.0 s → sub-second at sf0.1); a larger one runs the distributed
     round loop. Both paths share the argmax tie-break and greedy
     application and produce IDENTICAL merges (tested)."""
-    vocab = _word_vocab(docs).localCheckpoint(eager=False)
+    vocab = materialize(_word_vocab(docs))
     if driver_vocab_max and vocab.count() <= driver_vocab_max:
         rows = vocab.collect()
         return _learn_sequential(
@@ -168,7 +169,7 @@ def learn_bpe_merges(
         merges.append((rank, left, right, c))
         new_vocab = vocab.mapInPandas(
             _apply_merge(left, right), "sym array<string>, freq long"
-        ).localCheckpoint(eager=False)
+        ).transform(materialize)
         vocab = new_vocab
     return merges
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.dedup import exact_jaccard_pairs
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -107,7 +108,7 @@ def connected_components_star(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     for _ in range(max_rounds):
         # large-star over the symmetrized list: (v, m) for v > u
@@ -131,7 +132,7 @@ def connected_components_star(
             .union(m_small.select("src", F.col("m").alias("dst")))
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(materialize)
         )
         if new.subtract(e).isEmpty() and e.subtract(new).isEmpty():
             e = new
@@ -158,15 +159,15 @@ def connected_components(
     for adversarial/long-chain graphs."""
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)  # materialize once; reused every round
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint(eager=False)
+    ).transform(materialize)  # reused every round
+    labels = materialize(nodes.select("node", F.col("node").alias("comp")))
     for _ in range(max_rounds):
         nbr = sym.join(labels, sym.src == labels.node).select(
             F.col("dst").alias("node"), "comp"
         )
-        new = (
+        new = materialize(
             labels.union(nbr).groupBy("node").agg(F.min("comp").alias("comp"))
-        ).localCheckpoint(eager=False)
+        )
         changed = (
             new.alias("n")
             .join(labels.alias("o"), "node")
@@ -264,10 +265,6 @@ def pagerank(
     ).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     ).distinct()
-    # Lazy checkpoint + the sizing count as its materializing action: the
-    # eager form paid one job for the checkpoint copy and a second for
-    # n_total; fusing them halves the setup jobs (r16, guide §1.2 —
-    # per-job overhead is the multiplier on iterative keys).
     adj = (
         sym.groupBy("src")
         .agg(
@@ -275,11 +272,9 @@ def pagerank(
             F.count("*").alias("outdeg"),
         )
         .repartition(n_parts, "src")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
-    # symmetrized graph: every node appears as a src; a plain projection
-    # of the checkpointed adj (no second checkpoint copy needed — the
-    # per-round re-projection is a map over cached blocks)
+    # symmetrized graph: every node appears as a src
     nodes = adj.select(F.col("src").alias("node"))
     n_total = nodes.count()
     if n_total == 0:
@@ -305,14 +300,12 @@ def pagerank(
                 F.lit(base) + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
             ).alias("rank"),
         )
-        # Cadence 3 with no checkpoint after the LAST round: each eager
-        # localCheckpoint is one full job, and the final noop/collect
-        # action executes the tail segment anyway. Measured at sf0.1
-        # (10 iters): cadence-2-plus-final 14.6 s → cadence-3 7.2 s,
-        # identical 6dp output; cadence 5 and no-checkpoint within noise
-        # but deeper plans — 3 keeps analysis O(1) per segment (r16).
+        # Cut lineage every 3rd round, not after the last (the
+        # consumer's action runs the tail). Measured at sf0.1 (10
+        # iters): cadence 2 plus final 14.6 s → cadence 3 7.2 s,
+        # identical 6dp output; 3 keeps analysis O(1) per segment.
         if (i + 1) % 3 == 0 and i != iters - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = materialize(ranks)
     return ranks.select("node", (F.round(F.col("rank") * 1000000, 0) / 1000000.0).alias("rank"))
 
 
@@ -388,13 +381,12 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     # exchange of the symmetrized pair stream on the same set semantics
     # (r16, guide §2.4; measured 8.9 s → 5.4 s at sf0.1, labels
     # identical — votes are integer counts over the neighbor SET, so
-    # in-array order is irrelevant). Lazy checkpoint: the first round's
-    # vote job materializes it; no standalone checkpoint job.
+    # in-array order is irrelevant).
     adj = (
         sym.groupBy("src")
         .agg(F.collect_set("dst").alias("dsts"))
         .repartition(n_parts, "src")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     labels = adj.select(F.col("src").alias("node"), F.col("src").alias("label"))
     for i in range(rounds):
@@ -409,10 +401,9 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
                 "label", F.struct(F.col("votes"), (-F.col("label")).alias("_t"))
             ).alias("label")
         )
-        # cadence 3, no checkpoint after the last round (the consumer's
-        # action runs the tail) — same job-count rationale as pagerank
+        # cadence 3, no checkpoint after the last round, as in pagerank
         if (i + 1) % 3 == 0 and i != rounds - 1:
-            labels = labels.localCheckpoint(eager=False)
+            labels = materialize(labels)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -512,7 +503,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
 
 def _kcore_build(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Symmetrized+deduped edge list and the initial degree frame, both
-    lazily checkpointed (the first consumer action materializes them).
+    materialized.
     The edge list is partitioned by dst: the per-round decrement
     aggregate groups on dst, so the groupBy reuses this layout and the
     whole round runs EXCHANGE-FREE over the checkpointed blocks (r16,
@@ -526,14 +517,14 @@ def _kcore_build(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .distinct()
         .repartition(n_parts, "dst")
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     # full degree aggregate happens exactly once; afterwards the frame
     # is maintained by frontier-sized decrements
     deg = (
         sym.groupBy("src")
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     return sym, deg
 
@@ -610,9 +601,8 @@ def _kcore_loop(
     two_m: int | None = None,
 ) -> DataFrame:
     """Delta-peel rounds to the fixpoint (see ``kcore``). One job per
-    round: the round's frontier count doubles as the materializing
-    action of its lazily-checkpointed degree frame (previously: eager
-    checkpoint + isEmpty = two extra jobs per round, r16 guide §1.2).
+    round: the round's frontier count also fills its degree frame's
+    checkpoint.
 
     ``two_m`` (the directed-edge count, when the caller already knows
     it) arms the local-finish gate: below ``KCORE_LOCAL_FINISH_EDGES``
@@ -631,9 +621,9 @@ def _kcore_loop(
         )
     bad = deg.filter(F.col("deg") < k).select("src")
     for _ in range(max_rounds):
-        upd = _kcore_round(sym, deg, bad, k).localCheckpoint(eager=False)
+        upd = materialize(_kcore_round(sym, deg, bad, k))
         nxt = upd.filter(F.col("touched") & (F.col("deg") < k))
-        n_bad = nxt.count()  # materializes this round's checkpoint
+        n_bad = nxt.count()
         deg = upd.select("src", "deg")
         bad = nxt.select("src")
         if n_bad == 0:

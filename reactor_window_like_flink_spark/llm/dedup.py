@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -165,7 +166,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine — the shuffle carries 32 longs per doc, never the shingle
     sets). Candidates come from a self-join on (band_id, band_hash) —
     bucket-sized partitions, never |docs|². The band frame and the
-    hashed-shingle sets are each materialized ONCE (localCheckpoint):
+    hashed-shingle sets are each materialized ONCE:
     measured, ReuseExchange does NOT dedup the self-join sides here
     (AQE re-plans each side independently), so without the checkpoint
     the signature aggregate and the tokenize+hash pass each ran twice.
@@ -176,11 +177,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     hints are reserved for scanned dimension tables).
     """
     toks = _tokenized(spark, sf_dir)
-    bands = minhash_bands(toks).localCheckpoint(
-        eager=False
-    )  # both self-join sides: signature agg runs once (lazy — the
-    # final action materializes it; an eager copy is a whole extra job,
-    # r16 guide §1.2, and block-level locks still dedup the compute)
+    bands = materialize(minhash_bands(toks))  # both self-join sides
     a, b = bands.alias("a"), bands.alias("b")
     candidates = (
         a.join(
@@ -199,9 +196,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # confirm shuffle carries 8-byte elements instead of full shingle text
     # (~10x smaller rows). The brute-force test compares against literal
     # string sets, keeping the hashed form honest.
-    sets = hashed_shingle_sets(toks).localCheckpoint(
-        eager=False
-    )  # read by both confirm sides: hash pass runs once
+    sets = materialize(hashed_shingle_sets(toks))  # both confirm sides
     with_a = sets.join(candidates, sets.doc_id == candidates.doc_a).select(
         "doc_a", "doc_b", F.col("sh").alias("sh_a")
     )
@@ -572,27 +567,7 @@ def containment_pairs(
     """Exact containment self-join with the asymmetric prefix filter —
     see ``q_dedup_containment`` for the theorem and scale rationale."""
     t = threshold
-    hashed = _tokenized(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.transform(
-            _shingles_from_toks(shingle_n), lambda x: F.xxhash64(x)
-        ).alias("hs"),
-    ).localCheckpoint()  # read by 4 passes: df count, prefix, full, verify
-    ex = hashed.select("doc_id", F.explode("hs").alias("h"))
-    dfreq = ex.groupBy("h").agg(F.count("*").alias("df"))
-    ranked = (
-        ex.join(dfreq, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(df, h))), s -> s.h)"
-            ).alias("sorted_hs")
-        )
-    )
-    docs2 = (
-        hashed.select("doc_id", "lang").join(ranked, "doc_id").localCheckpoint()
-    )
+    docs2 = _df_ranked_docs(_hashed_docs(spark, sf_dir, shingle_n))
     prefix = docs2.select(
         "doc_id",
         "lang",
@@ -637,13 +612,7 @@ def containment_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sets = docs2.select("doc_id", "sorted_hs")
-    with_a = sets.join(cand, sets.doc_id == cand.doc_a).select(
-        "doc_a", "doc_b", F.col("sorted_hs").alias("hs_a")
-    )
-    paired = sets.join(with_a, sets.doc_id == with_a.doc_b).select(
-        "doc_a", "doc_b", "hs_a", F.col("sorted_hs").alias("hs_b")
-    )
+    paired = _verify_pairs(docs2, cand)
     inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
     cont_a = inter / F.size("hs_a")
     cont_b = inter / F.size("hs_b")
@@ -854,17 +823,14 @@ def emb_band_buckets_fast(
     bands: int | None = None,
     bits: int | None = None,
     seed: int = EMB_LSH_SEED,
-    materialize: bool = False,
     n_vectors: int | None = None,
 ) -> DataFrame:
     """Production-kernel twin of ``emb_band_buckets``: the same sign-LSH
     assignment as ONE numpy matmul per Arrow batch instead of
     bands x bits interpreted HOF folds per row (the measured
-    fixed-width-numeric kernel rule, BASELINE.md). Pass
-    ``materialize=True`` from call sites that consume the buckets more
-    than once (the self-joining dedup/kNN builders do — ReusedExchange
-    can't fire across a Python mapInPandas); single-consumption callers
-    keep the default and skip the eager localCheckpoint copy.
+    fixed-width-numeric kernel rule, BASELINE.md). ReusedExchange can't
+    fire across the Python mapInPandas, so a caller that reads the
+    buckets more than once materializes them itself.
 
     ``bits=None`` (the default) sizes the bucket width from the corpus
     count via ``auto_lsh_bits`` because banded candidate volume is
@@ -915,8 +881,7 @@ def emb_band_buckets_fast(
                 }
             )
 
-    out = emb.mapInPandas(sig_batches, "vec_id long, band int, bucket int")
-    return out.localCheckpoint() if materialize else out
+    return emb.mapInPandas(sig_batches, "vec_id long, band int, bucket int")
 
 
 def emb_band_buckets(
@@ -1086,6 +1051,11 @@ def lsh_cosine_pairs_fast(
     import numpy as np
     import pandas as pd
 
+    from reactor_window_like_flink_spark.functions.batching import (
+        complete_group_chunks,
+        group_bounds,
+    )
+
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if bands is None and bits is None:
         bands, bits = auto_lsh_plan(emb.count(), threshold)
@@ -1117,7 +1087,7 @@ def lsh_cosine_pairs_fast(
         key, ids = key[order], vec_id[order]
         x = np.stack(pdf["embedding"].to_numpy())[order].astype("float64")
         xn = x / np.linalg.norm(x, axis=1)[:, None]
-        bounds = np.flatnonzero(np.r_[True, key[1:] != key[:-1], True])
+        bounds = group_bounds(key)
         va: list = []
         vb: list = []
         cs: list = []
@@ -1149,10 +1119,6 @@ def lsh_cosine_pairs_fast(
         # (one Arrow batch + the one straddling group held back) instead
         # of concatenating the whole partition — identical per-group
         # math, bounded Python heap (see functions/batching.py).
-        from reactor_window_like_flink_spark.functions.batching import (
-            complete_group_chunks,
-        )
-
         for pdf in complete_group_chunks(batches, ("band", "bucket")):
             out = bucket_pairs_chunk(pdf)
             if out is not None:
@@ -1271,30 +1237,35 @@ def exact_jaccard_pairs(
     all-pairs join it replaces (which is Σ|block|² intersections).
 
     The hashed-shingle table and the df-ranked doc table are materialized
-    (``localCheckpoint``) because the algorithm reads each of them in
-    multiple passes (posting explode, prefix explode, two verify joins) —
-    recomputing tokenization per pass is pure waste, and the 100 TB analog
+    because the algorithm reads each of them in multiple passes (posting
+    explode, prefix explode, two verify joins) — recomputing
+    tokenization per pass is pure waste, and the 100 TB analog
     is writing the intermediate to a scratch table. Measured ~40% faster
     than the recompute form even at toy scale."""
-    hashed = _tokenized(spark, sf_dir).select(
+    return prefix_jaccard_join(
+        _hashed_docs(spark, sf_dir, shingle_n), threshold, kernel=kernel
+    )
+
+
+def _hashed_docs(spark: SparkSession, sf_dir: str, shingle_n: int) -> DataFrame:
+    """``(doc_id, lang, hs)``: each document's distinct word-``shingle_n``
+    shingles hashed to longs."""
+    return _tokenized(spark, sf_dir).select(
         "doc_id",
         "lang",
         F.transform(
             _shingles_from_toks(shingle_n), lambda x: F.xxhash64(x)
         ).alias("hs"),
     )
-    return prefix_jaccard_join(hashed, threshold, kernel=kernel)
 
 
-def prefix_jaccard_join(
-    hashed: DataFrame, threshold: float, kernel: str = "expr"
-) -> DataFrame:
-    """Core of ``exact_jaccard_pairs`` over any ``(doc_id, lang,
-    hs: array<long>)`` DataFrame (``hs`` = the hashed element set, distinct
-    values). Split out so property tests can drive it with generated sets;
-    see ``exact_jaccard_pairs`` for the algorithm and scale rationale."""
-    t = threshold
-    hashed = hashed.localCheckpoint()
+def _df_ranked_docs(hashed: DataFrame) -> DataFrame:
+    """``(doc_id, lang, sorted_hs)``: each doc's hashed set ordered by
+    GLOBAL document frequency, rarest first — the (df, h) pair is a
+    total order shared by all docs, so every prefix filter slices the
+    same order. The result feeds the prefix explode and both verify
+    sides."""
+    hashed = materialize(hashed)  # read by the df count and the doc join
     ex = hashed.select("doc_id", F.explode("hs").alias("h"))
     dfreq = ex.groupBy("h").agg(F.count("*").alias("df"))
     ranked = (
@@ -1306,7 +1277,30 @@ def prefix_jaccard_join(
             ).alias("sorted_hs")
         )
     )
-    docs2 = hashed.select("doc_id", "lang").join(ranked, "doc_id").localCheckpoint()
+    return materialize(hashed.select("doc_id", "lang").join(ranked, "doc_id"))
+
+
+def _verify_pairs(docs2: DataFrame, cand: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, hs_a, hs_b)``: each candidate pair with both
+    docs' ``sorted_hs`` arrays attached for the exact verify."""
+    sets = docs2.select("doc_id", "sorted_hs")
+    with_a = sets.join(cand, sets.doc_id == cand.doc_a).select(
+        "doc_a", "doc_b", F.col("sorted_hs").alias("hs_a")
+    )
+    return sets.join(with_a, sets.doc_id == with_a.doc_b).select(
+        "doc_a", "doc_b", "hs_a", F.col("sorted_hs").alias("hs_b")
+    )
+
+
+def prefix_jaccard_join(
+    hashed: DataFrame, threshold: float, kernel: str = "expr"
+) -> DataFrame:
+    """Core of ``exact_jaccard_pairs`` over any ``(doc_id, lang,
+    hs: array<long>)`` DataFrame (``hs`` = the hashed element set, distinct
+    values). Split out so property tests can drive it with generated sets;
+    see ``exact_jaccard_pairs`` for the algorithm and scale rationale."""
+    t = threshold
+    docs2 = _df_ranked_docs(hashed)
     prefix = docs2.select(
         "doc_id",
         "lang",
@@ -1349,13 +1343,7 @@ def prefix_jaccard_join(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sets = docs2.select("doc_id", "sorted_hs")
-    with_a = sets.join(cand, sets.doc_id == cand.doc_a).select(
-        "doc_a", "doc_b", F.col("sorted_hs").alias("hs_a")
-    )
-    paired = sets.join(with_a, sets.doc_id == with_a.doc_b).select(
-        "doc_a", "doc_b", "hs_a", F.col("sorted_hs").alias("hs_b")
-    )
+    paired = _verify_pairs(docs2, cand)
     if kernel == "arrow":
         # Vectorized confirm: one numpy lexsort per Arrow batch over the
         # flattened (pair_idx, hash) stream of BOTH sides. Each side's

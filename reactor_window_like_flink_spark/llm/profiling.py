@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -253,11 +254,8 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = (
         events.groupBy("event_type")
         .agg(F.expr("percentile(value, 0.5)").alias("med"))
-        # O(groups) frame broadcast into TWO fact passes (the MAD
-        # aggregate and the final filter) — materialize so the median
-        # pass runs once (measured executed plan: 4 fact scans -> 3,
-        # the floor: median, deviations, filter)
-        .localCheckpoint(eager=False)
+        # broadcast into the MAD aggregate and the final filter
+        .transform(materialize)
     )
     with_med = events.join(F.broadcast(med), "event_type")
     mad = (

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm import index_events
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
@@ -100,10 +101,8 @@ def q_bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        # tf feeds dl, df AND the scoring join; without materialization
-        # the text scan + explode runs 4x (ReusedExchange can't fire
-        # across the divergently-pruned subtrees — measured)
-        .localCheckpoint(eager=False)
+        # shared by dl, df and the scoring join
+        .transform(materialize)
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -320,21 +319,18 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pair")
         )
     )
-    # both aggregates feed multiple divergent branches (pc: the 1-row B
-    # total + the scored join; uni: the 1-row N total + both component
-    # lookups) — materialize once or the corpus explode re-runs per
-    # branch (measured executed plan: 5 parquet scans -> 0 in the final
-    # plan, each explode-aggregate pass runs exactly once)
+    # pc is shared by the B total and the scored join; uni by the N
+    # total and both component lookups
     pc = (
         pairs.groupBy("pair")
         .agg(F.count("*").alias("c_xy"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     uni = (
         docs.select(F.explode(_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     n = uni.agg(F.sum("c").cast("double").alias("n"))
     b = pc.agg(F.sum("c_xy").cast("double").alias("b"))
@@ -464,7 +460,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", F.explode(_tokens()).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)  # shared by the totals and the H fold
+        .transform(materialize)  # shared by the totals and the H fold
     )
     s = tf.groupBy("source").agg(F.sum("c").cast("long").alias("ns"))
     p = F.col("c") / F.col("ns")
@@ -680,7 +676,7 @@ def _bm25_query_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             _tf(t).cast("long").alias(f"tf_{i}")
             for i, t in enumerate(BM25_QUERY_TERMS)
         ],
-    ).localCheckpoint(eager=False)  # feeds stats AND scoring (narrow O(docs) frame)
+    ).transform(materialize)  # feeds stats AND scoring (narrow O(docs) frame)
     nterms = len(BM25_QUERY_TERMS)
     stats = per_doc.agg(
         F.count("*").cast("double").alias("n"),
@@ -1260,9 +1256,8 @@ def q_term_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     dt = (
         docs.select("doc_id", F.explode(F.array_distinct(_tokens())).alias("term"))
-        # feeds the pair expansion AND df; materialized so the text
-        # scan + explode runs once (the q_bm25_topterms lesson)
-        .localCheckpoint(eager=False)
+        # shared by the pair expansion and df
+        .transform(materialize)
     )
     df = dt.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     # in-row ordered-pair expansion from each doc's sorted term array
@@ -1373,7 +1368,7 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.explode(F.array_distinct(_tokens())).alias("term"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     n_tot = docs.agg(F.count("*").cast("double").alias("n"))
     n_s = docs.groupBy("source").agg(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -181,7 +182,7 @@ def q_shuffle_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .sortWithinPartitions("k", "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     counts = sorted(
         (r["pid"], r["cnt"])
@@ -268,7 +269,7 @@ def pack_token_stream(
         )
         .sortWithinPartitions("k", "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     counts = sorted(
         (r["pid"], r["tok"] or 0)
@@ -512,11 +513,9 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_docs"),
             F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
         )
-        # O(sources) frame feeding THREE divergent branches (total mass,
-        # partition function Z, final projection) — without this the
-        # corpus tokenize+aggregate executes once per branch (measured
-        # executed plan: 4 parquet scans -> 1)
-        .localCheckpoint(eager=False)
+        # shared by the total mass, the partition function Z and the
+        # final projection
+        .transform(materialize)
     )
     tot = m.agg(F.sum("n_tokens").cast("double").alias("tot"))
     with_p = m.crossJoin(F.broadcast(tot)).withColumn(
@@ -748,9 +747,8 @@ def q_sample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_tokens"),
         )
-        # O(sources) frame feeding three divergent branches (total, Z,
-        # projection) — same materialization rationale as temperature
-        .localCheckpoint(eager=False)
+        # shared by the total, Z and the final projection
+        .transform(materialize)
     )
     tot = m.agg(F.sum("n_tokens").cast("double").alias("tot"))
     with_p = m.crossJoin(F.broadcast(tot)).withColumn(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm import index_events
 from reactor_window_like_flink_spark.sources.layout import partitioned_write
 from reactor_window_like_flink_spark.sources.tables import load
@@ -624,6 +625,7 @@ def knn_graph(
 
     from reactor_window_like_flink_spark.functions.batching import (
         complete_group_chunks,
+        group_bounds,
     )
     from reactor_window_like_flink_spark.llm.dedup import (
         auto_lsh_bits,
@@ -664,7 +666,7 @@ def knn_graph(
         key, all_ids = key[order], vec_id[order]
         all_x = np.stack(pdf["embedding"].to_numpy())[order].astype("float64")
         all_xn = all_x / np.linalg.norm(all_x, axis=1)[:, None]
-        bounds = np.flatnonzero(np.r_[True, key[1:] != key[:-1], True])
+        bounds = group_bounds(key)
         out_v: list = []
         out_u: list = []
         out_c: list = []
@@ -987,20 +989,11 @@ def similarity_join(
     # so banding(union) == banding(each side), but as two calls the
     # banding pass (a Python mapInPandas for the fast kernel, a
     # bands×bits HOF fold per row for the exact one) runs twice over
-    # the same parquet — once per side. One pass + a checkpoint serves
-    # both filters (r16; ReusedExchange can't fire across the Python
-    # boundary, hence the explicit materialization). EAGER (r17, judge
-    # item 2): this checkpoint feeds a BROADCAST side (qb) and the probe
-    # side concurrently — exactly the shape the r16 eager-kept rule
-    # flags (broadcast-planning decisions + multiple concurrently-
-    # materialized AQE stages), and the r16 driver bench flagged this
-    # key 9.22x at 32 cores with a 30.5 s spread. In-session A/B
-    # (18 samples/arm, interleaved blocks, 32 cores): medians flat
-    # (lazy 1.47 s vs eager 1.56 s, within the run's noise), eager
-    # worst-case strictly better (3.13 vs 6.38 s) — the eager copy's
-    # single deterministic materialization removes the race class for
-    # measured-zero median cost.
-    banded = bander(emb, bands=bands, bits=bits).localCheckpoint()
+    # the same parquet — once per side. One materialized pass serves
+    # both filters: the broadcast query side qb and the probe side cb.
+    banded = materialize(
+        bander(emb, bands=bands, bits=bits), feeds_broadcast=True
+    )
     banded_is_query = F.col("vec_id") % SIMJOIN_QUERY_MOD == 0
     qb = banded.filter(banded_is_query).withColumnRenamed(
         "vec_id", "query_id"
@@ -1458,7 +1451,7 @@ def fit_ann_ingest_index(
         raise ValueError("ann index bootstrap must be non-empty")
     centroids, codebooks = _fit_ann_params(sample, cells, m, k, seed)
     index = AnnIngestIndex(spark, root, centroids, codebooks, 0.0)
-    rows = _encoded(index, bootstrap).localCheckpoint(eager=False)
+    rows = materialize(_encoded(index, bootstrap))
     rows.drop("qerr").write.mode("overwrite").partitionBy("cell").parquet(
         f"{index.gen_dir}/batch_id=-1"
     )
@@ -1498,7 +1491,7 @@ def _rebuild(index: AnnIngestIndex, seed: int = PQ_SEED) -> None:
         .select(
             "vec_id", "embedding", "label", "code", "batch_id", "cell", "qerr"
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     rows.drop("qerr").write.mode("overwrite").partitionBy(
         "batch_id", "cell"
@@ -1534,7 +1527,7 @@ def ann_ingest_sink(
         b = batch_df.select("vec_id", "embedding", "label").dropDuplicates(
             ["vec_id"]
         )
-        rows = _encoded(index, b).localCheckpoint(eager=False)
+        rows = materialize(_encoded(index, b))
         rows.drop("qerr").write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(f"{index.gen_dir}/batch_id={batch_id}")

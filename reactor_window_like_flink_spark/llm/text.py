@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -396,9 +397,8 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyword/topic-surfacing pass.
 
     Pipeline: explode -> (doc, term) tf aggregate, materialized once
-    (localCheckpoint — measured: exchange reuse does not fire across the
-    divergently-pruned df/score branches, so without it the text scan +
-    explode runs 3x) -> term df aggregate (re-aggregation of tf) -> keyed
+    (exchange reuse does not fire across the divergently-pruned df/score
+    branches) -> term df aggregate (re-aggregation of tf) -> keyed
     join tf⋈df on the term -> per-doc top-k window. The document count N
     joins in as a broadcast 1-row aggregate (scalar-subquery shape, no
     driver collect). All shuffles are keyed on term or doc_id; the window
@@ -409,11 +409,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        # materialize ONCE: tf feeds both the df re-aggregate and the
-        # scoring join, and Catalyst's ReusedExchange does NOT fire here
-        # (divergent column pruning changes the canonical subtrees —
-        # measured: 3 scans without this, 1 with)
-        .localCheckpoint()
+        .transform(materialize)
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n"))
@@ -480,7 +476,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint()  # shared by c and the scoring join (see tfidf)
+        .transform(materialize)  # shared by c and the scoring join
     )
     c = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     n = c.agg(F.sum("c").cast("double").alias("n"))
@@ -589,7 +585,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     dtf = (
         pairs.groupBy("doc_id", "u", "w")
         .agg(F.count("*").alias("m"))
-        .localCheckpoint()  # shared by cb and the scoring join
+        .transform(materialize)  # shared by cb and the scoring join
     )
     cb = dtf.groupBy("u", "w").agg(F.sum("m").cast("long").alias("c_uw"))
     cc = cb.groupBy("u").agg(F.sum("c_uw").cast("long").alias("c_u"))
@@ -597,10 +593,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"))
-        # O(vocab) frame consumed by BOTH the 1-row N aggregate and the
-        # scoring join — without this the token explode + count runs
-        # twice (measured executed plan: 2 parquet scans -> 1)
-        .localCheckpoint()
+        .transform(materialize)  # shared by n and the scoring join
     )
     n = uni.agg(F.sum("c").cast("double").alias("n"))
     p = F.lit(LM_LAMBDA) * (
@@ -685,7 +678,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.explode(_tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint()  # shared by c and the scoring join (see tfidf)
+        .transform(materialize)  # shared by c and the scoring join
     )
     c = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     n = c.agg(F.sum("c").cast("double").alias("n"))
@@ -703,12 +696,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(docs.select("doc_id", "lang"), "doc_id")
         .crossJoin(F.broadcast(n))
         .select("doc_id", "lang", (F.col("m") - F.log("n")).alias("lp"))
-        # narrow O(docs) frame consumed by BOTH the per-lang stats
-        # aggregate and the final join; without this the whole scoring
-        # pipeline (c, d, the doc join) executes once per branch
-        # (measured executed plan: 2 scans / 7 hash exchanges without,
-        # scoring runs once at checkpoint with)
-        .localCheckpoint()
+        .transform(materialize)  # shared by the per-lang stats and the final join
     )
     st = lp.groupBy("lang").agg(
         F.avg("lp").alias("mu"), F.stddev("lp").alias("sd")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -229,7 +230,7 @@ def train_unigram(
     ``driver_vocab_max`` rows then collects and trains sequentially,
     a larger one runs the distributed seed + EM loop. Both paths share
     every tie-break and produce IDENTICAL piece tables (tested)."""
-    vocab = _word_vocab(docs).localCheckpoint(eager=False)
+    vocab = materialize(_word_vocab(docs))
     if driver_vocab_max and vocab.count() <= driver_vocab_max:
         rows = vocab.collect()
         return train_unigram_sequential(
@@ -242,7 +243,7 @@ def train_unigram(
     )
     pc = sub.groupBy("piece").agg(
         F.sum("freq").cast("double").alias("c")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     top = pc.orderBy(F.desc("c"), F.asc("piece")).limit(UNIGRAM_SEED_SIZE)
     chars_df = pc.filter(F.length("piece") == 1)
     seed_rows = top.unionByName(chars_df).dropDuplicates(["piece"]).collect()

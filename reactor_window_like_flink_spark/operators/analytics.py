@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -126,7 +127,7 @@ def cohort_retention(events: DataFrame) -> DataFrame:
             F.unix_timestamp(F.date_trunc("week", "ts")).alias("_aw"),
         )
         .distinct()
-        .localCheckpoint(eager=False)  # shared by the cohort re-aggregate and the join
+        .transform(materialize)  # shared by the cohort re-aggregate and the join
     )
     cohort = active.groupBy("user_id").agg(F.min("_aw").alias("_cw"))
     joined = active.join(cohort, "user_id")
@@ -856,11 +857,8 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "hr")
         .agg(F.max(F.struct("ts", "event_id", "value")).alias("s"))
         .select("user_id", "hr", F.col("s.value").alias("value"))
-        # O(users x active-hours) rows, consumed by both the span
-        # aggregate and the grid join — materialize once (the branches
-        # prune differently, so exchange reuse alone won't fire;
-        # measured: 2 raw-event scans without)
-        .localCheckpoint(eager=False)
+        # shared by the span aggregate and the grid join
+        .transform(materialize)
     )
     span = hv.groupBy("user_id").agg(
         F.min("hr").alias("lo"), F.max("hr").alias("hi")
@@ -1379,7 +1377,7 @@ def q_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         lineitem.select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     n_orders = b.agg(F.countDistinct("l_orderkey").alias("n")).first()["n"]
     mc = math.ceil(n_orders * FPM_MIN_SUPPORT)
@@ -1387,7 +1385,7 @@ def q_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.groupBy("l_partkey")
         .agg(F.count("*").cast("long").alias("support_count"))
         .filter(F.col("support_count") >= mc)
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     fb = b.join(
         F.broadcast(singles.select("l_partkey")), "l_partkey", "left_semi"
@@ -1715,7 +1713,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         _basket_pairs(lineitem, "l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)  # read by 5 branches: nodes/edges/deg/orient
+        .transform(materialize)  # read by 5 branches: nodes/edges/deg/orient
     )
     n_nodes = (
         e.select(F.col("u").alias("n"))
@@ -1729,7 +1727,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(e.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("d"))
-    ).localCheckpoint(eager=False)  # read by the wedge stat AND both orientations
+    ).transform(materialize)  # read by the wedge stat AND both orientations
     wedges = deg.agg(
         F.coalesce(F.sum(F.col("d") * (F.col("d") - 1) / 2), F.lit(0))
         .cast("long")
@@ -1747,7 +1745,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(rk(F.col("du"), F.col("u")) < rk(F.col("dv"), F.col("v")),
                F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).localCheckpoint(eager=False)  # read by the adjacency build AND the edge probe
+    ).transform(materialize)  # read by the adjacency build AND the edge probe
     # r16 rework (guide §2.3/§2.4): count triangles as
     #   Σ over oriented edges (u, v) of |N⁺(u) ∩ N⁺(v)|
     # — each triangle {a<b<c} (rank order) is counted exactly once, at
@@ -2866,11 +2864,11 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         edges.selectExpr("u AS node", "v AS nbr")
         .unionAll(edges.selectExpr("v AS node", "u AS nbr"))
-        .localCheckpoint(eager=False)  # read by deg AND the ends join
+        .transform(materialize)  # read by deg AND the ends join
     )
     deg = adj.groupBy("node").agg(
         F.count("*").cast("double").alias("d")
-    ).localCheckpoint(eager=False)  # read by both end-degree lookups
+    ).transform(materialize)  # read by both end-degree lookups
     du = deg.select(F.col("node").alias("node"), F.col("d").alias("x"))
     dv = deg.select(F.col("node").alias("nbr"), F.col("d").alias("y"))
     ends = adj.join(du, "node").join(dv, "nbr")

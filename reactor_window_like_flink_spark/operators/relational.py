@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -1359,13 +1360,10 @@ def q_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one value-column pass for the range, one binning pass — the floor
     for equi-width binning."""
     events = load(spark, sf_dir, "events")
-    # 1-row range frame consumed by TWO branches (the binning crossJoin
-    # and the final estimate) — materialize so the min/max pass over the
-    # value column runs once (measured executed plan: 3 scans -> 2, the
-    # floor, since binning can't start before the range is known)
+    # shared by the binning crossJoin and the final estimate
     s = events.agg(
         F.min("value").alias("mn"), F.max("value").alias("mx")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     w = (F.col("mx") - F.col("mn")) / F.lit(float(QROLLUP_BINS))
     bin_expr = F.when(F.col("mx") == F.col("mn"), F.lit(0)).otherwise(
         F.least(
@@ -1693,12 +1691,8 @@ def q_join_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     join drops from ~40M candidate rows to ~600, 46 s -> ~1 s. Variant
     generation is a JVM higher-order function; no Python, no BNLJ."""
     part = load(spark, sf_dir, "part").select("p_partkey", "p_name")
-    # the distinct-names AGGREGATE feeds both sides of the variant
-    # self-join (and through them the confirm) — materialize so the
-    # distinct shuffle runs once, not once per side (the raw part
-    # re-scans for the key expansion below stay: narrow re-scans of a
-    # 2-column projection are cheaper than copying the table)
-    names = part.select("p_name").distinct().localCheckpoint(eager=False)
+    # shared by both sides of the variant self-join
+    names = materialize(part.select("p_name").distinct())
     variants = names.select(
         F.col("p_name").alias("name"),
         F.explode(
@@ -2273,9 +2267,8 @@ def q_tpch_q17_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced = li.join(
         F.broadcast(part), li.l_partkey == part.p_partkey
     ).drop("p_partkey")
-    # one fact scan total: the slice is materialized, the decorrelated
-    # aggregate and the probe both consume the checkpointed rows
-    sliced = sliced.localCheckpoint(eager=False)
+    # shared by the decorrelated aggregate and the probe
+    sliced = materialize(sliced)
     sliced.createOrReplaceTempView("q17_slice")
     return spark.sql(
         """
@@ -2518,7 +2511,7 @@ def q_tpch_q15_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             units_to_currency(F.sum(exact_units(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)), 4).alias("total_revenue")
         )
-        .localCheckpoint(eager=False)  # feeds MAX and the winner join — one build
+        .transform(materialize)  # feeds MAX and the winner join — one build
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
     supplier = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -2583,7 +2576,7 @@ def q_tpch_q2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sliced = li.join(
         F.broadcast(part), li.l_partkey == part.p_partkey
-    ).drop("p_partkey").localCheckpoint(eager=False)
+    ).drop("p_partkey").transform(materialize)
     sliced.createOrReplaceTempView("q2_slice")
     return spark.sql(
         """
@@ -3058,7 +3051,7 @@ def q_tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
         .groupBy(F.col("l_partkey").alias("partkey"))
         .agg(F.sum(cents).alias("cents"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     thresh = by_part.agg(
         F.round(

@@ -176,19 +176,16 @@ def daily_kll_sketches(events: DataFrame, k: int = KLL_K) -> DataFrame:
     are sort keys, dropped after the sort — guide §4.1's
     pass-only-what-the-function-needs). Sketches are unchanged: same
     groups, same insertion order, same compaction schedule."""
-    import numpy as np
-
     from reactor_window_like_flink_spark.functions.batching import (
         complete_group_chunks,
+        group_bounds,
     )
 
     def build_chunk(pdf):
         et = pdf["event_type"].to_numpy()
         day = pdf["day"].to_numpy()
         vals = pdf["value"].to_numpy()
-        bounds = np.flatnonzero(
-            np.r_[True, (et[1:] != et[:-1]) | (day[1:] != day[:-1]), True]
-        )
+        bounds = group_bounds(et, day)
         out = {"event_type": [], "day": [], "n": [], "levels": [], "coins": []}
         for g0, g1 in zip(bounds[:-1], bounds[1:]):
             s = KLLSketch(k)

@@ -70,6 +70,68 @@ def test_empty_and_single_group_streams():
     assert len(chunks) == 1 and len(chunks[0]) == 9
 
 
+def _groups_once_and_whole(chunks, cols):
+    """{key: rows} over all chunks, asserting no group spans two chunks.
+    Null keys are normalized to None so NaN/NaT groups compare equal."""
+    seen = {}
+    for ch in chunks:
+        for key, grp in ch.groupby(list(cols), sort=False, dropna=False):
+            key = tuple(None if pd.isna(v) else v for v in key)
+            assert key not in seen, f"group {key} split across chunks"
+            seen[key] = len(grp)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "lead, null",
+    [(1.0, np.nan), ("a", None), (pd.Timestamp("2024-01-01"), pd.NaT)],
+    ids=["nan", "none", "nat"],
+)
+def test_null_keyed_trailing_group_straddling_batches(lead, null):
+    """Null keys form ONE group (SQL GROUP BY semantics): a null-keyed
+    trailing group that straddles batches is still yielded once, whole."""
+    full = pd.DataFrame(
+        {
+            "band": [0] * 8,
+            "bucket": pd.Series([lead] * 3 + [null] * 5),
+            "payload": range(8),
+        }
+    )
+    batches = [full.iloc[0:4], full.iloc[4:6], full.iloc[6:8]]
+    chunks = list(complete_group_chunks(iter(batches), ("band", "bucket")))
+    seen = _groups_once_and_whole(chunks, ("band", "bucket"))
+    assert sorted(seen.values()) == [3, 5] and seen[(0, None)] == 5
+    out = pd.concat(chunks, ignore_index=True)
+    assert list(out["payload"]) == list(range(8))
+
+
+def test_group_spanning_many_batches_is_linear(monkeypatch):
+    """One group across 25 batches is yielded once, whole, in order, and
+    the carry is concatenated once per chunk rather than once per batch
+    (rows handed to pd.concat stay O(group), not O(group^2/batch))."""
+    keys = [(0, 0)] * 100 + [(0, 1)] * 3
+    full = _frame(keys)
+    batches = [full.iloc[i : i + 4] for i in range(0, len(full), 4)]
+    assert len(batches) >= 20
+    concat_rows = []
+    real_concat = pd.concat
+
+    def counting_concat(frames, *args, **kwargs):
+        frames = list(frames)
+        concat_rows.append(sum(len(f) for f in frames))
+        return real_concat(frames, *args, **kwargs)
+
+    monkeypatch.setattr(pd, "concat", counting_concat)
+    chunks = list(complete_group_chunks(iter(batches), ("band", "bucket")))
+    assert _groups_once_and_whole(chunks, ("band", "bucket")) == {
+        (0, 0): 100,
+        (0, 1): 3,
+    }
+    assert sum(concat_rows) <= 3 * len(full)
+    out = real_concat(chunks, ignore_index=True)
+    assert list(out["payload"]) == list(range(len(full)))
+
+
 @pytest.mark.parametrize("max_records", [7, 64])
 def test_lsh_kernel_equal_under_tiny_arrow_batches(spark, sf_dir, max_records):
     """Force multi-batch partitions (maxRecordsPerBatch far below group

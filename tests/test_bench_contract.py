@@ -105,3 +105,18 @@ def test_every_headline_key_has_a_bar():
 def test_guards_and_index_backed_reference_real_keys():
     assert set(GUARD.values()) <= set(HEADLINE)
     assert set(INDEX_BACKED) <= set(HEADLINE) | set(GUARD)
+
+
+def test_failed_multicore_probe_records_null(monkeypatch):
+    """A failing multi-core epoch probe yields None, and the summary line
+    still builds with the side left out of ``eff_cores``."""
+    import bench
+
+    def boom(_):
+        raise RuntimeError("probe unavailable")
+
+    monkeypatch.setattr(bench, "_calib_worker", boom)
+    assert bench._epoch_calib_mc() is None
+    payload = _payload()
+    payload["epoch_calib_mc"] = {"start": None, "end": None}
+    assert json.loads(compact_summary(payload))["eff_cores"] == {}

@@ -292,18 +292,34 @@ def _kcore_reference(edges, k):
 
 
 def test_kcore_matches_sequential_reference_on_random_graph(spark):
+    """Both sides of the local-finish gate: ``kcore()`` always takes the
+    distributed round loop, and ``_kcore_loop`` with the directed-edge
+    count at or under ``KCORE_LOCAL_FINISH_EDGES`` takes the one-task
+    numpy peel. Each must equal the sequential reference."""
     import random
 
-    from reactor_window_like_flink_spark.llm.clustering import kcore
+    from reactor_window_like_flink_spark.llm.clustering import (
+        KCORE_LOCAL_FINISH_EDGES,
+        _kcore_build,
+        _kcore_loop,
+        kcore,
+    )
 
     rng = random.Random(13)
     edges = {tuple(sorted(rng.sample(range(60), 2))) for _ in range(300)}
     df = spark.createDataFrame(sorted(edges), "u long, v long")
+    sym, deg = _kcore_build(df)
+    two_m = 2 * len(edges)
+    assert two_m <= KCORE_LOCAL_FINISH_EDGES
     for k in (3, 5, 8):
-        got = {
-            r["node"]: r["degree"] for r in kcore(df, k=k).collect()
+        want = _kcore_reference(edges, k)
+        loop = {r["node"]: r["degree"] for r in kcore(df, k=k).collect()}
+        local = {
+            r["node"]: r["degree"]
+            for r in _kcore_loop(sym, deg, k, two_m=two_m).collect()
         }
-        assert got == _kcore_reference(edges, k)
+        assert loop == want
+        assert local == want
 
 
 def test_kcore_keeps_clique_peels_tendrils(spark):

@@ -84,6 +84,65 @@ def test_no_unsafe_round_anywhere():
     assert not bad, f"unsafe ROUND(x, n>=1) sites: {bad[:10]} (+{max(0, len(bad)-10)} more)"
 
 
+def test_no_direct_local_checkpoint():
+    """One materialization rule: every ``localCheckpoint`` call in the
+    package goes through ``functions/materialize.py``. Parsed, not
+    grepped, so docstring and comment mentions don't count."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "reactor_window_like_flink_spark",
+    )
+    helper = os.path.join(pkg, "functions", "materialize.py")
+    bad: list[str] = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if os.path.samefile(path, helper):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        bad += [
+            f"{os.path.relpath(path, pkg)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "localCheckpoint"
+        ]
+    assert not bad, f"direct localCheckpoint calls (use materialize()): {bad}"
+
+
+def test_materialize_eager_only_when_feeding_broadcast(spark):
+    """``feeds_broadcast=True`` starts exactly one more job at call time
+    than the lazy default. The lazy call is not asserted to start zero:
+    under AQE it still runs the frame's shuffle stage when called."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from reactor_window_like_flink_spark.functions.materialize import (
+        materialize,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_at_call(**kwargs) -> int:
+        df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+        group = f"materialize-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            materialize(df, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    lazy = jobs_at_call()
+    eager = jobs_at_call(feeds_broadcast=True)
+    assert eager - lazy == 1, (lazy, eager)
+
+
 def test_no_bare_container_columns(spark, sf_dir):
     """Contract determinism rule (contract.py): oracle-checked outputs
     must not emit bare array/map/struct columns — the driver's

@@ -66,6 +66,15 @@ def get_spark(
         joins once the production thresholds (>= 10 GiB application-side
         scan) are met — asserted observable in tests/test_plans.py and
         tests/test_layout.py.
+      - Local masters list a micro-batch's or a read's paths on the driver:
+        ``parallelPartitionDiscovery.threshold`` is raised to ``2**31 - 1``
+        so Spark never lists more than 32 paths in a distributed job. With
+        executors in the driver's JVM that job makes the same ``stat``
+        calls on the same host, plus scheduling: a 100-file stream drain
+        paid a 100-task listing job, 3 jobs / 104 tasks where 2 jobs /
+        4 tasks do. A cluster master keeps Spark's default, where parallel
+        listing of many object-store paths can pay. ``extra_conf`` still
+        overrides it.
     """
     cpus = _cpus()
     # RocksDB state store: off-heap, spill-to-disk per-key state for the
@@ -103,10 +112,13 @@ def get_spark(
                 )
         return active
     _ensure_driver_memory()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
-    )
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    builder = SparkSession.builder.appName(app_name).master(master)
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
     # Local-mode shuffle files on tmpfs: the VM's block device makes the
     # many tiny shuffle files of local[32] disproportionately expensive
     # (measured ~3x on shuffle-heavy ops). On a real cluster SPARK_LOCAL_DIRS

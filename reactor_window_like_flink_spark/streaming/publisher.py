@@ -59,6 +59,16 @@ def _progress_field(progress: Any, name: str) -> Any:
     return getattr(progress, name)
 
 
+def _source_dir(description: Any) -> str | None:
+    """The local directory a ``FileStreamSource[file:<path>]`` progress
+    description names, normalized like ``os.path.abspath``."""
+    text = str(description or "")
+    lo, hi = text.find("["), text.rfind("]")
+    if lo < 0 or hi < lo:
+        return None
+    return os.path.normpath(text[lo + 1 : hi].removeprefix("file:"))
+
+
 class FileStreamInput:
     """Push-style producer facade over Spark's pull-based file source.
 
@@ -67,7 +77,10 @@ class FileStreamInput:
     (``WindowPublisher.java:89-93``): once ``publish`` returns, the rows
     are durably admitted and will be delivered exactly once.
     ``max_files_per_trigger`` is the admission-control knob standing in
-    for the reference's bounded queue (``WindowPublisher.java:66-68``).
+    for the reference's bounded queue (``WindowPublisher.java:66-68``);
+    it bounds a micro-batch's size, not its listing cost, as each
+    micro-batch re-stats its admitted files on the driver (on a local
+    master; see ``session.get_spark``).
 
     With a ``queue_capacity``, ``try_publish`` adds the reference's
     best-effort admission mode (``asyncPublish``/``tryEmitNext``,
@@ -240,15 +253,17 @@ class FileStreamInput:
         top-level numInputRows aggregates every source, so a query that
         joins this stream with another would inflate processed counts,
         under-report the backlog, and let try_publish over-admit — match
-        on the per-source description (FileStreamSource[<path>]) instead.
-        Falls back to the top-level number only when the progress has no
-        per-source breakdown to read."""
+        the bracketed path of the per-source description
+        (FileStreamSource[file:<path>]) to this directory exactly, so a
+        sibling such as ``<path>_b`` never matches. Falls back to the
+        top-level number only when the progress has no per-source
+        breakdown to read."""
         sources = _progress_field(progress, "sources")
         if not sources:
             return int(_progress_field(progress, "numInputRows") or 0)
         me = os.path.abspath(self._dir)
         for s in sources:
-            if me in str(_progress_field(s, "description") or ""):
+            if _source_dir(_progress_field(s, "description")) == me:
                 return int(_progress_field(s, "numInputRows") or 0)
         if len(sources) == 1:
             return int(_progress_field(sources[0], "numInputRows") or 0)

@@ -320,6 +320,67 @@ def test_backlog_counts_only_this_sources_rows(spark, tmp_path):
     assert src.queue_size() == 30
 
 
+def test_backlog_matches_source_dir_exactly_not_by_prefix(spark, tmp_path):
+    """Two inputs in sibling directories ``in`` and ``in_b`` feed one
+    query. Each must read its own source's processed rows: matching the
+    progress description by substring let ``in`` take ``in_b``'s count
+    and report a backlog after everything was delivered."""
+    pub = WindowedPublisher(window_max_batch_size=15)
+    for order in (0, 1):  # either source may be listed first
+        a = FileStreamInput(spark, SCHEMA, str(tmp_path / str(order) / "in"))
+        b = FileStreamInput(spark, SCHEMA, str(tmp_path / str(order) / "in_b"))
+        a.publish(_rows(30))
+        b.publish(_rows(10, start_minute=5))
+        first, second = (a, b) if order == 0 else (b, a)
+        delivered: list = []
+        query = pub.subscribe(
+            first.stream().union(second.stream()),
+            consumer=delivered.extend,
+            drain=True,
+        )
+        a.attach(query)
+        b.attach(query)
+        assert query.awaitTermination(60)
+        assert len(delivered) == 40
+        assert (a.queue_size(), b.queue_size()) == (0, 0), order
+
+
+def test_drain_job_budget_flat_across_listing_threshold(spark, tmp_path):
+    """A drain's jobs must not grow with the number of admitted files.
+    Spark lists more than ``parallelPartitionDiscovery.threshold`` (32 by
+    default) paths in a distributed job of one task per path;
+    ``get_spark`` keeps that listing on the driver for local masters. So
+    20 files (under 32) and 40 files (over it) start the same jobs, and
+    no stage runs one task per admitted file."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs_per_drain = {}
+    for n_files in (20, 40):
+        src = FileStreamInput(spark, SCHEMA, str(tmp_path / f"in{n_files}"))
+        for i in range(n_files):
+            src.publish(_rows(1, start_minute=i))
+        got: list = []
+        query = WindowedPublisher().subscribe(
+            src.stream(),
+            # One task whatever the file count, so the budget below does
+            # not depend on how many partitions the files pack into.
+            consumer_df=lambda df, _: got.extend(df.coalesce(1).collect()),
+            drain=True,
+        )
+        assert query.awaitTermination(60)
+        assert len(got) == n_files
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        job_ids = tracker.getJobIdsForGroup(query.runId)
+        stage_tasks = [
+            tracker.getStageInfo(sid).numTasks
+            for jid in job_ids
+            for sid in tracker.getJobInfo(jid).stageIds
+        ]
+        assert n_files not in stage_tasks, (n_files, stage_tasks)
+        jobs_per_drain[n_files] = len(job_ids)
+    assert jobs_per_drain[20] == jobs_per_drain[40], jobs_per_drain
+
+
 def test_second_subscribe_on_live_checkpoint_raises(spark, tmp_path):
     """Unicast safety (ref WindowPublisher.java:68): a second query on a
     checkpoint owned by a live query must be refused — it would corrupt

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.llm.artifacts import artifact
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -188,31 +189,15 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Learned-merge memo per sf_dir: the index-lifecycle posture (same as
-# fit_ivf/fit_pq in llm/similarity.py) — training runs once, encode
-# queries reuse the artifact. Keyed by applicationId, not id(spark):
-# CPython reuses object ids after GC, so an id-keyed memo could hand a
-# NEW session a stale merge table trained under a dead one. Bounded
-# LRU (insertion-ordered dict, re-insert on hit) rather than
-# evict-everything-not-this-app: two concurrently live SparkSessions
-# alternating merges_for calls must not thrash each other's entry by
-# retraining on every call.
-_MERGE_CACHE: dict[tuple[str, str], list[tuple[int, str, str, int]]] = {}
-_MERGE_CACHE_MAX = 4  # e.g. two live sessions x two corpora
-
-
 def merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _MERGE_CACHE.pop(key, None)
-    if hit is None:
-        hit = learn_bpe_merges(
+    return artifact(
+        "bpe_merges",
+        spark,
+        sf_dir,
+        lambda: learn_bpe_merges(
             spark, load(spark, sf_dir, "documents"), BPE_MERGES
-        )
-        while len(_MERGE_CACHE) >= _MERGE_CACHE_MAX:  # evict the LRU
-            del _MERGE_CACHE[next(iter(_MERGE_CACHE))]
-    _MERGE_CACHE[key] = hit  # (re-)insert = most recently used
-    return hit
+        ),
+    )
 
 
 def encode_word(sym: list[str], ranked: dict[tuple[str, str], int]) -> list[str]:

@@ -28,15 +28,15 @@ no curation surface; north-star scope from BASELINE.json.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
-from reactor_window_like_flink_spark.llm import index_events
+from reactor_window_like_flink_spark.llm.artifacts import artifact
 from reactor_window_like_flink_spark.llm.dedup import _shingles_from_toks, _tokenized
 from reactor_window_like_flink_spark.llm.sampling import (
     CHUNK_STRIDE,
@@ -842,14 +842,6 @@ def incremental_dedup_near_indexed(
     return _near_admission(_doc_toks(batch), bands, sets)
 
 
-# Registered-key index memo per (applicationId, sf_dir): the index build
-# (two bucketed table writes) runs once per session+dataset; bench warm
-# iterations then measure probe-only admission, same amortization story
-# as the IVFPQ index.
-_NEAR_INDEX_CACHE: dict[tuple[str, str], str] = {}
-_NEAR_INDEX_MAX = 4
-
-
 @REG.add("q_dedup_incremental_near")  # rows-only: xxhash64/banded LSH has
 # no DuckDB mirror; pytest asserts equality with re-banding the whole
 # corpus (incremental_dedup_near) and replay-idempotence after append.
@@ -861,34 +853,22 @@ def q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     The MinHash analog of ``q_dedup_incremental``'s exact-hash ledger —
     the composition a production ingest needs to refuse paraphrased/
     near-identical re-crawls, not just byte-identical ones."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    prefix = _NEAR_INDEX_CACHE.pop(key, None)
     docs = load(spark, sf_dir, "documents")
     is_batch = F.col("source") == INCREMENTAL_BATCH_SOURCE
-    if prefix is None:
+
+    def build() -> str:
         # deterministic name (md5, not Python's per-process-salted hash)
         # so a re-run on the same dataset OVERWRITES its old tables
         # instead of littering the warehouse
-        import hashlib
-
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-        prefix = f"near_idx_{digest}"
-        t0 = time.perf_counter()
+        prefix = f"near_idx_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
         build_corpus_near_index(docs.filter(~is_batch), prefix)
-        index_events.record(
-            "near_index", prefix, time.perf_counter() - t0
-        )
-        while len(_NEAR_INDEX_CACHE) >= _NEAR_INDEX_MAX:
-            # Evict tables AND their warehouse directories, not just the
-            # memo entry — otherwise every evicted dataset leaks its two
-            # index tables on disk for the life of the warehouse (the
-            # IVFPQ cache already removes its directory on eviction).
-            evicted = _NEAR_INDEX_CACHE.pop(next(iter(_NEAR_INDEX_CACHE)))
-            if evicted != prefix:  # never drop the index just built
-                for t in (f"{evicted}_bands", f"{evicted}_sets"):
-                    _drop_table_and_location(spark, t)
-    _NEAR_INDEX_CACHE[key] = prefix
+        return prefix
+
+    def release(prefix: str) -> None:
+        for t in (f"{prefix}_bands", f"{prefix}_sets"):
+            _drop_table_and_location(spark, t)
+
+    prefix = artifact("near_index", spark, sf_dir, build, release)
     return incremental_dedup_near_indexed(docs.filter(is_batch), spark, prefix)
 
 

@@ -26,8 +26,9 @@ EVENTS: list[dict] = []
 
 
 def record(kind: str, name: str, seconds: float) -> None:
-    """Log one index build: *kind* (e.g. ``near_bands``, ``ivfpq``),
-    *name* (table prefix / index dir), wall *seconds*."""
+    """Log one index build: *kind* (e.g. ``near_index``, ``ivfpq``),
+    *name* (the ``sf_dir`` it was built for), wall *seconds*. Called by
+    ``artifacts.artifact`` on every memo miss, for every kind."""
     evt = {
         "kind": kind,
         "name": name,

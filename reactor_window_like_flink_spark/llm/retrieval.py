@@ -19,14 +19,12 @@ no text surface; north-star scope per BASELINE.json.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
-from reactor_window_like_flink_spark.llm import index_events
+from reactor_window_like_flink_spark.llm.artifacts import artifact, unpersist
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -866,14 +864,6 @@ def q_cms_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- index-served BM25 query
 
-# Session memo for the query-serving index structures: postings +
-# doc-length tables built ONCE per (app, dataset) — the ivfpq_table
-# amortization posture. Bounded LRU; persisted frames unpersist on
-# eviction.
-_BM25_INDEX_CACHE: dict = {}
-_BM25_INDEX_MAX = 4
-
-
 def bm25_index(spark: SparkSession, sf_dir: str):
     """The materialized retrieval index ``q_bm25_indexed`` serves from:
     ``postings`` (term, doc_id, tf) and ``doclen`` (doc_id, dl), each
@@ -881,10 +871,8 @@ def bm25_index(spark: SparkSession, sf_dir: str):
     hive-partitioned) by term so a query's ``term IN (...)`` prunes to
     the query terms' buckets at planning time — the in-process persist
     is the local[32] analog, exactly the ivfpq_table stance."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_INDEX_CACHE.pop(key, None)
-    if hit is None:
-        t0 = time.perf_counter()
+
+    def build() -> tuple[DataFrame, DataFrame]:
         docs = load(spark, sf_dir, "documents")
         toks = _tokens()
         postings = (
@@ -898,16 +886,11 @@ def bm25_index(spark: SparkSession, sf_dir: str):
         ).persist()
         postings.count()  # build outside any query's critical path
         doclen.count()
-        index_events.record("bm25", sf_dir, time.perf_counter() - t0)
-        hit = (postings, doclen)
-        while len(_BM25_INDEX_CACHE) >= _BM25_INDEX_MAX:
-            old_p, old_d = _BM25_INDEX_CACHE.pop(
-                next(iter(_BM25_INDEX_CACHE))
-            )
-            old_p.unpersist()
-            old_d.unpersist()
-    _BM25_INDEX_CACHE[key] = hit
-    return hit
+        return postings, doclen
+
+    return artifact(
+        "bm25", spark, sf_dir, build, lambda index: unpersist(*index)
+    )
 
 
 @REG.add(

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import atexit
 import math
-import time
+import shutil
+import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -21,7 +22,7 @@ from pyspark.sql.functions import pandas_udf
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
-from reactor_window_like_flink_spark.llm import index_events
+from reactor_window_like_flink_spark.llm.artifacts import MEMOS, artifact, unpersist
 from reactor_window_like_flink_spark.sources.layout import partitioned_write
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -115,18 +116,9 @@ class IVFIndex:
     written out partitioned by ``cell`` so probing is partition pruning;
     the in-process persist is the local[32] analog of that layout."""
 
-    def __init__(
-        self,
-        session: SparkSession,
-        centroids: list[list[float]],
-        assigned: DataFrame,
-    ) -> None:
-        self.session = session
+    def __init__(self, centroids: list[list[float]], assigned: DataFrame) -> None:
         self.centroids = centroids
         self.assigned = assigned
-
-
-_IVF_CACHE: dict[str, IVFIndex] = {}
 
 
 def fit_ivf(
@@ -187,24 +179,20 @@ def fit_ivf(
         .persist()
     )
     assigned.count()  # materialize now, outside any query's critical path
-    return IVFIndex(spark, centroids, assigned)
+    return IVFIndex(centroids, assigned)
 
 
 def train_ivf(spark: SparkSession, sf_dir: str) -> IVFIndex:
     """Build (or fetch) the IVF index for ``sf_dir``'s embeddings table
     (see ``fit_ivf``) — training is an index *build*, not part of any
-    query. The cache is keyed by ``sf_dir`` but validated against the
-    live session: a persisted DataFrame is bound to the SparkSession
-    that built it, so after a session restart the stale entry is rebuilt
-    instead of handing back a plan on a dead session."""
-    cached = _IVF_CACHE.get(sf_dir)
-    if cached is not None and cached.session is spark:
-        return cached
-    t0 = time.perf_counter()
-    index = fit_ivf(spark, load(spark, sf_dir, "embeddings"))
-    index_events.record("ivf", sf_dir, time.perf_counter() - t0)
-    _IVF_CACHE[sf_dir] = index
-    return index
+    query."""
+    return artifact(
+        "ivf",
+        spark,
+        sf_dir,
+        lambda: fit_ivf(spark, load(spark, sf_dir, "embeddings")),
+        lambda index: unpersist(index.assigned),
+    )
 
 
 def _probe_cells(centroids: list[list[float]], qe: list[float], n: int) -> list[int]:
@@ -304,13 +292,9 @@ class PQIndex:
     re-rank stage), persisted. At scale the codes table is the compact
     scan: ADC scoring reads m ints per row instead of dim floats."""
 
-    def __init__(self, session, codebooks, codes):
-        self.session = session
+    def __init__(self, codebooks, codes):
         self.codebooks = codebooks  # list[m] of list[k] of list[dim/m]
         self.codes = codes
-
-
-_PQ_CACHE: dict[str, PQIndex] = {}
 
 
 def _lloyd(x, k: int, seed: int, iters: int = 25):
@@ -405,20 +389,19 @@ def fit_pq(
         "vec_id", "label", "embedding", encode("embedding").alias("code")
     ).persist()
     codes.count()  # materialize outside any query's critical path
-    return PQIndex(spark, [c.tolist() for c in codebooks], codes)
+    return PQIndex([c.tolist() for c in codebooks], codes)
 
 
 def train_pq(spark: SparkSession, sf_dir: str) -> PQIndex:
-    """Build (or fetch) the PQ index for ``sf_dir``'s embeddings —
-    session-validated cache, same lifecycle as ``train_ivf``."""
-    cached = _PQ_CACHE.get(sf_dir)
-    if cached is not None and cached.session is spark:
-        return cached
-    t0 = time.perf_counter()
-    index = fit_pq(spark, load(spark, sf_dir, "embeddings"))
-    index_events.record("pq", sf_dir, time.perf_counter() - t0)
-    _PQ_CACHE[sf_dir] = index
-    return index
+    """Build (or fetch) the PQ index for ``sf_dir``'s embeddings — same
+    lifecycle as ``train_ivf``."""
+    return artifact(
+        "pq",
+        spark,
+        sf_dir,
+        lambda: fit_pq(spark, load(spark, sf_dir, "embeddings")),
+        lambda index: unpersist(index.codes),
+    )
 
 
 @REG.add("q_similarity_pq")  # rows-only: k-means codebooks are not
@@ -1069,26 +1052,12 @@ def q_similarity_join_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The FAISS IVFPQ composition: IVF prunes WHERE to look (probed cells ->
 # partition pruning at scale), PQ shrinks WHAT is scanned there (m ints
 # per row instead of dim floats), exact re-rank restores precision.
-# Index-table memo per (applicationId, sf_dir), bounded LRU — the same
-# artifact-lifecycle posture as bpe.merges_for (id-stable across GC,
-# no cross-session thrash). The cached value is (path, DataFrame): the
-# index lives ON DISK partitioned by cell, so eviction deletes the
-# directory instead of unpersisting executor memory. CONTRACT: eviction
-# invalidates any DataFrame handle previously returned for that (app,
-# sf_dir) — callers re-fetch via ivfpq_table(), never hoard the handle
-# across >_IVFPQ_CACHE_MAX interleaved datasets. All index dirs are
-# mkdtemp-created; the atexit hook below removes the survivors at
-# process exit so a long bench session leaves no /tmp residue.
-_IVFPQ_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-_IVFPQ_CACHE_MAX = 4
 
 
 def _ivfpq_cleanup() -> None:
-    import shutil
-
-    for path, _ in _IVFPQ_CACHE.values():
+    """Remove the surviving index directories at process exit."""
+    for path, _ in MEMOS.pop("ivfpq", {}).values():
         shutil.rmtree(path, ignore_errors=True)
-    _IVFPQ_CACHE.clear()
 
 
 atexit.register(_ivfpq_cleanup)
@@ -1107,16 +1076,11 @@ def ivfpq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``ivf.assigned`` and ``pq.codes`` already cache them — a third
     full copy would multiply storage); the ≤ PQ_RERANK shortlist joins
     back to ``pq.codes`` for its floats. Training is shared:
-    ``train_ivf``/``train_pq`` each run once per dataset (their own
-    caches), and the write is a one-time index build, not query work."""
-    import shutil
-    import tempfile
+    ``train_ivf``/``train_pq`` each run once per dataset, and the write
+    is a one-time index build, not query work. Eviction deletes the
+    directory; the exit hook deletes the survivors."""
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _IVFPQ_CACHE.pop(key, None)
-    if hit is None:
-        t0 = time.perf_counter()
+    def build() -> tuple[str, DataFrame]:
         ivf = train_ivf(spark, sf_dir)
         pq = train_pq(spark, sf_dir)
         joined = pq.codes.select("vec_id", "code").join(
@@ -1124,13 +1088,12 @@ def ivfpq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         partitioned_write(joined, path, ["cell"])
-        index_events.record("ivfpq", path, time.perf_counter() - t0)
-        hit = (path, spark.read.parquet(path))
-        while len(_IVFPQ_CACHE) >= _IVFPQ_CACHE_MAX:  # evict the LRU
-            old_path, _ = _IVFPQ_CACHE.pop(next(iter(_IVFPQ_CACHE)))
-            shutil.rmtree(old_path, ignore_errors=True)
-    _IVFPQ_CACHE[key] = hit  # (re-)insert = most recently used
-    return hit[1]
+        return path, spark.read.parquet(path)
+
+    def release(hit: tuple[str, DataFrame]) -> None:
+        shutil.rmtree(hit[0], ignore_errors=True)
+
+    return artifact("ivfpq", spark, sf_dir, build, release)[1]
 
 
 # ---- index staleness: append-without-retrain + rebuild cadence --------

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.llm.artifacts import artifact
 from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -255,24 +256,15 @@ def train_unigram(
     return _final_prune(counts, chars)
 
 
-# Trained-model memo per (applicationId, sf_dir), bounded LRU — the same
-# artifact-lifecycle posture as bpe.merges_for.
-_MODEL_CACHE: dict[tuple[str, str], list[tuple[int, str, int, float]]] = {}
-_MODEL_CACHE_MAX = 4
-
-
 def unigram_model_for(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, int, float]]:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _MODEL_CACHE.pop(key, None)
-    if hit is None:
-        hit = train_unigram(spark, load(spark, sf_dir, "documents"))
-        while len(_MODEL_CACHE) >= _MODEL_CACHE_MAX:
-            del _MODEL_CACHE[next(iter(_MODEL_CACHE))]
-    _MODEL_CACHE[key] = hit
-    return hit
+    return artifact(
+        "unigram",
+        spark,
+        sf_dir,
+        lambda: train_unigram(spark, load(spark, sf_dir, "documents")),
+    )
 
 
 @REG.add("q_unigram_tokenizer")  # rows-only: iterative EM has no SQL

@@ -527,3 +527,41 @@ def test_corpus_ingest_sink_near_live_stream(spark, tmp_path):
         for t in (f"{prefix}_bands", f"{prefix}_sets"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     assert got == {1, 2, 4}  # doc 3 refused: near-dup across micro-batches
+
+
+def test_near_index_eviction_keeps_tables_a_live_entry_names(spark, monkeypatch):
+    """The near-dup index's table prefix comes from ``sf_dir`` alone, so an
+    ended application's entry for dataset D and the live entry for D name
+    the same tables. Evicting the ended entry (while building G) must not
+    drop them: the next call for D hits the memo and reads those tables."""
+    import hashlib
+
+    from reactor_window_like_flink_spark.llm import artifacts
+    from reactor_window_like_flink_spark.llm import curation as C
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "en", "src0", 5)],
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
+    )
+    built, dropped = [], []
+    monkeypatch.setattr(C, "load", lambda s, d, t: docs)
+    monkeypatch.setattr(
+        C, "build_corpus_near_index", lambda df, prefix: built.append(prefix)
+    )
+    monkeypatch.setattr(
+        C, "_drop_table_and_location", lambda s, t: dropped.append(t)
+    )
+    monkeypatch.setattr(
+        C, "incremental_dedup_near_indexed", lambda batch, s, prefix: prefix
+    )
+    prefix_d = f"near_idx_{hashlib.md5(b'D').hexdigest()[:12]}"
+    memo = {("ended-app", "D"): prefix_d}
+    monkeypatch.setitem(artifacts.MEMOS, "near_index", memo)
+
+    for sf in ("D", "E", "F", "G"):
+        C.q_dedup_incremental_near(spark, sf)
+    assert built[0] == prefix_d
+    assert ("ended-app", "D") not in memo
+    assert dropped == []
+    assert C.q_dedup_incremental_near(spark, "D") == prefix_d
+    assert len(built) == 4  # D served from the memo, not rebuilt

@@ -84,9 +84,9 @@ def test_no_unsafe_round_anywhere():
     assert not bad, f"unsafe ROUND(x, n>=1) sites: {bad[:10]} (+{max(0, len(bad)-10)} more)"
 
 
-def test_no_direct_local_checkpoint():
-    """One materialization rule: every ``localCheckpoint`` call in the
-    package goes through ``functions/materialize.py``. Parsed, not
+def _package_nodes(helper: str):
+    """(module:line, node) for every AST node in the package except the
+    module at ``helper`` (a path relative to the package). Parsed, not
     grepped, so docstring and comment mentions don't count."""
     import ast
     import glob
@@ -96,21 +96,42 @@ def test_no_direct_local_checkpoint():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "reactor_window_like_flink_spark",
     )
-    helper = os.path.join(pkg, "functions", "materialize.py")
-    bad: list[str] = []
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        if os.path.samefile(path, helper):
+        if os.path.samefile(path, os.path.join(pkg, helper)):
             continue
         with open(path) as f:
             tree = ast.parse(f.read())
-        bad += [
-            f"{os.path.relpath(path, pkg)}:{node.lineno}"
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "localCheckpoint"
-        ]
+        for node in ast.walk(tree):
+            if hasattr(node, "lineno"):
+                yield f"{os.path.relpath(path, pkg)}:{node.lineno}", node
+
+
+def test_no_direct_local_checkpoint():
+    """One materialization rule: every ``localCheckpoint`` call in the
+    package goes through ``functions/materialize.py``."""
+    import ast
+
+    bad = [
+        where
+        for where, node in _package_nodes("functions/materialize.py")
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
     assert not bad, f"direct localCheckpoint calls (use materialize()): {bad}"
+
+
+def test_no_hand_rolled_artifact_memo():
+    """One per-session artifact memo: only ``llm/artifacts.py`` reads
+    ``.applicationId``, so a memo keyed by session outside it fails."""
+    import ast
+
+    bad = [
+        where
+        for where, node in _package_nodes("llm/artifacts.py")
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId"
+    ]
+    assert not bad, f"applicationId read outside llm/artifacts.py: {bad}"
 
 
 def test_materialize_eager_only_when_feeding_broadcast(spark):

@@ -8,8 +8,17 @@ from __future__ import annotations
 from _round import rhalf
 
 import math
+from unittest import mock
 
 import __spark_entry__ as entry_mod
+from reactor_window_like_flink_spark.llm import artifacts
+
+
+def _fresh_memos():
+    """Artifact memos key on (applicationId, sf_dir) and can't see a
+    patched ``load``: run fixture queries against empty memos so they
+    never reuse an artifact built from other data."""
+    return mock.patch.object(artifacts, "MEMOS", {})
 
 
 def _patched(module_names):
@@ -40,20 +49,12 @@ def _with_table(spark, rows, schema, key, modules):
     origs = [m.load for m in mods]
     for m in mods:
         m.load = lambda s, d, t: df
-    # the BPE merge memo keys on (applicationId, sf_dir) and can't see a
-    # patched load; clear it so fixture runs never reuse stale merges
-    caches = [m._MERGE_CACHE for m in mods if hasattr(m, "_MERGE_CACHE")]
-    saved = [dict(c) for c in caches]
-    for c in caches:
-        c.clear()
     try:
-        return entry_mod.queries()[key](spark, "unused").collect()
+        with _fresh_memos():
+            return entry_mod.queries()[key](spark, "unused").collect()
     finally:
         for m, o in zip(mods, origs):
             m.load = o
-        for c, s in zip(caches, saved):
-            c.clear()
-            c.update(s)
 
 
 DOC_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
@@ -516,16 +517,14 @@ def test_bpe_encode_matches_reference_and_compresses(spark):
 
     import reactor_window_like_flink_spark.llm.bpe as bpe
 
-    orig_load, orig_cache = bpe.load, dict(bpe._MERGE_CACHE)
+    orig_load = bpe.load
     df = spark.createDataFrame(rows, DOC_SCHEMA)
     bpe.load = lambda s, d, t: df
-    bpe._MERGE_CACHE.clear()
     try:
-        out = entry_mod.queries()["q_bpe_encode"](spark, "unused").collect()
+        with _fresh_memos():
+            out = entry_mod.queries()["q_bpe_encode"](spark, "unused").collect()
     finally:
         bpe.load = orig_load
-        bpe._MERGE_CACHE.clear()
-        bpe._MERGE_CACHE.update(orig_cache)
 
     merges = _bpe_reference(texts, 16)
     ranked = {(l, r): rank for rank, l, r, _ in merges}
@@ -638,8 +637,6 @@ def test_bpe_memo_shares_one_training_pass(spark):
 
     calls = {"n": 0}
     orig_learn, orig_load = bpe.learn_bpe_merges, bpe.load
-    orig_cache = dict(bpe._MERGE_CACHE)
-    bpe._MERGE_CACHE.clear()
     bpe.load = lambda s, d, t: df
 
     def counting_learn(*a, **kw):
@@ -648,17 +645,16 @@ def test_bpe_memo_shares_one_training_pass(spark):
 
     bpe.learn_bpe_merges = counting_learn
     try:
-        entry_mod.queries()["q_bpe_merges"](spark, "unused").collect()
-        entry_mod.queries()["q_bpe_encode"](spark, "unused").collect()
+        with _fresh_memos() as memos:
+            entry_mod.queries()["q_bpe_merges"](spark, "unused").collect()
+            entry_mod.queries()["q_bpe_encode"](spark, "unused").collect()
         assert calls["n"] == 1, "both BPE keys must share one training pass"
-        (key,) = bpe._MERGE_CACHE.keys()
+        (key,) = memos["bpe_merges"].keys()
         assert key[0] == spark.sparkContext.applicationId
         assert key[1] == "unused"
     finally:
         bpe.learn_bpe_merges = orig_learn
         bpe.load = orig_load
-        bpe._MERGE_CACHE.clear()
-        bpe._MERGE_CACHE.update(orig_cache)
 
 
 def test_inverted_index_tiered_bounds_rows_and_reconstructs(spark):

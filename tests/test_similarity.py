@@ -92,17 +92,20 @@ def test_ivf_index_trains_once_and_query_plan_has_no_training(spark, sf_dir):
     assert "HashAggregate" not in plan  # no centroid (re)aggregation
 
 
-def test_ivf_cache_rebuilds_for_new_session(spark, sf_dir):
+def test_ivf_cache_rebuilds_for_new_session(spark, sf_dir, monkeypatch):
     """A cached index is bound to the session that built it; a stale
-    entry (session restarted) must be rebuilt, not served."""
+    entry (an ended application's) must be rebuilt, not served."""
+    from reactor_window_like_flink_spark.llm import artifacts
     from reactor_window_like_flink_spark.llm import similarity as S
 
-    live = S.train_ivf(spark, sf_dir)
-    stale = S.IVFIndex(object(), live.centroids, live.assigned)
-    S._IVF_CACHE[sf_dir] = stale
+    stale = S.IVFIndex([], spark.range(1))
+    memo = {("ended-app", sf_dir): stale}
+    monkeypatch.setitem(artifacts.MEMOS, "ivf", memo)
     rebuilt = S.train_ivf(spark, sf_dir)
     assert rebuilt is not stale
-    assert rebuilt.session is spark
+    assert rebuilt.centroids and rebuilt.assigned.storageLevel.useMemory
+    assert (spark.sparkContext.applicationId, sf_dir) in memo
+    rebuilt.assigned.unpersist()
 
 
 def test_pq_rerank_is_exact_over_adc_candidates(spark, sf_dir, vectors):
@@ -144,7 +147,8 @@ def test_pq_rerank_is_exact_over_adc_candidates(spark, sf_dir, vectors):
         assert abs(r["cosine"] - rhalf(cos, 4)) <= 1e-4
 
 
-def test_pq_trains_once_and_codes_are_compact(spark, sf_dir):
+def test_pq_trains_once_and_codes_are_compact(spark, sf_dir, monkeypatch):
+    from reactor_window_like_flink_spark.llm import artifacts
     from reactor_window_like_flink_spark.llm import similarity as S
 
     first = S.train_pq(spark, sf_dir)
@@ -153,11 +157,15 @@ def test_pq_trains_once_and_codes_are_compact(spark, sf_dir):
     row = first.codes.select("code").first()
     assert len(row["code"]) == S.PQ_M
     assert all(0 <= c < S.PQ_K for c in row["code"])
-    # stale-session cache entries rebuild instead of serving a dead plan
-    stale = S.PQIndex(object(), first.codebooks, first.codes)
-    S._PQ_CACHE[sf_dir] = stale
+    # an ended application's entry is rebuilt instead of serving a dead plan
+    stale = S.PQIndex(first.codebooks, spark.range(1))
+    memo = {("ended-app", sf_dir): stale}
+    monkeypatch.setitem(artifacts.MEMOS, "pq", memo)
     rebuilt = S.train_pq(spark, sf_dir)
-    assert rebuilt is not stale and rebuilt.session is spark
+    assert rebuilt is not stale and rebuilt is not first
+    assert rebuilt.codes.storageLevel.useMemory
+    assert (spark.sparkContext.applicationId, sf_dir) in memo
+    rebuilt.codes.unpersist()
 
 
 def test_pq_recall_on_clustered_vectors(spark):

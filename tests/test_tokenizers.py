@@ -20,6 +20,7 @@ def test_bpe_merge_cache_is_lru_not_evict_all_other_apps(spark, monkeypatch):
     capacity evicts the LEAST-recently-used key, and a hit refreshes
     recency."""
     import reactor_window_like_flink_spark.llm.bpe as bpe
+    from reactor_window_like_flink_spark.llm import artifacts
 
     rows = _docs([(1, "low lower lowest low low")])
     df = spark.createDataFrame(rows, DOC_SCHEMA)
@@ -32,24 +33,25 @@ def test_bpe_merge_cache_is_lru_not_evict_all_other_apps(spark, monkeypatch):
         return orig_learn(*a, **kw)
 
     monkeypatch.setattr(bpe, "learn_bpe_merges", counting_learn)
-    # fresh dict via monkeypatch: restored even if an assert fails
-    monkeypatch.setattr(bpe, "_MERGE_CACHE", type(bpe._MERGE_CACHE)())
+    # fresh memo via monkeypatch: restored even if an assert fails
+    memo: dict = {}
+    monkeypatch.setitem(artifacts.MEMOS, "bpe_merges", memo)
 
     foreign = ("some-other-live-app", "dir-x")
-    bpe._MERGE_CACHE[foreign] = [(0, "a", "b", 1)]
+    memo[foreign] = [(0, "a", "b", 1)]
     bpe.merges_for(spark, "dir-0")
-    assert foreign in bpe._MERGE_CACHE, "foreign live session thrashed"
+    assert foreign in memo, "foreign live session thrashed"
     # fill to capacity with distinct corpora (foreign + dir-0 count)
-    for i in range(1, bpe._MERGE_CACHE_MAX - 1):
+    for i in range(1, artifacts.MAX_ENTRIES - 1):
         bpe.merges_for(spark, f"dir-{i}")
-    assert len(bpe._MERGE_CACHE) == bpe._MERGE_CACHE_MAX
+    assert len(memo) == artifacts.MAX_ENTRIES
     # hit dir-0 -> refresh recency; next insert must evict the
     # foreign entry (now the least recently used), not dir-0
     n_before = calls["n"]
     bpe.merges_for(spark, "dir-0")
     assert calls["n"] == n_before, "hit must not retrain"
     bpe.merges_for(spark, "dir-new")
-    assert len(bpe._MERGE_CACHE) == bpe._MERGE_CACHE_MAX
+    assert len(memo) == artifacts.MAX_ENTRIES
     app = spark.sparkContext.applicationId
-    assert (app, "dir-0") in bpe._MERGE_CACHE
-    assert foreign not in bpe._MERGE_CACHE
+    assert (app, "dir-0") in memo
+    assert foreign not in memo

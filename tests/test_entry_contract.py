@@ -134,6 +134,27 @@ def test_no_hand_rolled_artifact_memo():
     assert not bad, f"applicationId read outside llm/artifacts.py: {bad}"
 
 
+def test_fixture_tables_read_only_through_load():
+    """Fixture tables are read only through ``sources/tables.py::load``
+    (which memoizes their schemas): no ``.parquet(...)`` call elsewhere in
+    the package passes an argument that references ``sf_dir``."""
+    import ast
+
+    bad = [
+        where
+        for where, node in _package_nodes("sources/tables.py")
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and any(
+            isinstance(n, ast.Name) and n.id == "sf_dir"
+            for arg in [*node.args, *(k.value for k in node.keywords)]
+            for n in ast.walk(arg)
+        )
+    ]
+    assert not bad, f"parquet reads of sf_dir outside sources/tables.py: {bad}"
+
+
 def test_materialize_eager_only_when_feeding_broadcast(spark):
     """``feeds_broadcast=True`` starts exactly one more job at call time
     than the lazy default. The lazy call is not asserted to start zero:

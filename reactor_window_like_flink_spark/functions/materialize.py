@@ -1,6 +1,8 @@
-"""The one materialization rule. Every ``localCheckpoint`` in the package
-goes through ``materialize``; no module calls it directly (pinned by
-``tests/test_entry_contract.py``).
+"""The one materialization rule, and the one bounded driver collect.
+Every ``localCheckpoint`` in the package goes through ``materialize``;
+no module calls it directly (pinned by ``tests/test_entry_contract.py``).
+A driver collect whose over-bound result is an error goes through
+``collect_bounded``.
 
 The rule:
 
@@ -31,7 +33,7 @@ durable cluster the same call sites would take ``checkpoint()``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 def materialize(df: DataFrame, *, feeds_broadcast: bool = False) -> DataFrame:
@@ -39,3 +41,57 @@ def materialize(df: DataFrame, *, feeds_broadcast: bool = False) -> DataFrame:
     ``feeds_broadcast`` (the frame feeds a broadcast build side and its
     probe in one plan). Chains as ``df.transform(materialize)``."""
     return df.localCheckpoint(eager=feeds_broadcast)
+
+
+# Spark's executeTake scans this many partitions in its first round.
+_LIMIT_INITIAL_PARTITIONS = "spark.sql.limit.initialNumPartitions"
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> list[Row] | None:
+    """Collect ``df`` to the driver in one Spark job if it holds at most
+    ``max_rows`` rows; return ``None`` (after one job) if it holds more.
+
+    The rule: one ``df.limit(max_rows + 1).collect()``. A bare
+    ``limit().collect()`` is not enough: Spark's ``executeTake`` scans
+    ``spark.sql.limit.initialNumPartitions`` (1) partitions, then scales
+    up in further jobs, so a frame over P > 1 partitions pays 2+ jobs.
+    Here that conf is raised, for this call only, to 2**31-1, which is
+    at least any frame's partition count (an adaptive plan's count is
+    known only after its shuffle stages run), so the first round scans
+    every partition. The conf is set on ``df.sparkSession`` and restored
+    in a ``finally``, even when the collect raises.
+
+    The real driver bound is P*(max_rows+1) rows, not max_rows+1: each
+    of the P partitions ships up to max_rows+1 rows before the driver
+    truncates. A bare ``limit(max_rows+1).collect()`` already had that
+    bound in its scale-up rounds; ``spark.driver.maxResultSize`` is the
+    hard stop on serialized bytes either way.
+
+    So use it only where an over-bound result raises (the publisher's
+    ``consumer`` path, ``sources/sinks.py::to_memory_table``). A gate
+    that falls back to a distributed path when over its bound (the BPE
+    and unigram ``driver_vocab_max`` gates, ``llm/similarity.py::fit_pq``'s
+    training sample) keeps its ``count()`` first: a count ships no rows,
+    while here an over-bound frame ships up to P*(max_rows+1) rows and
+    can pass ``maxResultSize`` where the fallback should have run. A
+    count that sizes distributed work (``train_ivf``'s ``KMeans.fit``
+    sample) is not a driver gate at all.
+
+    A ``take()`` running concurrently on the same session while the
+    conf is raised sees it only as a different partitions-scanned
+    count, never as different rows; so do later ``take()``s if two
+    overlapping ``collect_bounded`` calls on one session restore out of
+    order. Inside ``foreachBatch`` the session is the streaming query's
+    own clone, so nothing else shares it.
+    """
+    spark = df.sparkSession
+    prev = spark.conf.get(_LIMIT_INITIAL_PARTITIONS, None)
+    spark.conf.set(_LIMIT_INITIAL_PARTITIONS, str(2**31 - 1))
+    try:
+        rows = df.limit(max_rows + 1).collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(_LIMIT_INITIAL_PARTITIONS)
+        else:
+            spark.conf.set(_LIMIT_INITIAL_PARTITIONS, prev)
+    return rows if len(rows) <= max_rows else None

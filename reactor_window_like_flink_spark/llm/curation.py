@@ -33,6 +33,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.functions.materialize import materialize
@@ -1302,8 +1303,17 @@ def corpus_ingest_sink(
             b.groupBy("text_hash").agg(F.min("doc_id").alias("doc_id")),
             ["text_hash", "doc_id"],
         )
+        # The ledger holds winners' rows under a batch_id partition column;
+        # reading with that schema skips the per-batch inference job.
+        ledger_schema = StructType(
+            [
+                winners.schema["text_hash"],
+                winners.schema["doc_id"],
+                StructField("batch_id", IntegerType()),
+            ]
+        )
         try:
-            ledger = spark.read.parquet(ledger_dir)
+            ledger = spark.read.schema(ledger_schema).parquet(ledger_dir)
             prior = ledger.filter(F.col("batch_id") != batch_id).select(
                 "text_hash"
             )

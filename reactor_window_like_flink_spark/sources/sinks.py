@@ -14,6 +14,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from reactor_window_like_flink_spark.functions.materialize import collect_bounded
+
 
 def write_parquet(
     df: DataFrame,
@@ -61,12 +63,14 @@ def to_memory_table(
 ) -> DataFrame:
     """Batch analog of the streaming memory sink: materialize into a
     local-relation temp view (driver memory — debug/test scale only).
-    The collect is guarded by ``max_rows`` (the publisher's
-    ``limit(cap+1)`` device): exceeding it raises instead of silently
-    OOMing the driver — a memory sink pointed at a fact table is a
-    caller bug, not a workload."""
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    The collect goes through ``collect_bounded`` (one Spark job, as on
+    the publisher's ``consumer`` path): more than ``max_rows`` rows
+    raises instead of silently OOMing the driver — a memory sink pointed
+    at a fact table is a caller bug, not a workload. At most
+    P*(max_rows+1) rows of a P-partition frame reach the driver before
+    that check."""
+    rows = collect_bounded(df, max_rows)
+    if rows is None:
         raise ValueError(
             f"to_memory_table('{name}'): result exceeds max_rows="
             f"{max_rows}; memory sinks are debug/test scale — write to a"

@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from reactor_window_like_flink_spark.functions.materialize import collect_bounded
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -379,10 +381,13 @@ class WindowedPublisher:
         self.max_batch_size = window_max_batch_size
         self.window_duration_seconds = window_duration_seconds
         # Driver-memory guard for the `consumer` (collect-to-driver) path:
-        # one micro-batch larger than this errors instead of OOMing the
-        # driver. The reference's List<T> consumer has no such bound
-        # because its queue_capacity bounds admission; here admission is
-        # a directory, so the delivery side must enforce the bound.
+        # each micro-batch is collected by `collect_bounded`, one Spark
+        # job, and a batch of more rows errors instead of OOMing the
+        # driver. Rows reaching the driver before that check are bounded
+        # by P*(consumer_max_rows+1) for a batch over P partitions (see
+        # `collect_bounded`). The reference's List<T> consumer has no
+        # such bound because its queue_capacity bounds admission; here
+        # admission is a directory, so the delivery side must enforce it.
         self.consumer_max_rows = consumer_max_rows
 
     def subscribe(
@@ -429,11 +434,8 @@ class WindowedPublisher:
                 if consumer_df is not None:
                     consumer_df(batch_df, batch_id)
                     return
-                # limit(cap+1) bounds what ever reaches the driver (the
-                # overflow probe costs one extra row, not a count() job);
-                # a full cap+1 result means the batch exceeds the bound.
-                rows = batch_df.limit(cap + 1).collect()
-                if len(rows) > cap:
+                rows = collect_bounded(batch_df, cap)
+                if rows is None:
                     raise ValueError(
                         f"micro-batch {batch_id} exceeds consumer_max_rows="
                         f"{cap} on the driver-collect `consumer` path; use "

@@ -251,9 +251,9 @@ def test_exact_units_survives_int64_overflow(spark):
 
 
 def test_units_reduction_exact_forms_agree(spark):
-    """r16 units->currency migration (tools/units_migrate.py): all THREE
-    reduction forms — the DataFrame ``units_to_currency``, the Spark-SQL
-    ``div`` template, and the DuckDB ``//`` template — must equal the
+    """Exact units->currency reduction: all THREE reduction forms — the
+    DataFrame ``units_to_currency``, the Spark-SQL ``div`` template, and
+    the DuckDB ``//`` template — must equal the
     exact Python integer half-away-from-zero reference on every input,
     including the adversarial class the old double form misrounds (unit
     sums whose true cent quotient sits within 1 ulp of a half: witness

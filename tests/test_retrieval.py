@@ -559,6 +559,29 @@ def test_bpe_distributed_and_driver_paths_identical(spark):
     assert fast == _bpe_reference(texts, 12)
 
 
+def test_bpe_driver_gate_both_sides_identical(spark, monkeypatch):
+    """The driver gate at its edge: a vocabulary of exactly
+    ``driver_vocab_max`` rows learns on the driver, one row more falls
+    back to the distributed loop; both give the same merges."""
+    from reactor_window_like_flink_spark.llm import bpe
+
+    texts = ["low lower lowest low low", "new newer newest new", "aaaa aa"]
+    df = spark.createDataFrame(_docs([(i, t) for i, t in enumerate(texts)]), DOC_SCHEMA)
+    n_vocab = bpe._word_vocab(df).count()
+    sequential_calls = []
+    learn = bpe._learn_sequential
+    monkeypatch.setattr(
+        bpe,
+        "_learn_sequential",
+        lambda *a: sequential_calls.append(1) or learn(*a),
+    )
+    at = bpe.learn_bpe_merges(spark, df, 12, driver_vocab_max=n_vocab)
+    assert sequential_calls == [1]
+    over = bpe.learn_bpe_merges(spark, df, 12, driver_vocab_max=n_vocab - 1)
+    assert sequential_calls == [1]
+    assert at == over == _bpe_reference(texts, 12)
+
+
 def test_quantile_approx_within_tolerance_of_exact(spark, sf_dir):
     exact = {
         r["event_type"]: (r["p50"], r["p95"])

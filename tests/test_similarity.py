@@ -168,6 +168,39 @@ def test_pq_trains_once_and_codes_are_compact(spark, sf_dir, monkeypatch):
     rebuilt.codes.unpersist()
 
 
+def test_pq_training_sample_both_sides_of_cap(spark, monkeypatch):
+    """``fit_pq`` trains on every vector when the corpus fits
+    ``PQ_TRAIN_MAX_ROWS`` and on a seeded sample
+    of at most that many when it does not; it encodes every vector
+    either way."""
+    from reactor_window_like_flink_spark.llm import similarity
+
+    rng = np.random.default_rng(5)
+    n, dim = 64, 16
+    rows = [
+        (i, 0, [float(x) for x in rng.standard_normal(dim)]) for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
+    trained_on = []
+    lloyd = similarity._lloyd
+    monkeypatch.setattr(
+        similarity,
+        "_lloyd",
+        lambda x, k, seed: trained_on.append(len(x)) or lloyd(x, k, seed),
+    )
+    for cap in (n, n - 1):
+        monkeypatch.setattr(similarity, "PQ_TRAIN_MAX_ROWS", cap)
+        trained_on.clear()
+        index = similarity.fit_pq(spark, df, m=4, k=4)
+        assert index.codes.count() == n
+        index.codes.unpersist()
+        assert len(set(trained_on)) == 1, trained_on
+        if cap == n:
+            assert trained_on[0] == n
+        else:
+            assert 0 < trained_on[0] <= cap
+
+
 def test_pq_recall_on_clustered_vectors(spark):
     """PQ + re-rank recall on data with neighborhood structure (same
     clustered fixture rationale as the IVF test: the bundled embeddings

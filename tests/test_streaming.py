@@ -381,6 +381,36 @@ def test_drain_job_budget_flat_across_listing_threshold(spark, tmp_path):
     assert jobs_per_drain[20] == jobs_per_drain[40], jobs_per_drain
 
 
+def test_consumer_drain_is_one_job_per_micro_batch(spark, tmp_path):
+    """The ``consumer`` path collects each micro-batch in one Spark job
+    (``collect_bounded``), also when its files pack into several
+    partitions: a bare ``limit(cap+1).collect()`` scans one partition,
+    then scales up in a second job."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    src = FileStreamInput(spark, SCHEMA, str(tmp_path / "in"))
+    for i in range(4):
+        src.publish(_rows(5, start_minute=i))
+    delivered: list = []
+    query = WindowedPublisher().subscribe(
+        src.stream(), consumer=delivered.extend, drain=True
+    )
+    assert query.awaitTermination(60)
+    assert len(delivered) == 20
+    batches = sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = tracker.getJobIdsForGroup(query.runId)
+    tasks = sum(
+        tracker.getStageInfo(sid).numTasks
+        for jid in job_ids
+        for sid in tracker.getJobInfo(jid).stageIds
+    )
+    assert len(job_ids) == batches, (len(job_ids), batches, tasks)
+    # More tasks than jobs: at least one micro-batch spans more than one
+    # partition, the case where a bare limit().collect() needs a 2nd job.
+    assert tasks > len(job_ids), (tasks, len(job_ids))
+
+
 def test_second_subscribe_on_live_checkpoint_raises(spark, tmp_path):
     """Unicast safety (ref WindowPublisher.java:68): a second query on a
     checkpoint owned by a live query must be refused — it would corrupt
@@ -822,3 +852,27 @@ def test_consumer_path_bounded_by_consumer_max_rows(spark, tmp_path):
 
     with pytest.raises(ValueError):
         WindowedPublisher(consumer_max_rows=0)
+
+
+def test_consumer_path_delivers_exactly_consumer_max_rows(spark, tmp_path):
+    """Both sides of the driver-collect bound: a micro-batch of exactly
+    ``consumer_max_rows`` rows is delivered whole, one row more raises
+    through the error channel and delivers nothing."""
+    pub = WindowedPublisher(window_max_batch_size=10, consumer_max_rows=20)
+    for n, want_rows in ((20, 20), (21, 0)):
+        src = FileStreamInput(spark, SCHEMA, str(tmp_path / f"in{n}"))
+        src.publish(_rows(n))
+        delivered: list[list] = []
+        errors: list[Exception] = []
+        query = pub.subscribe(
+            src.stream(),
+            consumer=delivered.append,
+            on_error=errors.append,
+            drain=True,
+        )
+        assert query.awaitTermination(60)
+        assert sum(len(c) for c in delivered) == want_rows, n
+        assert all(len(c) <= 10 for c in delivered)
+        assert bool(errors) == (n > 20), (n, errors)
+        if errors:
+            assert "consumer_max_rows=20" in str(errors[0])

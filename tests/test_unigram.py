@@ -46,6 +46,27 @@ def test_distributed_path_equals_sequential_reference(spark):
     assert dist == seq
 
 
+def test_driver_gate_both_sides_identical(spark, monkeypatch):
+    """The driver gate at its edge: a vocabulary of exactly
+    ``driver_vocab_max`` rows trains on the driver, one row more falls
+    back to the distributed seed + EM loop; both give the same table."""
+    from reactor_window_like_flink_spark.llm import unigram
+
+    docs = _docs_df(spark)
+    n_vocab = unigram._word_vocab(docs).count()
+    sequential_calls = []
+    monkeypatch.setattr(
+        unigram,
+        "train_unigram_sequential",
+        lambda *a: sequential_calls.append(1) or train_unigram_sequential(*a),
+    )
+    at = train_unigram(spark, docs, driver_vocab_max=n_vocab)
+    assert sequential_calls == [1]
+    over = train_unigram(spark, docs, driver_vocab_max=n_vocab - 1)
+    assert sequential_calls == [1]
+    assert at == over
+
+
 def test_viterbi_tie_break_prefers_longest_last_piece():
     model = _smoothed_scores({"ab": 10.0, "a": 10.0, "b": 10.0, "c": 5.0})
     # "ab" as one piece beats a+b (fewer pieces, higher total); ties on

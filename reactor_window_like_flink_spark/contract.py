@@ -7,17 +7,8 @@ driver contract (``__spark_entry__.py``) merges the per-module registries.
 Determinism rules (so the driver's order-insensitive value-hash matches):
   * round every order-of-summation-dependent double aggregate (SUM/AVG over
     doubles) — per-row arithmetic is IEEE-deterministic and needs no rounding;
-  * ...but ROUND(x, n) at n >= 1 is NOT engine-identical at representation
-    boundaries: Spark rounds the SHORTEST DECIMAL REPR (BigDecimal.valueOf)
-    while DuckDB rounds the BINARY double, and they disagree when the repr
-    sits on the other side of a half from the binary value (first caught by
-    the r14 sf0.1 sweep: q_quality_score off by 1e-4 on 8 of 50k rows, and
-    q_tpch_q11_shape one cent off in a SUM). For exact-rational-derived
-    values that can land on decimal halves, use ``ROUND(x * 10^n, 0) / 10^n``
-    (at 0 decimals both engines agree on every double, including exact
-    halves — both go away from zero), or quantize to scaled BIGINT before
-    aggregating (the q11 integer-cents pattern) when the value also feeds a
-    threshold compare;
+  * ...and round at n >= 1 decimals only through ``round_to`` (its
+    docstring has the engine-identity rule);
   * cast DuckDB ``count``/``sum`` of integers to BIGINT (DuckDB widens to
     HUGEINT, Spark stays at LongType);
   * emit computed timestamps as epoch-seconds BIGINT or formatted strings
@@ -31,7 +22,7 @@ Determinism rules (so the driver's order-insensitive value-hash matches):
     ``array_join(transform(array_sort(xs), x -> string(x)), ',')`` vs
     DuckDB ``array_to_string(list_transform(list_sort(xs), x ->
     CAST(x AS VARCHAR)), ',')``. Enforced by
-    ``tests/test_contract.py::test_no_bare_container_columns``.
+    ``tests/test_entry_contract.py::test_no_bare_container_columns``.
 """
 
 from __future__ import annotations
@@ -39,9 +30,33 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def round_to(col: Column | str, n: int) -> Column:
+    """``col`` rounded to ``n`` decimals, identically in Spark and DuckDB.
+
+    ``ROUND(x, n)`` at n >= 1 is NOT engine-identical at representation
+    boundaries: Spark rounds the SHORTEST DECIMAL REPR (BigDecimal.valueOf)
+    while DuckDB rounds the BINARY double, and they disagree when the repr
+    sits on the other side of a half from the binary value (an sf0.1 sweep
+    found q_quality_score off by 1e-4 on 8 of 50k rows, and
+    q_tpch_q11_shape one cent off in a SUM). So every Spark-side round is
+    ``ROUND(x * 10^n, 0) / 10^n`` (at 0 decimals both engines agree on
+    every double, including exact halves — both go away from zero), and
+    the oracle SQL spells the same form inline. The multiplier is an int
+    literal and the divisor a double literal, as in the oracle text. When
+    the value also feeds a threshold compare, quantize to scaled BIGINT
+    before aggregating instead (the q11 integer-cents pattern). A ``str``
+    is a column name. ``tests/test_entry_contract.py::
+    test_no_unsafe_round_anywhere`` fails on a bare n >= 1 round and on
+    a hand-expanded form outside this module.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * 10**n, 0) / float(10**n)
 
 
 class Registry:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -62,7 +62,7 @@ def q_udaf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        (F.round((wavg("l_extendedprice", "l_quantity")) * 10000, 0) / 10000.0).alias("wavg_price"),
+        round_to(wavg("l_extendedprice", "l_quantity"), 4).alias("wavg_price"),
         n_rows("l_extendedprice").alias("n"),
     )
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -117,12 +117,12 @@ def q_scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        (F.round(F.col("l_extendedprice") * 10, 0) / 10.0).alias("price_r"),
+        round_to("l_extendedprice", 1).alias("price_r"),
         F.abs(F.col("l_extendedprice") - 50000).alias("dev"),
         F.ceil("l_quantity").alias("ceil_qty"),
         F.floor("l_quantity").alias("floor_qty"),
-        (F.round((F.log("l_extendedprice")) * 1000000, 0) / 1000000.0).alias("ln_price"),
-        (F.round((F.pow("l_discount", F.lit(2))) * 1000000000, 0) / 1000000000.0).alias("disc_sq"),
+        round_to(F.log("l_extendedprice"), 6).alias("ln_price"),
+        round_to(F.pow("l_discount", F.lit(2)), 9).alias("disc_sq"),
         (F.col("l_orderkey") % 7).alias("mod7"),
     )
 
@@ -181,9 +181,9 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("embedding", 1).alias("first_val"),
         F.array_max("embedding").alias("max_val"),
         F.size(F.filter("embedding", lambda x: x > 0)).cast("long").alias("n_pos"),
-        (F.round((F.aggregate(
+        round_to(F.aggregate(
                 "embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double")
-            )) * 10000, 0) / 10000.0).alias("l1_sum"),
+            ), 4).alias("l1_sum"),
     )
 
 

@@ -29,7 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.llm.curation import (
     FUNNEL_MAX_TOK,
     FUNNEL_MIN_DIV,
@@ -166,7 +166,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_classifier_inputs(docs).select(
         "doc_id",
         F.greatest(F.length("_lt") - 2, F.lit(0)).cast("long").alias("n_grams"),
-        (F.round((score) * 10000, 0) / 10000.0).alias("clf_score"),
+        round_to(score, 4).alias("clf_score"),
         F.when(score >= CLF_KEEP_MIN, "keep").otherwise("drop").alias("clf_label"),
     )
 

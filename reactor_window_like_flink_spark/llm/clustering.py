@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.dedup import exact_jaccard_pairs
 from reactor_window_like_flink_spark.sources.tables import load
@@ -306,7 +306,7 @@ def pagerank(
         # identical 6dp output; 3 keeps analysis O(1) per segment.
         if (i + 1) % 3 == 0 and i != iters - 1:
             ranks = materialize(ranks)
-    return ranks.select("node", (F.round(F.col("rank") * 1000000, 0) / 1000000.0).alias("rank"))
+    return ranks.select("node", round_to("rank", 6).alias("rank"))
 
 
 @REG.add("q_pagerank")  # rows-only: 10 iterations of order-dependent

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.artifacts import artifact
 from reactor_window_like_flink_spark.llm.dedup import _shingles_from_toks, _tokenized
@@ -90,7 +90,7 @@ def decontaminate(shingled: DataFrame, eval_pred: F.Column) -> DataFrame:
             "doc_id",
             F.col("n_hit").cast("long").alias("n_hit"),
             F.col("n_shingles").cast("long").alias("n_shingles"),
-            (F.round((F.col("n_hit").cast("double") / F.col("n_shingles")) * 10000, 0) / 10000.0).alias("contamination_frac"),
+            round_to(F.col("n_hit").cast("double") / F.col("n_shingles"), 4).alias("contamination_frac"),
         )
     )
 
@@ -270,7 +270,7 @@ def repetition_stats(toks_df: DataFrame) -> DataFrame:
         F.sum("c").cast("long").alias("n_tri"),
         F.count("*").cast("long").alias("n_uniq_tri"),
         F.max("c").cast("long").alias("max_tri_count"),
-        (F.round((frac) * 10000, 0) / 10000.0).alias("rep_frac"),
+        round_to(frac, 4).alias("rep_frac"),
         (frac >= REPETITION_FLAG_FRAC).alias("is_repetitive"),
     )
 
@@ -338,7 +338,7 @@ def domain_mix(docs: DataFrame, weight: F.Column) -> DataFrame:
     return (
         docs.join(F.broadcast(rates), "source")
         .filter(u < F.col("rate"))
-        .select("doc_id", "source", (F.round(F.col("rate") * 10000, 0) / 10000.0).alias("rate"))
+        .select("doc_id", "source", round_to("rate", 4).alias("rate"))
     )
 
 
@@ -781,7 +781,7 @@ def _near_admission(
         F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
     )
     matches = (
-        paired.withColumn("jaccard", (F.round((inter / union) * 10000, 0) / 10000.0))
+        paired.withColumn("jaccard", round_to(inter / union, 4))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .groupBy("batch_id")
         .agg(
@@ -960,7 +960,7 @@ def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.withColumn("_t", (p - q) * F.log(p / q))
         .groupBy("source", "ns")
-        .agg((F.round((F.sum("_t")) * 10000, 0) / 10000.0).alias("psi"))
+        .agg(round_to(F.sum("_t"), 4).alias("psi"))
         .select("source", F.col("ns").alias("n_docs"), "psi")
     )
 
@@ -1071,7 +1071,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("n_trigrams"),
             novel.cast("long").alias("n_novel"),
-            (F.round((novel.cast("double") / F.count("*")) * 10000, 0) / 10000.0).alias("novelty"),
+            round_to(novel.cast("double") / F.count("*"), 4).alias("novelty"),
         )
     )
 
@@ -1529,5 +1529,5 @@ def funnel_report(
         (tot - F.coalesce(F.sum("n").over(w_prev), F.lit(0).cast("long")))
         .cast("long")
         .alias("n_in"),
-        (F.round((F.col("n") / tot) * 10000, 0) / 10000.0).alias("pct_of_total"),
+        round_to(F.col("n") / tot, 4).alias("pct_of_total"),
     )

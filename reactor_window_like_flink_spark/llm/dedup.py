@@ -29,7 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -206,7 +206,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b"))
     return (
-        paired.withColumn("jaccard", (F.round((inter / union) * 10000, 0) / 10000.0))
+        paired.withColumn("jaccard", round_to(inter / union, 4))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -623,8 +623,8 @@ def containment_pairs(
         .select(
             "doc_a",
             "doc_b",
-            (F.round(F.col("_ca") * 10000, 0) / 10000.0).alias("cont_a"),
-            (F.round(F.col("_cb") * 10000, 0) / 10000.0).alias("cont_b"),
+            round_to("_ca", 4).alias("cont_a"),
+            round_to("_cb", 4).alias("cont_b"),
         )
     )
 
@@ -1006,7 +1006,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(eb, "vec_b")
         .withColumn("cos_raw", dot / (F.col("nrm_a") * F.col("nrm_b")))
         .filter(F.col("cos_raw") >= EMB_COSINE_THRESHOLD)
-        .select("vec_a", "vec_b", (F.round(F.col("cos_raw") * 10000, 0) / 10000.0).alias("cosine"))
+        .select("vec_a", "vec_b", round_to("cos_raw", 4).alias("cosine"))
     )
 
 
@@ -1138,7 +1138,7 @@ def lsh_cosine_pairs_fast(
         # shuffle: one hash aggregate on the pair key).
         .groupBy("vec_a", "vec_b")
         .agg(F.max("cosine").alias("cosine"))
-        .select("vec_a", "vec_b", (F.round(F.col("cosine") * 10000, 0) / 10000.0).alias("cosine"))
+        .select("vec_a", "vec_b", round_to("cosine", 4).alias("cosine"))
     )
 
 
@@ -1406,7 +1406,7 @@ def prefix_jaccard_join(
         F.col("n_total") - F.col("n_inter")
     )
     return scored.filter(jacc >= t).select(
-        "doc_a", "doc_b", (F.round((jacc) * 10000, 0) / 10000.0).alias("jaccard")
+        "doc_a", "doc_b", round_to(jacc, 4).alias("jaccard")
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -297,7 +297,7 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.posexplode("embedding").alias("i", "c")
     )
     cent = comp.groupBy("label", "i").agg(
-        (F.round((F.avg(F.col("c").cast("double"))) * 1000000, 0) / 1000000.0).alias("m")
+        round_to(F.avg(F.col("c").cast("double")), 6).alias("m")
     )
     carr = (
         cent.groupBy("label")
@@ -308,7 +308,7 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.expr("transform(sm, s -> s.m)").alias("centroid"),
         )
-        .withColumn("centroid_norm", (F.round((_arr_norm("centroid")) * 1000000, 0) / 1000000.0))
+        .withColumn("centroid_norm", round_to(_arr_norm("centroid"), 6))
         .drop("sm")
     )
     # fixed-dim unrolled cosine: same IEEE add order as the fold the
@@ -332,6 +332,6 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("label", "centroid_norm").agg(
         F.count("*").cast("long").alias("n"),
-        (F.round((F.avg("cos")) * 10000, 0) / 10000.0).alias("mean_cos"),
-        (F.round((F.min("cos")) * 10000, 0) / 10000.0).alias("min_cos"),
+        round_to(F.avg("cos"), 4).alias("mean_cos"),
+        round_to(F.min("cos"), 4).alias("min_cos"),
     )

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -95,9 +95,9 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seg.crossJoin(F.broadcast(prior)).select(
         "c_mktsegment",
         "n_orders",
-        (F.round((F.col("s_u2").cast("double") / 100.0 / F.col("n_orders")) * 1000000, 0) / 1000000.0).alias("seg_mean"),
-        (F.round(((F.coalesce(F.col("s_u2").cast("double"), F.lit(0.0)) / 100.0 + m * F.col("mu"))
-            / (F.col("n_orders") + m)) * 1000000, 0) / 1000000.0).alias("encoded"),
+        round_to(F.col("s_u2").cast("double") / 100.0 / F.col("n_orders"), 6).alias("seg_mean"),
+        round_to((F.coalesce(F.col("s_u2").cast("double"), F.lit(0.0)) / 100.0 + m * F.col("mu"))
+            / (F.col("n_orders") + m), 6).alias("encoded"),
     )
 
 
@@ -170,9 +170,9 @@ def q_feature_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(f"hi_{c}") - F.col(f"lo_{c}")
         )
         digest_aggs += [
-            (F.round((F.avg(z)) * 1000000, 0) / 1000000.0).alias(f"z_mean_{c}"),
-            (F.round((F.min(mm)) * 1000000, 0) / 1000000.0).alias(f"mm_min_{c}"),
-            (F.round((F.max(mm)) * 1000000, 0) / 1000000.0).alias(f"mm_max_{c}"),
+            round_to(F.avg(z), 6).alias(f"z_mean_{c}"),
+            round_to(F.min(mm), 6).alias(f"mm_min_{c}"),
+            round_to(F.max(mm), 6).alias(f"mm_max_{c}"),
         ]
     return scaled.groupBy("l_returnflag").agg(*digest_aggs)
 
@@ -248,7 +248,7 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in FEATURE_COLS:
         rz = (F.col(c) - F.col(f"med_{c}")) / F.col(f"iqr_{c}")
         aggs += [
-            (F.round((F.avg(rz)) * 1000000, 0) / 1000000.0).alias(f"r_mean_{c}"),
+            round_to(F.avg(rz), 6).alias(f"r_mean_{c}"),
             F.sum(F.when(F.abs(rz) > ROBUST_OUT_Z, 1).otherwise(0))
             .cast("long")
             .alias(f"n_out_{c}"),
@@ -350,7 +350,7 @@ def q_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("n_f").over(w_seg) - F.col("n_f"))
         .cast("long")
         .alias("n_oof"),
-        (F.round((enc) * 1000000, 0) / 1000000.0).alias("encoded_oof"),
+        round_to(enc, 6).alias("encoded_oof"),
     )
 
 
@@ -410,7 +410,7 @@ def current_encoding(
     return seg.crossJoin(F.broadcast(prior)).select(
         "category",
         "n",
-        (F.round((F.col("s") / F.col("n")) * 1000000, 0) / 1000000.0).alias("seg_mean"),
-        (F.round(((F.coalesce(F.col("s"), F.lit(0.0)) + m * F.col("mu"))
-            / (F.col("n") + m)) * 1000000, 0) / 1000000.0).alias("encoded"),
+        round_to(F.col("s") / F.col("n"), 6).alias("seg_mean"),
+        round_to((F.coalesce(F.col("s"), F.lit(0.0)) + m * F.col("mu"))
+            / (F.col("n") + m), 6).alias("encoded"),
     )

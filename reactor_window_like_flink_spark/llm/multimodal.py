@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -146,7 +146,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_frames").alias("total_frames"),
-            (F.round((F.avg("mean_byte")) * 10000, 0) / 10000.0).alias("avg_mean_byte"),
+            round_to(F.avg("mean_byte"), 4).alias("avg_mean_byte"),
         )
         .orderBy("kind")
     )
@@ -226,7 +226,7 @@ def resize_images(media_df: DataFrame, max_side: int = 224) -> DataFrame:
         F.greatest(F.round(h * scale).cast("long"), F.lit(1)).alias(
             "out_height"
         ),
-        (F.round((scale) * 10000, 0) / 10000.0).alias("scale"),
+        round_to(scale, 4).alias("scale"),
     )
 
 

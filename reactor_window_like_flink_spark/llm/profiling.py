@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -125,7 +125,7 @@ def histogram(df: DataFrame, col: str, lo: float, width: float, n: int) -> DataF
         )
         .select(
             "bucket",
-            (F.round((F.lit(lo) + F.col("bucket") * F.lit(width)) * 100, 0) / 100.0).alias("bucket_lo"),
+            round_to(F.lit(lo) + F.col("bucket") * F.lit(width), 2).alias("bucket_lo"),
             "n_rows",
             "sum_val",
         )
@@ -183,7 +183,7 @@ def zscore_outliers(df: DataFrame, key: str, val: str) -> DataFrame:
             "event_id",
             key,
             val,
-            (F.round((z) * 1000, 0) / 1000.0).alias("z"),
+            round_to(z, 3).alias("z"),
         )
     )
 
@@ -271,7 +271,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "value",
-            (F.round((mz) * 1000, 0) / 1000.0).alias("mz"),
+            round_to(mz, 3).alias("mz"),
         )
     )
 
@@ -313,7 +313,7 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     wide = li.agg(
         *[
-            ((F.round((F.corr(x, y)) * 10000, 0) / 10000.0) + F.lit(0.0)).alias(f"_c_{i}")
+            (round_to(F.corr(x, y), 4) + F.lit(0.0)).alias(f"_c_{i}")
             for i, (x, y) in enumerate(pairs)
         ]
     )
@@ -404,13 +404,13 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # margin sits ~7 orders below the 1e-4 rounding grid, and
             # quantizing a generic metric column to cents would narrow
             # the operator's semantics to the fixture (r15 review)
-            (F.round((F.avg("value")) * 10000, 0) / 10000.0).alias("mean_raw"),
-            (F.round((F.avg(clipped)) * 10000, 0) / 10000.0).alias("mean_winsor"),
+            round_to(F.avg("value"), 4).alias("mean_raw"),
+            round_to(F.avg(clipped), 4).alias("mean_winsor"),
         )
         .select(
             "event_type",
-            (F.round(F.col("p01") * 10000, 0) / 10000.0).alias("p01"),
-            (F.round(F.col("p99") * 10000, 0) / 10000.0).alias("p99"),
+            round_to("p01", 4).alias("p01"),
+            round_to("p99", 4).alias("p99"),
             "n",
             "n_clipped_lo",
             "n_clipped_hi",
@@ -461,10 +461,10 @@ def skew_metrics(df: DataFrame, key: str, label: str) -> DataFrame:
     return s.agg(
         n_keys.cast("long").alias("n_keys"),
         n_rows.cast("long").alias("n_rows"),
-        (F.round((F.max("v").cast("double") / n_rows) * 10000, 0) / 10000.0).alias("max_share"),
-        (F.round((F.expr("percentile(v, 0.99, m)")
-            / F.expr("percentile(v, 0.5, m)")) * 10000, 0) / 10000.0).alias("p99_over_p50"),
-        (F.round((gini_num.cast("double") / (n_keys * n_rows)) * 10000, 0) / 10000.0).alias("gini"),
+        round_to(F.max("v").cast("double") / n_rows, 4).alias("max_share"),
+        round_to(F.expr("percentile(v, 0.99, m)")
+            / F.expr("percentile(v, 0.5, m)"), 4).alias("p99_over_p50"),
+        round_to(gini_num.cast("double") / (n_keys * n_rows), 4).alias("gini"),
     ).filter(
         # an ungrouped agg emits one row even over an empty relation;
         # the grouped SQL oracle emits none — align on "no keys, no row"
@@ -583,9 +583,9 @@ def q_embed_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_vecs"),
         F.min("dim").cast("long").alias("min_dim"),
         F.max("dim").cast("long").alias("max_dim"),
-        (F.round((F.avg("nrm")) * 10000, 0) / 10000.0).alias("mean_norm"),
-        (F.round((F.expr("percentile(nrm, 0.5)")) * 10000, 0) / 10000.0).alias("p50_norm"),
-        (F.round((F.expr("percentile(nrm, 0.95)")) * 10000, 0) / 10000.0).alias("p95_norm"),
+        round_to(F.avg("nrm"), 4).alias("mean_norm"),
+        round_to(F.expr("percentile(nrm, 0.5)"), 4).alias("p50_norm"),
+        round_to(F.expr("percentile(nrm, 0.95)"), 4).alias("p95_norm"),
         F.sum(F.when(F.col("nrm") == 0, 1).otherwise(0))
         .cast("long")
         .alias("n_zero"),
@@ -660,7 +660,7 @@ def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_docs"),
             F.min("n_chars").cast("long").alias("min_chars"),
             F.max("n_chars").cast("long").alias("max_chars"),
-            (F.round((F.avg("n_chars")) * 10000, 0) / 10000.0).alias("avg_chars"),
+            round_to(F.avg("n_chars"), 4).alias("avg_chars"),
         )
     )
 
@@ -732,11 +732,11 @@ def q_chi2_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("n_rows") - 1) * (F.col("n_cols") - 1))
         .cast("long")
         .alias("dof"),
-        (F.round(F.col("chi2") * 10000, 0) / 10000.0).alias("chi2"),
-        (F.round((F.sqrt(
+        round_to("chi2", 4).alias("chi2"),
+        round_to(F.sqrt(
                 F.col("chi2")
                 / (F.col("n") * F.least(F.col("n_rows") - 1, F.col("n_cols") - 1))
-            )) * 10000, 0) / 10000.0).alias("cramers_v"),
+            ), 4).alias("cramers_v"),
     )
 
 
@@ -794,6 +794,6 @@ def q_gini_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_sources"),
         F.sum("chars").cast("long").alias("total_chars"),
         F.when((n == 0) | (F.sum("wt") == 0), F.lit(None).cast("double"))
-        .otherwise((F.round((gini) * 1000000, 0) / 1000000.0))
+        .otherwise(round_to(gini, 6))
         .alias("gini"),
     )

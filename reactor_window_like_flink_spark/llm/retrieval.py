@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.artifacts import artifact, unpersist
 from reactor_window_like_flink_spark.llm.text import _tokens
@@ -123,7 +123,7 @@ def q_bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_s", score)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= BM25_TOP_TERMS)
-        .select("doc_id", "term", (F.round(F.col("_s") * 10000, 0) / 10000.0).alias("bm25"), "rank")
+        .select("doc_id", "term", round_to("_s", 4).alias("bm25"), "rank")
     )
 
 
@@ -353,7 +353,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "pair",
             F.col("c_xy").cast("long").alias("pair_count"),
-            (F.round((pmi) * 10000, 0) / 10000.0).alias("pmi"),
+            round_to(pmi, 4).alias("pmi"),
         )
         .orderBy(F.desc("pmi"), F.asc("pair"))
         .limit(PMI_TOP_K)
@@ -413,11 +413,11 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is undefined and NULL is the right answer.
     return ranked.groupBy("source").agg(
         F.count("*").cast("long").alias("n_terms"),
-        (F.round((F.try_divide(F.covar_samp(x, y), F.var_samp(x))) * 10000, 0) / 10000.0).alias("zipf_slope"),
-        (F.round((F.try_divide(
+        round_to(F.try_divide(F.covar_samp(x, y), F.var_samp(x)), 4).alias("zipf_slope"),
+        round_to(F.try_divide(
                 F.covar_samp(x, y) * F.covar_samp(x, y),
                 F.var_samp(x) * F.var_samp(y),
-            )) * 10000, 0) / 10000.0).alias("r2"),
+            ), 4).alias("r2"),
     )
 
 
@@ -468,8 +468,8 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "ns")
         .agg(
             F.count("*").cast("long").alias("n_terms"),
-            (F.round((h) * 10000, 0) / 10000.0).alias("entropy"),
-            (F.round((F.try_divide(h, F.log(F.count("*")))) * 10000, 0) / 10000.0).alias("norm_entropy"),
+            round_to(h, 4).alias("entropy"),
+            round_to(F.try_divide(h, F.log(F.count("*"))), 4).alias("norm_entropy"),
         )
         .select(
             "source",
@@ -563,7 +563,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "term",
             "cnt",
-            (F.round((F.col("cnt").cast("double") / F.col("n")) * 10000, 0) / 10000.0).alias("share"),
+            round_to(F.col("cnt").cast("double") / F.col("n"), 4).alias("share"),
         )
     )
 
@@ -576,9 +576,8 @@ BM25_QUERY_TERMS = ("query", "filter", "data")
 BM25_QUERY_TOP_K = 10
 
 
-@REG.add(
-    "q_bm25_query",
-    f"""
+# Both BM25 query keys answer the same question: one oracle.
+_BM25_QUERY_ORACLE = f"""
     WITH per_doc AS (
       SELECT doc_id,
              CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl,
@@ -620,8 +619,10 @@ BM25_QUERY_TOP_K = 10
                 AS INT) AS rank
     FROM scored WHERE n_hits > 0
     ORDER BY (ROUND((s) * 10000, 0) / 10000.0) DESC, doc_id LIMIT {BM25_QUERY_TOP_K}
-    """,
-)
+    """
+
+
+@REG.add("q_bm25_query", _BM25_QUERY_ORACLE)
 def q_bm25_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents for a fixed query under BM25 —
     the query-time twin of ``q_bm25_topterms`` (retrieval inference:
@@ -640,24 +641,14 @@ def q_bm25_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats aggregate and the scoring projection), zero hash exchanges —
     at 100 TB this is a scan-speed pass, vs. the posting-list join a
     pre-built ``q_inverted_index`` would serve for ad-hoc queries."""
-    # Distributed top-k FIRST (TakeOrderedAndProject — per-partition
-    # heaps, never a global sort/window over all matching docs), then
-    # the rank window runs over the K-row result only.
-    top = (
-        _bm25_query_scored(spark, sf_dir)
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(BM25_QUERY_TOP_K)
-    )
-    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return top.withColumn("rank", F.row_number().over(w))
+    return _bm25_top_k(_bm25_scan_features(spark, sf_dir))
 
 
-def _bm25_query_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scored-but-unranked BM25 frame for the fixed query: every
-    matching (n_hits > 0) document with its rounded score — shared by
-    ``q_bm25_query`` (rank + top-k) and ``q_rrf_fusion`` (lexical arm).
-    Plan shape as documented on ``q_bm25_query``: constant-term tf
-    columns, one broadcast stats row, zero joins/exchanges."""
+def _bm25_scan_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixed query's scoring inputs from one corpus scan: per document
+    ``doc_id, dl, tf_i`` crossed with the broadcast 1-row ``n, avgdl,
+    df_i``. Plan shape as documented on ``q_bm25_query``: constant-term
+    tf columns, one broadcast stats row, zero joins/exchanges."""
     docs = load(spark, sf_dir, "documents")
     toks = _tokens()
 
@@ -675,7 +666,6 @@ def _bm25_query_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, t in enumerate(BM25_QUERY_TERMS)
         ],
     ).transform(materialize)  # feeds stats AND scoring (narrow O(docs) frame)
-    nterms = len(BM25_QUERY_TERMS)
     stats = per_doc.agg(
         F.count("*").cast("double").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
@@ -683,9 +673,19 @@ def _bm25_query_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0))
             .cast("double")
             .alias(f"df_{i}")
-            for i in range(nterms)
+            for i in range(len(BM25_QUERY_TERMS))
         ],
     )
+    return per_doc.crossJoin(F.broadcast(stats))
+
+
+def _bm25_scored(features: DataFrame) -> DataFrame:
+    """Every matching (n_hits > 0) document with its rounded BM25 score,
+    from a frame with ``doc_id, dl, tf_i, n, avgdl, df_i`` (the scan's
+    or the index's). The per-term saturation formula is summed in FIXED
+    term order, so both engines add the same doubles in the same order.
+    ``q_rrf_fusion``'s lexical arm reads it unranked."""
+    nterms = len(BM25_QUERY_TERMS)
 
     def term_score(i: int) -> F.Column:
         idf = F.log(
@@ -703,15 +703,25 @@ def _bm25_query_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hits = sum(
         F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0) for i in range(nterms)
     )
-    return (
-        per_doc.crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            n_hits.cast("long").alias("n_hits"),
-            (F.round((s) * 10000, 0) / 10000.0).alias("bm25"),
-        )
-        .filter(F.col("n_hits") > 0)
+    return features.select(
+        "doc_id",
+        n_hits.cast("long").alias("n_hits"),
+        round_to(s, 4).alias("bm25"),
+    ).filter(F.col("n_hits") > 0)
+
+
+def _bm25_top_k(features: DataFrame) -> DataFrame:
+    """The ranked top-k of ``_bm25_scored(features)``. Distributed top-k
+    FIRST (TakeOrderedAndProject — per-partition heaps, never a global
+    sort/window over all matching docs), then the rank window runs over
+    the K-row result only."""
+    top = (
+        _bm25_scored(features)
+        .orderBy(F.desc("bm25"), F.asc("doc_id"))
+        .limit(BM25_QUERY_TOP_K)
     )
+    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
+    return top.withColumn("rank", F.row_number().over(w))
 
 
 # -------------------------------------------------- count-min sketch rollup
@@ -893,52 +903,7 @@ def bm25_index(spark: SparkSession, sf_dir: str):
     )
 
 
-@REG.add(
-    "q_bm25_indexed",
-    f"""
-    WITH per_doc AS (
-      SELECT doc_id,
-             CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl,
-             {", ".join(
-                 f"CAST(len(list_filter(string_split(lower(text), ' '), "
-                 f"x -> x = '{t}')) AS BIGINT) AS tf_{i}"
-                 for i, t in enumerate(BM25_QUERY_TERMS)
-             )}
-      FROM documents
-    ),
-    stats AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n,
-             CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
-             {", ".join(
-                 f"CAST(sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS DOUBLE)"
-                 f" AS df_{i}"
-                 for i in range(len(BM25_QUERY_TERMS))
-             )}
-      FROM per_doc
-    ),
-    scored AS (
-      SELECT d.doc_id,
-             {" + ".join(
-                 f"CASE WHEN d.tf_{i} > 0 THEN 1 ELSE 0 END"
-                 for i in range(len(BM25_QUERY_TERMS))
-             )} AS n_hits,
-             {" + ".join(
-                 f"(ln(1.0 + (s.n - s.df_{i} + 0.5) / (s.df_{i} + 0.5))"
-                 f" * (d.tf_{i} * ({BM25_K1} + 1.0))"
-                 f" / (d.tf_{i} + {BM25_K1} * (1.0 - {BM25_B}"
-                 f"      + {BM25_B} * d.dl / s.avgdl)))"
-                 for i in range(len(BM25_QUERY_TERMS))
-             )} AS s
-      FROM per_doc d, stats s
-    )
-    SELECT doc_id, CAST(n_hits AS BIGINT) AS n_hits,
-           (ROUND((s) * 10000, 0) / 10000.0) AS bm25,
-           CAST(ROW_NUMBER() OVER (ORDER BY (ROUND((s) * 10000, 0) / 10000.0) DESC, doc_id)
-                AS INT) AS rank
-    FROM scored WHERE n_hits > 0
-    ORDER BY (ROUND((s) * 10000, 0) / 10000.0) DESC, doc_id LIMIT {BM25_QUERY_TOP_K}
-    """,
-)
+@REG.add("q_bm25_indexed", _BM25_QUERY_ORACLE)
 def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME top-10 BM25 query as ``q_bm25_query``,
     answered from the PRE-BUILT index (``bm25_index``) instead of a
@@ -960,7 +925,6 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     text is never read at query time."""
     postings, doclen = bm25_index(spark, sf_dir)
     terms = list(BM25_QUERY_TERMS)
-    nterms = len(terms)
     cand = postings.filter(F.col("term").isin(terms))
     per_doc = cand.groupBy("doc_id").agg(
         *[
@@ -989,40 +953,9 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(F.broadcast(dfs))
     )
-    scored = (
-        doclen.join(F.broadcast(per_doc), "doc_id")
-        .crossJoin(F.broadcast(stats))
+    return _bm25_top_k(
+        doclen.join(F.broadcast(per_doc), "doc_id").crossJoin(F.broadcast(stats))
     )
-
-    def term_score(i: int) -> F.Column:
-        idf = F.log(
-            1.0
-            + (F.col("n") - F.col(f"df_{i}") + 0.5) / (F.col(f"df_{i}") + 0.5)
-        )
-        tf = F.col(f"tf_{i}")
-        return idf * (tf * (BM25_K1 + 1.0)) / (
-            tf
-            + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-        )
-
-    s = term_score(0)
-    for i in range(1, nterms):  # fixed fold order — engine-identical sum
-        s = s + term_score(i)
-    n_hits = sum(
-        F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0) for i in range(nterms)
-    )
-    topk = (
-        scored.select(
-            "doc_id",
-            n_hits.cast("long").alias("n_hits"),
-            (F.round((s) * 10000, 0) / 10000.0).alias("bm25"),
-        )
-        .filter(F.col("n_hits") > 0)
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(BM25_QUERY_TOP_K)
-    )
-    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return topk.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
 # ------------------------------------------------ hybrid retrieval fusion
@@ -1140,7 +1073,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lex_top = (
-        _bm25_query_scored(spark, sf_dir)
+        _bm25_scored(_bm25_scan_features(spark, sf_dir))
         .filter(F.col("doc_id") != QUERY_VEC_ID)
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(RRF_ARM_K)
@@ -1163,7 +1096,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            (F.round((_dot("embedding", "qe") / (_norm("embedding") * F.col("qn"))) * 10000, 0) / 10000.0).alias("cosine"),
+            round_to(_dot("embedding", "qe") / (_norm("embedding") * F.col("qn")), 4).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("doc_id"))
         .limit(RRF_ARM_K)
@@ -1180,7 +1113,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         1.0 / (RRF_K + F.col("r_lex")), F.lit(0.0)
     ) + F.coalesce(1.0 / (RRF_K + F.col("r_sem")), F.lit(0.0))
     return (
-        fused.select("doc_id", "r_lex", "r_sem", (F.round((rrf) * 1000000, 0) / 1000000.0).alias("rrf"))
+        fused.select("doc_id", "r_lex", "r_sem", round_to(rrf, 6).alias("rrf"))
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
         .limit(RRF_TOP_K)
     )
@@ -1272,9 +1205,9 @@ def q_term_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "common",
             "df_a",
             "df_b",
-            (F.round((F.col("common")
+            round_to(F.col("common")
                 * 1.0
-                / (F.col("df_a") + F.col("df_b") - F.col("common"))) * 1000000, 0) / 1000000.0).alias("jaccard"),
+                / (F.col("df_a") + F.col("df_b") - F.col("common")), 6).alias("jaccard"),
         )
         .orderBy(F.desc("jaccard"), F.asc("term_a"), F.asc("term_b"))
         .limit(TERM_JACCARD_TOP_K)
@@ -1380,6 +1313,6 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0.0)
     mi = cells.groupBy("term").agg(
         F.max("df").cast("long").alias("df"),
-        (F.round((F.sum(present + absent)) * 1000000, 0) / 1000000.0).alias("mi"),
+        round_to(F.sum(present + absent), 6).alias("mi"),
     )
     return mi.orderBy(F.desc("mi"), F.asc("term")).limit(MI_TOP_K)

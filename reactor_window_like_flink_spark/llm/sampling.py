@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -531,9 +531,9 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_docs",
             "n_tokens",
-            (F.round(F.col("_p") * 10000, 0) / 10000.0).alias("p"),
-            (F.round((q) * 10000, 0) / 10000.0).alias("q"),
-            (F.round((q / F.col("_p")) * 10000, 0) / 10000.0).alias("repeat_factor"),
+            round_to("_p", 4).alias("p"),
+            round_to(q, 4).alias("q"),
+            round_to(q / F.col("_p"), 4).alias("repeat_factor"),
         )
     )
 
@@ -762,9 +762,9 @@ def q_sample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_tokens",
-        (F.round((q) * 10000, 0) / 10000.0).alias("q"),
-        (F.round((epochs_raw) * 10000, 0) / 10000.0).alias("epochs_want"),
-        (F.round((epochs) * 10000, 0) / 10000.0).alias("epochs"),
+        round_to(q, 4).alias("q"),
+        round_to(epochs_raw, 4).alias("epochs_want"),
+        round_to(epochs, 4).alias("epochs"),
         (epochs_raw > EPOCH_CAP).alias("capped"),
         F.round(epochs * F.col("n_tokens"))
         .cast("long")

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.llm.artifacts import MEMOS, artifact, unpersist
 from reactor_window_like_flink_spark.sources.layout import partitioned_write
@@ -95,7 +95,7 @@ def q_similarity_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(TOP_K)
-        .select("vec_id", "label", (F.round(F.col("cosine") * 10000, 0) / 10000.0).alias("cosine"))
+        .select("vec_id", "label", round_to("cosine", 4).alias("cosine"))
     )
 
 
@@ -266,7 +266,7 @@ def _exact_cosine_topk(
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
-        .select("vec_id", "label", (F.round(F.col("cosine") * 10000, 0) / 10000.0).alias("cosine"))
+        .select("vec_id", "label", round_to("cosine", 4).alias("cosine"))
     )
 
 
@@ -491,7 +491,7 @@ def quantize_int8(vectors: DataFrame) -> DataFrame:
         )).otherwise(qvec))
         .select(
             "vec_id",
-            (F.round(F.col("_scale") * 1000000, 0) / 1000000.0).alias("scale"),
+            round_to("_scale", 6).alias("scale"),
             F.array_join(F.transform("qvec", lambda x: x.cast("string")), ",").alias(
                 "qvec_csv"
             ),
@@ -729,7 +729,7 @@ def knn_graph(
         .select(
             "vec_id",
             "neighbor_id",
-            (F.round(F.col("_cos") * 10000, 0) / 10000.0).alias("cosine"),
+            round_to("_cos", 4).alias("cosine"),
             "rank",
         )
     )
@@ -1005,7 +1005,7 @@ def similarity_join(
         paired.withColumn("_cos", cos)
         .filter(F.col("_cos") >= EMB_COSINE_THRESHOLD)
         .select(
-            "query_id", "corpus_id", (F.round(F.col("_cos") * 10000, 0) / 10000.0).alias("cosine")
+            "query_id", "corpus_id", round_to("_cos", 4).alias("cosine")
         )
     )
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -65,7 +65,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").cast("long").alias("n_chars"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_uniq_tokens"),
-        (F.round((F.length("text").cast("double") / F.size(toks)) * 10000, 0) / 10000.0).alias("chars_per_token"),
+        round_to(F.length("text").cast("double") / F.size(toks), 4).alias("chars_per_token"),
     )
 
 
@@ -193,10 +193,10 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `quality` exactly this way (sf0.01 never hit a boundary).
     return docs.select(
         "doc_id",
-        (F.round(len_score * 10000, 0) / 10000.0).alias("len_score"),
-        (F.round(stop_ratio * 10000, 0) / 10000.0).alias("stop_ratio"),
-        (F.round(punct_ratio * 10000, 0) / 10000.0).alias("punct_ratio"),
-        (F.round(quality * 10000, 0) / 10000.0).alias("quality"),
+        round_to(len_score, 4).alias("len_score"),
+        round_to(stop_ratio, 4).alias("stop_ratio"),
+        round_to(punct_ratio, 4).alias("punct_ratio"),
+        round_to(quality, 4).alias("quality"),
         F.when(quality >= 0.45, "high")
         .when(quality >= 0.30, "medium")
         .otherwise("low")
@@ -226,7 +226,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(ws).cast("long").alias("ws_tokens"),
         F.size(bpe).cast("long").alias("bpe_tokens"),
-        (F.round((F.size(bpe).cast("double") / F.size(ws)) * 10000, 0) / 10000.0).alias("fertility"),
+        round_to(F.size(bpe).cast("double") / F.size(ws), 4).alias("fertility"),
     )
 
 
@@ -424,7 +424,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "term",
-            (F.round(F.col("_s") * 10000, 0) / 10000.0).alias("tfidf"),
+            round_to("_s", 4).alias("tfidf"),
             "rank",
         )
     )
@@ -494,7 +494,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.crossJoin(F.broadcast(n)).select(
         "doc_id",
         "n_tokens",
-        (F.round((F.col("m") - F.log("n")) * 10000, 0) / 10000.0).alias("avg_logprob"),
+        round_to(F.col("m") - F.log("n"), 4).alias("avg_logprob"),
     )
 
 
@@ -611,7 +611,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return d.select(
-        "doc_id", "n_bigrams", (F.round(F.col("s") * 10000, 0) / 10000.0).alias("avg_logprob_bi")
+        "doc_id", "n_bigrams", round_to("s", 4).alias("avg_logprob_bi")
     )
 
 
@@ -705,7 +705,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lp.join(F.broadcast(st), "lang").select(
         "doc_id",
         "lang",
-        (F.round(F.col("lp") * 10000, 0) / 10000.0).alias("avg_logprob"),
-        (F.round((z) * 10000, 0) / 10000.0).alias("z"),
+        round_to("lp", 4).alias("avg_logprob"),
+        round_to(z, 4).alias("z"),
         F.coalesce(z < -PPL_ZCUT, F.lit(False)).alias("dropped"),
     )

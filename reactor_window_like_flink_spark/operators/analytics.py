@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -60,7 +60,7 @@ def funnel(events: DataFrame, stages: tuple[str, ...]) -> DataFrame:
     for k in range(len(stages)):
         counts = counts.withColumn(
             f"_r{k}",
-            (F.round((F.col(f"_n{k}") / F.col("_n0").cast("double")) * 10000, 0) / 10000.0),
+            round_to(F.col(f"_n{k}") / F.col("_n0").cast("double"), 4),
         )
     stack_args = ", ".join(
         f"{k + 1}, '{s}', _n{k}, _r{k}" for k, s in enumerate(stages)
@@ -1095,7 +1095,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = m.withColumn(
         "cusum",
-        (F.round((F.sum(F.col("daily_mean") - F.col("type_mean")).over(w_cum)) * 1000000, 0) / 1000000.0),
+        round_to(F.sum(F.col("daily_mean") - F.col("type_mean")).over(w_cum), 6),
     )
     w_rank = w_type.orderBy(F.desc(F.abs(F.col("cusum"))), F.asc("day"))
     return (
@@ -1105,7 +1105,7 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_days",
             F.unix_timestamp("day").alias("cp_day"),
-            (F.round(F.col("cusum") * 10000, 0) / 10000.0).alias("cp_cusum"),
+            round_to("cusum", 4).alias("cp_cusum"),
         )
     )
 
@@ -1228,7 +1228,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(is_touch)
         .groupBy("event_type")
         .agg(
-            (F.round((F.sum(F.coalesce(F.col("cred"), F.lit(0.0)))) * 100, 0) / 100.0).alias(
+            round_to(F.sum(F.coalesce(F.col("cred"), F.lit(0.0))), 2).alias(
                 "credited_value"
             ),
             F.sum(F.when(F.col("cred") > 0, 1).otherwise(0))
@@ -1241,7 +1241,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_type") == "purchase") & (F.col("n_touches") == 0)
         )
         .agg(
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("credited_value"),
+            round_to(F.sum("value"), 2).alias("credited_value"),
             F.count("*").cast("long").alias("n_credited"),
         )
         .select(
@@ -1557,9 +1557,9 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a").cast("string").alias("antecedent"),
             F.col("c").cast("string").alias("consequent"),
-            (F.round((conf) * 1000000, 0) / 1000000.0).alias("confidence"),
-            (F.round((conf / (F.col("cnt_c") * 1.0 / F.col("n"))) * 1000000, 0) / 1000000.0).alias("lift"),
-            (F.round((F.col("cnt") * 1.0 / F.col("n")) * 1000000, 0) / 1000000.0).alias("support"),
+            round_to(conf, 6).alias("confidence"),
+            round_to(conf / (F.col("cnt_c") * 1.0 / F.col("n")), 6).alias("lift"),
+            round_to(F.col("cnt") * 1.0 / F.col("n"), 6).alias("support"),
         )
     )
 
@@ -1630,8 +1630,8 @@ def q_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "last_day",
         "last_value",
-        (F.round((ewma) * 1000000, 0) / 1000000.0).alias("ewma_level"),
-        (F.round((F.col("last_value") - ewma) * 1000000, 0) / 1000000.0).alias("last_deviation"),
+        round_to(ewma, 6).alias("ewma_level"),
+        round_to(F.col("last_value") - ewma, 6).alias("last_deviation"),
     )
 
 
@@ -1790,7 +1790,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_edges",
         "n_triangles",
         "n_wedges",
-        (F.round((coeff) * 1000000, 0) / 1000000.0).alias("clustering_coefficient"),
+        round_to(coeff, 6).alias("clustering_coefficient"),
     )
 
 
@@ -1888,9 +1888,9 @@ def q_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "last_day",
         "last_value",
-        (F.round((hw["l"]) * 1000000, 0) / 1000000.0).alias("level"),
-        (F.round((hw["b"]) * 1000000, 0) / 1000000.0).alias("trend"),
-        (F.round((hw["l"] + hw["b"]) * 1000000, 0) / 1000000.0).alias("forecast_next"),
+        round_to(hw["l"], 6).alias("level"),
+        round_to(hw["b"], 6).alias("trend"),
+        round_to(hw["l"] + hw["b"], 6).alias("forecast_next"),
     )
 
 
@@ -1956,8 +1956,8 @@ def q_dow_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "cnt",
         "dow_n",
-        (F.round(F.col("mu") * 1000000, 0) / 1000000.0).alias("dow_mean"),
-        (F.round((z) * 10000, 0) / 10000.0).alias("seasonal_z"),
+        round_to("mu", 6).alias("dow_mean"),
+        round_to(z, 4).alias("seasonal_z"),
     )
 
 
@@ -2059,10 +2059,10 @@ def q_abtest_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_b",
         "c_a",
         "c_b",
-        (F.round((F.col("c_a") * 1.0 / F.col("n_a")) * 1000000, 0) / 1000000.0).alias("rate_a"),
-        (F.round((F.col("c_b") * 1.0 / F.col("n_b")) * 1000000, 0) / 1000000.0).alias("rate_b"),
+        round_to(F.col("c_a") * 1.0 / F.col("n_a"), 6).alias("rate_a"),
+        round_to(F.col("c_b") * 1.0 / F.col("n_b"), 6).alias("rate_b"),
         F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise((F.round((z) * 10000, 0) / 10000.0))
+        .otherwise(round_to(z, 4))
         .alias("z_stat"),
     )
 
@@ -2136,10 +2136,10 @@ def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.select(
         "k",
         "n_tot",
-        (F.round((ms_between) * 1000000, 0) / 1000000.0).alias("ms_between"),
-        (F.round((ms_within) * 1000000, 0) / 1000000.0).alias("ms_within"),
+        round_to(ms_between, 6).alias("ms_between"),
+        round_to(ms_within, 6).alias("ms_within"),
         F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise((F.round((ms_between / ms_within) * 10000, 0) / 10000.0))
+        .otherwise(round_to(ms_between / ms_within, 4))
         .alias("f_stat"),
     )
 
@@ -2272,9 +2272,9 @@ def q_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n_a",
         "n_b",
-        (F.round((u_a) * 100, 0) / 100.0).alias("u_a"),
+        round_to(u_a, 2).alias("u_a"),
         F.when(degenerate, F.lit(None).cast("double"))
-        .otherwise((F.round(((u_a - n_a * 1.0 * n_b / 2.0) / F.sqrt(sig2)) * 10000, 0) / 10000.0))
+        .otherwise(round_to((u_a - n_a * 1.0 * n_b / 2.0) / F.sqrt(sig2), 4))
         .alias("z_stat"),
     )
 
@@ -2351,11 +2351,11 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = cum.crossJoin(F.broadcast(tot))
     return joined.groupBy("n_a", "n_b").agg(
         F.when((n_a == 0) | (n_b == 0), F.lit(None).cast("double"))
-        .otherwise((F.round((F.max(diff)) * 1000000, 0) / 1000000.0))
+        .otherwise(round_to(F.max(diff), 6))
         .alias("d_stat"),
         F.when((n_a == 0) | (n_b == 0), F.lit(None).cast("double"))
         .otherwise(
-            (F.round((F.max(diff) * F.sqrt(n_a * 1.0 * n_b / (n_a + n_b))) * 10000, 0) / 10000.0)
+            round_to(F.max(diff) * F.sqrt(n_a * 1.0 * n_b / (n_a + n_b)), 4)
         )
         .alias("ks_stat"),
     )
@@ -2437,7 +2437,7 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         aggs.append(
             F.when(var == 0, F.lit(None).cast("double"))
-            .otherwise((F.round((num / var) * 1000000, 0) / 1000000.0))
+            .otherwise(round_to(num / var, 6))
             .alias(f"r_lag{k}")
         )
     return lagged.groupBy("event_type").agg(*aggs)
@@ -2548,7 +2548,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", "value", F.expr(_poisson_case(_BOOT_U_SPARK)).alias("w")
     )
     means = rep.groupBy("b").agg(
-        (F.round((F.sum(F.col("w") * F.col("value")) / F.sum("w")) * 1000000, 0) / 1000000.0).alias("m")
+        round_to(F.sum(F.col("w") * F.col("value")) / F.sum("w"), 6).alias("m")
     )
     ranked = means.select(
         "m", F.row_number().over(Window.orderBy("m", "b")).alias("r")
@@ -2561,7 +2561,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = events.agg(
         F.count("*").cast("long").alias("n_events"),
-        (F.round((F.avg("value")) * 1000000, 0) / 1000000.0).alias("est_mean"),
+        round_to(F.avg("value"), 6).alias("est_mean"),
     ).select(
         "n_events",
         F.lit(BOOT_B).cast("long").alias("boot_b"),
@@ -2675,7 +2675,7 @@ def q_bootstrap_ci_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", "value", F.expr(_poisson_case(_fast_u("spark"))).alias("w")
     )
     means = rep.groupBy("b").agg(
-        (F.round((F.sum(F.col("w") * F.col("value")) / F.sum("w")) * 1000000, 0) / 1000000.0).alias("m")
+        round_to(F.sum(F.col("w") * F.col("value")) / F.sum("w"), 6).alias("m")
     )
     ranked = means.select(
         "m", F.row_number().over(Window.orderBy("m", "b")).alias("r")
@@ -2686,7 +2686,7 @@ def q_bootstrap_ci_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = events.agg(
         F.count("*").cast("long").alias("n_events"),
-        (F.round((F.avg("value")) * 1000000, 0) / 1000000.0).alias("est_mean"),
+        round_to(F.avg("value"), 6).alias("est_mean"),
     ).select(
         "n_events",
         F.lit(BOOT_B).cast("long").alias("boot_b"),
@@ -2787,16 +2787,16 @@ def q_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("grp").alias("arm"), "theta", "mx", "rho")
         .agg(
             F.count("*").cast("long").alias("n_users"),
-            (F.round((F.avg("y")) * 1000000, 0) / 1000000.0).alias("mean_y"),
-            (F.round((F.avg("y") - F.col("theta") * (F.avg("x") - F.col("mx"))) * 1000000, 0) / 1000000.0).alias("mean_y_adj"),
+            round_to(F.avg("y"), 6).alias("mean_y"),
+            round_to(F.avg("y") - F.col("theta") * (F.avg("x") - F.col("mx")), 6).alias("mean_y_adj"),
         )
         .select(
             "arm",
             "n_users",
             "mean_y",
             "mean_y_adj",
-            (F.round(F.col("theta") * 1000000, 0) / 1000000.0).alias("theta"),
-            (F.round(F.col("rho") * 1000000, 0) / 1000000.0).alias("rho"),
+            round_to("theta", 6).alias("theta"),
+            round_to("rho", 6).alias("rho"),
         )
     )
 
@@ -2882,9 +2882,9 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = F.col("sxy") - F.col("sx") * F.col("sx") / F.col("n")
     return s.select(
         (F.col("n") / 2).cast("long").alias("n_edges"),
-        (F.round((F.col("sx") / F.col("n")) * 1000000, 0) / 1000000.0).alias("mean_end_degree"),
+        round_to(F.col("sx") / F.col("n"), 6).alias("mean_end_degree"),
         F.when((F.col("n") == 0) | (varx == 0), F.lit(None).cast("double"))
-        .otherwise((F.round((cov / varx) * 1000000, 0) / 1000000.0))
+        .otherwise(round_to(cov / varx, 6))
         .alias("assortativity"),
     )
 
@@ -3009,7 +3009,7 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pv",
         F.when(
             F.col("zz").isNull(), F.lit(None).cast("double")
-        ).otherwise((F.round((F.expr(_two_sided_p("zz"))) * 1000000, 0) / 1000000.0)),
+        ).otherwise(round_to(F.expr(_two_sided_p("zz")), 6)),
     )
     w_rank = Window.orderBy(F.col("pv").asc_nulls_last(), "event_type")
     r = pdf.select(
@@ -3029,7 +3029,7 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_a",
         "n_b",
-        (F.round(F.col("zz") * 10000, 0) / 10000.0).alias("z_stat"),
+        round_to("zz", 4).alias("z_stat"),
         F.col("pv").alias("p_value"),
         F.col("rnk").alias("rank"),
         F.max(passes).over(w_suffix).cast("int").alias("significant"),
@@ -3123,10 +3123,10 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     vd, vr = F.var_pop("det"), F.var_pop("rem")
     return sea.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_days"),
-        (F.round((vd) * 10000, 0) / 10000.0).alias("var_detrended"),
-        (F.round((vr) * 10000, 0) / 10000.0).alias("var_remainder"),
+        round_to(vd, 4).alias("var_detrended"),
+        round_to(vr, 4).alias("var_remainder"),
         F.when(vd == 0, F.lit(None).cast("double"))
-        .otherwise((F.round((F.greatest(F.lit(0.0), 1.0 - vr / vd)) * 10000, 0) / 10000.0))
+        .otherwise(round_to(F.greatest(F.lit(0.0), 1.0 - vr / vd), 4))
         .alias("seasonal_strength"),
     )
 
@@ -3217,18 +3217,18 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(
         "n_a",
         "n_b",
-        (F.round(F.col("m_a") * 1000000, 0) / 1000000.0).alias("mean_a"),
-        (F.round(F.col("m_b") * 1000000, 0) / 1000000.0).alias("mean_b"),
+        round_to("m_a", 6).alias("mean_a"),
+        round_to("m_b", 6).alias("mean_b"),
         F.when((va + vb) == 0, F.lit(None).cast("double"))
         .otherwise(
-            (F.round(((F.col("m_a") - F.col("m_b")) / F.sqrt(va + vb)) * 10000, 0) / 10000.0)
+            round_to((F.col("m_a") - F.col("m_b")) / F.sqrt(va + vb), 4)
         )
         .alias("t_stat"),
         F.when((va == 0) & (vb == 0), F.lit(None).cast("double"))
         .otherwise(
-            (F.round(((va + vb)
+            round_to((va + vb)
                 * (va + vb)
-                / (va * va / (n_a - 1) + vb * vb / (n_b - 1))) * 100, 0) / 100.0)
+                / (va * va / (n_a - 1) + vb * vb / (n_b - 1)), 2)
         )
         .alias("df"),
     )

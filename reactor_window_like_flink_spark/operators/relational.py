@@ -19,7 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -428,12 +428,12 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row final combine; no data-proportional shuffle."""
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
-        (F.round((F.sum("l_quantity")) * 100, 0) / 100.0).alias("sum_qty"),
+        round_to(F.sum("l_quantity"), 2).alias("sum_qty"),
         units_to_currency(
             F.sum(exact_units(F.col("l_extendedprice"), 2)), 2
         ).alias("sum_price"),
-        (F.round((F.sum(exact_units(F.col("l_discount"), 2)).cast("double")
-                  / F.count("*") / 100.0) * 1000000, 0) / 1000000.0).alias("avg_disc"),
+        round_to(F.sum(exact_units(F.col("l_discount"), 2)).cast("double")
+                  / F.count("*") / 100.0, 6).alias("avg_disc"),
         F.min("l_quantity").alias("min_qty"),
         F.max("l_extendedprice").alias("max_price"),
         F.count("*").alias("n_rows"),
@@ -480,13 +480,13 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.round((F.sum("l_quantity")) * 100, 0) / 100.0).alias("sum_qty"),
+            round_to(F.sum("l_quantity"), 2).alias("sum_qty"),
             units_to_currency(F.sum(price_u2), 2).alias("sum_base_price"),
             units_to_currency(F.sum(exact_units(disc_price, 4)), 4).alias("sum_disc_price"),
             units_to_currency(F.sum(charge_u6), 6).alias("sum_charge"),
-            (F.round((F.avg("l_quantity")) * 10000, 0) / 10000.0).alias("avg_qty"),
-            (F.round((F.sum(price_u2).cast("double") / F.count("*") / 100.0) * 10000, 0) / 10000.0).alias("avg_price"),
-            (F.round((F.sum(disc_u2).cast("double") / F.count("*") / 100.0) * 10000, 0) / 10000.0).alias("avg_disc"),
+            round_to(F.avg("l_quantity"), 4).alias("avg_qty"),
+            round_to(F.sum(price_u2).cast("double") / F.count("*") / 100.0, 4).alias("avg_price"),
+            round_to(F.sum(disc_u2).cast("double") / F.count("*") / 100.0, 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -578,8 +578,8 @@ def q_agg_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     requires a per-group sort."""
     events = load(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
-        (F.round((F.expr("percentile(value, 0.5)")) * 10000, 0) / 10000.0).alias("p50"),
-        (F.round((F.expr("percentile(value, 0.95)")) * 10000, 0) / 10000.0).alias("p95"),
+        round_to(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
+        round_to(F.expr("percentile(value, 0.95)"), 4).alias("p95"),
     )
 
 
@@ -710,7 +710,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        (F.round((F.sum("o_totalprice").over(w)) * 100, 0) / 100.0).alias("running_spend"),
+        round_to(F.sum("o_totalprice").over(w), 2).alias("running_spend"),
     )
 
 
@@ -768,7 +768,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         "day_num",
-        (F.round((F.avg("o_totalprice").over(w)) * 10000, 0) / 10000.0).alias("mavg_30d"),
+        round_to(F.avg("o_totalprice").over(w), 4).alias("mavg_30d"),
     )
 
 
@@ -817,7 +817,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["F", "O"])
-        .agg((F.round((F.coalesce(F.sum("l_quantity"), F.lit(0.0))) * 100, 0) / 100.0))
+        .agg(round_to(F.coalesce(F.sum("l_quantity"), F.lit(0.0)), 2))
         .withColumnRenamed("F", "qty_F")
         .withColumnRenamed("O", "qty_O")
     )
@@ -844,8 +844,8 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.ntile(4).over(w).alias("quartile"),
-        (F.round((F.percent_rank().over(w)) * 1000000, 0) / 1000000.0).alias("pct_rank"),
-        (F.round((F.cume_dist().over(w)) * 1000000, 0) / 1000000.0).alias("cdist"),
+        round_to(F.percent_rank().over(w), 6).alias("pct_rank"),
+        round_to(F.cume_dist().over(w), 6).alias("cdist"),
         F.first("o_orderkey").over(w).alias("cheapest_key"),
     )
 
@@ -1281,8 +1281,7 @@ def q_reagg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "month",
             "n_events",
             units_to_currency(F.col("sv_u2"), 2).alias("sum_value"),
-            (F.round((F.col("sv_u2").cast("double") / F.col("n_events") / 100.0)
-                     * 10000, 0) / 10000.0).alias("avg_value"),
+            round_to(F.col("sv_u2").cast("double") / F.col("n_events") / 100.0, 4).alias("avg_value"),
         )
     )
 
@@ -1410,7 +1409,7 @@ def q_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "q",
-            (F.round((est) * 10000, 0) / 10000.0).alias("est"),
+            round_to(est, 4).alias("est"),
             F.col("n").cast("long").alias("n_events"),
         )
     )
@@ -1895,8 +1894,8 @@ def q_agg_quantile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring points at is itself a tested, benched surface."""
     events = load(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
-        (F.round((F.expr("percentile_approx(value, 0.5, 10000)")) * 10000, 0) / 10000.0).alias("p50"),
-        (F.round((F.expr("percentile_approx(value, 0.95, 10000)")) * 10000, 0) / 10000.0).alias("p95"),
+        round_to(F.expr("percentile_approx(value, 0.5, 10000)"), 4).alias("p50"),
+        round_to(F.expr("percentile_approx(value, 0.95, 10000)"), 4).alias("p95"),
     )
 
 
@@ -1949,7 +1948,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
     )
 
@@ -2113,7 +2112,7 @@ def q_tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_sq"))
         .filter(F.col("_sq") > Q18_QTY_THRESHOLD)
-        .select("l_orderkey", (F.round(F.col("_sq") * 100, 0) / 100.0).alias("sum_qty"))
+        .select("l_orderkey", round_to("_sq", 2).alias("sum_qty"))
     )
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
@@ -3163,11 +3162,11 @@ def q_tpch_q14_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .agg(
-            (F.round((100.0
+            round_to(100.0
                 * F.sum(
                     F.when(F.col("p_type") == "PROMO", rev_u4).otherwise(F.lit(0).cast("long"))
                 ).cast("double")
-                / F.sum(rev_u4).cast("double")) * 10000, 0) / 10000.0).alias("promo_revenue_pct"),
+                / F.sum(rev_u4).cast("double"), 4).alias("promo_revenue_pct"),
             units_to_currency(F.sum(rev_u4), 4).alias("total_revenue"),
         )
     )

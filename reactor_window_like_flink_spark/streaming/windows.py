@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry
+from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -34,7 +34,7 @@ def _tumbling(df: DataFrame) -> DataFrame:
         df.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -88,7 +88,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -132,7 +132,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             "user_id",
@@ -278,7 +278,7 @@ def stream_sliding(stream_df: DataFrame, watermark: str = "10 minutes") -> DataF
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -298,7 +298,7 @@ def stream_session(stream_df: DataFrame, watermark: str = "10 minutes") -> DataF
         .groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
+            round_to(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             "user_id",

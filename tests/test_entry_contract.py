@@ -3,6 +3,9 @@ consistent, and every query key builds and executes at sf0.001."""
 
 from __future__ import annotations
 
+from _jobs import count_jobs
+from _round import rhalf
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -46,22 +49,20 @@ def test_sweep_rotation_puts_unrecorded_keys_first():
 
 
 def test_no_unsafe_round_anywhere():
-    """Contract determinism rule (contract.py): ``ROUND(x, n)`` at n >= 1
-    is not engine-identical at representation boundaries — Spark rounds
-    the shortest decimal repr, DuckDB the binary double. The r15 audit
-    migrated every site (364 rewrites) to ``ROUND(x * 10^n, 0) / 10^n``;
-    this guard greps BOTH every registered oracle string and the package
-    source (Spark-side ``F.round`` + SQL strings) with the same
-    paren-matching detector the migration used, so the class is extinct
-    by construction, not by review."""
+    """Contract determinism rule (``contract.round_to``): ``ROUND(x, n)``
+    at n >= 1 is not engine-identical at representation boundaries —
+    Spark rounds the shortest decimal repr, DuckDB the binary double.
+    Spark code rounds through ``round_to``; SQL text spells
+    ``ROUND(x * 10^n, 0) / 10^n`` inline. This guard scans every
+    registered oracle string and the package source (Spark-side
+    ``F.round`` + SQL strings) with the paren-matching detector in
+    ``tests/_round.py``, and parses the package so a hand-expanded
+    ``F.round(x * 10^n, 0) / 10^n`` outside ``contract.py`` fails too:
+    the rule has one home, by construction, not by review."""
     import glob
     import os
-    import sys
 
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-    )
-    from round_migrate import find_unsafe, find_unsafe_sql_strings
+    from _round import find_unsafe, find_unsafe_sql_strings, is_hand_expanded
 
     bad: list[str] = []
     for key, sql in entry_mod.oracle_sql().items():
@@ -76,11 +77,17 @@ def test_no_unsafe_round_anywhere():
         bad += [f"{os.path.basename(path)}: {h}" for h in find_unsafe(src)]
         # embedded spark.sql bodies: in pure SQL, lowercase round( is the
         # engine function — scan string literals that look like SQL with
-        # the sql_only detector too (r15 ADVICE: the q_scalar_math gap)
+        # the sql_only detector too (the q_scalar_math gap)
         bad += [
             f"{os.path.basename(path)} [sql-string]: {h}"
             for h in find_unsafe_sql_strings(src)
         ]
+
+    bad += [
+        f"{where} [hand-expanded, use round_to]"
+        for where, node in _package_nodes("contract.py")
+        if is_hand_expanded(node)
+    ]
     assert not bad, f"unsafe ROUND(x, n>=1) sites: {bad[:10]} (+{max(0, len(bad)-10)} more)"
 
 
@@ -159,26 +166,15 @@ def test_materialize_eager_only_when_feeding_broadcast(spark):
     """``feeds_broadcast=True`` starts exactly one more job at call time
     than the lazy default. The lazy call is not asserted to start zero:
     under AQE it still runs the frame's shuffle stage when called."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from reactor_window_like_flink_spark.functions.materialize import (
         materialize,
     )
 
-    sc = spark.sparkContext
-
     def jobs_at_call(**kwargs) -> int:
         df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
-        group = f"materialize-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            materialize(df, **kwargs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return count_jobs(spark, lambda: materialize(df, **kwargs))[0]
 
     lazy = jobs_at_call()
     eager = jobs_at_call(feeds_broadcast=True)
@@ -221,3 +217,50 @@ def test_every_oracle_sql_binds_in_duckdb(sf_dir):
             con.sql(f"EXPLAIN {sql}")
         except Exception as ex:  # pragma: no cover - failure reporting
             raise AssertionError(f"{key}: oracle does not bind: {ex}") from ex
+
+
+@pytest.mark.parametrize(
+    "value, n",
+    [(0.28125, 4), (-0.125, 2), (float("nan"), 3), (None, 2)],
+)
+def test_round_to_equals_rhalf(spark, value, n):
+    """``round_to`` is the engines' safe form: it equals the ``rhalf``
+    model on a double column, the same column by name, and a decimal
+    column. 0.28125 at n=4 is the pinned case that banker's rounding
+    gets wrong (0.2812); NaN and null pass through."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DecimalType, DoubleType, StructField, StructType
+
+    from reactor_window_like_flink_spark.contract import round_to
+
+    schema = StructType(
+        [StructField("x", DoubleType()), StructField("d", DecimalType(12, 6))]
+    )
+    dec = None if value is None or value != value else Decimal(repr(value))
+    df = spark.createDataFrame([(value, dec)], schema)
+    row = df.select(
+        round_to(F.col("x"), n).alias("col"),
+        round_to("x", n).alias("name"),
+        round_to("d", n).alias("dec"),
+    ).first()
+    want = None if value is None else rhalf(value, n)
+    got = [row["col"], row["name"]]
+    if dec is None:
+        assert row["dec"] is None
+    else:
+        got.append(float(row["dec"]))
+    # repr: NaN equals NaN, None equals None
+    assert [repr(g) for g in got] == [repr(want)] * len(got)
+
+
+def test_round_to_builds_the_inline_expression():
+    from pyspark.sql import functions as F
+
+    from reactor_window_like_flink_spark.contract import round_to
+
+    c = F.col("v") / F.col("w")
+    for n in (1, 2, 4, 6, 9):
+        assert str(round_to(c, n)) == str(F.round(c * 10**n, 0) / float(10**n))
+    assert str(round_to("v", 4)) == str(F.round(F.col("v") * 10**4, 0) / 10000.0)

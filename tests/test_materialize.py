@@ -4,7 +4,7 @@ partition layout, and the per-call conf restored on every exit."""
 
 from __future__ import annotations
 
-import uuid
+from _jobs import count_jobs
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,19 +15,6 @@ from reactor_window_like_flink_spark.functions.materialize import (
 )
 
 CONF = "spark.sql.limit.initialNumPartitions"
-
-
-def _jobs(spark, fn):
-    """(fn(), Spark jobs fn started), counted by job group."""
-    sc = spark.sparkContext
-    group = f"collect-bounded-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_collect_bounded_at_and_over_the_bound(spark):
@@ -46,10 +33,10 @@ def test_collect_bounded_is_one_job_when_first_partition_is_empty(spark):
     sizes = df.rdd.glom().map(len).collect()
     assert len(sizes) == 4 and sizes[0] == 0, sizes
 
-    rows, jobs = _jobs(spark, lambda: collect_bounded(df, 30))
+    jobs, rows = count_jobs(spark, lambda: collect_bounded(df, 30))
     assert sorted(r["id"] for r in rows) == list(range(10, 40))
     assert jobs == 1
-    _, bare_jobs = _jobs(spark, lambda: df.limit(31).collect())
+    bare_jobs, _ = count_jobs(spark, lambda: df.limit(31).collect())
     assert bare_jobs > 1  # the fixture does exercise the scale-up
 
 

@@ -1,56 +1,15 @@
-"""Unit tests for the r15 round-migration tooling (tools/round_migrate.py)
-— the rewriter found two real edge cases during the migration (multi-line
-trailing commas, string-literal column args) and one detector gap
-(lowercase SQL round in oracle strings); each is pinned here so the
-guard test (`test_no_unsafe_round_anywhere`) keeps meaning what it says.
-No SparkSession needed — pure string transformation."""
+"""Unit tests for the unsafe-round detectors in ``tests/_round.py`` —
+the ones behind ``test_no_unsafe_round_anywhere``. The text scan once
+missed lowercase SQL ``round(`` in oracle strings and rounds nested
+inside another round's arguments; each case is pinned here so the guard
+keeps meaning what it says. No SparkSession needed — pure string and
+AST scanning."""
 
 from __future__ import annotations
 
-import os
-import sys
+from _round import find_unsafe, find_unsafe_sql_strings, is_hand_expanded
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
-)
-from round_migrate import find_unsafe, find_unsafe_sql_strings, migrate  # noqa: E402
-
-
-def test_migrates_basic_f_round():
-    src = 'x = F.round(a / b, 4)'
-    out, n = migrate(src)
-    assert n == 1
-    assert out == 'x = (F.round((a / b) * 10000, 0) / 10000.0)'
-
-
-def test_migrates_sql_round_uppercase_only():
-    src = "sql = 'SELECT ROUND(x / y, 2) AS r, round(z, 2) FROM t'"
-    out, n = migrate(src)
-    # lowercase round( is the Python builtin in source scans — untouched
-    assert n == 1
-    assert "(ROUND((x / y) * 100, 0) / 100.0)" in out
-    assert "round(z, 2)" in out
-
-
-def test_trailing_comma_multiline_call_is_migrated():
-    # the q7 revenue shape that the first r15 pass silently skipped
-    src = "F.round(\n    F.sum(v),\n    2,\n)"
-    out, n = migrate(src)
-    assert n == 1, "trailing-comma call must not parse as 3 args"
-    assert "* 100, 0) / 100.0" in out
-
-
-def test_symbolic_and_zero_scales_are_left_alone():
-    src = "F.round(x, nd)\nF.round(y, 0)\nROUND(z, 0)"
-    out, n = migrate(src)
-    assert n == 0 and out == src
-
-
-def test_migration_is_a_fixed_point():
-    src = 'a = F.round(x, 6)\nsql = "ROUND(y, 1)"'
-    once, n1 = migrate(src)
-    twice, n2 = migrate(once)
-    assert n1 == 2 and n2 == 0 and twice == once
+import ast
 
 
 def test_find_unsafe_matches_migrate_sites():
@@ -66,47 +25,19 @@ def test_find_unsafe_sql_only_catches_lowercase():
     assert len(find_unsafe(sql)) == 1  # source mode: uppercase only
 
 
-def test_string_literal_column_arg_becomes_f_col():
-    # A quoted-string first arg is a column NAME in the PySpark API;
-    # the r15 rewriter emitted ("sv") * 100 — Python string repetition,
-    # which compiles (so the compile() safety gate passed) but is wrong
-    # at runtime. The rewriter now emits F.col so its output is directly
-    # correct with no manual post-pass (r15 ADVICE fix).
-    out, n = migrate('F.round("sv", 2)')
-    assert n == 1
-    assert out == '(F.round((F.col("sv")) * 100, 0) / 100.0)'
-    # SQL ROUND("col", 2): a double-quoted identifier multiplies fine in
-    # SQL — no F.col wrapping there.
-    out, n = migrate('ROUND("sv", 2)')
-    assert out == '(ROUND(("sv") * 100, 0) / 100.0)'
-
-
 def test_nested_unsafe_round_is_found_and_migrated():
-    # r15 ADVICE (medium): the scanner used to advance past the entire
-    # matched call span, so an unsafe ROUND nested inside a SAFE outer
-    # round's arguments was invisible — the exact adversarial example:
+    # The scanner used to advance past the entire matched call span, so
+    # an unsafe ROUND nested inside a SAFE outer round's arguments was
+    # invisible — the exact adversarial example:
     src = "(F.round((F.round(x, 2) + y) * 10000, 0) / 10000.0)"
     hits = find_unsafe(src)
     assert len(hits) == 1 and "F.round(x, 2)" in hits[0]
-    out, n = migrate(src)
-    assert n == 1
-    assert "(F.round((x) * 100, 0) / 100.0)" in out
-    # and the safe outer wrapper survives untouched around it
-    assert out == (
-        "(F.round(((F.round((x) * 100, 0) / 100.0) + y) * 10000, 0) / 10000.0)"
-    )
 
 
 def test_unsafe_round_nested_inside_unsafe_round_migrates_both():
     src = "F.round(F.round(x, 2) + y, 4)"
     hits = find_unsafe(src)
     assert len(hits) == 2
-    out, n = migrate(src)
-    assert n == 2
-    assert find_unsafe(out) == []
-    # still a fixed point after the descend fix
-    again, n2 = migrate(out)
-    assert n2 == 0 and again == out
 
 
 def test_sql_strings_scan_catches_lowercase_in_embedded_sql():
@@ -122,3 +53,14 @@ def test_sql_strings_scan_catches_lowercase_in_embedded_sql():
     # f-string SQL bodies are scanned via their constant fragments
     fsrc = 'q = f"SELECT round(x, 3) FROM {tbl}"'
     assert len(find_unsafe_sql_strings(fsrc)) == 1
+
+
+def test_hand_expanded_safe_form_is_flagged_scaled_integer_is_not():
+    def flagged(src: str) -> int:
+        return sum(is_hand_expanded(n) for n in ast.walk(ast.parse(src)))
+
+    assert flagged("(F.round(F.sum(v) * 100, 0) / 100.0).alias('s')") == 1
+    assert flagged("F.round(10000 * x, 0) / 10000") == 1
+    # integer cents summed, then re-scaled: not a rounding site
+    assert flagged("F.round(F.sum(F.round(x * 100, 0).cast('long')), 0) / 100.0") == 0
+    assert flagged("round_to(F.sum(v), 2)") == 0

@@ -4,9 +4,10 @@ job) and reused while its files and the schema confs are unchanged."""
 
 from __future__ import annotations
 
+from _jobs import count_jobs
+
 import datetime as dt
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -18,19 +19,6 @@ from reactor_window_like_flink_spark.sources import tables
 from reactor_window_like_flink_spark.sources.tables import load
 
 
-def _jobs(spark, fn):
-    """(Spark jobs ``fn()`` starts, its result), counted by job group."""
-    sc = spark.sparkContext
-    group = f"tables-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 @pytest.fixture
 def cleared(monkeypatch):
     monkeypatch.setattr(tables, "_SCHEMAS", {})
@@ -38,8 +26,8 @@ def cleared(monkeypatch):
 
 @pytest.mark.parametrize("name", ["nation", "orders"])
 def test_first_load_infers_once_and_repeat_starts_no_job(spark, sf_dir, cleared, name):
-    first_jobs, first = _jobs(spark, lambda: load(spark, sf_dir, name))
-    again_jobs, again = _jobs(spark, lambda: load(spark, sf_dir, name))
+    first_jobs, first = count_jobs(spark, lambda: load(spark, sf_dir, name))
+    again_jobs, again = count_jobs(spark, lambda: load(spark, sf_dir, name))
     assert (first_jobs, again_jobs) == (1, 0)
     plain = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     assert again.schema == plain.schema == first.schema
@@ -65,7 +53,7 @@ def test_rewritten_table_gets_its_new_column(spark, tmp_path, cleared, layout):
     write(["r_regionkey", "r_name"])
     assert load(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
     write(list(cols))
-    n, df = _jobs(spark, lambda: load(spark, str(tmp_path), "region"))
+    n, df = count_jobs(spark, lambda: load(spark, str(tmp_path), "region"))
     assert n == 1
     assert df.columns == list(cols)
     assert sorted(r["r_comment"] for r in df.collect()) == ["x", "y"]
@@ -82,7 +70,7 @@ def test_binary_as_string_flip_reinfers(spark, tmp_path, cleared):
     assert load(spark, str(tmp_path), "documents").schema["text"].dataType.typeName() == "binary"
     spark.conf.set(conf, "true")
     try:
-        n, df = _jobs(spark, lambda: load(spark, str(tmp_path), "documents"))
+        n, df = count_jobs(spark, lambda: load(spark, str(tmp_path), "documents"))
         assert n == 1
         assert df.schema["text"].dataType.typeName() == "string"
         assert df.first()["text"] == "hi"
@@ -100,14 +88,14 @@ def test_nanos_as_long_turned_on_keeps_schemas_turned_off_reinfers(spark, sf_dir
     before = spark.conf.get(conf)
     spark.conf.set(conf, "false")
     try:
-        assert _jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 1
+        assert count_jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 1
         load(spark, sf_dir, "events")
         assert spark.conf.get(conf) == "true"
-        assert _jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 0
-        assert _jobs(spark, lambda: load(spark, sf_dir, "orders"))[0] == 1
+        assert count_jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 0
+        assert count_jobs(spark, lambda: load(spark, sf_dir, "orders"))[0] == 1
         spark.conf.set(conf, "false")
-        assert _jobs(spark, lambda: load(spark, sf_dir, "orders"))[0] == 1
-        assert _jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 0
+        assert count_jobs(spark, lambda: load(spark, sf_dir, "orders"))[0] == 1
+        assert count_jobs(spark, lambda: load(spark, sf_dir, "nation"))[0] == 0
     finally:
         spark.conf.set(conf, before)
 
@@ -127,7 +115,7 @@ def test_both_events_layouts_give_timestamp_with_memo_warm(spark, tmp_path, clea
     )
     assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == unit
     load(spark, str(tmp_path), "events")
-    n, df = _jobs(spark, lambda: load(spark, str(tmp_path), "events"))
+    n, df = count_jobs(spark, lambda: load(spark, str(tmp_path), "events"))
     assert n == 0
     assert df.schema["ts"].dataType.typeName() == "timestamp"
     epoch = dt.datetime(1970, 1, 1)
@@ -143,5 +131,5 @@ def test_batch_key_rebuild_starts_no_job(spark, sf_dir, key):
     table read)."""
     build = entry_mod.queries()[key]
     build(spark, sf_dir)
-    n, _ = _jobs(spark, lambda: build(spark, sf_dir))
+    n, _ = count_jobs(spark, lambda: build(spark, sf_dir))
     assert n == 0

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
+from reactor_window_like_flink_spark.llm.similarity import _dot, _norm
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -175,31 +176,6 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _arr_norm(col: str) -> "F.Column":
-    """Index-order L2 norm of an array column (the llm/similarity._norm
-    device): JVM fold, doubles, deterministic across engines."""
-    return F.sqrt(
-        F.aggregate(
-            F.expr(
-                f"transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def _arr_dot(col_a: str, col_b: str) -> "F.Column":
-    return F.aggregate(
-        F.zip_with(
-            col_a, col_b, lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _dot_unrolled(col_a: str, col_b: str, dim: int) -> "F.Column":
     """Fixed-dim dot product as an explicit left-associated sum —
     bit-identical to the sequential ``aggregate`` fold (0.0 + x0 == x0
@@ -308,7 +284,7 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.expr("transform(sm, s -> s.m)").alias("centroid"),
         )
-        .withColumn("centroid_norm", round_to(_arr_norm("centroid"), 6))
+        .withColumn("centroid_norm", round_to(_norm("centroid"), 6))
         .drop("sm")
     )
     # fixed-dim unrolled cosine: same IEEE add order as the fold the
@@ -322,8 +298,8 @@ def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             * _norm_unrolled("centroid", dim)
         )
     else:
-        cos = _arr_dot("embedding", "centroid") / (
-            _arr_norm("embedding") * _arr_norm("centroid")
+        cos = _dot("embedding", "centroid") / (
+            _norm("embedding") * _norm("centroid")
         )
     scored = emb.join(F.broadcast(carr), "label").select(
         "label",

@@ -4,8 +4,15 @@ posture depends on (pushdown, pruning, broadcast, top-k limits)."""
 from reactor_window_like_flink_spark.plans.audit import (
     formatted_plan,
     has_node,
+    node_counts,
     pushed_filters,
     read_schema_columns,
 )
 
-__all__ = ["formatted_plan", "has_node", "pushed_filters", "read_schema_columns"]
+__all__ = [
+    "formatted_plan",
+    "has_node",
+    "node_counts",
+    "pushed_filters",
+    "read_schema_columns",
+]

@@ -10,8 +10,14 @@ broadcasting is a regression even while results stay correct.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
+
+# One entry of the numbered node list: "(7) BroadcastExchange", and the
+# first word of "(3) Scan parquet spark_catalog...". The rendered tree
+# above the list repeats every operator name, so counts read only this.
+_NODE = re.compile(r"^\(\d+\) (\w+)", re.M)
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -46,3 +52,14 @@ def has_node(df: DataFrame, node: str) -> bool:
     """Whether the physical plan contains the named operator (e.g.
     'BroadcastHashJoin', 'TakeOrderedAndProject', 'WindowGroupLimit')."""
     return node in formatted_plan(df)
+
+
+def node_counts(df: DataFrame) -> Counter[str]:
+    """Operator name -> node count over the numbered node list of
+    ``formatted_plan(df)``. Shuffles are ``c["Exchange"]``, broadcasts
+    ``c["BroadcastExchange"]``; the Python operators are the names that
+    match ``Python|Pandas|InArrow`` (``ArrowEvalPython``, ``MapInPandas``,
+    ``MapInArrow``...). The plan read is the frame's own query execution:
+    writing the frame runs a separate one, so the counts stay those of
+    the initial adaptive plan after a write."""
+    return Counter(_NODE.findall(formatted_plan(df)))

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.plans import formatted_plan
+from reactor_window_like_flink_spark.plans import formatted_plan, node_counts
 from reactor_window_like_flink_spark.sources.tables import load
 
 
@@ -61,7 +61,6 @@ def test_incremental_dedup_index_elides_corpus_shuffle(
     ONLY Exchange the increment-sized batch aggregation: the corpus
     (100 TB) side is read co-located from its buckets. Admitted set is
     identical to the plain-scan form."""
-    import re
     import shutil
 
     from reactor_window_like_flink_spark.llm.curation import (
@@ -82,11 +81,10 @@ def test_incremental_dedup_index_elides_corpus_shuffle(
         batch, corpus = docs.filter(is_batch), docs.filter(~is_batch)
         build_corpus_hash_index(corpus, "b_corpus_hash", buckets=8)
         out = incremental_dedup_indexed(batch, spark, "b_corpus_hash")
-        plan = formatted_plan(out)
         # exactly one Exchange node — the batch winners aggregation; the
         # index side satisfies the join's distribution from its buckets
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-        assert "Bucketed: true" in plan
+        assert node_counts(out)["Exchange"] == 1
+        assert "Bucketed: true" in formatted_plan(out)
         got = {
             (r["doc_id"], r["text_hash"], r["n_in_batch"])
             for r in out.collect()
@@ -111,7 +109,6 @@ def test_incremental_near_dedup_matches_rebanding_and_replays(
     appending the admitted docs (ledger maintenance), replaying the
     SAME batch admits nothing — every doc confirms against its own
     appended copy at Jaccard 1.0."""
-    import re
     import shutil
 
     from reactor_window_like_flink_spark.llm.curation import (

@@ -3,8 +3,9 @@ consistent, and every query key builds and executes at sf0.001."""
 
 from __future__ import annotations
 
-from _jobs import count_jobs
 from _round import rhalf
+
+import os
 
 import pytest
 
@@ -91,26 +92,40 @@ def test_no_unsafe_round_anywhere():
     assert not bad, f"unsafe ROUND(x, n>=1) sites: {bad[:10]} (+{max(0, len(bad)-10)} more)"
 
 
-def _package_nodes(helper: str):
-    """(module:line, node) for every AST node in the package except the
-    module at ``helper`` (a path relative to the package). Parsed, not
-    grepped, so docstring and comment mentions don't count."""
+def _ast_nodes(root: str, patterns: list[str], helper: str):
+    """(path:line, node) for every AST node of the files under ``root``
+    that match ``patterns``, except the module at ``helper`` (both paths
+    relative to ``root``). Parsed, not grepped, so docstring and comment
+    mentions don't count."""
     import ast
     import glob
-    import os
 
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "reactor_window_like_flink_spark",
-    )
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        if os.path.samefile(path, os.path.join(pkg, helper)):
-            continue
-        with open(path) as f:
-            tree = ast.parse(f.read())
-        for node in ast.walk(tree):
-            if hasattr(node, "lineno"):
-                yield f"{os.path.relpath(path, pkg)}:{node.lineno}", node
+    for pattern in patterns:
+        for path in glob.glob(os.path.join(root, pattern), recursive=True):
+            if os.path.samefile(path, os.path.join(root, helper)):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if hasattr(node, "lineno"):
+                    yield f"{os.path.relpath(path, root)}:{node.lineno}", node
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PACKAGE = "reactor_window_like_flink_spark"
+
+
+def _package_nodes(helper: str):
+    """AST nodes of the package except ``helper`` (package-relative)."""
+    return _ast_nodes(os.path.join(_REPO, _PACKAGE), ["**/*.py"], helper)
+
+
+def _repo_nodes(helper: str):
+    """AST nodes of the package, ``tests/``, ``tools/`` and the root
+    scripts except ``helper`` (repo-relative). ``perfbench/`` is exempt:
+    the benchmark keeps its own copy of what it measures."""
+    patterns = ["*.py", f"{_PACKAGE}/**/*.py", "tests/*.py", "tools/*.py"]
+    return _ast_nodes(_REPO, patterns, helper)
 
 
 def test_no_direct_local_checkpoint():
@@ -162,6 +177,60 @@ def test_fixture_tables_read_only_through_load():
     assert not bad, f"parquet reads of sf_dir outside sources/tables.py: {bad}"
 
 
+def test_status_tracker_read_only_in_observe():
+    """One home for Spark's counters: job groups are set and read, and the
+    stage store is opened, only in ``observe.py``."""
+    import ast
+
+    calls = {"getJobIdsForGroup", "statusStore", "setJobGroup"}
+    bad = [
+        f"{where} .{node.attr}"
+        for where, node in _repo_nodes(f"{_PACKAGE}/observe.py")
+        if isinstance(node, ast.Attribute) and node.attr in calls
+    ]
+    assert not bad, f"Spark status reads outside observe.py: {bad}"
+
+
+def _counts_numbered_nodes(node) -> bool:
+    """``len(<x>.findall(p, ...))`` with ``p`` starting ``^\\(\\d+\\) ``
+    or ``\\(\\d+\\) ``: a count over the numbered node list of a
+    formatted plan. An f-string pattern is judged by its literal head."""
+    import ast
+
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "len"
+        and node.args
+        and isinstance(inner := node.args[0], ast.Call)
+        and isinstance(inner.func, ast.Attribute)
+        and inner.func.attr == "findall"
+        and inner.args
+    ):
+        return False
+    pattern = inner.args[0]
+    if isinstance(pattern, ast.JoinedStr) and pattern.values:
+        pattern = pattern.values[0]
+    return (
+        isinstance(pattern, ast.Constant)
+        and isinstance(pattern.value, str)
+        and pattern.value.removeprefix("^").startswith(r"\(\d+\) ")
+    )
+
+
+def test_plan_nodes_counted_only_in_node_counts():
+    """One home for plan-node counts: ``plans.node_counts``. A
+    ``len(re.findall(r"^\\(\\d+\\) Exchange", plan))`` elsewhere fails.
+    Patterns that read node details (the ``q_skew_profile`` Window
+    arguments) are not counts and stay."""
+    bad = [
+        where
+        for where, node in _repo_nodes(f"{_PACKAGE}/plans/audit.py")
+        if _counts_numbered_nodes(node)
+    ]
+    assert not bad, f"numbered plan-node counts outside plans/audit.py: {bad}"
+
+
 def test_materialize_eager_only_when_feeding_broadcast(spark):
     """``feeds_broadcast=True`` starts exactly one more job at call time
     than the lazy default. The lazy call is not asserted to start zero:
@@ -171,10 +240,13 @@ def test_materialize_eager_only_when_feeding_broadcast(spark):
     from reactor_window_like_flink_spark.functions.materialize import (
         materialize,
     )
+    from reactor_window_like_flink_spark.observe import counting
 
     def jobs_at_call(**kwargs) -> int:
         df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
-        return count_jobs(spark, lambda: materialize(df, **kwargs))[0]
+        with counting(spark) as c:
+            materialize(df, **kwargs)
+        return c["jobs"]
 
     lazy = jobs_at_call()
     eager = jobs_at_call(feeds_broadcast=True)

@@ -4,9 +4,9 @@ high-cardinality churn."""
 
 from __future__ import annotations
 
+from _poll import poll
 from _round import rhalf
 
-import time
 from collections import Counter
 from datetime import datetime, timezone
 
@@ -23,16 +23,6 @@ SHARDS = 4
 def _rows(types, start=0):
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     return [(start + i, t0, 1, t, 1.0) for i, t in enumerate(types)]
-
-
-def _poll(predicate, timeout_s=90.0, step=0.5):
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        result = predicate()
-        if result:
-            return result
-        time.sleep(step)
-    return predicate()
 
 
 def test_streaming_frequent_items_bounds_and_churn(spark, tmp_path):
@@ -60,7 +50,7 @@ def test_streaming_frequent_items_bounds_and_churn(spark, tmp_path):
     )
     try:
         src.publish(_rows(types))
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (r := spark.sql("SELECT * FROM t_freq").collect())
@@ -110,9 +100,9 @@ def test_streaming_frequent_items_state_survives_batches(spark, tmp_path):
     )
     try:
         src.publish(_rows(["a"] * 5))
-        _poll(lambda: spark.sql("SELECT * FROM t_freq2").collect() or None)
+        poll(lambda: spark.sql("SELECT * FROM t_freq2").collect() or None)
         src.publish(_rows(["a"] * 7, start=100))
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (
@@ -150,9 +140,9 @@ def test_streaming_frequent_items_null_items_never_merge_with_literal(
         # 3 literal "null" tokens, 5 genuine NULLs, 2 ordinary tokens —
         # across two batches so the state round-trips at least once.
         src.publish(_rows(["null", None, "x", None, "null"]))
-        _poll(lambda: spark.sql("SELECT * FROM t_freq3").collect() or None)
+        poll(lambda: spark.sql("SELECT * FROM t_freq3").collect() or None)
         src.publish(_rows([None, "null", None, "x", None], start=100))
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (
@@ -213,10 +203,10 @@ def test_streaming_quantiles_match_batch_histogram_inversion(
 
     try:
         src.publish(rows_of(vals_a, 0))
-        _poll(lambda: spark.sql("SELECT * FROM t_quant").collect() or None)
+        poll(lambda: spark.sql("SELECT * FROM t_quant").collect() or None)
         src.publish(rows_of(vals_b, 100))
         n_total = len(vals_a) + len(vals_b)
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (
@@ -279,10 +269,10 @@ def test_streaming_cms_replay_equals_batch_sketch_and_accumulates(
     )
     try:
         src.publish(_rows(types_a, 0))
-        _poll(lambda: spark.sql("SELECT * FROM t_cms").collect() or None)
+        poll(lambda: spark.sql("SELECT * FROM t_cms").collect() or None)
         src.publish(_rows(types_b, 100))
         n_total = len(types_a) + len(types_b)
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (

@@ -4,8 +4,6 @@ partition layout, and the per-call conf restored on every exit."""
 
 from __future__ import annotations
 
-from _jobs import count_jobs
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +11,7 @@ from reactor_window_like_flink_spark.functions.materialize import (
     collect_bounded,
     materialize,
 )
+from reactor_window_like_flink_spark.observe import counting
 
 CONF = "spark.sql.limit.initialNumPartitions"
 
@@ -33,11 +32,13 @@ def test_collect_bounded_is_one_job_when_first_partition_is_empty(spark):
     sizes = df.rdd.glom().map(len).collect()
     assert len(sizes) == 4 and sizes[0] == 0, sizes
 
-    jobs, rows = count_jobs(spark, lambda: collect_bounded(df, 30))
+    with counting(spark) as bounded:
+        rows = collect_bounded(df, 30)
     assert sorted(r["id"] for r in rows) == list(range(10, 40))
-    assert jobs == 1
-    bare_jobs, _ = count_jobs(spark, lambda: df.limit(31).collect())
-    assert bare_jobs > 1  # the fixture does exercise the scale-up
+    assert bounded["jobs"] == 1
+    with counting(spark) as bare:
+        df.limit(31).collect()
+    assert bare["jobs"] > 1  # the fixture does exercise the scale-up
 
 
 def test_collect_bounded_restores_session_conf(spark):

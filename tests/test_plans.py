@@ -13,6 +13,7 @@ import __spark_entry__ as entry_mod
 from reactor_window_like_flink_spark.plans import (
     formatted_plan,
     has_node,
+    node_counts,
     pushed_filters,
     read_schema_columns,
 )
@@ -143,8 +144,7 @@ def test_weighted_sample_is_scan_plus_topk(q):
     Sort means PPS sampling regressed to a full shuffle."""
     df = q("q_sample_weighted")
     assert has_node(df, "TakeOrderedAndProject")
-    plan = formatted_plan(df)
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 0
+    assert node_counts(df)["Exchange"] == 0
 
 
 def test_pattern_sequence_is_one_shuffle_no_join(q):
@@ -152,11 +152,8 @@ def test_pattern_sequence_is_one_shuffle_no_join(q):
     sort — a join or second exchange here means the pattern regressed to
     self-join matching."""
     df = q("q_pattern_sequence")
-    plan = formatted_plan(df)
-    assert "Join" not in plan
-    # numbered-node count (the formatted plan repeats nodes in the detail
-    # section, so a raw substring count double-counts)
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1
+    assert "Join" not in formatted_plan(df)
+    assert node_counts(df)["Exchange"] <= 1
 
 
 def test_range_bucket_join_is_equi_not_bnlj(q):
@@ -201,10 +198,9 @@ def test_corr_matrix_single_pass_no_join(q):
     a join or a second data-sized exchange means the matrix regressed to
     per-pair rescans."""
     df = q("q_corr_matrix")
-    plan = formatted_plan(df)
-    assert "Join" not in plan
+    assert "Join" not in formatted_plan(df)
     # one single-partition gather for the global aggregate is expected
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 1
+    assert node_counts(df)["Exchange"] <= 1
 
 
 def test_dedup_chunks_one_shuffle_no_join(q):
@@ -213,9 +209,8 @@ def test_dedup_chunks_one_shuffle_no_join(q):
     plan ((chunk_hash, doc_id) partial -> chunk_hash final, both keyed on
     the hash); anything more, or a join, is a regression."""
     df = q("q_dedup_chunks")
-    plan = formatted_plan(df)
-    assert "Join" not in plan
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 2
+    assert "Join" not in formatted_plan(df)
+    assert node_counts(df)["Exchange"] <= 2
 
 
 def test_mad_and_winsorize_broadcast_stats_onto_scan(q):
@@ -233,10 +228,8 @@ def test_bm25_no_cartesian_one_scalar_bnlj(q):
     """tf/df/dl joins are keyed; the only nested-loop join allowed is the
     broadcast of the ONE-ROW (N, avgdl) stats aggregate."""
     df = q("q_bm25_topterms")
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
-    n_bnlj = len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", plan, re.M))
-    assert n_bnlj <= 1
+    assert "CartesianProduct" not in formatted_plan(df)
+    assert node_counts(df)["BroadcastNestedLoopJoin"] <= 1
 
 
 def test_retrieval_stats_keys_no_cartesian(q):
@@ -291,8 +284,8 @@ def test_pattern_absence_one_shuffle_range_frame(q):
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-    assert n_ex <= 2  # keyed window shuffle + the 1-row max gather
+    # keyed window shuffle + the 1-row max gather
+    assert node_counts(df)["Exchange"] <= 2
 
 
 def test_join_salted_spreads_probe_and_replicates_build(q):
@@ -469,7 +462,7 @@ def test_q8_dual_role_dim_broadcasts_and_one_aggregate(q):
     assert "CartesianProduct" not in plan
     # exactly one scan per relation role (lineitem, orders, customer,
     # supplier, nation x2) — no relation re-scanned for the share
-    assert len(re.findall(r"Scan parquet\s+\(\d+\)", plan)) == 6
+    assert node_counts(df)["Scan"] == 6
 
 
 def test_kcore_round_broadcasts_frontier_never_sorts_edges(spark):
@@ -646,3 +639,34 @@ def test_degraded_regime_is_bnlj_free_single_fact_scan(
         assert n_fact == fact_scans, (
             f"{key} @thr={thr}: {n_fact} scans of {fact} (want {fact_scans})"
         )
+
+
+def test_node_counts_reads_the_numbered_node_list(q):
+    """``node_counts`` counts each operator once, from the numbered node
+    list (the rendered tree above it repeats every name)."""
+    c = node_counts(q("q_join_multi"))
+    assert (c["Exchange"], c["BroadcastExchange"]) == (1, 4), c
+
+
+def test_run_record_of_a_window_key(spark, q):
+    """``observe.run``: a warm ``q_tumbling_window`` builds without a job,
+    then writes in 2 jobs (its shuffle stage and the result stage) over
+    one shuffle and no Python operator."""
+    from reactor_window_like_flink_spark.observe import run
+
+    q("q_tumbling_window")  # infers the events schema once per process
+    r = run(spark, lambda: q("q_tumbling_window"))
+    got = (r["build_jobs"], r["jobs"], r["shuffles"], r["python_nodes"])
+    assert got == (0, 2, 1, 0), r
+    assert r["tasks"] >= r["jobs"] and r["index_builds"] == []
+
+
+def test_counting_sees_only_actions(spark):
+    from reactor_window_like_flink_spark.observe import counting
+
+    df = spark.range(10)
+    with counting(spark) as lazy:
+        df = df.select((df.id * 2).alias("x"))
+    with counting(spark) as action:
+        df.collect()
+    assert lazy["jobs"] == 0 and action["jobs"] >= 1, (lazy, action)

@@ -4,9 +4,9 @@ rollup, state accumulates across batches, no range contract."""
 
 from __future__ import annotations
 
+from _poll import poll
 from _round import rhalf
 
-import time
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
@@ -22,16 +22,6 @@ from reactor_window_like_flink_spark.streaming.quantiles import (
 )
 
 SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
-
-
-def _poll(predicate, timeout_s=90.0, step=0.5):
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        result = predicate()
-        if result:
-            return result
-        time.sleep(step)
-    return predicate()
 
 
 def _day_rows(day_idx, values, key="lat", start=0):
@@ -70,7 +60,7 @@ def test_streaming_kll_day_aligned_replay_equals_batch_rollup(
     try:
         for i, vals in enumerate(days):
             src.publish(_day_rows(i, vals, start=10_000 * i))
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (
@@ -117,7 +107,7 @@ def test_streaming_kll_keys_are_independent(spark, tmp_path):
             _day_rows(0, [1.0] * 50, key="a")
             + _day_rows(0, [100.0] * 50, key="b", start=500)
         )
-        rows = _poll(
+        rows = poll(
             lambda: (
                 r
                 if (r := spark.sql("SELECT * FROM t_kll2").collect())
@@ -173,7 +163,7 @@ def test_streaming_holt_replay_equals_batch_fold(spark, tmp_path):
     try:
         src.publish(rows(daily[:4], 0) + [("flat", d0, 5)])
         src.publish(rows(daily[4:], 4) + [("flat", d0 + timedelta(days=1), 5)])
-        got = _poll(
+        got = poll(
             lambda: (
                 r
                 if (

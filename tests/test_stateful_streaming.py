@@ -9,6 +9,8 @@ scheduler keeps planning no-data batches to fire timeouts, so
 
 from __future__ import annotations
 
+from _poll import poll
+
 import time
 
 from reactor_window_like_flink_spark.streaming.publisher import FileStreamInput
@@ -28,16 +30,6 @@ def _rows(user: int, n: int, start: int = 0):
     ]
 
 
-def _poll(predicate, timeout_s: float = 90.0, step: float = 0.5):
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        result = predicate()
-        if result:
-            return result
-        time.sleep(step)
-    return predicate()
-
-
 def test_count_timeout_and_conservation(spark, tmp_path):
     src = FileStreamInput(spark, SCHEMA, str(tmp_path / "in"))
     out = count_or_time_stateful(src.stream(), max_size=10, duration_seconds=2.0)
@@ -54,7 +46,7 @@ def test_count_timeout_and_conservation(spark, tmp_path):
         # the 2s window elapses — no further input required.
         src.publish(_rows(user=1, n=35))
 
-        sized = _poll(
+        sized = poll(
             lambda: (
                 r
                 if len(
@@ -68,7 +60,7 @@ def test_count_timeout_and_conservation(spark, tmp_path):
         )
         assert sorted(r["n_events"] for r in sized) == [10, 10, 10]
 
-        timed = _poll(
+        timed = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_cot WHERE flush_reason = 'timeout'"
             ).collect()
@@ -123,7 +115,7 @@ def test_trickle_still_time_flushes(spark, tmp_path):
         ).collect()
         assert all(0 < r["n_events"] < 100 for r in flushed)
         # conservation: once quiet, the remaining open batch time-flushes too
-        assert _poll(
+        assert poll(
             lambda: (
                 spark.sql("SELECT sum(n_events) s FROM t_trickle").collect()[0]["s"]
                 or 0
@@ -161,7 +153,7 @@ def test_trickle_timeout_is_data_path(spark, tmp_path):
         .start()
     )
     try:
-        timed = _poll(
+        timed = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_datapath WHERE flush_reason = 'timeout'"
             ).collect()
@@ -201,7 +193,7 @@ def test_idle_state_ttl_evicts_and_resets_seq(spark, tmp_path):
     )
     try:
         src.publish(_rows(user=1, n=10))  # exactly one count-path flush
-        first = _poll(
+        first = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_ttl WHERE flush_reason = 'size'"
             ).collect()
@@ -211,7 +203,7 @@ def test_idle_state_ttl_evicts_and_resets_seq(spark, tmp_path):
         # coming, so the eviction fires without further input
         time.sleep(8.0)
         src.publish(_rows(user=1, n=10, start=100))
-        both = _poll(
+        both = poll(
             lambda: (
                 r
                 if len(
@@ -307,14 +299,14 @@ def test_state_rows_plateau_at_active_keys_under_ttl(spark, tmp_path):
         ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
         src.publish([(i, ts, i, "e", 1.0) for i in range(n_keys)])
         # wave 1 fully flushed: one size-flush per key
-        _poll(
+        poll(
             lambda: spark.sql("SELECT count(*) c FROM t_scale").collect()[0][
                 "c"
             ]
             >= n_keys,
             timeout_s=180.0,
         )
-        peak1 = _poll(
+        peak1 = poll(
             lambda: (s := _state_rows(query)) is not None
             and s >= n_keys
             and s,
@@ -322,7 +314,7 @@ def test_state_rows_plateau_at_active_keys_under_ttl(spark, tmp_path):
         )
         assert peak1 and peak1 >= n_keys  # one state row per active key
         # TTL eviction: no-data batches keep firing timeouts; state decays
-        low = _poll(
+        low = poll(
             lambda: (s := _state_rows(query)) is not None
             and s < n_keys // 10
             and (s or True),
@@ -333,14 +325,14 @@ def test_state_rows_plateau_at_active_keys_under_ttl(spark, tmp_path):
         src.publish(
             [(n_keys + i, ts, n_keys + i, "e", 1.0) for i in range(n_keys)]
         )
-        _poll(
+        poll(
             lambda: spark.sql("SELECT count(*) c FROM t_scale").collect()[0][
                 "c"
             ]
             >= 2 * n_keys,
             timeout_s=180.0,
         )
-        peak2 = _poll(
+        peak2 = poll(
             lambda: (s := _state_rows(query)) is not None
             and s >= n_keys
             and s,
@@ -383,13 +375,13 @@ def test_rocksdb_state_store_flag_smoke(spark, tmp_path):
         )
         try:
             src.publish(_rows(user=7, n=10))
-            rows = _poll(
+            rows = poll(
                 lambda: spark.sql(
                     "SELECT * FROM t_rocks WHERE flush_reason = 'size'"
                 ).collect()
             )
             assert rows and rows[0]["n_events"] == 10
-            metrics = _poll(
+            metrics = poll(
                 lambda: (
                     (p := query.lastProgress) is not None
                     and p["stateOperators"]
@@ -482,7 +474,7 @@ def test_streaming_batch_membership_bitmask(spark, tmp_path):
     )
     try:
         src.publish(rows(range(6), [2**i for i in range(6)]))
-        first = _poll(
+        first = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_member WHERE batch_seq = 0"
             ).collect()
@@ -492,7 +484,7 @@ def test_streaming_batch_membership_bitmask(spark, tmp_path):
         ] == [(4, 15.0, "size")]  # bitmask 1+2+4+8: exactly 2^0..2^3
 
         src.publish(rows(range(6, 8), [2**6, 2**7]))
-        second = _poll(
+        second = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_member WHERE batch_seq = 1"
             ).collect()
@@ -502,7 +494,7 @@ def test_streaming_batch_membership_bitmask(spark, tmp_path):
         ] == [(4, 240.0, "size")]  # 16+32+64+128: the carried pair + both new
 
         src.publish(rows([8], [2**8]))
-        third = _poll(
+        third = poll(
             lambda: spark.sql(
                 "SELECT * FROM t_member WHERE batch_seq = 2"
             ).collect(),
@@ -565,7 +557,7 @@ def test_count_or_time_state_survives_restart(spark, tmp_path):
         # processAllAvailable never settles with a ProcessingTimeTimeout
         # armed (module docstring), so poll until the 7-row batch has
         # COMMITTED — state checkpoints at batch completion
-        assert _poll(lambda: rows_in(query) >= 7)
+        assert poll(lambda: rows_in(query) >= 7)
     finally:
         query.stop()
     assert flushed == []  # 7 < max_size and the 600 s timeout never fired
@@ -573,7 +565,7 @@ def test_count_or_time_state_survives_restart(spark, tmp_path):
     query = start()
     try:
         src.publish([(7 + i, ts, 1, "e", float(8 + i)) for i in range(3)])
-        got = _poll(lambda: list(flushed) or None)
+        got = poll(lambda: list(flushed) or None)
         assert [
             (r["key"], r["batch_seq"], r["n_events"], r["sum_value"],
              r["flush_reason"])

@@ -3,6 +3,8 @@ results equal the shared batch expression tree on the same rows."""
 
 from __future__ import annotations
 
+from _poll import poll
+
 from datetime import datetime, timezone
 
 from reactor_window_like_flink_spark.streaming.joins import (
@@ -231,22 +233,13 @@ def test_temporal_join_idle_ttl_evicts_version(spark, tmp_path):
             for r in spark.sql("SELECT * FROM t_tjttl").collect()
         }
 
-    def _poll(pred, timeout_s=90.0):
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            res = pred()
-            if res:
-                return res
-            time.sleep(0.5)
-        return pred()
-
     try:
-        got = _poll(lambda: 1 in _got() and _got())
+        got = poll(lambda: 1 in _got() and _got())
         assert got[1] == 1.0  # version live before the TTL
         time.sleep(4.0)  # idle past the 2 s TTL; timeout fires on a
         # no-data batch the scheduler keeps planning
         probes.publish([(2, _ts(5), 1, "p", 0.0)])
-        got = _poll(lambda: 2 in _got() and _got())
+        got = poll(lambda: 2 in _got() and _got())
         assert got[2] is None  # state evicted: probe re-matches unversioned
     finally:
         query.stop()

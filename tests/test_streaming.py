@@ -10,6 +10,7 @@ from datetime import datetime, timezone
 
 import pytest
 
+from reactor_window_like_flink_spark.observe import group_counters
 from reactor_window_like_flink_spark.streaming.publisher import (
     FileStreamInput,
     WindowedPublisher,
@@ -350,11 +351,11 @@ def test_drain_job_budget_flat_across_listing_threshold(spark, tmp_path):
     Spark lists more than ``parallelPartitionDiscovery.threshold`` (32 by
     default) paths in a distributed job of one task per path;
     ``get_spark`` keeps that listing on the driver for local masters. So
-    20 files (under 32) and 40 files (over it) start the same jobs, and
-    no stage runs one task per admitted file."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    jobs_per_drain = {}
+    20 files (under 32) and 40 files (over it) start the same jobs and
+    tasks: the consumer coalesces to one partition, so every legitimate
+    stage is one task, while a per-file listing stage would add 20 tasks
+    to one drain and 40 to the other."""
+    counts = {}
     for n_files in (20, 40):
         src = FileStreamInput(spark, SCHEMA, str(tmp_path / f"in{n_files}"))
         for i in range(n_files):
@@ -369,16 +370,9 @@ def test_drain_job_budget_flat_across_listing_threshold(spark, tmp_path):
         )
         assert query.awaitTermination(60)
         assert len(got) == n_files
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        job_ids = tracker.getJobIdsForGroup(query.runId)
-        stage_tasks = [
-            tracker.getStageInfo(sid).numTasks
-            for jid in job_ids
-            for sid in tracker.getJobInfo(jid).stageIds
-        ]
-        assert n_files not in stage_tasks, (n_files, stage_tasks)
-        jobs_per_drain[n_files] = len(job_ids)
-    assert jobs_per_drain[20] == jobs_per_drain[40], jobs_per_drain
+        c = group_counters(spark, query.runId)
+        counts[n_files] = (c["jobs"], c["tasks"])
+    assert counts[20] == counts[40], counts
 
 
 def test_consumer_drain_is_one_job_per_micro_batch(spark, tmp_path):
@@ -386,8 +380,6 @@ def test_consumer_drain_is_one_job_per_micro_batch(spark, tmp_path):
     (``collect_bounded``), also when its files pack into several
     partitions: a bare ``limit(cap+1).collect()`` scans one partition,
     then scales up in a second job."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     src = FileStreamInput(spark, SCHEMA, str(tmp_path / "in"))
     for i in range(4):
         src.publish(_rows(5, start_minute=i))
@@ -398,17 +390,11 @@ def test_consumer_drain_is_one_job_per_micro_batch(spark, tmp_path):
     assert query.awaitTermination(60)
     assert len(delivered) == 20
     batches = sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    job_ids = tracker.getJobIdsForGroup(query.runId)
-    tasks = sum(
-        tracker.getStageInfo(sid).numTasks
-        for jid in job_ids
-        for sid in tracker.getJobInfo(jid).stageIds
-    )
-    assert len(job_ids) == batches, (len(job_ids), batches, tasks)
+    c = group_counters(spark, query.runId)
+    assert c["jobs"] == batches, (c, batches)
     # More tasks than jobs: at least one micro-batch spans more than one
     # partition, the case where a bare limit().collect() needs a 2nd job.
-    assert tasks > len(job_ids), (tasks, len(job_ids))
+    assert c["tasks"] > c["jobs"], c
 
 
 def test_second_subscribe_on_live_checkpoint_raises(spark, tmp_path):

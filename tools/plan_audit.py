@@ -1,173 +1,36 @@
 """Generate PLANS.md: a physical-plan audit of every headline query.
 
-For each bench.py HEADLINE query (plus the scan/sample keys whose plans
-carry the pruning story), records the scale-relevant plan facts straight
-from ``explain("formatted")``: exchange (shuffle) count, join strategies,
-whole-stage-codegen coverage, pushed filters, and read schemas. The point
-is reviewable evidence that the plans stay the plans we designed — run
-after operator changes and diff the file.
+For each bench.py HEADLINE query plus ``EXTRAS``, records the
+scale-relevant plan facts straight from ``explain("formatted")`` (via
+``plans.node_counts`` and ``plans.pushed_filters``): exchange (shuffle)
+count, join strategies and pushed filters. The point is reviewable
+evidence that the plans stay the plans we designed — run after operator
+changes and diff the file.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import re
+import os
 import sys
 
-AUDITED = [
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import HEADLINE  # noqa: E402
+
+# Keys outside the headline: the scan/sample keys whose plans carry the
+# pruning story, and the oracle-exact twins bench.py times as guards.
+EXTRAS = (
     "q_scan_pruned",
-    "q_agg_group",
-    "q_filter_pred",
-    "q_join_broadcast",
-    "q_join_multi",
-    "q_join_asof",
-    "q_join_asof_tolerance",
-    "q_join_salted",
-    "q_join_bloom",
-    "q_tpch_q18_shape",
-    "q_window_rank",
-    "q_topk_per_group",
-    "q_sort_limit",
-    "q_tumbling_window",
-    "q_session_window",
-    "q_dedup_near",
-    "q_dedup_simhash",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_ngram_jaccard_arrow",
-    "q_dedup_embedding",
-    "q_similarity_cosine",
-    "q_similarity_ann",
-    "q_similarity_pq",
-    "q_similarity_join",
-    "q_similarity_join_fast",
-    "q_token_budget",
-    "q_knn_graph",
-    "q_text_stats",
-    "q_decontaminate",
-    "q_repetition_score",
-    "q_domain_mix",
-    "q_boilerplate_prefix",
-    "q_dedup_cross_source",
-    "q_dedup_incremental",
-    "q_profile_stats",
-    "q_histogram",
-    "q_length_deciles",
-    "q_upsert_latest",
-    "q_upsert_cdc",
-    "q_bm25_query",
-    "q_sample_epochs",
-    "q_cms_rollup",
-    "q_similarity_ivfpq",
-    "q_bitmap_rollup",
-    "q_dedup_incremental_near",
-    "q_dedup_embedding_auto",
-    "q_knn_graph_auto",
-    "q_frequent_itemsets",
-    "q_frequent_sequences",
-    "q_association_rules",
-    "q_ewma_daily",
-    "q_chi2_contingency",
-    "q_triangle_count",
-    "q_pagerank",
-    "q_tpch_q21_shape",
-    "q_tpch_q17_shape",
-    "q_tpch_q22_shape",
-    "q_communities_lpa",
-    "q_quantile_rollup_kll",
-    "q_embed_pca",
-    "q_bm25_indexed",
-    "q_holt_trend",
-    "q_dow_seasonal_anomaly",
-    "q_sample_k_per_group",
-    "q_abtest_ztest",
-    "q_anova_f",
-    "q_mannwhitney_u",
-    "q_ks_test",
-    "q_tpch_q4_shape",
-    "q_tpch_q20_shape",
-    "q_target_encoding",
-    "q_feature_scale",
-    "q_rrf_fusion",
-    "q_term_jaccard",
-    "q_autocorr",
-    "q_gini_source",
-    "q_dedup_canonical",
-    "q_robust_scale",
-    "q_bootstrap_ci",
-    "q_tpch_q15_shape",
-    "q_tpch_q2_shape",
-    "q_target_encoding_oof",
-    "q_cluster_profile",
-    "q_tpch_q13_shape",
-    "q_bootstrap_ci_fast",
-    "q_cuped_adjust",
-    "q_degree_assortativity",
-    "q_fdr_bh",
-    "q_seasonal_decompose",
-    "q_tpch_q16_shape",
-    "q_mutual_info",
-    "q_tpch_q8_shape",
-    "q_tpch_q6_shape",
-    "q_tpch_q7_shape",
-    "q_tpch_q9_shape",
-    "q_tpch_q11_shape",
-    "q_tpch_q12_shape",
-    "q_tpch_q14_shape",
-    "q_tpch_q19_shape",
-    "q_welch_ttest",
-    "q_quality_classifier",
-    "q_classifier_funnel",
-    "q_multimodal_phash",
-    "q_embed_quantize",
-    "q_join_fuzzy",
-    "q_outliers",
-    "q_vocab_topk",
-    "q_tfidf_topterms",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_sessionize",
-    "q_pattern_sequence",
-    "q_pattern_sequence_strict",
-    "q_pattern_absence",
-    "q_changepoint_cusum",
-    "q_attribution_linear",
-    "q_unigram_logprob",
-    "q_bm25_topterms",
-    "q_inverted_index",
-    "q_bigram_pmi",
-    "q_zipf_slope",
-    "q_token_entropy",
-    "q_anomaly_mad",
-    "q_corr_matrix",
-    "q_source_drift",
-    "q_dedup_chunks",
-    "q_ngram_novelty",
-    "q_winsorize",
-    "q_skew_profile",
-    "q_resample_ffill",
-    "q_embed_norm_profile",
-    "q_multimodal_dedup",
-    "q_scd2_runs",
-    "q_heavy_hitters",
-    "q_curation_pipeline",
     "q_sample_hash",
     "q_sample_weighted",
-    "q_pack_sequences",
-    "q_chunk_tokens",
-    "q_tpch_q3_shape",
-    "q_tpch_q5_shape",
-    "q_tpch_q10_shape",
-    "q_pattern_quantified",
-    "q_dedup_containment",
-    "q_bigram_logprob",
-    "q_quantile_rollup",
-    "q_sample_cluster_balanced",
-    "q_decontaminate_spans",
-    "q_sample_temperature",
-    "q_filter_funnel",
-    "q_perplexity_filter",
-]
+    "q_corr_matrix",
+    "q_similarity_join",
+    "q_dedup_embedding",
+    "q_dedup_ngram_jaccard_arrow",
+)
 
 JOIN_NODES = [
     "BroadcastHashJoin",
@@ -180,9 +43,8 @@ JOIN_NODES = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
-    from reactor_window_like_flink_spark.plans import formatted_plan
+    from reactor_window_like_flink_spark.plans import node_counts, pushed_filters
     from reactor_window_like_flink_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit")
@@ -191,7 +53,8 @@ def main() -> int:
     lines = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
-        f"Auto-generated by `tools/plan_audit.py` at `{sf_dir}`, local[32]."
+        f"Auto-generated by `tools/plan_audit.py` at `{sf_dir}`,"
+        f" {spark.sparkContext.master}."
         " Counts come from `explain(\"formatted\")`; AQE may further merge"
         " exchanges and convert joins to broadcast at runtime, so these are"
         " upper bounds on the static plan, not runtime stage counts.",
@@ -199,24 +62,12 @@ def main() -> int:
         "| query | exchanges | joins | pushed filters |",
         "|---|---|---|---|",
     ]
-    for name in AUDITED:
-        plan = formatted_plan(qs[name](spark, sf_dir))
-        # count numbered node-list entries only — the rendered tree above
-        # them repeats every operator name, which would double-count
-        n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-        joins = ", ".join(
-            f"{j}×{c}"
-            for j in JOIN_NODES
-            if (c := len(re.findall(rf"^\(\d+\) {j}", plan, re.M)))
-        ) or "—"
-        pushed = len(
-            [
-                f
-                for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan)
-                for f in m.group(1).split(",")
-                if f.strip()
-            ]
-        )
+    for name in (*HEADLINE, *EXTRAS):
+        df = qs[name](spark, sf_dir)
+        nodes = node_counts(df)
+        n_ex = nodes["Exchange"]
+        joins = ", ".join(f"{j}×{nodes[j]}" for j in JOIN_NODES if nodes[j]) or "—"
+        pushed = len(pushed_filters(df))
         lines.append(f"| {name} | {n_ex} | {joins} | {pushed} |")
         print(f"# {name}: exchanges={n_ex} joins=[{joins}]", file=sys.stderr)
 
@@ -239,9 +90,10 @@ def main() -> int:
         " in `tests/test_plans.py`.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    path = os.path.join(REPO, "PLANS.md")
+    with open(path, "w") as f:
         f.write("\n".join(lines))
-    print("wrote /root/repo/PLANS.md")
+    print(f"wrote {path}")
     return 0
 
 

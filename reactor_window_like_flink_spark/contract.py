@@ -59,6 +59,24 @@ def round_to(col: Column | str, n: int) -> Column:
     return F.round(c * 10**n, 0) / float(10**n)
 
 
+def order_small(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """``df`` globally sorted by ``cols`` in ONE task.
+
+    The rule: a global sort over a result whose row count is bounded by a
+    dimension (flags, priorities, nations, years, kinds) sorts in one
+    task. A plain ``orderBy`` plans a range exchange, which costs a
+    sampling job plus a range shuffle at any scale; ``CoalesceExec(1)``
+    reports ``SinglePartition``, so no exchange is planned and the sort
+    runs in the coalesced task. Only the stage the coalesce sits in (the
+    final merge of the bounded groups) narrows to one task; the
+    partial-aggregate stage below its exchange keeps its parallelism. A
+    result that grows with the data keeps the plain ``orderBy``.
+    ``tests/test_plans.py`` pins both sides and fails on a
+    ``.coalesce(1).orderBy(...)`` written anywhere else.
+    """
+    return df.coalesce(1).orderBy(*cols)
+
+
 class Registry:
     """Per-module collection of (query builder, oracle SQL) pairs."""
 

@@ -233,6 +233,29 @@ PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 10
 
 
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """(src, dsts): every node of the undirected edge list ``(u, v)``
+    with its distinct neighbours, in ONE shuffle, materialized. Both
+    orientations enter the groupBy and ``collect_set`` dedups inside it,
+    so a duplicate edge in either orientation counts once; in-array
+    order is unspecified.
+
+    No repartition before the checkpoint: ``materialize`` output has no
+    known partitioning (the plan reports ``UnknownPartitioning(0)``,
+    lazy or eager), so every keyed operator over it exchanges anyway —
+    a repartition there is a full shuffle nothing reads, and its fixed
+    partition count keeps AQE from coalescing the stage
+    (``tests/test_materialize.py`` pins the first fact)."""
+    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+    return (
+        sym.groupBy("src")
+        .agg(F.collect_set("dst").alias("dsts"))
+        .transform(materialize)
+    )
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = PAGERANK_DAMPING,
@@ -245,9 +268,10 @@ def pagerank(
     Distributed shape — the canonical iterative-join algorithm (Page et
     al. '99; the Pregel/GraphX workload) on plain DataFrame ops, in the
     ADJACENCY-LIST form: the graph is grouped ONCE into O(nodes) rows
-    (src, dsts array, outdeg), hash-partitioned on src and checkpointed
-    — so each round's rank join is an O(nodes)-by-O(nodes) co-located
-    join whose edge fan-out happens IN-ROW via ``explode``; only the
+    (src, dsts array) and checkpointed (``_adjacency``) — so each
+    round's rank join is O(nodes)-by-O(nodes) (the checkpoint keeps no
+    partitioning, so the join exchanges node-sized rows, never edges)
+    and the edge fan-out happens IN-ROW via ``explode``; only the
     exploded contributions shuffle (map-side combined into per-node
     inflows). Measured 2x over the flat (src, dst, outdeg) edge-join
     form at sf0.1 (10.9 s -> 5.8 s for 10 rounds on the 1.2M-edge
@@ -259,21 +283,7 @@ def pagerank(
     only the loop counter.
 
     Returns (node, rank) for every node, rank rounded to 6dp."""
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    sym = edges.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).distinct()
-    adj = (
-        sym.groupBy("src")
-        .agg(
-            F.collect_list("dst").alias("dsts"),
-            F.count("*").alias("outdeg"),
-        )
-        .repartition(n_parts, "src")
-        .transform(materialize)
-    )
+    adj = _adjacency(edges)
     # symmetrized graph: every node appears as a src
     nodes = adj.select(F.col("src").alias("node"))
     n_total = nodes.count()
@@ -289,7 +299,7 @@ def pagerank(
             adj.join(ranks, adj.src == ranks.node)
             .select(
                 F.explode("dsts").alias("node"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
+                (F.col("rank") / F.size("dsts")).alias("c"),
             )
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
@@ -325,8 +335,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lineitem = load(spark, sf_dir, "lineitem")
     # No .distinct() here: pagerank symmetrizes and dedups the union in
-    # ONE exchange (sym.distinct()), so a pre-distinct pays a full extra
-    # shuffle of the pair stream for nothing (r16, guide §2.4 — proven
+    # ONE exchange (_adjacency's collect_set), so a pre-distinct pays a
+    # full extra shuffle of the pair stream for nothing (proven
     # output-identical at sf0.1, all 20k ranks equal at 6dp).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
     return pagerank(edges)
@@ -361,33 +371,18 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     "centrality" that co-purchase and near-dup-graph analyses use.
 
     Distributed shape — the ``pagerank`` adjacency-list discipline: the
-    graph is grouped ONCE into O(nodes) (src, dsts, followed by a
-    hash-partition on src) and checkpointed; each round joins labels
-    co-located on that key, fans out IN-ROW via ``explode``, and
-    re-aggregates with TWO map-side-combining shuffles: (node, label)
-    vote counts, then per-node argmax via ``max_by(label,
-    (votes, -label))`` — largest vote count wins, smallest label on
-    ties, so no sort and no window. Lineage truncates every second
+    graph is grouped ONCE into O(nodes) (src, dsts) rows and
+    checkpointed (``_adjacency``); each round joins labels on src
+    (node-sized rows exchange: the checkpoint keeps no partitioning),
+    fans out IN-ROW via ``explode``, and re-aggregates with TWO
+    map-side-combining shuffles: (node, label) vote counts, then
+    per-node argmax via ``max_by(label, (votes, -label))`` — largest
+    vote count wins, smallest label on ties, so no sort and no window. Lineage truncates every second
     round. Per-round shuffle volume is O(edges) vote rows combined
     map-side to O(distinct (node,label)) — never an all-pairs product.
 
     Returns (node, community) for every node with ≥1 edge."""
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    sym = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    # collect_set fuses the neighbor dedup INTO the adjacency groupBy —
-    # the previous sym.distinct() + collect_list spent a full extra
-    # exchange of the symmetrized pair stream on the same set semantics
-    # (r16, guide §2.4; measured 8.9 s → 5.4 s at sf0.1, labels
-    # identical — votes are integer counts over the neighbor SET, so
-    # in-array order is irrelevant).
-    adj = (
-        sym.groupBy("src")
-        .agg(F.collect_set("dst").alias("dsts"))
-        .repartition(n_parts, "src")
-        .transform(materialize)
-    )
+    adj = _adjacency(edges)
     labels = adj.select(F.col("src").alias("node"), F.col("src").alias("label"))
     for i in range(rounds):
         votes = (
@@ -425,7 +420,7 @@ def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lineitem = load(spark, sf_dir, "lineitem")
     # No .distinct(): label_propagation's collect_set adjacency dedups
-    # neighbors in its own groupBy (r16 — see label_propagation).
+    # neighbors in its own groupBy (see _adjacency).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
     labels = label_propagation(edges)
     sizes = labels.groupBy("community").agg(
@@ -466,16 +461,20 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
     synchronous batch round is as correct as any sequential order — and
     deterministic).
 
-    Distributed shape (DELTA peel, round-13 form): the edge list is
-    symmetrized, checkpointed ONCE, and never rewritten; degrees are
-    computed ONCE and then maintained incrementally. Each round:
+    Distributed shape (DELTA peel, round-13 form): the adjacency list
+    is built in one shuffle, checkpointed ONCE, and never rewritten;
+    the edge list and the degrees are read off it with no further
+    shuffle, and the degrees are then maintained incrementally. Each
+    round:
 
     1. the frontier ``bad`` (survivors whose maintained degree fell
        below k) joins the static edge list to count, per still-alive
        neighbor, how many incident edges it just lost — the probe side
        is the full edge list but the build side is the frontier (tiny
-       after round 1; AQE broadcasts it), and nothing edge-sized
-       shuffles or materializes;
+       after round 1; AQE broadcasts it). The count's ``groupBy("dst")``
+       exchanges (``materialize`` output has no known partitioning),
+       but only the frontier's incident edges, map-side combined;
+       nothing edge-sized shuffles or materializes;
     2. the O(nodes) degree frame drops the frontier (a ``deg >= k``
        filter — equivalent to the anti-join by the loop invariant, see
        ``_kcore_round``) and subtracts the decrements (left join keyed
@@ -502,30 +501,15 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
 
 
 def _kcore_build(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Symmetrized+deduped edge list and the initial degree frame, both
-    materialized.
-    The edge list is partitioned by dst: the per-round decrement
-    aggregate groups on dst, so the groupBy reuses this layout and the
-    whole round runs EXCHANGE-FREE over the checkpointed blocks (r16,
-    guide §2.4 — one exchange per round removed across the ~21-round
-    cascade tail)."""
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    sym = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(
-            edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .distinct()
-        .repartition(n_parts, "dst")
-        .transform(materialize)
-    )
-    # full degree aggregate happens exactly once; afterwards the frame
-    # is maintained by frontier-sized decrements
-    deg = (
-        sym.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .transform(materialize)
-    )
+    """Symmetrized+deduped edge list (src, dst) and the initial degree
+    frame (src, deg), both narrow projections of ONE materialized
+    adjacency list (``_adjacency`` over the edges minus self-loops — a
+    k-core counts distinct OTHER neighbours). The full degree aggregate
+    happens exactly once, inside the adjacency groupBy; afterwards the
+    frame is maintained by frontier-sized decrements."""
+    adj = _adjacency(edges.filter(F.col("u") != F.col("v")))
+    sym = adj.select("src", F.explode("dsts").alias("dst"))
+    deg = adj.select("src", F.size("dsts").cast("long").alias("deg"))
     return sym, deg
 
 
@@ -695,10 +679,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lineitem = load(spark, sf_dir, "lineitem")
     # No pre-distinct / pre-checkpoint on the pair stream: _kcore_build's
-    # sym.distinct() dedups, and the sizing constants come from the deg
+    # collect_set dedups, and the sizing constants come from the deg
     # frame the loop needs anyway — n_nodes = |deg| and 2m = Σdeg over
     # the deduped symmetrized list — so sizing is ONE aggregate job that
-    # also materializes the checkpoints, replacing the previous three
+    # also materializes the checkpoint, replacing the previous three
     # (edge checkpoint, edge count, node distinct-count — r16 guide §2.4
     # / §1.2; k value proven identical at sf0.1: k=84, same 17,732-node
     # core).

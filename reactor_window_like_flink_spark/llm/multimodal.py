@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry, round_to
+from reactor_window_like_flink_spark.contract import Registry, order_small, round_to
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -148,7 +148,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_frames").alias("total_frames"),
             round_to(F.avg("mean_byte"), 4).alias("avg_mean_byte"),
         )
-        .orderBy("kind")
+        .transform(order_small, "kind")
     )
 
 

@@ -19,7 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry, round_to
+from reactor_window_like_flink_spark.contract import Registry, order_small, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -489,7 +489,7 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_to(F.sum(disc_u2).cast("double") / F.count("*") / 100.0, 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(order_small, "l_returnflag", "l_linestatus")
     )
 
 
@@ -1811,7 +1811,7 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"), "n_name")
+        .transform(order_small, F.desc("revenue"), "n_name")
     )
 
 
@@ -2376,7 +2376,7 @@ def q_tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("q4_orders")
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("q4_lineitem")
-    return spark.sql(
+    counts = spark.sql(
         f"""
         SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         FROM q4_orders o
@@ -2387,9 +2387,9 @@ def q_tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND l.l_shipdate > o.o_orderdate
                                            + INTERVAL {Q4_LATE_DAYS} DAY)
         GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
         """
     )
+    return order_small(counts, "o_orderpriority")
 
 
 Q20_NAME_PREFIX = "red"
@@ -2745,7 +2745,7 @@ def q_tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir, "customer").createOrReplaceTempView("q8_customer")
     load(spark, sf_dir, "supplier").createOrReplaceTempView("q8_supplier")
     load(spark, sf_dir, "nation").createOrReplaceTempView("q8_nation")
-    return spark.sql(
+    shares = spark.sql(
         f"""
         WITH vol AS (
           SELECT year(o_orderdate) AS yr,
@@ -2765,9 +2765,10 @@ def q_tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
                               THEN v ELSE 0 END) AS DOUBLE)
                        / CAST(SUM(v) AS DOUBLE)) * 1000000, 0) / 1000000.0) AS mkt_share,
                (CAST(((SUM(v) + CASE WHEN SUM(v) < 0 THEN -50 ELSE 50 END) - (SUM(v) + CASE WHEN SUM(v) < 0 THEN -50 ELSE 50 END) % 100) div 100 AS DOUBLE) / 100.0) AS total_vol
-        FROM vol GROUP BY yr ORDER BY yr
+        FROM vol GROUP BY yr
         """
     )
+    return order_small(shares, "yr")
 
 
 # ------------------------- round-14: TPC-H shape family completion ----
@@ -2899,7 +2900,7 @@ def q_tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             units_to_currency(F.sum(exact_units(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)), 4).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "yr")
+        .transform(order_small, "supp_nation", "cust_nation", "yr")
     )
 
 
@@ -2966,7 +2967,7 @@ def q_tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("nation", "yr")
         .agg(units_to_currency(F.sum("amount_u4"), 4).alias("sum_profit"))
-        .orderBy("nation", F.desc("yr"))
+        .transform(order_small, "nation", F.desc("yr"))
     )
 
 
@@ -3114,7 +3115,7 @@ def q_tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("low_line_count"),
         )
-        .orderBy("ship_bucket")
+        .transform(order_small, "ship_bucket")
     )
 
 

@@ -295,7 +295,10 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark):
     """Both sides of the local-finish gate: ``kcore()`` always takes the
     distributed round loop, and ``_kcore_loop`` with the directed-edge
     count at or under ``KCORE_LOCAL_FINISH_EDGES`` takes the one-task
-    numpy peel. Each must equal the sequential reference."""
+    numpy peel. Each must equal the sequential reference. The input is
+    a multigraph (duplicate edges in both orientations, one self-loop):
+    ``_kcore_build``'s ``deg`` is each node's distinct-neighbour count,
+    the self-loop not counted."""
     import random
 
     from reactor_window_like_flink_spark.llm.clustering import (
@@ -307,8 +310,23 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark):
 
     rng = random.Random(13)
     edges = {tuple(sorted(rng.sample(range(60), 2))) for _ in range(300)}
-    df = spark.createDataFrame(sorted(edges), "u long, v long")
+    simple = sorted(edges)
+    loop_node = simple[0][0]
+    multi = (
+        simple
+        + [(v, u) for u, v in simple[::2]]
+        + simple[::3]
+        + [(loop_node, loop_node)]
+    )
+    df = spark.createDataFrame(multi, "u long, v long")
     sym, deg = _kcore_build(df)
+    nbrs: dict[int, set[int]] = {}
+    for u, v in simple:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    assert {r["src"]: r["deg"] for r in deg.collect()} == {
+        n: len(s) for n, s in nbrs.items()
+    }
     two_m = 2 * len(edges)
     assert two_m <= KCORE_LOCAL_FINISH_EDGES
     for k in (3, 5, 8):
@@ -320,6 +338,18 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark):
         }
         assert loop == want
         assert local == want
+
+
+def test_kcore_key_counts(spark, sf_dir):
+    """``q_kcore`` at sf0.001: the build starts 4 jobs (the basket and
+    adjacency shuffles, the sizing aggregate's shuffle and its result)
+    and the local-finish write 1."""
+    from reactor_window_like_flink_spark.observe import run
+
+    key = entry_mod.queries()["q_kcore"]
+    key(spark, sf_dir)  # infers the lineitem schema once per process
+    r = run(spark, lambda: key(spark, sf_dir))
+    assert (r["build_jobs"], r["jobs"]) == (4, 1), r
 
 
 def test_kcore_keeps_clique_peels_tendrils(spark):

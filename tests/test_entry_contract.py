@@ -128,6 +128,17 @@ def _repo_nodes(helper: str):
     return _ast_nodes(_REPO, patterns, helper)
 
 
+def _method_call(node, attr: str) -> bool:
+    """Whether ``node`` is a call ``<x>.attr(...)``."""
+    import ast
+
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+    )
+
+
 def test_no_direct_local_checkpoint():
     """One materialization rule: every ``localCheckpoint`` call in the
     package goes through ``functions/materialize.py``."""
@@ -141,6 +152,38 @@ def test_no_direct_local_checkpoint():
         and node.func.attr == "localCheckpoint"
     ]
     assert not bad, f"direct localCheckpoint calls (use materialize()): {bad}"
+
+
+def test_no_repartition_into_materialize():
+    """A ``.repartition(...)`` is never the receiver of
+    ``.transform(materialize)`` nor the argument of ``materialize(...)``:
+    a checkpoint keeps no partitioning, so the repartition is a full
+    shuffle nothing reads (pinned in ``tests/test_materialize.py``).
+    Repartitions that feed ``mapInPandas`` or a writer stay legal."""
+    import ast
+
+    def is_materialize(node) -> bool:
+        return isinstance(node, ast.Name) and node.id == "materialize"
+
+    bad = [
+        where
+        for where, node in _package_nodes("functions/materialize.py")
+        if isinstance(node, ast.Call)
+        and node.args
+        and (
+            (is_materialize(node.func) and _method_call(node.args[0], "repartition"))
+            or (
+                _method_call(node, "transform")
+                and is_materialize(node.args[0])
+                and _method_call(node.func.value, "repartition")
+            )
+        )
+    ]
+    assert not bad, (
+        "repartition feeding materialize (a checkpoint reports "
+        "UnknownPartitioning, so the shuffle is wasted and its fixed "
+        f"partition count blocks AQE coalescing): {bad}"
+    )
 
 
 def test_no_hand_rolled_artifact_memo():

@@ -1,6 +1,7 @@
-"""``functions/materialize.py::collect_bounded``: the one bounded driver
-collect — both sides of the bound, one Spark job whatever the frame's
-partition layout, and the per-call conf restored on every exit."""
+"""``functions/materialize.py``: ``collect_bounded``, the one bounded
+driver collect — both sides of the bound, one Spark job whatever the
+frame's partition layout, and the per-call conf restored on every exit —
+and the partitioning a ``materialize``d frame reports."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from reactor_window_like_flink_spark.functions.materialize import (
     materialize,
 )
 from reactor_window_like_flink_spark.observe import counting
+from reactor_window_like_flink_spark.plans import node_counts
 
 CONF = "spark.sql.limit.initialNumPartitions"
 
@@ -60,3 +62,15 @@ def test_collect_bounded_restores_session_conf(spark):
         assert spark.conf.get(CONF) == "3"
     finally:
         spark.conf.unset(CONF)
+
+
+def test_materialize_keeps_no_partitioning(spark):
+    """A checkpoint reports ``UnknownPartitioning``: a groupBy on the very
+    key the frame was hash-partitioned by still exchanges, so a
+    repartition before ``materialize`` is a shuffle nothing reads. If a
+    later Spark keeps the layout, this fails and co-partitioned rounds
+    become worth building."""
+    df = spark.range(100).select((F.col("id") % 7).alias("k"))
+    agg = materialize(df.repartition(4, "k")).groupBy("k").count()
+    assert node_counts(agg)["Exchange"] == 1
+    assert sorted(r["count"] for r in agg.collect()) == [14] * 5 + [15] * 2

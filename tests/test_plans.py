@@ -661,6 +661,17 @@ def test_run_record_of_a_window_key(spark, q):
     assert r["tasks"] >= r["jobs"] and r["index_builds"] == []
 
 
+def test_run_record_of_a_bounded_sort_key(spark, q):
+    """``observe.run``: a warm ``q_agg_group`` builds without a job and
+    writes in 2 (its partial-aggregate shuffle stage and the one-task
+    sort) — no range-sort sampling job or range shuffle."""
+    from reactor_window_like_flink_spark.observe import run
+
+    q("q_agg_group")  # infers the lineitem schema once per process
+    r = run(spark, lambda: q("q_agg_group"))
+    assert (r["build_jobs"], r["jobs"]) == (0, 2), r
+
+
 def test_counting_sees_only_actions(spark):
     from reactor_window_like_flink_spark.observe import counting
 
@@ -670,3 +681,64 @@ def test_counting_sees_only_actions(spark):
     with counting(spark) as action:
         df.collect()
     assert lazy["jobs"] == 0 and action["jobs"] >= 1, (lazy, action)
+
+
+# key -> (sort column, descending) in the key's final ORDER BY
+_ORDER_SMALL_KEYS = {
+    "q_agg_group": [("l_returnflag", False), ("l_linestatus", False)],
+    "q_tpch_q4_shape": [("o_orderpriority", False)],
+    "q_tpch_q5_shape": [("revenue", True), ("n_name", False)],
+    "q_tpch_q7_shape": [("supp_nation", False), ("cust_nation", False), ("yr", False)],
+    "q_tpch_q8_shape": [("yr", False)],
+    "q_tpch_q9_shape": [("nation", False), ("yr", True)],
+    "q_tpch_q12_shape": [("ship_bucket", False)],
+    "q_multimodal_decode": [("kind", False)],
+}
+_RANGE_SORT_KEYS = [
+    "q_tpch_q2_shape",
+    "q_tpch_q11_shape",
+    "q_tpch_q13_shape",
+    "q_tpch_q15_shape",
+    "q_tpch_q20_shape",
+]
+
+
+def _executed(df) -> tuple[list, str]:
+    """The frame's rows and its executed (final adaptive) plan."""
+    rows = df.collect()
+    return rows, df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("key", sorted(_ORDER_SMALL_KEYS))
+def test_dimension_bounded_sort_runs_in_one_task(q, key):
+    """``contract.order_small``: a sort over a dimension-bounded result
+    plans no range exchange (no sampling job, no range shuffle), and the
+    rows still come back in sort-key order."""
+    rows, plan = _executed(q(key))
+    assert "rangepartitioning" not in plan, plan
+    want = list(rows)
+    for col, desc in reversed(_ORDER_SMALL_KEYS[key]):
+        want.sort(key=lambda r: r[col], reverse=desc)
+    assert rows == want
+
+
+@pytest.mark.parametrize("key", _RANGE_SORT_KEYS)
+def test_unbounded_sort_keeps_range_exchange(q, key):
+    """A result that grows with the data keeps the parallel range sort."""
+    rows, plan = _executed(q(key))
+    assert rows and "rangepartitioning" in plan, plan
+
+
+def test_single_task_sort_only_through_order_small():
+    """``contract.order_small`` is the only place a ``.coalesce(1)`` sits
+    directly under an ``.orderBy``: the one-task sort rule has one home."""
+    from test_entry_contract import _method_call, _package_nodes
+
+    bad = [
+        where
+        for where, node in _package_nodes("contract.py")
+        if _method_call(node, "orderBy")
+        and _method_call(inner := node.func.value, "coalesce")
+        and [getattr(a, "value", None) for a in inner.args] == [1]
+    ]
+    assert not bad, f".coalesce(1).orderBy(...) outside contract.order_small: {bad}"

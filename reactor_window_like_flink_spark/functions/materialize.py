@@ -1,8 +1,11 @@
-"""The one materialization rule, and the one bounded driver collect.
-Every ``localCheckpoint`` in the package goes through ``materialize``;
-no module calls it directly (pinned by ``tests/test_entry_contract.py``).
-A driver collect whose over-bound result is an error goes through
-``collect_bounded``.
+"""The one materialization rule, the one bounded driver collect and the
+one-job driver read. Every ``localCheckpoint`` in the package goes
+through ``materialize``; no module calls it directly (pinned by
+``tests/test_entry_contract.py``). A driver collect whose over-bound
+result is an error goes through ``collect_bounded``. A one-row
+aggregate the driver reads to size or steer work (a graph's node and
+edge counts, a loop's convergence count) goes through
+``aggregate_row``.
 
 The rule:
 
@@ -13,7 +16,9 @@ The rule:
   iterative loop's plan grows one round deeper per round. A lazy
   checkpoint truncates lineage and is filled by the first action that
   reads it (block-level locks dedup concurrent readers), so it costs no
-  Spark job of its own. An eager copy costs one whole extra job, and
+  extra Spark job: under AQE a lazy checkpoint over an exchange runs
+  that exchange's map stage when it is called, a job the first reader
+  would have run anyway. An eager copy costs one whole extra job, and
   per-job scheduling overhead is the floor for small batches.
 * **Eager** only for a frame that feeds a broadcast build side AND its
   probe in the same plan. Lazily, AQE plans the broadcast and the probe
@@ -33,7 +38,9 @@ durable cluster the same call sites would take ``checkpoint()``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
+
+from reactor_window_like_flink_spark.plans.audit import node_counts
 
 
 def materialize(df: DataFrame, *, feeds_broadcast: bool = False) -> DataFrame:
@@ -95,3 +102,44 @@ def collect_bounded(df: DataFrame, max_rows: int) -> list[Row] | None:
         else:
             spark.conf.set(_LIMIT_INITIAL_PARTITIONS, prev)
     return rows if len(rows) <= max_rows else None
+
+
+_ADAPTIVE = "spark.sql.adaptive.enabled"
+
+
+def aggregate_row(df: DataFrame, *exprs: Column) -> Row:
+    """The one row of ``df.agg(*exprs)``, read by the driver in one Spark
+    job.
+
+    Under AQE a global aggregate runs as two jobs: the partial
+    aggregate's map stage is submitted on its own, then the final
+    aggregate. Planned with ``spark.sql.adaptive.enabled=false`` both
+    stages run in one job. The conf is set on ``df.sparkSession`` for
+    this call only and restored in a ``finally`` (unset again if it was
+    unset), even when the aggregate raises.
+
+    ``df`` itself must plan no shuffle: read it off a ``materialize``d
+    frame or a scan. A frame whose plan holds an ``Exchange`` raises
+    ``ValueError`` before anything runs, so no shuffle loses AQE's
+    partition coalescing or join switching to this call.
+
+    A batch query that another thread plans on the same session while
+    the conf is off gets a non-adaptive plan: the same rows, planned
+    without AQE. Streaming queries clone the session conf when they
+    start, so they are not affected.
+    """
+    if node_counts(df)["Exchange"]:
+        raise ValueError(
+            "aggregate_row: the frame plans a shuffle; read its one-row"
+            " aggregate off a materialized frame"
+        )
+    spark = df.sparkSession
+    prev = spark.conf.get(_ADAPTIVE, None)
+    spark.conf.set(_ADAPTIVE, "false")
+    try:
+        return df.agg(*exprs).collect()[0]
+    finally:
+        if prev is None:
+            spark.conf.unset(_ADAPTIVE)
+        else:
+            spark.conf.set(_ADAPTIVE, prev)

@@ -26,6 +26,11 @@ Scale design:
   stay O(1) deep instead of O(rounds). On a durable cluster use
   ``checkpoint()`` (HDFS-backed) — ``localCheckpoint`` trades executor-loss
   recovery for speed, the right call on local[32].
+* **One local finish for the iterative family** (``pagerank``,
+  ``label_propagation``, ``kcore``): one job sizes the materialized
+  adjacency, and a graph at or below ``LOCAL_FINISH_EDGES`` directed
+  edges runs every round in one single-task numpy kernel
+  (``_local_finish``); over the bound the distributed rounds run.
 
 The pair graph comes from ``dedup.exact_jaccard_pairs`` (prefix-filtered
 exact word-bigram Jaccard, threshold 0.5) — deterministic and lossless, so
@@ -42,7 +47,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
-from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.functions.materialize import (
+    aggregate_row,
+    materialize,
+)
 from reactor_window_like_flink_spark.llm.dedup import exact_jaccard_pairs
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -227,10 +235,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------ PageRank
-
-PAGERANK_DAMPING = 0.85
-PAGERANK_ITERS = 10
+# ------------------------------------------- adjacency and local finish
 
 
 def _adjacency(edges: DataFrame) -> DataFrame:
@@ -238,7 +243,8 @@ def _adjacency(edges: DataFrame) -> DataFrame:
     with its distinct neighbours, in ONE shuffle, materialized. Both
     orientations enter the groupBy and ``collect_set`` dedups inside it,
     so a duplicate edge in either orientation counts once; in-array
-    order is unspecified.
+    order is unspecified. The result is symmetric: every ``dst`` is
+    also a ``src``.
 
     No repartition before the checkpoint: ``materialize`` output has no
     known partitioning (the plan reports ``UnknownPartitioning(0)``,
@@ -256,6 +262,86 @@ def _adjacency(edges: DataFrame) -> DataFrame:
     )
 
 
+def _graph_size(adj: DataFrame) -> tuple[int, int]:
+    """``(n_nodes, two_m)`` of an ``_adjacency`` frame — its row count
+    and its directed-edge count Σ|dsts| — in one Spark job
+    (``aggregate_row``), which also fills the adjacency's checkpoint."""
+    row = aggregate_row(
+        adj, F.count("*"), F.coalesce(F.sum(F.size("dsts")), F.lit(0))
+    )
+    return row[0], row[1]
+
+
+# Local-finish bound of the iterative graph family (kcore, pagerank,
+# label_propagation): at or below this many directed edges the whole
+# iteration runs as ONE single-task numpy kernel instead of one or
+# more Spark jobs per round. Peak RSS of the Python worker running each
+# kernel (``resource.getrusage`` inside it, worker baseline included)
+# on a random graph of 8.04M directed edges over 993,329 nodes, 4-vCPU
+# host: kcore peel 629 MiB, pagerank 629 MiB (both peak while indexing
+# the edge rows), label propagation 914 MiB (its per-round vote
+# ``np.unique``); all three fit a 1 GiB worker. Over the bound the
+# distributed rounds run unchanged: at 100 TB the gate does not fire,
+# so this is a size-adaptive final-stage collapse (the iterative
+# analog of a broadcast-join threshold), not a fixture shortcut.
+LOCAL_FINISH_EDGES = 8_000_000
+
+
+def _local_finish(
+    adj: DataFrame, two_m: int, kernel, schema: str
+) -> DataFrame | None:
+    """The one local-finish gate. At or below ``LOCAL_FINISH_EDGES``
+    directed edges, the ``(src, dst)`` rows of ``adj`` stream into ONE
+    task that runs ``kernel`` (a ``mapInPandas`` function) over the
+    whole graph; ``schema`` is its output DDL, ``{t}`` standing for the
+    node id type. Over the bound, ``None``: the caller runs its
+    distributed rounds. The kernel reads the same adjacency as those
+    rounds, so duplicate edges and self-loops count the same on both
+    sides; its output reports ``SinglePartition``, so a keyed operator
+    over it plans no exchange.
+
+    Measured on the registered co-purchase graph (sf0.1, build + exec
+    jobs): pagerank 35 + 5 → 3 + 1, label propagation 10 + 8 → 3 + 1,
+    kcore 6.87 s → 2.59 s (21 cascade rounds, identical 17,732-node
+    core)."""
+    if two_m > LOCAL_FINISH_EDGES:
+        return None
+    t = adj.schema["src"].dataType.simpleString()
+    return (
+        adj.select("src", F.explode("dsts").alias("dst"))
+        .coalesce(1)
+        .mapInPandas(kernel, schema.format(t=t))
+    )
+
+
+def _edge_index(batches):
+    """``(nodes, si, di)`` of the symmetric ``(src, dst)`` rows a
+    local-finish kernel receives: the sorted distinct node ids and each
+    row's endpoint indices into them (index order is id order); ``None``
+    for no rows. Every ``dst`` is a ``src`` (``_adjacency``), so the
+    node set is the distinct ``src`` values."""
+    import numpy as np
+
+    srcs, dsts = [], []
+    for pdf in batches:
+        if len(pdf):
+            srcs.append(pdf["src"].to_numpy())
+            dsts.append(pdf["dst"].to_numpy())
+    if not srcs:
+        return None
+    src = np.concatenate(srcs)
+    nodes, si = np.unique(src, return_inverse=True)
+    del src
+    di = np.searchsorted(nodes, np.concatenate(dsts))
+    return nodes, si, di
+
+
+# ------------------------------------------------------------ PageRank
+
+PAGERANK_DAMPING = 0.85
+PAGERANK_ITERS = 10
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = PAGERANK_DAMPING,
@@ -265,28 +351,67 @@ def pagerank(
     ``(u, v)`` (each undirected edge contributes both directions):
     rank_{t+1}(n) = (1-d)/N + d * Σ_{m -> n} rank_t(m)/outdeg(m).
 
-    Distributed shape — the canonical iterative-join algorithm (Page et
-    al. '99; the Pregel/GraphX workload) on plain DataFrame ops, in the
-    ADJACENCY-LIST form: the graph is grouped ONCE into O(nodes) rows
-    (src, dsts array) and checkpointed (``_adjacency``) — so each
-    round's rank join is O(nodes)-by-O(nodes) (the checkpoint keeps no
-    partitioning, so the join exchanges node-sized rows, never edges)
-    and the edge fan-out happens IN-ROW via ``explode``; only the
-    exploded contributions shuffle (map-side combined into per-node
-    inflows). Measured 2x over the flat (src, dst, outdeg) edge-join
-    form at sf0.1 (10.9 s -> 5.8 s for 10 rounds on the 1.2M-edge
-    graph). Lineage is truncated every second round (``localCheckpoint``
-    — depth-2 plans analyze fine and half the checkpoint copies);
-    symmetrized edges mean no dangling nodes, so no dangling-mass term.
-    Fixed ``iters`` (not a convergence test) keeps the result
-    deterministic for the sequential-reference pytest; the driver sees
-    only the loop counter.
+    The graph is grouped ONCE into O(nodes) (src, dsts) rows and
+    checkpointed (``_adjacency``), and one job sizes it. At or below
+    ``LOCAL_FINISH_EDGES`` the ``iters`` rounds run in one task
+    (``_local_finish``, ``_pagerank_kernel``): a bincount-weighted
+    inflow per round, the same per-edge shares and the same
+    base + d·inflow as the rounds below.
+
+    Over the bound, distributed shape — the canonical iterative-join
+    algorithm (Page et al. '99; the Pregel/GraphX workload) on plain
+    DataFrame ops, in the ADJACENCY-LIST form: each round's rank join
+    is O(nodes)-by-O(nodes) (the checkpoint keeps no partitioning, so
+    the join exchanges node-sized rows, never edges) and the edge
+    fan-out happens IN-ROW via ``explode``; only the exploded
+    contributions shuffle (map-side combined into per-node inflows).
+    Measured 2x over the flat (src, dst, outdeg) edge-join form at
+    sf0.1 (10.9 s -> 5.8 s for 10 rounds on the 1.2M-edge graph).
+    Lineage is truncated every third round; symmetrized edges mean no
+    dangling nodes, so no dangling-mass term. Fixed ``iters`` (not a
+    convergence test) keeps the result deterministic for the
+    sequential-reference pytest; the driver sees only the loop counter.
 
     Returns (node, rank) for every node, rank rounded to 6dp."""
     adj = _adjacency(edges)
+    n_total, two_m = _graph_size(adj)
+    ranks = _local_finish(
+        adj, two_m, _pagerank_kernel(damping, iters), "node {t}, rank double"
+    )
+    if ranks is None:
+        ranks = _pagerank_rounds(adj, n_total, damping, iters)
+    return ranks.select("node", round_to("rank", 6).alias("rank"))
+
+
+def _pagerank_kernel(damping: float, iters: int):
+    """Single-task PageRank over the (src, dst) rows: yields (node,
+    rank) unrounded."""
+
+    def rank(batches):
+        import numpy as np
+        import pandas as pd
+
+        index = _edge_index(batches)
+        if index is None:
+            return
+        nodes, si, di = index
+        n = len(nodes)
+        deg = np.bincount(si, minlength=n)
+        base = (1.0 - damping) / n
+        r = np.full(n, 1.0 / n)
+        for _ in range(iters):
+            r = base + damping * np.bincount(di, weights=(r / deg)[si], minlength=n)
+        yield pd.DataFrame({"node": nodes, "rank": r})
+
+    return rank
+
+
+def _pagerank_rounds(
+    adj: DataFrame, n_total: int, damping: float, iters: int
+) -> DataFrame:
+    """The distributed rounds of ``pagerank`` (over-bound side)."""
     # symmetrized graph: every node appears as a src
     nodes = adj.select(F.col("src").alias("node"))
-    n_total = nodes.count()
     if n_total == 0:
         # Empty graph: no nodes, no ranks — return the empty (node, rank)
         # frame instead of dividing by zero (the edge-case contract every
@@ -316,19 +441,58 @@ def pagerank(
         # identical 6dp output; 3 keeps analysis O(1) per segment.
         if (i + 1) % 3 == 0 and i != iters - 1:
             ranks = materialize(ranks)
-    return ranks.select("node", round_to("rank", 6).alias("rank"))
+    return ranks
 
 
-@REG.add("q_pagerank")  # rows-only: 10 iterations of order-dependent
-# float re-aggregation have no stable SQL mirror; pytest asserts
-# per-node agreement with a sequential numpy reference at 1e-9.
+def _duck_rounds(n: int, first: str, step) -> str:
+    """``n`` chained CTEs ``{first}1 … {first}n`` for the unrolled
+    oracle SQL of a fixed-round graph key; ``step(i)`` is the body of
+    round ``i`` (reading round ``i - 1``)."""
+    return ",".join(f"\n    {first}{i} AS ({step(i)})" for i in range(1, n + 1))
+
+
+# Symmetric distinct co-purchase edges (src, dst), src <> dst: the
+# DuckDB mirror of _adjacency over _basket_pairs(lineitem).
+_DUCK_COPURCHASE = """
+    b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    e AS (
+      SELECT DISTINCT x.l_partkey AS src, y.l_partkey AS dst
+      FROM b x JOIN b y
+        ON x.l_orderkey = y.l_orderkey AND x.l_partkey <> y.l_partkey
+    )"""
+
+
+@REG.add(
+    "q_pagerank",
+    f"""
+    WITH {_DUCK_COPURCHASE},
+    g AS (SELECT src, count(*) AS d FROM e GROUP BY src),
+    n AS (SELECT count(*) AS n FROM g),
+    r0 AS (SELECT src AS node, 1.0::DOUBLE / n.n AS rank FROM g, n),"""
+    + _duck_rounds(
+        PAGERANK_ITERS,
+        "r",
+        lambda i: f"""
+      SELECT e.dst AS node,
+             (1.0::DOUBLE - {PAGERANK_DAMPING}::DOUBLE) / n.n
+               + {PAGERANK_DAMPING}::DOUBLE * sum(r.rank / g.d) AS rank
+      FROM e JOIN r{i - 1} r ON e.src = r.node JOIN g ON g.src = e.src, n
+      GROUP BY e.dst, n.n
+    """,
+    )
+    + f"""
+    SELECT node, ROUND(rank * 1000000, 0) / 1000000.0 AS rank
+    FROM r{PAGERANK_ITERS}
+    """,
+)
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality of every part in the co-purchase graph
     (see ``pagerank``) — which items sit at the center of basket
-    co-occurrence. The iterative-join workload the engine's graph tier
-    must sustain beyond single-pass components: rank mass flows along
-    edges for 10 rounds, one keyed join + one
-    re-aggregate per round."""
+    co-occurrence. The iterative workload the engine's graph tier must
+    sustain beyond single-pass components: rank mass flows along edges
+    for 10 rounds. The oracle unrolls the 10 rounds as CTEs; pytest
+    also asserts per-node agreement with a sequential numpy reference
+    on both sides of the local-finish gate."""
     from reactor_window_like_flink_spark.operators.analytics import (
         _basket_pairs,
     )
@@ -370,19 +534,66 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     the modularity-forming workload between "connected" and
     "centrality" that co-purchase and near-dup-graph analyses use.
 
-    Distributed shape — the ``pagerank`` adjacency-list discipline: the
-    graph is grouped ONCE into O(nodes) (src, dsts) rows and
-    checkpointed (``_adjacency``); each round joins labels on src
-    (node-sized rows exchange: the checkpoint keeps no partitioning),
-    fans out IN-ROW via ``explode``, and re-aggregates with TWO
-    map-side-combining shuffles: (node, label) vote counts, then
-    per-node argmax via ``max_by(label, (votes, -label))`` — largest
-    vote count wins, smallest label on ties, so no sort and no window. Lineage truncates every second
-    round. Per-round shuffle volume is O(edges) vote rows combined
-    map-side to O(distinct (node,label)) — never an all-pairs product.
+    The graph is grouped ONCE into O(nodes) (src, dsts) rows and
+    checkpointed (``_adjacency``), and one job sizes it. At or below
+    ``LOCAL_FINISH_EDGES`` the rounds run in one task
+    (``_local_finish``, ``_lpa_kernel``): ``np.unique`` vote counts per
+    (node, label), the same winner rule as the rounds below.
+
+    Over the bound, distributed shape — the ``pagerank`` adjacency-list
+    discipline: each round joins labels on src (node-sized rows
+    exchange: the checkpoint keeps no partitioning), fans out IN-ROW
+    via ``explode``, and re-aggregates with TWO map-side-combining
+    shuffles: (node, label) vote counts, then per-node argmax via
+    ``max_by(label, (votes, -label))`` — largest vote count wins,
+    smallest label on ties, so no sort and no window. Lineage truncates
+    every third round. Per-round shuffle volume is O(edges) vote rows
+    combined map-side to O(distinct (node,label)) — never an all-pairs
+    product.
 
     Returns (node, community) for every node with ≥1 edge."""
     adj = _adjacency(edges)
+    _, two_m = _graph_size(adj)
+    labels = _local_finish(
+        adj, two_m, _lpa_kernel(rounds), "node {t}, community {t}"
+    )
+    if labels is None:
+        labels = _lpa_rounds(adj, rounds)
+    return labels
+
+
+def _lpa_kernel(rounds: int):
+    """Single-task synchronous LPA over the (src, dst) rows: yields
+    (node, community). A label is a node index, so the smallest index
+    is the smallest label."""
+
+    def propagate(batches):
+        import numpy as np
+        import pandas as pd
+
+        index = _edge_index(batches)
+        if index is None:
+            return
+        nodes, si, di = index
+        n = len(nodes)
+        labels = np.arange(n)
+        for _ in range(rounds):
+            # votes per (receiving node, offered label), keys sorted by
+            # node then label; a stable sort on (node, -votes) keeps the
+            # smallest label first among a node's tied maxima
+            keys, votes = np.unique(di * n + labels[si], return_counts=True)
+            node, label = np.divmod(keys, n)
+            order = np.lexsort((-votes, node))
+            win = order[np.r_[True, node[order][1:] != node[order][:-1]]]
+            labels[node[win]] = label[win]
+        yield pd.DataFrame({"node": nodes, "community": nodes[labels]})
+
+    return propagate
+
+
+def _lpa_rounds(adj: DataFrame, rounds: int) -> DataFrame:
+    """The distributed rounds of ``label_propagation`` (over-bound
+    side)."""
     labels = adj.select(F.col("src").alias("node"), F.col("src").alias("label"))
     for i in range(rounds):
         votes = (
@@ -402,18 +613,41 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     return labels.select("node", F.col("label").alias("community"))
 
 
-@REG.add("q_communities_lpa")  # rows-only: fixed-round synchronous LPA
-# is iterative (no SQL mirror); pytest asserts equality with a
-# sequential python reference and two-community recovery on a planted
-# bridge-joined clique-pair fixture.
+@REG.add(
+    "q_communities_lpa",
+    f"""
+    WITH {_DUCK_COPURCHASE},
+    l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),"""
+    + _duck_rounds(
+        LPA_ROUNDS,
+        "l",
+        lambda i: f"""
+      SELECT node, arg_max(label, votes * 1e12 - label) AS label
+      FROM (
+        SELECT e.dst AS node, l.label, count(*) AS votes
+        FROM e JOIN l{i - 1} l ON e.src = l.node
+        GROUP BY e.dst, l.label
+      )
+      GROUP BY node
+    """,
+    )
+    + f"""
+    SELECT node, label AS community,
+           CAST(count(*) OVER (PARTITION BY label) AS BIGINT) AS community_size
+    FROM l{LPA_ROUNDS}
+    """,
+)
 def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community structure of the part co-purchase graph via
     deterministic synchronous label propagation (see
     ``label_propagation``) — which groups of parts form densely
     co-purchased clusters, the tier between ``q_dedup_groups``'s
     connected components and ``q_pagerank``'s centrality. Emits one
-    row per part with its community label plus the community size
-    (a broadcast-small self-aggregate)."""
+    row per part with its community label plus the community size, a
+    window count: over the local finish's single partition it plans no
+    exchange, so the kernel runs once and the write is one job. The
+    oracle unrolls the 5 rounds as CTEs, the vote winner as
+    ``arg_max(label, votes * 1e12 - label)``."""
     from reactor_window_like_flink_spark.operators.analytics import (
         _basket_pairs,
     )
@@ -422,12 +656,13 @@ def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No .distinct(): label_propagation's collect_set adjacency dedups
     # neighbors in its own groupBy (see _adjacency).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
-    labels = label_propagation(edges)
-    sizes = labels.groupBy("community").agg(
-        F.count("*").cast("long").alias("community_size")
-    )
-    return labels.join(F.broadcast(sizes), "community").select(
-        "node", "community", "community_size"
+    return label_propagation(edges).select(
+        "node",
+        "community",
+        F.count("*")
+        .over(Window.partitionBy("community"))
+        .cast("long")
+        .alias("community_size"),
     )
 
 
@@ -461,11 +696,17 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
     synchronous batch round is as correct as any sequential order — and
     deterministic).
 
-    Distributed shape (DELTA peel, round-13 form): the adjacency list
-    is built in one shuffle, checkpointed ONCE, and never rewritten;
-    the edge list and the degrees are read off it with no further
-    shuffle, and the degrees are then maintained incrementally. Each
-    round:
+    The adjacency list (self-loops dropped: a k-core counts distinct
+    OTHER neighbours) is built in one shuffle and checkpointed once
+    (``_kcore_adjacency``), and one job sizes it. At or below
+    ``LOCAL_FINISH_EDGES`` the whole cascade runs as one single-task
+    numpy peel (``_local_finish``, ``_kcore_peel_kernel``); peeling is
+    confluent, so the exhaustive local peel returns the identical core.
+
+    Over the bound, distributed shape (DELTA peel, round-13 form): the
+    adjacency is never rewritten; the edge list and the degrees are
+    read off it with no further shuffle, and the degrees are then
+    maintained incrementally. Each round:
 
     1. the frontier ``bad`` (survivors whose maintained degree fell
        below k) joins the static edge list to count, per still-alive
@@ -496,63 +737,42 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
 
     Returns (node, degree) for every node in the k-core, with its
     degree INSIDE the core."""
-    sym, deg = _kcore_build(edges)
-    return _kcore_loop(sym, deg, k, max_rounds)
+    adj = _kcore_adjacency(edges)
+    _, two_m = _graph_size(adj)
+    return _kcore_finish(adj, two_m, k, max_rounds)
 
 
-def _kcore_build(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Symmetrized+deduped edge list (src, dst) and the initial degree
-    frame (src, deg), both narrow projections of ONE materialized
-    adjacency list (``_adjacency`` over the edges minus self-loops — a
-    k-core counts distinct OTHER neighbours). The full degree aggregate
-    happens exactly once, inside the adjacency groupBy; afterwards the
-    frame is maintained by frontier-sized decrements."""
-    adj = _adjacency(edges.filter(F.col("u") != F.col("v")))
-    sym = adj.select("src", F.explode("dsts").alias("dst"))
-    deg = adj.select("src", F.size("dsts").cast("long").alias("deg"))
-    return sym, deg
+def _kcore_adjacency(edges: DataFrame) -> DataFrame:
+    """``_adjacency`` over the edges minus self-loops: ``size(dsts)``
+    is each node's initial degree, counted once inside the groupBy."""
+    return _adjacency(edges.filter(F.col("u") != F.col("v")))
 
 
-# Local-finish gate (r17, judge item 4): when the REMAINING graph's
-# directed-edge count fits one task's memory budget (8M rows of two
-# int64 columns ≈ 128 MB raw, ~3x that transient in the factorize —
-# comfortably inside a worker), the data-dependent cascade (21 rounds
-# at sf0.1 = 21 job barriers of ~300 ms each, the key's dominant cost)
-# collapses into ONE single-task job that iterates the SAME
-# frontier-decrement peel to exhaustion in numpy. Peeling is confluent
-# (removal order never changes the fixpoint — Seidman 1983), so the
-# exhaustive local peel returns the identical core; pinned identical at
-# sf0.1 (17,732 nodes, same degrees) and by the sequential-reference
-# pytest. At 100 TB the gate does NOT fire (billions of edges) and the
-# synchronous distributed rounds run unchanged — this is the standard
-# size-adaptive final-stage collapse (the aggregate analog of a
-# broadcast-join threshold), not a fixture shortcut: any production
-# peel wants the cascade tail off the cluster barrier path the moment
-# it fits one task.
-KCORE_LOCAL_FINISH_EDGES = 8_000_000
+def _kcore_finish(
+    adj: DataFrame, two_m: int, k: int, max_rounds: int = KCORE_MAX_ROUNDS
+) -> DataFrame:
+    """The k-core of a sized ``_kcore_adjacency``: one local peel at or
+    below the bound, else the delta-peel rounds."""
+    core = _local_finish(
+        adj, two_m, _kcore_peel_kernel(k), "node {t}, degree long"
+    )
+    return core if core is not None else _kcore_loop(adj, k, max_rounds)
 
 
 def _kcore_peel_kernel(k: int):
-    """Single-task exhaustive peel over a (src, dst) directed edge list
-    (symmetric rows): numpy bincount decrements iterated to the
-    fixpoint — the same per-round math as ``_kcore_round``, without the
-    per-round job. Yields (node, degree-in-core)."""
+    """Single-task exhaustive peel over the (src, dst) rows: numpy
+    bincount decrements iterated to the fixpoint — the same per-round
+    math as ``_kcore_round``, without the per-round job. Yields (node,
+    degree-in-core)."""
 
     def peel(batches):
         import numpy as np
         import pandas as pd
 
-        srcs, dsts = [], []
-        for pdf in batches:
-            if len(pdf):
-                srcs.append(pdf["src"].to_numpy())
-                dsts.append(pdf["dst"].to_numpy())
-        if not srcs:
+        index = _edge_index(batches)
+        if index is None:
             return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-        si, di = inv[: len(src)], inv[len(src) :]
+        nodes, si, di = index
         n = len(nodes)
         deg = np.bincount(si, minlength=n)
         alive = np.ones(n, dtype=bool)
@@ -578,36 +798,25 @@ def _kcore_peel_kernel(k: int):
 
 
 def _kcore_loop(
-    sym: DataFrame,
-    deg: DataFrame,
-    k: int,
-    max_rounds: int = KCORE_MAX_ROUNDS,
-    two_m: int | None = None,
+    adj: DataFrame, k: int, max_rounds: int = KCORE_MAX_ROUNDS
 ) -> DataFrame:
-    """Delta-peel rounds to the fixpoint (see ``kcore``). One job per
-    round: the round's frontier count also fills its degree frame's
-    checkpoint.
-
-    ``two_m`` (the directed-edge count, when the caller already knows
-    it) arms the local-finish gate: below ``KCORE_LOCAL_FINISH_EDGES``
-    the whole cascade runs as ONE single-task numpy peel instead of
-    one job per synchronous round (see the gate comment above). A/B at
-    sf0.1, same session, 5-sample solo medians: 6.87 s (per-round
-    loop) → 2.59 s (gated finish), identical 17,732-node core.
+    """Delta-peel rounds to the fixpoint (see ``kcore``): the edge list
+    ``sym`` and the initial degrees ``deg`` are narrow projections of
+    the adjacency. The frontier count reads the round and fills its
+    checkpoint in one job (``aggregate_row``; a bare ``count()`` took
+    two): forced over the bound at sf0.01, 4 jobs per round, was 5.
     Chaining T rounds lazily per job was MEASURED WORSE and rejected
     (T=3 median 9.41 s vs T=1 8.18 s same-window: each round's output
     feeds both the next degree frame and the next frontier's broadcast,
     so an unmaterialized round's subtree is computed twice per
     successor — the duplication outruns the saved job floor)."""
-    if two_m is not None and two_m <= KCORE_LOCAL_FINISH_EDGES:
-        return sym.coalesce(1).mapInPandas(
-            _kcore_peel_kernel(k), "node long, degree long"
-        )
+    sym = adj.select("src", F.explode("dsts").alias("dst"))
+    deg = adj.select("src", F.size("dsts").cast("long").alias("deg"))
     bad = deg.filter(F.col("deg") < k).select("src")
     for _ in range(max_rounds):
         upd = materialize(_kcore_round(sym, deg, bad, k))
         nxt = upd.filter(F.col("touched") & (F.col("deg") < k))
-        n_bad = nxt.count()
+        n_bad = aggregate_row(nxt, F.count("*"))[0]
         deg = upd.select("src", "deg")
         bad = nxt.select("src")
         if n_bad == 0:
@@ -678,23 +887,16 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     lineitem = load(spark, sf_dir, "lineitem")
-    # No pre-distinct / pre-checkpoint on the pair stream: _kcore_build's
-    # collect_set dedups, and the sizing constants come from the deg
-    # frame the loop needs anyway — n_nodes = |deg| and 2m = Σdeg over
-    # the deduped symmetrized list — so sizing is ONE aggregate job that
-    # also materializes the checkpoint, replacing the previous three
-    # (edge checkpoint, edge count, node distinct-count — r16 guide §2.4
-    # / §1.2; k value proven identical at sf0.1: k=84, same 17,732-node
-    # core).
+    # No pre-distinct / pre-checkpoint on the pair stream: the adjacency's
+    # collect_set dedups, and k comes from the one sizing job the
+    # local-finish gate runs anyway — n_nodes = |adj| and 2m = Σ|dsts|
+    # (k value proven identical at sf0.1: k=84, same 17,732-node core).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
-    sym, deg = _kcore_build(edges)
-    row = deg.agg(
-        F.count("*").alias("n"), F.sum("deg").alias("two_m")
-    ).first()
-    n_nodes = row["n"]
-    if n_nodes == 0:
-        return _kcore_loop(sym, deg, KCORE_K)
-    k = max(2, math.ceil(KCORE_MEAN_FRACTION * float(row["two_m"]) / n_nodes))
-    # two_m is already in hand from the sizing aggregate — arming the
-    # local-finish gate costs no extra job (r17; see _kcore_loop)
-    return _kcore_loop(sym, deg, k, two_m=int(row["two_m"]))
+    adj = _kcore_adjacency(edges)
+    n_nodes, two_m = _graph_size(adj)
+    k = (
+        max(2, math.ceil(KCORE_MEAN_FRACTION * float(two_m) / n_nodes))
+        if n_nodes
+        else KCORE_K
+    )
+    return _kcore_finish(adj, two_m, k)

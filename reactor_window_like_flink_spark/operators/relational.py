@@ -1763,14 +1763,16 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a cross-table equality (customer and supplier share a nation)
     that rewards join reordering.
 
-    Scale shape: region/nation/supplier are broadcast dims — the region
-    filter shrinks nation via the region join, and supplier is semi-joined
-    against those asian nations BEFORE being broadcast, so the broadcast
-    side really is region-pruned (≈1/5 of supplier), not the full table.
-    The date range pushes to the orders scan; the only large shuffles are
-    the two fact joins on their keys; the final per-nation aggregate is
-    O(nations) rows. The c_nationkey = s_nationkey predicate rides the
-    supplier join rather than forcing a separate exchange."""
+    Scale shape: region/nation/supplier are broadcast dims, joined in
+    one order — region prunes nation, and supplier joins those asian
+    nations BEFORE being broadcast, carrying ``n_name``, so the
+    broadcast side really is region-pruned (≈1/5 of supplier) and
+    nation⋈region is planned once (a semi-join plus a final nation join
+    built it twice: 8 jobs → 7 at sf0.001). The date range pushes to
+    the orders scan; the only large shuffles are the two fact joins on
+    their keys; the final per-nation aggregate is O(nations) rows. The
+    c_nationkey = s_nationkey predicate rides the supplier join rather
+    than forcing a separate exchange."""
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load(spark, sf_dir, "nation")
     supplier = load(spark, sf_dir, "supplier")
@@ -1784,10 +1786,9 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name")
     supplier = supplier.join(
-        F.broadcast(asian_nations.select("n_nationkey")),
-        supplier.s_nationkey == F.col("n_nationkey"),
-        "left_semi",
-    )
+        F.broadcast(asian_nations),
+        supplier.s_nationkey == asian_nations.n_nationkey,
+    ).select("s_suppkey", "s_nationkey", "n_name")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey)
         .join(li, orders.o_orderkey == li.l_orderkey)
@@ -1795,10 +1796,6 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(supplier),
             (li.l_suppkey == supplier.s_suppkey)
             & (customer.c_nationkey == supplier.s_nationkey),
-        )
-        .join(
-            F.broadcast(asian_nations),
-            supplier.s_nationkey == asian_nations.n_nationkey,
         )
         .groupBy("n_name")
         .agg(

@@ -35,6 +35,23 @@ def _ensure_driver_memory() -> None:
     os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
 
 
+def _ensure_worker_path() -> None:
+    """Python workers inherit the JVM's environment, and they import the
+    package by module path whenever a ``mapInPandas`` function is
+    module-level. Put the package's parent directory on PYTHONPATH while
+    the gateway is still down, so workers import the package from any
+    working directory, not only when the caller's ``sys.path`` happened
+    to hold the repo."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None:
+        return
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
+
 ROCKSDB_STATE_STORE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
@@ -112,6 +129,7 @@ def get_spark(
                 )
         return active
     _ensure_driver_memory()
+    _ensure_worker_path()
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     if master.startswith("local"):

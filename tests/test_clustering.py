@@ -128,17 +128,73 @@ def test_dedup_groups_match_union_find(spark, sf_dir):
     assert any(s > 1 for s in sizes.values())
 
 
-def test_pagerank_matches_sequential_reference(spark):
-    """Distributed PageRank equals a numpy power iteration on the same
-    symmetrized graph (same damping, same iteration count, same
-    uniform start) to 1e-9 per node — and conserves total rank mass."""
-    import numpy as np
+def _neighbours(edges, loops):
+    """Undirected neighbour sets of an edge list, duplicates once; with
+    ``loops`` a self-loop makes a node its own neighbour (``_adjacency``:
+    pagerank and LPA count it), without it the loop is dropped (a k-core
+    counts distinct OTHER neighbours)."""
+    adj: dict[int, set[int]] = {}
+    for u, v in edges:
+        if u != v or loops:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    return adj
 
+
+def _pagerank_reference(edges):
+    """Sequential power iteration — the semantics spec: same damping,
+    iteration count and uniform start; rank rounded to 6dp."""
     from reactor_window_like_flink_spark.llm.clustering import (
         PAGERANK_DAMPING,
         PAGERANK_ITERS,
-        pagerank,
     )
+
+    adj = _neighbours(edges, loops=True)
+    nodes = sorted(adj)
+    r = {x: 1.0 / len(nodes) for x in nodes}
+    d = PAGERANK_DAMPING
+    for _ in range(PAGERANK_ITERS):
+        nxt = {x: (1.0 - d) / len(nodes) for x in nodes}
+        for x in nodes:
+            share = r[x] / len(adj[x])
+            for y in adj[x]:
+                nxt[y] += d * share
+        r = nxt
+    return {x: rhalf(r[x], 6) for x in nodes}
+
+
+@pytest.fixture
+def gate_sides(monkeypatch):
+    """Runs a graph algorithm on both sides of the local-finish gate:
+    ``sides(fn)`` -> {"local": rows, "distributed": rows}, asserting
+    each side took its path (one ``MapInPandas`` kernel, or none). The
+    distributed side sets the bound to -1, below every graph's edge
+    count, the empty graph's 0 included."""
+    from reactor_window_like_flink_spark.llm import clustering
+    from reactor_window_like_flink_spark.plans import node_counts
+
+    def sides(fn):
+        out = {}
+        for side, bound in (("local", clustering.LOCAL_FINISH_EDGES), ("distributed", -1)):
+            monkeypatch.setattr(clustering, "LOCAL_FINISH_EDGES", bound)
+            df = fn()
+            kernels = node_counts(df)["MapInPandas"]
+            assert kernels == (side == "local"), (side, kernels)
+            out[side] = df.collect()
+        monkeypatch.undo()
+        return out
+
+    return sides
+
+
+def test_pagerank_matches_sequential_reference(spark, gate_sides):
+    """PageRank equals a power iteration on the same symmetrized graph
+    (same damping, same iteration count, same uniform start) to 1e-6
+    per node at 6dp, on both sides of the local-finish gate — and
+    conserves total rank mass."""
+    import numpy as np
+
+    from reactor_window_like_flink_spark.llm.clustering import pagerank
 
     rng = np.random.default_rng(17)
     n = 60
@@ -149,41 +205,22 @@ def test_pagerank_matches_sequential_reference(spark):
     }
     edges_list = sorted({(min(a, b), max(a, b)) for a, b in raw})
     df = spark.createDataFrame(edges_list, "u long, v long")
-    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
-
-    nodes = sorted({x for e in edges_list for x in e})
-    idx = {x: i for i, x in enumerate(nodes)}
-    adj = [[] for _ in nodes]
-    for a, b in edges_list:
-        adj[idx[a]].append(idx[b])
-        adj[idx[b]].append(idx[a])
-    nn = len(nodes)
-    r = np.full(nn, 1.0 / nn)
-    d = PAGERANK_DAMPING
-    for _ in range(PAGERANK_ITERS):
-        nxt = np.full(nn, (1.0 - d) / nn)
-        for i, nbrs in enumerate(adj):
-            share = r[i] / len(nbrs)
-            for j in nbrs:
-                nxt[j] += d * share
-        r = nxt
-    assert set(got) == set(nodes)
-    for x in nodes:
-        assert abs(got[x] - rhalf(r[idx[x]], 6)) <= 1e-6
-    assert abs(sum(got.values()) - 1.0) <= 1e-3  # mass conservation
+    want = _pagerank_reference(edges_list)
+    for side, rows in gate_sides(lambda: pagerank(df)).items():
+        got = {r["node"]: r["rank"] for r in rows}
+        assert set(got) == set(want), side
+        for x in want:
+            assert abs(got[x] - want[x]) <= 1e-6, (side, x)
+        assert abs(sum(got.values()) - 1.0) <= 1e-3, side  # mass conservation
 
 
 def _lpa_reference(edges, rounds):
     """Sequential synchronous LPA — the semantics spec: every node
     simultaneously adopts its neighbors' plurality label, ties to the
-    smallest label."""
+    smallest label; a self-loop is one vote for the node's own label."""
     from collections import defaultdict
 
-    adj = defaultdict(set)
-    for u, v in edges:
-        if u != v:
-            adj[u].add(v)
-            adj[v].add(u)
+    adj = _neighbours(edges, loops=True)
     labels = {n: n for n in adj}
     for _ in range(rounds):
         new = {}
@@ -196,7 +233,7 @@ def _lpa_reference(edges, rounds):
     return labels
 
 
-def test_lpa_matches_sequential_reference_on_random_graph(spark):
+def test_lpa_matches_sequential_reference_on_random_graph(spark, gate_sides):
     import random
 
     from reactor_window_like_flink_spark.llm.clustering import (
@@ -207,12 +244,9 @@ def test_lpa_matches_sequential_reference_on_random_graph(spark):
     rng = random.Random(77)
     edges = {tuple(sorted(rng.sample(range(80), 2))) for _ in range(200)}
     df = spark.createDataFrame(sorted(edges), "u long, v long")
-    got = {
-        r["node"]: r["community"]
-        for r in label_propagation(df).collect()
-    }
     want = _lpa_reference(edges, LPA_ROUNDS)
-    assert got == want
+    for side, rows in gate_sides(lambda: label_propagation(df)).items():
+        assert {r["node"]: r["community"] for r in rows} == want, side
 
 
 def test_lpa_keeps_planted_communities_components_would_merge(spark):
@@ -273,13 +307,7 @@ def test_lpa_registered_key_shape_and_empty(spark, sf_dir, tmp_path):
 def _kcore_reference(edges, k):
     """Sequential peeling — the semantics spec (peeling is confluent,
     so any order reaches the same fixpoint)."""
-    from collections import defaultdict
-
-    adj = defaultdict(set)
-    for u, v in edges:
-        if u != v:
-            adj[u].add(v)
-            adj[v].add(u)
+    adj = _neighbours(edges, loops=False)
     changed = True
     while changed:
         changed = False
@@ -291,26 +319,13 @@ def _kcore_reference(edges, k):
     return {n: len(nbrs) for n, nbrs in adj.items() if nbrs}
 
 
-def test_kcore_matches_sequential_reference_on_random_graph(spark):
-    """Both sides of the local-finish gate: ``kcore()`` always takes the
-    distributed round loop, and ``_kcore_loop`` with the directed-edge
-    count at or under ``KCORE_LOCAL_FINISH_EDGES`` takes the one-task
-    numpy peel. Each must equal the sequential reference. The input is
-    a multigraph (duplicate edges in both orientations, one self-loop):
-    ``_kcore_build``'s ``deg`` is each node's distinct-neighbour count,
-    the self-loop not counted."""
+def _multigraph():
+    """300 random edges over 60 nodes, then duplicates in both
+    orientations and one self-loop: (edges, the simple edge set)."""
     import random
 
-    from reactor_window_like_flink_spark.llm.clustering import (
-        KCORE_LOCAL_FINISH_EDGES,
-        _kcore_build,
-        _kcore_loop,
-        kcore,
-    )
-
     rng = random.Random(13)
-    edges = {tuple(sorted(rng.sample(range(60), 2))) for _ in range(300)}
-    simple = sorted(edges)
+    simple = sorted({tuple(sorted(rng.sample(range(60), 2))) for _ in range(300)})
     loop_node = simple[0][0]
     multi = (
         simple
@@ -318,38 +333,94 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark):
         + simple[::3]
         + [(loop_node, loop_node)]
     )
+    return multi, simple
+
+
+def test_kcore_matches_sequential_reference_on_random_graph(spark, gate_sides):
+    """Both sides of the local-finish gate — the one-task numpy peel at
+    or under ``LOCAL_FINISH_EDGES`` and the distributed round loop over
+    it — equal the sequential reference. The input is a multigraph
+    (duplicate edges in both orientations, one self-loop): the
+    adjacency's initial degree is each node's distinct-neighbour count,
+    the self-loop not counted."""
+    from pyspark.sql import functions as F
+
+    from reactor_window_like_flink_spark.llm.clustering import (
+        _kcore_adjacency,
+        kcore,
+    )
+
+    multi, simple = _multigraph()
     df = spark.createDataFrame(multi, "u long, v long")
-    sym, deg = _kcore_build(df)
-    nbrs: dict[int, set[int]] = {}
-    for u, v in simple:
-        nbrs.setdefault(u, set()).add(v)
-        nbrs.setdefault(v, set()).add(u)
+    deg = _kcore_adjacency(df).select("src", F.size("dsts").alias("deg"))
     assert {r["src"]: r["deg"] for r in deg.collect()} == {
-        n: len(s) for n, s in nbrs.items()
+        n: len(s) for n, s in _neighbours(simple, loops=False).items()
     }
-    two_m = 2 * len(edges)
-    assert two_m <= KCORE_LOCAL_FINISH_EDGES
     for k in (3, 5, 8):
-        want = _kcore_reference(edges, k)
-        loop = {r["node"]: r["degree"] for r in kcore(df, k=k).collect()}
-        local = {
-            r["node"]: r["degree"]
-            for r in _kcore_loop(sym, deg, k, two_m=two_m).collect()
-        }
-        assert loop == want
-        assert local == want
+        want = _kcore_reference(simple, k)
+        for side, rows in gate_sides(lambda: kcore(df, k=k)).items():
+            assert {r["node"]: r["degree"] for r in rows} == want, (side, k)
+
+
+def _star():
+    """A hot key: hub 0 holds 200 of the 219 edges, and a short path
+    among the leaves closes 19 triangles through it."""
+    return [(0, i) for i in range(1, 201)] + [(i, i + 1) for i in range(1, 20)]
+
+
+@pytest.mark.parametrize("graph", ["multigraph", "star", "empty"])
+@pytest.mark.parametrize("algo", ["pagerank", "lpa", "kcore"])
+def test_graph_family_equal_on_both_sides_of_the_gate(spark, gate_sides, algo, graph):
+    """Each algorithm of the local-finish family equals its sequential
+    reference on both sides of the gate, on a multigraph with a
+    self-loop, on a hot-key star and on an empty graph."""
+    from reactor_window_like_flink_spark.llm.clustering import (
+        LPA_ROUNDS,
+        kcore,
+        label_propagation,
+        pagerank,
+    )
+
+    edges = {"multigraph": _multigraph()[0], "star": _star(), "empty": []}[graph]
+    df = spark.createDataFrame(edges, "u long, v long")
+    if algo == "pagerank":
+        fn, want = (lambda: pagerank(df)), _pagerank_reference(edges)
+    elif algo == "lpa":
+        fn, want = (lambda: label_propagation(df)), _lpa_reference(edges, LPA_ROUNDS)
+    else:
+        fn, want = (lambda: kcore(df, k=2)), _kcore_reference(edges, 2)
+    for side, rows in gate_sides(fn).items():
+        got = {r[0]: r[1] for r in rows}
+        if algo == "pagerank":
+            assert set(got) == set(want), side
+            assert all(abs(got[x] - want[x]) <= 1e-6 for x in want), side
+        else:
+            assert got == want, side
 
 
 def test_kcore_key_counts(spark, sf_dir):
-    """``q_kcore`` at sf0.001: the build starts 4 jobs (the basket and
-    adjacency shuffles, the sizing aggregate's shuffle and its result)
-    and the local-finish write 1."""
+    """``q_kcore`` at sf0.001: the build starts 3 jobs (the basket and
+    adjacency shuffles' map stages, and the one-job sizing read) and
+    the local-finish write 1."""
     from reactor_window_like_flink_spark.observe import run
 
     key = entry_mod.queries()["q_kcore"]
     key(spark, sf_dir)  # infers the lineitem schema once per process
     r = run(spark, lambda: key(spark, sf_dir))
-    assert (r["build_jobs"], r["jobs"]) == (4, 1), r
+    assert (r["build_jobs"], r["jobs"]) == (3, 1), r
+
+
+@pytest.mark.parametrize("name", ["q_pagerank", "q_communities_lpa"])
+def test_pagerank_and_lpa_key_counts(spark, sf_dir, name):
+    """Below the edge bound both keys build like ``q_kcore`` (3 jobs)
+    and write in one job: the single-task kernel, and for LPA the
+    ``community_size`` window over its single partition, no exchange."""
+    from reactor_window_like_flink_spark.observe import run
+
+    key = entry_mod.queries()[name]
+    key(spark, sf_dir)
+    r = run(spark, lambda: key(spark, sf_dir))
+    assert (r["build_jobs"], r["jobs"]) == (3, 1), r
 
 
 def test_kcore_keeps_clique_peels_tendrils(spark):

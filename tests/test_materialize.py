@@ -1,7 +1,8 @@
 """``functions/materialize.py``: ``collect_bounded``, the one bounded
 driver collect — both sides of the bound, one Spark job whatever the
 frame's partition layout, and the per-call conf restored on every exit —
-and the partitioning a ``materialize``d frame reports."""
+``aggregate_row``, the one-job driver read, and the partitioning a
+``materialize``d frame reports."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.functions.materialize import (
+    aggregate_row,
     collect_bounded,
     materialize,
 )
@@ -74,3 +76,43 @@ def test_materialize_keeps_no_partitioning(spark):
     agg = materialize(df.repartition(4, "k")).groupBy("k").count()
     assert node_counts(agg)["Exchange"] == 1
     assert sorted(r["count"] for r in agg.collect()) == [14] * 5 + [15] * 2
+
+
+ADAPTIVE = "spark.sql.adaptive.enabled"
+
+
+def test_aggregate_row_is_one_job_where_first_takes_two(spark):
+    df = materialize(spark.range(0, 40, 1, 4))
+    exprs = (F.count("*").alias("n"), F.sum("id").alias("s"))
+    with counting(spark) as one:
+        row = aggregate_row(df, *exprs)
+    assert (row["n"], row["s"]) == (40, sum(range(40)))
+    assert one["jobs"] == 1
+    with counting(spark) as first:
+        assert df.agg(*exprs).first() == row
+    assert first["jobs"] == 2  # AQE submits the partial stage on its own
+
+
+def test_aggregate_row_restores_session_conf(spark):
+    failing = spark.range(3).select(F.raise_error(F.lit("boom")).alias("x"))
+    preset = spark.conf.get(ADAPTIVE, None)
+    assert preset == "true"
+    try:
+        spark.conf.unset(ADAPTIVE)
+        assert aggregate_row(spark.range(3), F.count("*"))[0] == 3
+        assert spark.conf.get(ADAPTIVE, None) is None
+        with pytest.raises(Exception, match="boom"):
+            aggregate_row(failing, F.count("x"))
+        assert spark.conf.get(ADAPTIVE, None) is None
+    finally:
+        spark.conf.set(ADAPTIVE, preset)
+    with pytest.raises(Exception, match="boom"):
+        aggregate_row(failing, F.count("x"))
+    assert spark.conf.get(ADAPTIVE) == "true"
+
+
+def test_aggregate_row_raises_on_a_frame_that_shuffles(spark):
+    grouped = spark.range(10).groupBy((F.col("id") % 2).alias("k")).count()
+    with pytest.raises(ValueError, match="shuffle"):
+        aggregate_row(grouped, F.count("*"))
+    assert aggregate_row(materialize(grouped), F.count("*"))[0] == 2

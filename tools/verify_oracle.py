@@ -12,6 +12,7 @@ Usage: python tools/verify_oracle.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
@@ -20,8 +21,6 @@ import pandas as pd
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "
@@ -131,7 +130,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from reactor_window_like_flink_spark.session import get_spark
 

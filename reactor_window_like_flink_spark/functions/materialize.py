@@ -5,7 +5,8 @@ through ``materialize``; no module calls it directly (pinned by
 result is an error goes through ``collect_bounded``. A one-row
 aggregate the driver reads to size or steer work (a graph's node and
 edge counts, a loop's convergence count) goes through
-``aggregate_row``.
+``aggregate_row``. A session conf set for one call and restored after
+it goes through ``_session_conf``.
 
 The rule:
 
@@ -38,7 +39,10 @@ durable cluster the same call sites would take ``checkpoint()``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 
 from reactor_window_like_flink_spark.plans.audit import node_counts
 
@@ -48,6 +52,22 @@ def materialize(df: DataFrame, *, feeds_broadcast: bool = False) -> DataFrame:
     ``feeds_broadcast`` (the frame feeds a broadcast build side and its
     probe in one plan). Chains as ``df.transform(materialize)``."""
     return df.localCheckpoint(eager=feeds_broadcast)
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the block, then restore
+    it in a ``finally``, even when the block raises: unset again if it
+    was unset, else set back to its previous value."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 # Spark's executeTake scans this many partitions in its first round.
@@ -65,8 +85,8 @@ def collect_bounded(df: DataFrame, max_rows: int) -> list[Row] | None:
     Here that conf is raised, for this call only, to 2**31-1, which is
     at least any frame's partition count (an adaptive plan's count is
     known only after its shuffle stages run), so the first round scans
-    every partition. The conf is set on ``df.sparkSession`` and restored
-    in a ``finally``, even when the collect raises.
+    every partition. The conf is set on ``df.sparkSession`` for this call
+    only (``_session_conf``).
 
     The real driver bound is P*(max_rows+1) rows, not max_rows+1: each
     of the P partitions ships up to max_rows+1 rows before the driver
@@ -91,20 +111,9 @@ def collect_bounded(df: DataFrame, max_rows: int) -> list[Row] | None:
     order. Inside ``foreachBatch`` the session is the streaming query's
     own clone, so nothing else shares it.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get(_LIMIT_INITIAL_PARTITIONS, None)
-    spark.conf.set(_LIMIT_INITIAL_PARTITIONS, str(2**31 - 1))
-    try:
+    with _session_conf(df.sparkSession, _LIMIT_INITIAL_PARTITIONS, str(2**31 - 1)):
         rows = df.limit(max_rows + 1).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(_LIMIT_INITIAL_PARTITIONS)
-        else:
-            spark.conf.set(_LIMIT_INITIAL_PARTITIONS, prev)
     return rows if len(rows) <= max_rows else None
-
-
-_ADAPTIVE = "spark.sql.adaptive.enabled"
 
 
 def aggregate_row(df: DataFrame, *exprs: Column) -> Row:
@@ -115,8 +124,7 @@ def aggregate_row(df: DataFrame, *exprs: Column) -> Row:
     aggregate's map stage is submitted on its own, then the final
     aggregate. Planned with ``spark.sql.adaptive.enabled=false`` both
     stages run in one job. The conf is set on ``df.sparkSession`` for
-    this call only and restored in a ``finally`` (unset again if it was
-    unset), even when the aggregate raises.
+    this call only (``_session_conf``).
 
     ``df`` itself must plan no shuffle: read it off a ``materialize``d
     frame or a scan. A frame whose plan holds an ``Exchange`` raises
@@ -133,13 +141,5 @@ def aggregate_row(df: DataFrame, *exprs: Column) -> Row:
             "aggregate_row: the frame plans a shuffle; read its one-row"
             " aggregate off a materialized frame"
         )
-    spark = df.sparkSession
-    prev = spark.conf.get(_ADAPTIVE, None)
-    spark.conf.set(_ADAPTIVE, "false")
-    try:
+    with _session_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         return df.agg(*exprs).collect()[0]
-    finally:
-        if prev is None:
-            spark.conf.unset(_ADAPTIVE)
-        else:
-            spark.conf.set(_ADAPTIVE, prev)

@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
-from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.functions.materialize import (
+    _session_conf,
+    materialize,
+)
 from reactor_window_like_flink_spark.llm.artifacts import artifact
 from reactor_window_like_flink_spark.llm.dedup import _shingles_from_toks, _tokenized
 from reactor_window_like_flink_spark.llm.sampling import (
@@ -691,9 +694,7 @@ def append_to_near_index(
     )
 
     toks = _doc_toks(admitted)
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         (
             minhash_bands(toks)
             .withColumn("batch_id", F.lit(batch_id))
@@ -706,8 +707,6 @@ def append_to_near_index(
             .write.mode("overwrite")
             .insertInto(f"{prefix}_sets")
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
 
 def _near_admission(

@@ -1,5 +1,5 @@
 """Sink surface (SURVEY.md §2 Part B "sinks" row): parquet (partitioned),
-CSV/JSON, memory, console, and the streaming ``foreachBatch`` path already
+CSV/JSON, memory, and the streaming ``foreachBatch`` path already
 exposed by ``streaming.publisher``.
 
 The reference's only sink is a consumer callback fed by a thread pool
@@ -78,12 +78,6 @@ def to_memory_table(
         )
     spark.createDataFrame(rows, df.schema).createOrReplaceTempView(name)
     return spark.table(name)
-
-
-def to_console(df: DataFrame, n: int = 20, truncate: bool = True) -> None:
-    """Console sink (``df.show`` for batch; streaming uses
-    ``writeStream.format('console')``)."""
-    df.show(n, truncate=truncate)
 
 
 def idempotent_batch_sink(output_dir: str):

@@ -10,12 +10,13 @@ exactly ``bufferTimeout(windowMaxBatchSize, windowDuration)`` plus the
 (``README.md:99-100``): state survives restarts via the checkpoint, and
 keys are processed in parallel across the cluster.
 
-Implementation: ``applyInPandasWithState`` — per-key state is O(1)
-(open-batch count/sum/open-time + sequence counter), the flush-on-count
-happens inline as rows stream through, and the flush-on-time rides the
-processing-time timeout. The key is the unit of parallelism; state lives
-in the state store, so a 1000-executor cluster runs this with per-key
-exactly-once semantics.
+Implementation: ``applyInPandasWithState``, with per-key state O(1)
+(open-batch count/sum/open-time + sequence counter). Each micro-batch's
+rows run through ``windows._count_or_time_fold``, the flush rule of the
+batch key, all at one processing time (ms); a key with no new rows
+closes its open batch on the processing-time timeout. The key is the
+unit of parallelism; state lives in the state store, so a 1000-executor
+cluster runs this with per-key exactly-once semantics.
 
 State retention: by default a key's state row is kept forever after its
 last flush so ``batch_seq`` stays monotonic per key across the stream's
@@ -30,11 +31,14 @@ ever returns — the documented trade for bounded state).
 from __future__ import annotations
 
 from collections.abc import Iterable
+from itertools import repeat
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from reactor_window_like_flink_spark.streaming.windows import _count_or_time_fold
 
 OUTPUT_SCHEMA = (
     "key long, batch_seq long, n_events long, sum_value double, "
@@ -101,39 +105,22 @@ def count_or_time_stateful(
                 _settle_idle(state, seq)
         else:
             now_ms = state.getCurrentProcessingTimeMs()
-            # Flush-on-time must ALSO run on the data path: the state
-            # timeout only fires in a micro-batch where this key has no
-            # new rows, so under a steady trickle (every batch carries
-            # rows for the key) hasTimedOut never fires and latency is
-            # unbounded — the r14 fast publish path exposed this (the
-            # pre-r14 per-publish Spark job was slower than batch
-            # execution, so dataless timer batches happened to occur).
-            # bufferTimeout semantics: the open batch closes `duration`
-            # after it OPENED, before this batch's arrivals — they
-            # belong to the next batch.
-            if n > 0 and now_ms >= opened_ms + timeout_ms:
-                out.append((key[0], seq, n, round(total, 2), "timeout"))
-                seq += 1
-                n, total, opened_ms = 0, 0.0, 0
-            for pdf in pdfs:
-                for v in pdf[value_col]:
-                    if n == 0:
-                        opened_ms = now_ms  # batch opens at first element
-                    n += 1
-                    total += float(v)
-                    if n >= max_size:  # count path: flush at maxSize
-                        out.append((key[0], seq, n, round(total, 2), "size"))
-                        seq += 1
-                        n, total, opened_ms = 0, 0.0, 0
+            # The fold's timeout check runs on the data path too: the
+            # state timeout only fires in a micro-batch where this key
+            # has no new rows, so under a steady trickle it never fires.
+            closed, (seq, n, total, opened_ms) = _count_or_time_fold(
+                (seq, n, total, opened_ms),
+                repeat(now_ms),
+                [v for pdf in pdfs for v in pdf["value"]],
+                max_size,
+                timeout_ms,
+            )
+            out += [(key[0], b[0], b[1], b[3], b[4]) for b in closed]
             if n > 0:
                 state.update((seq, n, total, opened_ms))
-                # Arm the flush-on-time clock against when the open batch
-                # OPENED (reference bufferTimeout semantics): re-arming
-                # with the full duration on every micro-batch would reset
-                # the clock per arrival, leaving latency unbounded under a
-                # steady sub-max_size trickle. Remaining time, not full
-                # duration, keeps the bound at `duration` from first
-                # element.
+                # Arm the clock for the time left since the batch OPENED
+                # (bufferTimeout semantics): the full duration on every
+                # micro-batch would leave latency unbounded under a trickle.
                 remaining = max(1, opened_ms + timeout_ms - now_ms)
                 state.setTimeoutDuration(int(remaining))
             else:

@@ -5,10 +5,14 @@ sliding/session variants the Flink vocabulary implies.
 
 Each query key has a batch form (verified against the DuckDB oracle — the
 event-time analog is deterministic, unlike the reference's processing-time
-clock, ``README.md:99``) and a streaming builder (``stream_*``) used by the
-Structured Streaming tests. Batch and stream share the same expression
-tree, so the oracle check covers the streaming semantics for everything
-except trigger timing.
+clock, ``README.md:99``) and a streaming form. Both call one definition
+per window kind, so the oracle check covers the streaming semantics for
+everything except trigger timing: ``_tumbling``, ``_sliding`` and
+``_session`` (the ``q_*_window`` keys and ``stream_*``), and the flush
+rule ``_count_or_time_fold`` (``count_or_time_replay`` and
+``stateful.count_or_time_stateful``). Dedup is the exception:
+``stream_dedup``'s ``dropDuplicatesWithinWatermark`` has no batch twin,
+so ``q_stateful_dedup`` computes its deterministic analog on its own.
 
 Upgrade over the reference: watermarks (the reference explicitly has none,
 ``README.md:99``) bound state and drop late data deterministically.
@@ -16,7 +20,9 @@ Upgrade over the reference: watermarks (the reference explicitly has none,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
@@ -25,24 +31,73 @@ from reactor_window_like_flink_spark.sources.tables import load
 REG = Registry()
 
 
-def _tumbling(df: DataFrame) -> DataFrame:
-    """Shared expression tree for batch + streaming tumbling windows.
+def _counted(df: DataFrame, window: Column, key: str, *out: Column | str) -> DataFrame:
+    """``out`` then ``n_events`` and ``sum_value`` per (``window``, ``key``).
     groupBy(window) emits nothing for empty buckets — the reference's
     ``filter(!it.isEmpty())`` (``WindowPublisher.java:72``) is structural
     in Spark."""
     return (
-        df.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+        df.groupBy(window, key)
         .agg(
             F.count("*").alias("n_events"),
             round_to(F.sum("value"), 2).alias("sum_value"),
         )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+        .select(*out, "n_events", "sum_value")
     )
+
+
+def _tumbling(df: DataFrame) -> DataFrame:
+    """Shared expression tree for batch + streaming 5-minute tumbling
+    windows."""
+    w = F.window("ts", "5 minutes").alias("w")
+    start = F.unix_timestamp("w.start").alias("window_start")
+    return _counted(df, w, "event_type", start, "event_type")
+
+
+def _sliding(df: DataFrame) -> DataFrame:
+    """Shared expression tree for batch + streaming 10-minute windows
+    sliding every 5: each event lands in exactly size/slide = 2 windows."""
+    w = F.window("ts", "10 minutes", "5 minutes").alias("w")
+    start = F.unix_timestamp("w.start").alias("window_start")
+    return _counted(df, w, "event_type", start, "event_type")
+
+
+def _session(df: DataFrame) -> DataFrame:
+    """Shared expression tree for batch + streaming per-user sessions with
+    a 5-minute inactivity gap."""
+    sw = F.session_window("ts", "5 minutes").alias("sw")
+    start = F.unix_timestamp("sw.start").alias("session_start")
+    end = F.unix_timestamp("sw.end").alias("session_end")
+    return _counted(df, sw, "user_id", "user_id", start, end)
+
+
+def _count_or_time_fold(
+    state: tuple, times: Iterable, values: Iterable, max_size: int, duration: float
+) -> tuple[list[tuple], tuple]:
+    """The hybrid count-or-time flush (``WindowPublisher.java:70-72``) as
+    one pure fold over arrivals. ``state`` is ``(seq, n, total, opened)``
+    (``n == 0``: no batch open). Per arrival ``(t, v)``: an open batch
+    with ``t >= opened + duration`` closes as ``timeout`` first (the
+    arrival belongs to the next batch); a batch opens at ``t`` if none is
+    open and ``v`` is added; a batch with ``n >= max_size`` closes as
+    ``size``. Returns the closed batches ``(seq, n, opened,
+    round(total, 2), reason)`` and the new state, which keeps an open
+    remainder. ``times`` and ``duration`` share one unit.
+    """
+    seq, n, total, opened = state
+    closed = []
+    for t, v in zip(times, values):
+        if n and t >= opened + duration:
+            closed.append((seq, n, opened, round(total, 2), "timeout"))
+            seq, n, total = seq + 1, 0, 0.0
+        if not n:
+            opened = t
+        n += 1
+        total += float(v)
+        if n >= max_size:
+            closed.append((seq, n, opened, round(total, 2), "size"))
+            seq, n, total = seq + 1, 0, 0.0
+    return closed, (seq, n, total, opened if n else 0)
 
 
 @REG.add(
@@ -81,22 +136,7 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 — each event lands in exactly
     size/slide = 2 windows (the conservation invariant the tests assert)."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            round_to(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _sliding(load(spark, sf_dir, "events"))
 
 
 @REG.add(
@@ -127,21 +167,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic gaps-and-islands rewrite; Spark's session_window closes a
     session at last_event + gap (half-open), matching the >= 300s
     new-session flag."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            round_to(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _session(load(spark, sf_dir, "events"))
 
 
 def count_or_time_replay(
@@ -151,36 +177,23 @@ def count_or_time_replay(
     count-or-time flush — the engine behind ``q_count_or_time_batches``,
     exposed so tests can drive BOTH boundary kinds (a small ``max_size``
     makes the count path fire on fixtures whose per-user daily rate never
-    reaches 20; r16 exact-boundary evidence,
-    tests/test_conservation.py::test_count_or_time_batches_exact_boundaries).
+    reaches 20). Each user's events run through ``_count_or_time_fold``
+    in ``(ts, event_id)`` order; the batch open at end of input emits too.
     """
     import pandas as pd
 
     def chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "event_id"])
-        out = []
-        batch_seq = n = 0
-        open_ts = None
-        sum_value = 0.0
         # normalize to ns first: Arrow may hand pandas datetime64[us]
         epochs = pdf["ts"].astype("datetime64[ns]").astype("int64") / 1e9
-        for ts_s, value in zip(epochs, pdf["value"]):
-            if open_ts is not None and (
-                n >= max_size or ts_s >= open_ts + duration_s
-            ):
-                out.append((batch_seq, n, int(open_ts), round(sum_value, 2)))
-                batch_seq += 1
-                n = 0
-                open_ts = None
-                sum_value = 0.0
-            if open_ts is None:
-                open_ts = ts_s
-            n += 1
-            sum_value += value
+        closed, (seq, n, total, opened) = _count_or_time_fold(
+            (0, 0, 0.0, 0.0), epochs, pdf["value"], max_size, duration_s
+        )
         if n:
-            out.append((batch_seq, n, int(open_ts), round(sum_value, 2)))
+            closed.append((seq, n, opened, round(total, 2), "open"))
         res = pd.DataFrame(
-            out, columns=["batch_seq", "n_events", "batch_start", "sum_value"]
+            [(seq, n, int(opened), total) for seq, n, opened, total, _ in closed],
+            columns=["batch_seq", "n_events", "batch_start", "sum_value"],
         )
         res.insert(0, "user_id", pdf["user_id"].iloc[0])
         return res
@@ -192,7 +205,35 @@ def count_or_time_replay(
     )
 
 
-@REG.add("q_count_or_time_batches")  # rows-only: not expressible in plain SQL
+@REG.add(
+    "q_count_or_time_batches",
+    """
+    WITH RECURSIVE e AS (
+      SELECT user_id, epoch(ts) AS t, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS rn
+      FROM events
+    ), walk AS (
+      SELECT user_id, rn, CAST(0 AS BIGINT) AS batch_seq,
+             CAST(1 AS BIGINT) AS n, t AS open_ts, value AS s
+      FROM e WHERE rn = 1
+      UNION ALL
+      SELECT e.user_id, e.rn,
+             w.batch_seq + CAST(f.flush AS BIGINT),
+             CASE WHEN f.flush THEN 1 ELSE w.n + 1 END,
+             CASE WHEN f.flush THEN e.t ELSE w.open_ts END,
+             CASE WHEN f.flush THEN e.value ELSE w.s + e.value END
+      FROM walk w
+      JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1,
+      LATERAL (SELECT w.n >= 20 OR e.t >= w.open_ts + 86400 AS flush) f
+    )
+    SELECT user_id, batch_seq,
+           CAST(max(n) AS BIGINT) AS n_events,
+           CAST(floor(min(open_ts)) AS BIGINT) AS batch_start,
+           (ROUND(arg_max(s, rn) * 100, 0) / 100.0) AS sum_value
+    FROM walk GROUP BY user_id, batch_seq
+    """,
+)
 def q_count_or_time_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's exact hybrid flush (A5, ``WindowPublisher.java:71``):
     a batch closes when it reaches max_size elements OR when window_duration
@@ -201,15 +242,14 @@ def q_count_or_time_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic event-time replay, keyed per user: sequential semantics
     only exist within a key, so the key is the unit of parallelism
     (applyInPandas per user_id scales horizontally; per-key state is one
-    batch's worth of accumulator, O(max_size)).
+    open batch's count, sum and open time).
 
-    Not SQL-expressible (the batch boundary is a running recurrence), so
-    the driver verifies rows-only; the pytest evidence is (a) the
+    The oracle walks each user's events in ``(ts, event_id)`` order with
+    a recursive CTE carrying ``(batch_seq, n, open_ts, sum)``; each
+    batch's sum is the running sum at its last row. Pytest adds the
     conservation suite (every event in exactly one batch,
-    ``WindowPublisherTest.java:46``, max-size and span bounds) and (b)
-    the r16 exact-boundary differential — an independent sequential
-    pandas replay must match the full output frame cell-for-cell at two
-    (max_size, duration) configs so both boundary kinds fire
+    ``WindowPublisherTest.java:46``) and an independent sequential replay
+    at a second (max_size, duration) config where the count path fires
     (tests/test_conservation.py::test_count_or_time_batches_exact_boundaries).
     """
     return count_or_time_replay(
@@ -273,38 +313,11 @@ def stream_dedup(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFra
 def stream_sliding(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming 10-min/5-min sliding windows (each event in exactly 2
     open windows; watermark bounds how long both stay in state)."""
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            round_to(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _sliding(stream_df.withWatermark("ts", watermark))
 
 
 def stream_session(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming per-user session windows (5-min gap). Session state merges
     as events arrive and finalizes once the watermark passes
     session_end — append mode emits each session exactly once."""
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            round_to(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _session(stream_df.withWatermark("ts", watermark))

@@ -138,3 +138,48 @@ def test_count_or_time_batches_exact_boundaries(spark, sf_dir):
     )
     exp20 = replay(20, 86400.0)
     pd.testing.assert_frame_equal(contract.astype(exp20.dtypes.to_dict()), exp20)
+
+
+def test_count_or_time_fold_exact_edges():
+    """The one flush rule at its edges, in pure Python: a size close
+    fires at n == max_size and a timeout close at t == opened + duration
+    (both ``>=``); a timeout closes the open batch before the arrival
+    that triggered it; no input closes nothing; the state carries an
+    open batch across calls."""
+    from reactor_window_like_flink_spark.streaming.windows import (
+        _count_or_time_fold as fold,
+    )
+
+    empty = (0, 0, 0.0, 0)
+    assert fold(empty, [], [], 3, 10) == ([], empty)
+    assert fold((4, 2, 3.5, 7), [], [], 3, 10) == ([], (4, 2, 3.5, 7))
+
+    # size: nothing closes at n == max_size - 1, the batch closes at n == max_size
+    assert fold(empty, [0, 1], [1.0, 2.0], 3, 10) == ([], (0, 2, 3.0, 0))
+    assert fold(empty, [0, 1, 2], [1.0, 2.0, 4.0], 3, 10) == (
+        [(0, 3, 0, 7.0, "size")],
+        (1, 0, 0.0, 0),
+    )
+
+    # timeout: open at 100 ms, duration 50 ms; 149 stays, 150 closes first
+    closed, state = fold(empty, [100, 149], [1.0, 2.0], 5, 50)
+    assert (closed, state) == ([], (0, 2, 3.0, 100))
+    closed, state = fold(state, [150], [4.0], 5, 50)
+    assert closed == [(0, 2, 100, 3.0, "timeout")]  # 4.0 is not in it
+    assert state == (1, 1, 4.0, 150)
+
+    # one arrival can close on time, then open a batch that fills at once
+    assert fold((0, 1, 1.0, 0.0), [2.5], [2.0], 1, 2.5) == (
+        [(0, 1, 0.0, 1.0, "timeout"), (1, 1, 2.5, 2.0, "size")],
+        (2, 0, 0.0, 0),
+    )
+
+    # split input folds to the same batches as one call
+    ts = [0.0, 0.5, 1.0, 3.0, 3.1, 5.0, 9.0]
+    vs = [0.125, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0]
+    whole = fold(empty, ts, vs, 3, 2.0)
+    first, mid = fold(empty, ts[:4], vs[:4], 3, 2.0)
+    rest, end = fold(mid, ts[4:], vs[4:], 3, 2.0)
+    assert (first + rest, end) == whole
+    assert [b[4] for b in whole[0]] == ["size", "timeout", "timeout"]
+    assert whole[1] == (3, 1, 6.0, 9.0)

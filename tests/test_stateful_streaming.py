@@ -573,3 +573,34 @@ def test_count_or_time_state_survives_restart(spark, tmp_path):
         ] == [(1, 0, 10, 55.0, "size")]
     finally:
         query.stop()
+
+
+def test_value_col_names_any_column(spark, tmp_path):
+    """``value_col`` may name any numeric column: the operator projects it
+    to ``value`` before the flush, so the sums are that column's."""
+    src = FileStreamInput(spark, "user_id LONG, amount DOUBLE", str(tmp_path / "in"))
+    out = count_or_time_stateful(
+        src.stream(), value_col="amount", max_size=2, duration_seconds=60.0
+    )
+    query = (
+        out.writeStream.format("memory")
+        .queryName("t_cot_amount")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        src.publish([(1, 1.5), (1, 2.0), (2, 4.0), (2, 8.25)])
+        got = poll(
+            lambda: (
+                r
+                if len(r := spark.sql("SELECT * FROM t_cot_amount").collect()) >= 2
+                else None
+            )
+        )
+        assert sorted((r["key"], r["sum_value"], r["flush_reason"]) for r in got) == [
+            (1, 3.5, "size"),
+            (2, 12.25, "size"),
+        ]
+    finally:
+        query.stop()

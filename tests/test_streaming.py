@@ -604,15 +604,19 @@ def test_stream_tumbling_matches_batch(spark, tmp_path):
 
 
 def test_stream_sliding_and_session_match_batch(spark, tmp_path):
-    """Streaming sliding + session aggs equal their batch equivalents on
-    the same replayed rows."""
+    """Streaming sliding + session aggs equal, row for row, the batch
+    keys' expression trees on the same replayed rows. The second burst
+    starts 20 minutes later, so every user's events split into two
+    sessions."""
     from reactor_window_like_flink_spark.streaming.windows import (
+        _session,
+        _sliding,
         stream_session,
         stream_sliding,
     )
 
     src = FileStreamInput(spark, SCHEMA, str(tmp_path / "in"))
-    rows = _rows(240)
+    rows = _rows(240) + _rows(30, start_minute=20)
     src.publish(rows)
     batch_df = spark.createDataFrame(rows, SCHEMA)
 
@@ -633,31 +637,17 @@ def test_stream_sliding_and_session_match_batch(spark, tmp_path):
     try:
         q1.processAllAvailable()
         q2.processAllAvailable()
-        got_sliding = spark.sql(
-            "SELECT sum(n_events) AS n FROM t_sliding"
-        ).first()["n"]
-        got_sessions = spark.sql(
-            "SELECT sum(n_events) AS n FROM t_session"
-        ).first()["n"]
+        got_sliding = sorted(spark.sql("SELECT * FROM t_sliding").collect())
+        got_sessions = sorted(spark.sql("SELECT * FROM t_session").collect())
     finally:
         q1.stop()
         q2.stop()
+    assert got_sliding == sorted(_sliding(batch_df).collect())
+    assert got_sessions == sorted(_session(batch_df).collect())
     # conservation: sliding = each event in exactly 2 windows; session = 1
-    assert got_sliding == 2 * len(rows)
-    assert got_sessions == len(rows)
-    # cross-check shape vs batch session_window
-    batch_sessions = (
-        batch_df.groupBy(
-            __import__("pyspark.sql.functions", fromlist=["x"]).session_window(
-                "ts", "5 minutes"
-            ),
-            "user_id",
-        )
-        .count()
-        .count()
-    )
-    rows_sessions = spark.sql("SELECT count(*) AS n FROM t_session").first()["n"]
-    assert rows_sessions == batch_sessions
+    assert sum(r["n_events"] for r in got_sliding) == 2 * len(rows)
+    assert sum(r["n_events"] for r in got_sessions) == len(rows)
+    assert len(got_sessions) == 2 * 7
 
 
 def test_stream_dedup_drops_repeats(spark, tmp_path):

@@ -358,61 +358,6 @@ _NGRAM_JACCARD_ORACLE = """
     """
 
 
-def counted_intersection_pairs(
-    spark: SparkSession, sf_dir: str, shingle_n: int = 2
-) -> DataFrame:
-    """(doc_a, doc_b, inter, na, nb) for every same-``lang`` pair sharing
-    >= 1 word-``shingle_n``-gram: explode each doc's distinct hashed
-    shingles, equi-join on (lang, shingle), and COUNT(*) per pair — the
-    count IS the intersection size (each shared element contributes
-    exactly one joined row), the same relational equivalence the r16
-    sf1-feasible oracles use, so Spark and DuckDB literally run the same
-    formulation.
-
-    Status (r16 kernel arbitration): NOT the registered kernel. This
-    form briefly replaced PPJoin for the low-threshold keys on a first
-    A/B that appeared to favor it, but the full-bench medians regressed
-    and the solo 3-way re-measurement reversed the verdict decisively
-    (jaccard t=0.1: PPJoin 4.3 s vs this 10.8 s; containment t=0.5:
-    3.5 s vs 10.3 s; identical outputs). The Σ df² exploded-join volume
-    (9.4M rows at sf0.1) costs more to shuffle into the pair-keyed
-    count than PPJoin's candidate machinery saves, at EVERY threshold.
-    Retained (with a pinned equality test, tests/test_dedup.py) as the
-    Spark-side mirror of the r16 sf1-feasible DuckDB oracle formulation
-    and the measurement record for that kernel-choice rule."""
-    sized = _tokenized(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.size(
-            F.transform(_shingles_from_toks(shingle_n), lambda x: F.xxhash64(x))
-        ).alias("n"),
-        F.explode(
-            F.transform(_shingles_from_toks(shingle_n), lambda x: F.xxhash64(x))
-        ).alias("h"),
-    )
-    a, b = sized.alias("a"), sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("inter"),
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-        )
-    )
-
-
 @REG.add("q_dedup_ngram_jaccard", _NGRAM_JACCARD_ORACLE)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-bigram Jaccard pairs (same ``lang``, Jaccard >= 0.1) —
@@ -428,12 +373,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked formulation.
 
     r16 kernel arbitration (guide §1 — measure, then measure again):
-    an exploded-count rewrite (``counted_intersection_pairs``, the
-    oracle's own sf1-feasible formulation) was tried on the theory that
-    at t=0.1 the prefix filter keeps ~90% of each set and prunes
-    little; a first A/B appeared to confirm it, but the full-bench
-    medians regressed (13.7 s vs the 6.6 s bar) and a solo 3-way re-
-    measurement settled it: PPJoin 4.3 s vs counted-join 10.8 s vs an
+    an exploded-count rewrite (equi-join the exploded shingles on
+    (lang, shingle) and count per pair: the oracle's own sf1-feasible
+    formulation) was tried on the theory that at t=0.1 the prefix
+    filter keeps ~90% of each set and prunes little; a first A/B
+    appeared to confirm it, but the full-bench medians regressed
+    (13.7 s vs the 6.6 s bar) and a solo 3-way re-measurement settled
+    it: PPJoin 4.3 s vs counted-join 10.8 s vs an
     in-row posting-expansion variant 10.7 s, all outputs identical
     (2990 rows). The prefix filter's 17% candidate pruning is NOT the
     point at low t — the win is that its per-pair verify touches each
@@ -544,12 +490,12 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_intersect`` verify per candidate emits both directions'
     containments.
 
-    r16 kernel arbitration (guide §1): an exploded-count rewrite
-    (``counted_intersection_pairs``) was tried and initially appeared
-    2x faster, but full-bench medians regressed (14.1 s vs the 4.2 s
-    bar) and the solo 3-way re-measurement reversed the verdict —
-    PPJoin 3.5 s vs counted-join 10.3 s vs in-row posting expansion
-    10.8 s, identical 152 rows. Same conclusion as the jaccard key:
+    r16 kernel arbitration (guide §1): an exploded-count rewrite (the
+    counted join described on ``q_dedup_ngram_jaccard``) was tried and
+    initially appeared 2x faster, but full-bench medians regressed
+    (14.1 s vs the 4.2 s bar) and the solo 3-way re-measurement
+    reversed the verdict — PPJoin 3.5 s vs counted-join 10.3 s vs
+    in-row posting expansion 10.8 s, identical 152 rows. Same conclusion as the jaccard key:
     the asymmetric prefix join's 65% candidate pruning plus one
     colocated verify per pair beats shuffling the Σ df² exploded-join
     volume into a pair-keyed count. PPJoin stays the kernel."""

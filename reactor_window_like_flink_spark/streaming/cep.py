@@ -13,7 +13,9 @@ binding per non-final stage (the chain head's event time plus the id
 path), finalizes events only once the watermark passes them — so
 out-of-order arrival across micro-batches cannot change a binding — and
 emits one row per completed chain whose whole span fits inside the
-pattern window.
+pattern window. All three matchers here buffer, finalize and wake
+through one rule, ``streaming/eventtime.py`` (``arrive``, ``finalize``,
+``wake``); each is a loop over the finalized rows.
 
 Equivalence to the batch form: events are applied in (event-time,
 event_id) order exactly like the batch window sort, and an event is
@@ -44,13 +46,12 @@ from reactor_window_like_flink_spark.operators.analytics import (
     FUNNEL_STAGES,
     PATTERN_SPAN_US,
 )
-
-CEP_OUTPUT_SCHEMA = (
-    "user_id long, view_id long, click_id long, purchase_id long, "
-    "span_us long"
+from reactor_window_like_flink_spark.streaming.eventtime import (
+    NEG,
+    arrive,
+    finalize,
+    wake,
 )
-
-_NEG = -(1 << 62)
 
 
 def followed_by_chain_stateful(
@@ -71,7 +72,6 @@ def followed_by_chain_stateful(
     ``watermark_delay`` is the out-of-orderness the operator absorbs:
     rows later than that are dropped (Flink's past-watermark discard) —
     the dial between buffer size and completeness."""
-    import numpy as np
     import pandas as pd
 
     n = len(stages)
@@ -108,97 +108,61 @@ def followed_by_chain_stateful(
     tagged = events_stream.select(
         "user_id", "ts", "event_id", "event_type"
     ).withWatermark("ts", watermark_delay)
+    if not strict:
+        # relaxed ignores non-pattern types, but only after the watermark:
+        # they still advance it. Catalyst pushes a filter below the
+        # watermark unless it reads the event-time column, hence the
+        # ts test; a null-ts row that passes it is kind -1, which
+        # relaxed matching never reads
+        tagged = tagged.filter(
+            F.col("event_type").isin(*stages) | F.col("ts").isNull()
+        )
 
     def match(key, pdfs, state):
         if state.exists:
             vals = state.get
             frontier, prev_id = vals[0], vals[1]
-            buf_us, buf_id, buf_kind = (
-                list(vals[2]), list(vals[3]), list(vals[4])
-            )
+            buf = (list(vals[2]), list(vals[3]), list(vals[4]))
             binds = [
                 [vals[5 + 2 * i], list(vals[6 + 2 * i])]
                 for i in range(n - 1)
             ]
         else:
-            frontier, prev_id = _NEG, _NEG
-            buf_us, buf_id, buf_kind = [], [], []
-            binds = [[_NEG, []] for _ in range(n - 1)]
-        for pdf in pdfs:  # empty on timeout-only invocations
-            if not len(pdf):
-                continue
-            ts_us = (
-                pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000
-            )
-            for row_us, row_id, row_type in zip(
-                ts_us, pdf["event_id"], pdf["event_type"]
-            ):
-                kind = kind_of.get(row_type)
-                if kind is None and not strict:
-                    continue  # relaxed ignores non-pattern types
-                if row_us < frontier:
-                    continue  # late past the frontier
-                buf_us.append(int(row_us))
-                buf_id.append(int(row_id))
-                # strict buffers noise rows as kind -1: they carry the
-                # chain-break information
-                buf_kind.append(-1 if kind is None else kind)
-        wm_us = state.getCurrentWatermarkMs() * 1000
+            frontier, prev_id = NEG, NEG
+            buf = ([], [], [])
+            binds = [[NEG, []] for _ in range(n - 1)]
+        # strict buffers noise rows as kind -1: they carry the chain-break
+        # information
+        arrive(pdfs, frontier, buf, kind_of)
+        wm_us, frontier, ready, buf = finalize(state, frontier, buf)
         out = []
-        if wm_us > 0 and buf_us:
-            b_us = np.asarray(buf_us, dtype="int64")
-            b_id = np.asarray(buf_id, dtype="int64")
-            b_kind = np.asarray(buf_kind, dtype="int64")
-            fin = b_us < wm_us
-            if fin.any():
-                order = np.lexsort((b_id[fin], b_us[fin]))
-                for e_us, e_id, e_kind in zip(
-                    b_us[fin][order], b_id[fin][order], b_kind[fin][order]
-                ):
-                    if e_kind == 0:
-                        binds[0] = [int(e_us), [int(e_id)]]
-                    elif 0 < e_kind < n - 1:
-                        prev = binds[e_kind - 1]
-                        # contiguity: strict additionally requires the
-                        # user's immediately preceding event to BE the
-                        # previous binding's event. An invalid stage
-                        # event still OVERWRITES: greedy/blocking —
-                        # a fresh partial match supersedes an older
-                        # complete one, under either contiguity
-                        ok = prev[0] > _NEG and (
-                            not strict or prev[1][-1] == prev_id
-                        )
-                        binds[e_kind] = (
-                            [prev[0], prev[1] + [int(e_id)]]
-                            if ok
-                            else [_NEG, []]
-                        )
-                    elif e_kind == n - 1:
-                        head = binds[n - 2]
-                        if head[0] > _NEG and (
-                            not strict or head[1][-1] == prev_id
-                        ):
-                            span = int(e_us) - head[0]
-                            if span <= span_us:
-                                out.append(
-                                    (int(key[0]), *head[1], int(e_id), span)
-                                )
-                    prev_id = int(e_id)  # incl. noise: breaks strict chains
-                keep = ~fin
-                buf_us = [int(x) for x in b_us[keep]]
-                buf_id = [int(x) for x in b_id[keep]]
-                buf_kind = [int(x) for x in b_kind[keep]]
-            frontier = max(frontier, wm_us)
-        elif wm_us > 0:
-            frontier = max(frontier, wm_us)
+        for e_us, e_id, e_kind in zip(*ready):
+            if e_kind == 0:
+                binds[0] = [e_us, [e_id]]
+            elif 0 < e_kind < n - 1:
+                prev = binds[e_kind - 1]
+                # contiguity: strict additionally requires the user's
+                # immediately preceding event to BE the previous binding's
+                # event. An invalid stage event still OVERWRITES:
+                # greedy/blocking — a fresh partial match supersedes an
+                # older complete one, under either contiguity
+                ok = prev[0] > NEG and (not strict or prev[1][-1] == prev_id)
+                binds[e_kind] = [prev[0], prev[1] + [e_id]] if ok else [NEG, []]
+            elif e_kind == n - 1:
+                head = binds[n - 2]
+                if head[0] > NEG and (not strict or head[1][-1] == prev_id):
+                    span = e_us - head[0]
+                    if span <= span_us:
+                        out.append((int(key[0]), *head[1], e_id, span))
+            prev_id = e_id  # incl. noise: breaks strict chains
         if wm_us > 0:
             # event-time TTL: a binding whose chain head can never reach
             # a final-stage event inside the span (those are >= watermark
             # from here on) is dead weight — evict it
             for i in range(n - 1):
-                if binds[i][0] > _NEG and wm_us - binds[i][0] > span_us:
-                    binds[i] = [_NEG, []]
-        if not buf_us and all(b[0] == _NEG for b in binds):
+                if binds[i][0] > NEG and wm_us - binds[i][0] > span_us:
+                    binds[i] = [NEG, []]
+        if not buf[0] and all(b[0] == NEG for b in binds):
             # fully unset key: no state row at all. (strict: losing
             # prev_id is safe — stage-0 has no contiguity constraint and
             # every later stage requires a live binding, which is unset)
@@ -207,22 +171,13 @@ def followed_by_chain_stateful(
             flat = []
             for b in binds:
                 flat.extend((b[0], b[1]))
-            state.update(
-                (frontier, prev_id, buf_us, buf_id, buf_kind, *flat)
-            )
-            wm_ms = wm_us // 1000
-            if buf_us:
-                # wake when the watermark passes the oldest buffered event
-                state.setTimeoutTimestamp(
-                    max(min(buf_us) // 1000, wm_ms + 1)
-                )
-            else:
-                # wake when the OLDEST live binding goes stale — evict
-                # promptly, then reschedule for the next one
-                anchor = min(b[0] for b in binds if b[0] > _NEG)
-                state.setTimeoutTimestamp(
-                    max((anchor + span_us) // 1000 + 1, wm_ms + 1)
-                )
+            state.update((frontier, prev_id, *buf, *flat))
+            # wake when the watermark passes the oldest buffered event;
+            # with none buffered, when the OLDEST live binding goes stale
+            # — evict promptly, then reschedule for the next one
+            wake(state, wm_us, *(
+                buf[0] or [b[0] + span_us for b in binds if b[0] > NEG]
+            ))
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 
@@ -272,7 +227,7 @@ def not_followed_by_stateful(
     needs, and the reason this operator exists separately.
 
     Out-of-order safety: arrivals buffer until the watermark passes them
-    (same finalize discipline as ``followed_by_chain_stateful``), so a
+    (the shared finalize rule, ``eventtime.finalize``), so a
     late-but-within-delay purchase still cancels its views. Rows later
     than the watermark delay are dropped (Flink's past-watermark
     discard). State per key = pending firsts inside their spans + the
@@ -283,7 +238,6 @@ def not_followed_by_stateful(
     watermark is pushed past every view's window, the emitted set EQUALS
     the batch ``q_pattern_absence`` key's observable absences.
     """
-    import numpy as np
     import pandas as pd
 
     if span_us is None:
@@ -307,98 +261,42 @@ def not_followed_by_stateful(
         .withWatermark("ts", watermark_delay)
     )
 
+    kind_of = {absent: 0, first: 1}  # the buf_first flag
+
     def match(key, pdfs, state):
         if state.exists:
             vals = state.get
             frontier = vals[0]
-            buf_us, buf_id, buf_first = (
-                list(vals[1]), list(vals[2]), list(vals[3])
-            )
-            pend_us, pend_id = list(vals[4]), list(vals[5])
+            buf = (list(vals[1]), list(vals[2]), list(vals[3]))
+            pend = list(zip(vals[4], vals[5]))
         else:
-            frontier = _NEG
-            buf_us, buf_id, buf_first = [], [], []
-            pend_us, pend_id = [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = (
-                pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000
-            )
-            for row_us, row_id, row_type in zip(
-                ts_us, pdf["event_id"], pdf["event_type"]
-            ):
-                if row_us < frontier:
-                    continue  # late past the frontier: dropped
-                buf_us.append(int(row_us))
-                buf_id.append(int(row_id))
-                buf_first.append(1 if row_type == first else 0)
-        wm_us = state.getCurrentWatermarkMs() * 1000
+            frontier, buf, pend = NEG, ([], [], []), []
+        arrive(pdfs, frontier, buf, kind_of)
+        wm_us, frontier, ready, buf = finalize(state, frontier, buf)
         out = []
-        if wm_us > 0:
-            if buf_us:
-                b_us = np.asarray(buf_us, dtype="int64")
-                b_id = np.asarray(buf_id, dtype="int64")
-                b_first = np.asarray(buf_first, dtype="int64")
-                fin = b_us < wm_us
-                if fin.any():
-                    order = np.lexsort((b_id[fin], b_us[fin]))
-                    for e_us, e_id, e_first in zip(
-                        b_us[fin][order], b_id[fin][order], b_first[fin][order]
-                    ):
-                        if e_first:
-                            pend_us.append(int(e_us))
-                            pend_id.append(int(e_id))
-                        else:
-                            # cancel every pending first this event follows
-                            # inside the span: v_us < e_us <= v_us + span
-                            keep_p = [
-                                (v_us, v_id)
-                                for v_us, v_id in zip(pend_us, pend_id)
-                                if not (v_us < e_us <= v_us + span)
-                            ]
-                            pend_us = [v for v, _ in keep_p]
-                            pend_id = [i for _, i in keep_p]
-                    keep = ~fin
-                    buf_us = [int(x) for x in b_us[keep]]
-                    buf_id = [int(x) for x in b_id[keep]]
-                    buf_first = [int(x) for x in b_first[keep]]
-                frontier = max(frontier, wm_us)
+        for e_us, e_id, e_first in zip(*ready):
+            if e_first:
+                pend.append((e_us, e_id))
             else:
-                frontier = max(frontier, wm_us)
+                # cancel every pending first this event follows inside
+                # the span: v_us < e_us <= v_us + span
+                pend = [(v, i) for v, i in pend if not v < e_us <= v + span]
+        if wm_us > 0:
             # the timer path: absence is decided when the watermark
             # passes view + span with the view still pending
-            fired = [
-                (v_us, v_id)
-                for v_us, v_id in zip(pend_us, pend_id)
-                if wm_us > v_us + span
+            out = [
+                (int(key[0]), i, v)
+                for v, i in sorted(p for p in pend if wm_us > p[0] + span)
             ]
-            if fired:
-                fired.sort()
-                out.extend(
-                    (int(key[0]), int(v_id), int(v_us))
-                    for v_us, v_id in fired
-                )
-                live = [
-                    (v_us, v_id)
-                    for v_us, v_id in zip(pend_us, pend_id)
-                    if wm_us <= v_us + span
-                ]
-                pend_us = [v for v, _ in live]
-                pend_id = [i for _, i in live]
-        if not buf_us and not pend_us:
+            pend = [(v, i) for v, i in pend if wm_us <= v + span]
+        if not buf[0] and not pend:
             state.remove()
         else:
             state.update(
-                (frontier, buf_us, buf_id, buf_first, pend_us, pend_id)
+                (frontier, *buf, [v for v, _ in pend], [i for _, i in pend])
             )
-            wm_ms = wm_us // 1000
-            anchors = []
-            if buf_us:
-                anchors.append(min(buf_us))  # finalize wake
-            if pend_us:
-                anchors.append(min(pend_us) + span)  # absence-timer wake
-            state.setTimeoutTimestamp(max(min(anchors) // 1000, wm_ms + 1))
+            # finalize wake and absence-timer wake
+            wake(state, wm_us, *buf[0], *(v + span for v, _ in pend))
         if out:
             yield pd.DataFrame(
                 out, columns=["user_id", "view_id", "view_us"]
@@ -411,7 +309,6 @@ def not_followed_by_stateful(
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-
 
 
 def followed_by_quantified_stateful(
@@ -459,7 +356,6 @@ def followed_by_quantified_stateful(
     the watermark pushed past every event, the emitted set EQUALS the
     batch ``followed_by_quantified`` rows (minus the final stage's n).
     """
-    import numpy as np
     import pandas as pd
 
     n = len(stages)
@@ -551,100 +447,57 @@ def followed_by_quantified_stateful(
         if state.exists:
             vals = state.get
             frontier = vals[0]
-            buf_us, buf_id, buf_kind = (
-                list(vals[1]), list(vals[2]), list(vals[3])
-            )
+            buf = (list(vals[1]), list(vals[2]), list(vals[3]))
             hist = [
                 [int(a), int(b), int(c), int(d)]
                 for a, b, c, d in zip(vals[4], vals[5], vals[6], vals[7])
             ]
             cur = (
                 None
-                if vals[8] == _NEG
+                if vals[8] == NEG
                 else [int(vals[8]), int(vals[9]), int(vals[10]),
                       int(vals[11])]
             )
         else:
-            frontier = _NEG
-            buf_us, buf_id, buf_kind = [], [], []
-            hist, cur = [], None
-        for pdf in pdfs:  # empty on timeout-only invocations
-            if not len(pdf):
-                continue
-            ts_us = (
-                pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000
-            )
-            for row_us, row_id, row_type in zip(
-                ts_us, pdf["event_id"], pdf["event_type"]
-            ):
-                if row_us < frontier:
-                    continue  # late past the frontier
-                buf_us.append(int(row_us))
-                buf_id.append(int(row_id))
-                # foreign types collapse to -1: they only carry
-                # run-boundary information
-                buf_kind.append(kind_of.get(row_type, -1))
-        wm_us = state.getCurrentWatermarkMs() * 1000
+            frontier, buf, hist, cur = NEG, ([], [], []), [], None
+        # foreign types collapse to kind -1: they only carry run-boundary
+        # information
+        arrive(pdfs, frontier, buf, kind_of)
+        wm_us, frontier, ready, buf = finalize(state, frontier, buf)
         out: list = []
+        for e_us, e_id, e_kind in zip(*ready):
+            if cur is not None and cur[0] == e_kind:
+                cur[1] += 1  # same type: the run extends
+                continue
+            if cur is not None:
+                hist.append(cur)
+                del hist[: max(0, len(hist) - (n - 1))]
+            cur = [e_kind, 1, e_us, e_id]
+            if e_kind == final_kind:
+                try_match(hist, cur, out, key[0])
         if wm_us > 0:
-            if buf_us:
-                b_us = np.asarray(buf_us, dtype="int64")
-                b_id = np.asarray(buf_id, dtype="int64")
-                b_kind = np.asarray(buf_kind, dtype="int64")
-                fin = b_us < wm_us
-                if fin.any():
-                    order = np.lexsort((b_id[fin], b_us[fin]))
-                    for e_us, e_id, e_kind in zip(
-                        b_us[fin][order], b_id[fin][order],
-                        b_kind[fin][order],
-                    ):
-                        if cur is not None and cur[0] == e_kind:
-                            cur[1] += 1  # same type: the run extends
-                            continue
-                        if cur is not None:
-                            hist.append(cur)
-                            del hist[: max(0, len(hist) - (n - 1))]
-                        cur = [int(e_kind), 1, int(e_us), int(e_id)]
-                        if e_kind == final_kind:
-                            try_match(hist, cur, out, key[0])
-                    keep = ~fin
-                    buf_us = [int(x) for x in b_us[keep]]
-                    buf_id = [int(x) for x in b_id[keep]]
-                    buf_kind = [int(x) for x in b_kind[keep]]
-            frontier = max(frontier, wm_us)
             # closed runs a future final run can't reach inside the span
             # are dead weight — drop from the old end
             hist = [h for h in hist if wm_us - h[2] <= span_us]
-        if not buf_us and not hist and cur is None:
+        if not buf[0] and not hist and cur is None:
             state.remove()
         else:
             state.update(
                 (
                     frontier,
-                    buf_us, buf_id, buf_kind,
+                    *buf,
                     [h[0] for h in hist], [h[1] for h in hist],
                     [h[2] for h in hist], [h[3] for h in hist],
-                    *(cur if cur is not None else [_NEG, 0, 0, 0]),
+                    *(cur if cur is not None else [NEG, 0, 0, 0]),
                 )
             )
-            wm_ms = wm_us // 1000
-            if buf_us:
-                # wake when the watermark passes the oldest buffered event
-                state.setTimeoutTimestamp(
-                    max(min(buf_us) // 1000, wm_ms + 1)
-                )
-            elif hist:
-                # nothing buffered, but closed runs still hold state: wake
-                # when the oldest one ages past the span so trimming isn't
-                # stalled until the key happens to see new data
-                state.setTimeoutTimestamp(
-                    max(
-                        (min(h[2] for h in hist) + span_us) // 1000 + 1,
-                        wm_ms + 1,
-                    )
-                )
-            # only cur (+frontier) left: no timeout — see the state-bounds
-            # note in the docstring for why the open run is kept forever
+            # wake when the watermark passes the oldest buffered event;
+            # with none buffered but closed runs still held, when the
+            # oldest one ages past the span, so trimming isn't stalled
+            # until the key sees new data. Only cur (+frontier) left: no
+            # timeout — see the state-bounds note in the docstring for
+            # why the open run is kept forever
+            wake(state, wm_us, *(buf[0] or [h[2] + span_us for h in hist]))
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 

@@ -26,6 +26,11 @@ from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry
 from reactor_window_like_flink_spark.sources.tables import load
+from reactor_window_like_flink_spark.streaming.eventtime import (
+    NEG,
+    finalize,
+    wake,
+)
 
 REG = Registry()
 
@@ -270,7 +275,8 @@ def temporal_join_event_time(
 
     Both tagged streams are watermarked; per key the state buffers BOTH
     unmatched probes and versions newer than the frontier. A probe is
-    finalized only once the watermark passes its event time — by then
+    finalized only once the watermark passes its event time (the rule the
+    CEP matchers share, ``eventtime.finalize``) — by then
     every version at-or-before it has arrived (watermark contract), so the
     emitted binding equals the batch as-of oracle regardless of how rows
     were scattered across micro-batches. Versions the watermark has passed
@@ -325,7 +331,6 @@ def temporal_join_event_time(
     ).withWatermark("ts", watermark_delay)
     tagged = probes.unionByName(versions)
 
-    NEG = -(1 << 62)  # "no frontier yet" / "no base version" sentinels
     ttl_us = (
         None
         if idle_state_ttl_seconds is None
@@ -337,10 +342,10 @@ def temporal_join_event_time(
             (frontier, base_vus, base_pay,
              bvus, bvpay, bpid, bpus) = state.get
             bvus, bvpay = list(bvus), list(bvpay)
-            bpid, bpus = list(bpid), list(bpus)
+            probes = (list(bpus), list(bpid))
         else:
             frontier, base_vus, base_pay = NEG, NEG, None
-            bvus, bvpay, bpid, bpus = [], [], [], []
+            bvus, bvpay, probes = [], [], ([], [])
         for pdf in pdfs:  # empty iterator on timeout-only invocations
             if not len(pdf):
                 continue
@@ -356,45 +361,25 @@ def temporal_join_event_time(
                     bvus.append(int(row_ts))
                     bvpay.append(float(row_pay))
                 else:
-                    bpid.append(int(row_pid))
-                    bpus.append(int(row_ts))
-        wm_us = state.getCurrentWatermarkMs() * 1000
+                    probes[0].append(int(row_ts))
+                    probes[1].append(int(row_pid))
         v_us = np.asarray(bvus, dtype="int64")
         v_pay = np.asarray(bvpay, dtype="float64")
         vo = np.argsort(v_us, kind="stable")
         v_us, v_pay = v_us[vo], v_pay[vo]
-        p_id = np.asarray(bpid, dtype="int64")
-        p_us = np.asarray(bpus, dtype="int64")
-        out = None
-        if wm_us > 0 and len(p_us):
-            fin = p_us < wm_us  # watermark passed: binding is final
-            if fin.any():
-                fp_id, fp_us = p_id[fin], p_us[fin]
-                order = np.lexsort((fp_id, fp_us))
-                fp_id, fp_us = fp_id[order], fp_us[order]
-                # latest buffered version at-or-before each probe
-                # (side="right" makes a tie-version bind: inclusive AS OF)
-                idx = np.searchsorted(v_us, fp_us, side="right") - 1
-                rows = []
-                for pid_i, pus_i, vi in zip(fp_id, fp_us, idx):
-                    if vi >= 0:
-                        rows.append(
-                            (int(pid_i), int(pus_i),
-                             int(v_us[vi]), float(v_pay[vi]))
-                        )
-                    elif base_vus > NEG:
-                        rows.append(
-                            (int(pid_i), int(pus_i),
-                             int(base_vus), base_pay)
-                        )
-                    elif emit == "left":
-                        rows.append((int(pid_i), int(pus_i), None, None))
-                if rows:
-                    out = pd.DataFrame(
-                        rows,
-                        columns=["probe_id", "probe_us", "version_us", "payload"],
-                    )
-                p_id, p_us = p_id[~fin], p_us[~fin]
+        # the watermark passed these probes: their binding is final
+        wm_us, frontier, ready, probes = finalize(state, frontier, probes)
+        rows = []
+        # latest buffered version at-or-before each probe (side="right"
+        # makes a tie-version bind: inclusive AS OF)
+        idx = np.searchsorted(v_us, ready[0], side="right") - 1
+        for pus_i, pid_i, vi in zip(*ready, idx):
+            if vi >= 0:
+                rows.append((pid_i, pus_i, int(v_us[vi]), float(v_pay[vi])))
+            elif base_vus > NEG:
+                rows.append((pid_i, pus_i, int(base_vus), base_pay))
+            elif emit == "left":
+                rows.append((pid_i, pus_i, None, None))
         if wm_us > 0:
             # compact: versions the watermark passed collapse to one base
             # row — the only one a future (>= wm) probe can still bind to
@@ -403,11 +388,10 @@ def temporal_join_event_time(
                 base_vus = int(v_us[cut - 1])
                 base_pay = float(v_pay[cut - 1])
                 v_us, v_pay = v_us[cut:], v_pay[cut:]
-            frontier = max(frontier, wm_us)
         evict = (
             ttl_us is not None
             and wm_us > 0
-            and not len(p_us)
+            and not probes[0]
             and not len(v_us)
             and (base_vus == NEG or wm_us - base_vus > ttl_us)
         )
@@ -419,30 +403,28 @@ def temporal_join_event_time(
                     frontier,
                     base_vus,
                     base_pay,
-                    [int(x) for x in v_us],
-                    [float(x) for x in v_pay],
-                    [int(x) for x in p_id],
-                    [int(x) for x in p_us],
+                    v_us.tolist(),
+                    v_pay.tolist(),
+                    probes[1],
+                    probes[0],
                 )
             )
-            wm_ms = wm_us // 1000
-            wakes = []
-            if len(p_us):
+            if probes[0]:
                 # wake when the watermark passes the oldest buffered probe
-                wakes.append(int(p_us.min()) // 1000)
+                wake(state, wm_us, *probes[0])
             elif ttl_us is not None:
                 if len(v_us):
                     # keep compaction progressing toward evictability
-                    wakes.append(int(v_us.min()) // 1000)
+                    wake(state, wm_us, int(v_us.min()))
                 else:
                     # wake at the eviction due time
                     anchor = base_vus if base_vus > NEG else max(frontier, 0)
-                    wakes.append((anchor + ttl_us) // 1000)
-            if wakes:
-                # timestamps must sit strictly beyond the current watermark
-                state.setTimeoutTimestamp(max(min(wakes), wm_ms + 1))
-        if out is not None:
-            res = pd.DataFrame(
+                    wake(state, wm_us, anchor + ttl_us)
+        if rows:
+            out = pd.DataFrame(
+                rows, columns=["probe_id", "probe_us", "version_us", "payload"]
+            )
+            yield pd.DataFrame(
                 {
                     "probe_id": out["probe_id"],
                     "key": key[0],
@@ -451,7 +433,6 @@ def temporal_join_event_time(
                     "payload": out["payload"],
                 }
             )
-            yield res
 
     return tagged.groupBy("key").applyInPandasWithState(
         enrich,

@@ -40,6 +40,7 @@ import os
 import contextlib
 import logging
 import threading
+import time
 import uuid
 from collections.abc import Callable, Sequence
 from typing import Any
@@ -51,14 +52,6 @@ from pyspark.sql.types import StructType
 from reactor_window_like_flink_spark.functions.materialize import collect_bounded
 
 _LOG = logging.getLogger(__name__)
-
-
-def _progress_field(progress: Any, name: str) -> Any:
-    """Field access across PySpark progress representations (attribute
-    object or json dict, varies by version)."""
-    if isinstance(progress, dict):
-        return progress.get(name)
-    return getattr(progress, name)
 
 
 def _source_dir(description: Any) -> str | None:
@@ -111,6 +104,7 @@ class FileStreamInput:
         self._lock = threading.Lock()
         self._published_rows = 0
         self._arrow_fallbacks = 0
+        self._last_mtime_ms = 0  # of the last published file
         self._query: StreamingQuery | None = None
         self._rows_by_batch: dict[int, int] = {}
         os.makedirs(directory, exist_ok=True)
@@ -187,6 +181,12 @@ class FileStreamInput:
         tmp = os.path.join(self._dir, f".{name}.tmp")
         try:
             pq.write_table(table, tmp)
+            # Spark's file source orders new files by modification time
+            # in ms alone: two publishes inside one ms would tie and could
+            # be read out of publish order, so each file gets a later ms
+            ms = max(time.time_ns() // 1_000_000, self._last_mtime_ms + 1)
+            os.utime(tmp, ns=(ms * 1_000_000, ms * 1_000_000))
+            self._last_mtime_ms = ms
             os.replace(tmp, os.path.join(self._dir, name))
         except BaseException:
             # A half-written .tmp is invisible to Spark's listing (dot
@@ -260,15 +260,15 @@ class FileStreamInput:
         sibling such as ``<path>_b`` never matches. Falls back to the
         top-level number only when the progress has no per-source
         breakdown to read."""
-        sources = _progress_field(progress, "sources")
+        sources = progress.get("sources")
         if not sources:
-            return int(_progress_field(progress, "numInputRows") or 0)
+            return int(progress.get("numInputRows") or 0)
         me = os.path.abspath(self._dir)
         for s in sources:
-            if _source_dir(_progress_field(s, "description")) == me:
-                return int(_progress_field(s, "numInputRows") or 0)
+            if _source_dir(s.get("description")) == me:
+                return int(s.get("numInputRows") or 0)
         if len(sources) == 1:
-            return int(_progress_field(sources[0], "numInputRows") or 0)
+            return int(sources[0].get("numInputRows") or 0)
         return 0
 
     def _processed_rows(self) -> int:
@@ -277,7 +277,7 @@ class FileStreamInput:
         # recentProgress is a bounded window; fold batch row counts into a
         # dict so totals survive progress-object eviction.
         for p in self._query.recentProgress:
-            batch_id = _progress_field(p, "batchId")
+            batch_id = p.get("batchId")
             if batch_id is not None:
                 self._rows_by_batch[int(batch_id)] = self._source_rows(p)
         return sum(self._rows_by_batch.values())
@@ -324,30 +324,20 @@ def progress_stats(query: StreamingQuery) -> dict[str, Any] | None:
     p = query.lastProgress
     if p is None:
         return None
-    durations = _progress_field(p, "durationMs")
-    event_time = _progress_field(p, "eventTime") or {}
-    state_ops = _progress_field(p, "stateOperators") or []
+    state_ops = p.get("stateOperators") or []
 
     def _state_sum(field: str) -> int | None:
-        vals = [_progress_field(s, field) for s in state_ops]
+        vals = [s.get(field) for s in state_ops]
         vals = [v for v in vals if v is not None]
         return sum(int(v) for v in vals) if vals else None
 
     return {
-        "batch_id": _progress_field(p, "batchId"),
-        "num_input_rows": _progress_field(p, "numInputRows"),
-        "input_rows_per_second": _progress_field(p, "inputRowsPerSecond"),
-        "processed_rows_per_second": _progress_field(p, "processedRowsPerSecond"),
-        "batch_duration_ms": (
-            durations.get("triggerExecution")
-            if isinstance(durations, dict)
-            else None
-        ),
-        "watermark": (
-            event_time.get("watermark")
-            if isinstance(event_time, dict)
-            else None
-        ),
+        "batch_id": p.get("batchId"),
+        "num_input_rows": p.get("numInputRows"),
+        "input_rows_per_second": p.get("inputRowsPerSecond"),
+        "processed_rows_per_second": p.get("processedRowsPerSecond"),
+        "batch_duration_ms": (p.get("durationMs") or {}).get("triggerExecution"),
+        "watermark": (p.get("eventTime") or {}).get("watermark"),
         "state_rows": _state_sum("numRowsTotal"),
         "late_rows_dropped": _state_sum("numRowsDroppedByWatermark"),
     }

@@ -489,3 +489,95 @@ def test_quantified_stream_run_merging_across_batches(spark, tmp_path):
         followed_by_quantified_stateful(
             src.stream(), [("view", 1, None), ("click", 2, 2)]
         )
+
+
+def test_quantified_state_survives_restart(spark, tmp_path):
+    """Checkpoint recovery of the richest CEP state row: the query stops
+    with a closed view run, an open click run and a buffered click in
+    state; after a restart on the same checkpoint the purchase completes
+    the pattern, and the one emission equals an uninterrupted run's."""
+    from reactor_window_like_flink_spark.streaming.cep import (
+        followed_by_quantified_stateful,
+    )
+
+    stages = [("view", 1, None), ("click", 2, 2), ("purchase", 1, None)]
+    steps = [
+        # watermark 10:02 after this batch (the sentinel is user 99)
+        [(10, _ts(0), 1, "view", 0.0), (11, _ts(1), 1, "click", 0.0),
+         (99, _ts(12), 99, "view", 0.0)],
+        # view@0 and click@1 finalize; click@3 waits in the buffer
+        [(12, _ts(3), 1, "click", 0.0)],
+        [(13, _ts(4), 1, "purchase", 0.0)],
+        [(98, _ts(40), 99, "view", 0.0)],  # watermark 10:30 flushes all
+    ]
+
+    def run(name, stop_after):
+        src = FileStreamInput(spark, SCHEMA, str(tmp_path / name / "in"))
+        got: list = []
+
+        def start():
+            # foreachBatch sink: the memory sink refuses checkpoint recovery
+            return (
+                followed_by_quantified_stateful(
+                    src.stream(), stages, watermark_delay="10 minutes"
+                )
+                .writeStream.foreachBatch(
+                    lambda df, bid: got.extend(map(tuple, df.collect()))
+                )
+                .outputMode("append")
+                .option("checkpointLocation", str(tmp_path / name / "ckpt"))
+                .start()
+            )
+
+        query = start()
+        try:
+            for i, rows in enumerate(steps):
+                if i == stop_after:
+                    query.stop()
+                    assert got == []  # stopped mid-pattern
+                    query = start()
+                src.publish(rows)
+                query.processAllAvailable()
+        finally:
+            query.stop()
+        return got
+
+    want = run("straight", None)
+    assert want == [(1, 10, 11, 13, 1, 2, 240_000_000)]
+    assert run("restarted", 2) == want
+
+
+def test_chain_relaxed_watermark_advanced_by_non_pattern_rows(spark, tmp_path):
+    """Relaxed contiguity drops non-pattern types AFTER the watermark: a
+    sentinel whose type is in no stage still advances it, and the chain
+    it leaves behind emits."""
+    from reactor_window_like_flink_spark.streaming.cep import (
+        followed_by_chain_stateful,
+    )
+
+    src = FileStreamInput(spark, SCHEMA, str(tmp_path / "events"))
+    out = followed_by_chain_stateful(
+        src.stream(), ["a", "b"], watermark_delay="30 minutes"
+    )
+    query = (
+        out.writeStream.format("memory")
+        .queryName("t_cep_relaxed_wm")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        src.publish(
+            [(1, _ts(0), 1, "a", 0.0), (2, _ts(1), 1, "b", 0.0)]
+        )
+        query.processAllAvailable()
+        src.publish(
+            [(9, _ts(0) + timedelta(hours=2), 99, "noise", 0.0)]
+        )
+        query.processAllAvailable()
+        got = {
+            tuple(r) for r in spark.sql("SELECT * FROM t_cep_relaxed_wm").collect()
+        }
+    finally:
+        query.stop()
+    assert got == {(1, 1, 2, 60_000_000)}

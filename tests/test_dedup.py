@@ -498,57 +498,3 @@ def test_dedup_canonical_groups_formatting_variants(spark, tmp_path):
     exact = {r["keep_id"]: r["n_copies"] for r in qs["q_dedup_exact"](spark, d).collect()}
     assert canon == {0: 3, 3: 2}
     assert exact == {0: 1, 1: 1, 2: 1, 3: 2}
-
-
-def test_counted_intersection_equals_ppjoin_kernels(spark, sf_dir):
-    """The r16 kernel-arbitration guard: the exploded-count form
-    (``counted_intersection_pairs`` — the Spark mirror of the
-    sf1-feasible DuckDB oracle formulation, measured SLOWER than PPJoin
-    at every threshold and therefore not registered) must stay
-    row-identical to both registered PPJoin keys, so the kernel choice
-    remains a pure performance decision."""
-    from pyspark.sql import functions as F
-
-    from reactor_window_like_flink_spark.llm.dedup import (
-        CONTAINMENT_THRESHOLD,
-        counted_intersection_pairs,
-    )
-
-    qs = entry_mod.queries()
-    pairs = counted_intersection_pairs(spark, sf_dir, shingle_n=2)
-    jacc = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    )
-    counted_j = sorted(
-        map(
-            tuple,
-            pairs.filter(jacc >= 0.1)
-            .select(
-                "doc_a",
-                "doc_b",
-                (F.round(jacc * 10000, 0) / 10000.0).alias("jaccard"),
-            )
-            .collect(),
-        )
-    )
-    ppjoin_j = sorted(
-        map(tuple, qs["q_dedup_ngram_jaccard"](spark, sf_dir).collect())
-    )
-    assert counted_j == ppjoin_j and len(ppjoin_j) > 0
-
-    inter = F.col("inter").cast("double")
-    ca, cb = inter / F.col("na"), inter / F.col("nb")
-    counted_c = sorted(
-        map(
-            tuple,
-            counted_intersection_pairs(spark, sf_dir, shingle_n=2)
-            .filter(F.greatest(ca, cb) >= CONTAINMENT_THRESHOLD)
-            .select("doc_a", "doc_b")
-            .collect(),
-        )
-    )
-    ppjoin_c = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in qs["q_dedup_containment"](spark, sf_dir).collect()
-    )
-    assert counted_c == ppjoin_c

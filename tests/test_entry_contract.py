@@ -199,6 +199,18 @@ def test_no_hand_rolled_artifact_memo():
     assert not bad, f"applicationId read outside llm/artifacts.py: {bad}"
 
 
+def test_event_time_finalize_only_in_eventtime():
+    """One event-time finalize rule: the watermark is read and the
+    event-time wake is set only in ``streaming/eventtime.py``."""
+    bad = [
+        f"{where} .{node.func.attr}"
+        for where, node in _package_nodes("streaming/eventtime.py")
+        if _method_call(node, "getCurrentWatermarkMs")
+        or _method_call(node, "setTimeoutTimestamp")
+    ]
+    assert not bad, f"event-time finalize outside streaming/eventtime.py: {bad}"
+
+
 def test_fixture_tables_read_only_through_load():
     """Fixture tables are read only through ``sources/tables.py::load``
     (which memoizes their schemas): no ``.parquet(...)`` call elsewhere in

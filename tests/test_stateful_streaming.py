@@ -522,7 +522,6 @@ def test_count_or_time_state_survives_restart(spark, tmp_path):
     recovery the post-restart rows alone can never reach max_size (and a
     fresh state row would make the eventual flush's sum 8+9+10 only), so
     the spanning sum is the proof the buffer survived."""
-    import json as _json
     from datetime import datetime, timezone
 
     ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -546,8 +545,6 @@ def test_count_or_time_state_survives_restart(spark, tmp_path):
     def rows_in(query) -> int:
         total = 0
         for p in query.recentProgress:
-            if not isinstance(p, dict):
-                p = _json.loads(p.json)
             total += p.get("numInputRows") or 0
         return total
 

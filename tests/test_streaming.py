@@ -150,6 +150,24 @@ def test_admit_arrow_unlinks_tmp_on_write_failure(spark, tmp_path, monkeypatch):
     assert got == 3
 
 
+def test_back_to_back_publishes_get_distinct_ms_mtimes(spark, tmp_path):
+    """Spark's file source orders new files by modification time in ms.
+    Publishes about 1 ms apart used to tie, and the source could then
+    read them out of publish order; every file now gets a later ms."""
+    import os
+
+    src = FileStreamInput(spark, SCHEMA, str(tmp_path / "in"))
+    for i in range(20):
+        src.publish(_rows(1, start_minute=i))
+    paths = [
+        os.path.join(tmp_path / "in", f)
+        for f in os.listdir(tmp_path / "in")
+        if f.endswith(".parquet")
+    ]
+    ms = sorted(os.stat(p).st_mtime_ns // 1_000_000 for p in paths)
+    assert len(paths) == 20 and len(set(ms)) == 20
+
+
 def test_publisher_error_channel(spark, tmp_path):
     """Errors route to the error consumer (``WindowPublisher.java:142-150``)
     instead of failing the query."""

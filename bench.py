@@ -177,15 +177,13 @@ HEADLINE = [
     "q_kcore",
 ]
 
-# Deliberately-slow regression guards: kernels kept for comparison whose
-# cost is defined, not accidental (the Arrow jaccard kernel loses to JVM
-# array_intersect by design — BASELINE.md kernel-choice measurement).
-# Timed and recorded with a ratio vs their production twin, but EXCLUDED
-# from the headline total so real regressions aren't buried under a
-# query that is supposed to be slow.
+# Deliberately-slow oracle references: the oracle-exact forms of keys
+# whose production twin is faster by construction. Timed and recorded
+# with a ratio vs their production twin, but EXCLUDED from the headline
+# total so real regressions aren't buried under a query that is
+# supposed to be slow.
 GUARD = {
     # guard key -> production twin whose median it is compared against
-    "q_dedup_ngram_jaccard_arrow": "q_dedup_ngram_jaccard",
     # the oracle-exact HOF embedding form: bit-identical DuckDB mirror,
     # 6x+ the per-bucket matmul production kernel by construction
     # (per-pair interpreted confirm over the quadratic candidate volume)

@@ -36,6 +36,7 @@ from reactor_window_like_flink_spark.llm.curation import (
     FUNNEL_MIN_TOK,
     funnel_report,
 )
+from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -224,7 +225,7 @@ def q_classifier_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
     dv = (
-        F.size(F.array_distinct(F.split(F.lower("text"), " "))).cast("double")
+        F.size(F.array_distinct(_tokens())).cast("double")
         / n_tok
     )
     stage_idx = (

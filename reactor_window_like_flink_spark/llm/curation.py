@@ -49,6 +49,7 @@ from reactor_window_like_flink_spark.llm.sampling import (
     _hash_bucket,
     q_chunk_tokens,
 )
+from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.layout import (
     compact as layout_compact,
 )
@@ -206,7 +207,7 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     b = docs.select(
         "doc_id",
-        F.split(F.lower("text"), " ").alias("toks"),
+        _tokens().alias("toks"),
         _hash_bucket(F.col("doc_id")).alias("bkt"),
     )
     ev = (
@@ -382,9 +383,7 @@ def prefix_groups(docs: DataFrame, n_tokens: int) -> DataFrame:
     group on the prefix string (a short shuffle key), min-id keep rule,
     plus source provenance (cross-source groups reveal syndicated
     boilerplate)."""
-    p = F.array_join(
-        F.slice(F.split(F.lower("text"), " "), 1, n_tokens), " "
-    )
+    p = F.array_join(F.slice(_tokens(), 1, n_tokens), " ")
     return (
         docs.groupBy(p.alias("prefix"))
         .agg(
@@ -435,9 +434,7 @@ def cross_source_dups(docs: DataFrame) -> DataFrame:
     append their own footer chrome, so head-keying is the standard
     mirror-detection relaxation — and the shuffle still carries a 32-hex
     key, never the document."""
-    head = F.array_join(
-        F.slice(F.split(F.lower("text"), " "), 1, HEAD_TOKENS), " "
-    )
+    head = F.array_join(F.slice(_tokens(), 1, HEAD_TOKENS), " ")
     return (
         docs.groupBy(F.md5(head).alias("text_hash"))
         .agg(
@@ -617,9 +614,7 @@ def _drop_table_and_location(spark: SparkSession, table: str) -> None:
 
 def _doc_toks(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, toks), the q_dedup_near tokenization."""
-    return docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
-    )
+    return docs.select("doc_id", _tokens().alias("toks"))
 
 
 def build_corpus_near_index(
@@ -1477,8 +1472,7 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
     dv = (
-        F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-        .cast("double")
+        F.size(F.array_distinct(_tokens())).cast("double")
         / n_tok
     )
     stage_idx = (

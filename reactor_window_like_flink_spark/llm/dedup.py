@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -81,9 +82,9 @@ def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection barrier so downstream shingle lambdas reference ``toks`` as
     a materialized attribute."""
     docs = load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", "lang", F.split(F.lower("text"), " ").alias("toks")
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return docs.select("doc_id", "lang", _tokens().alias("toks")).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
 
 
 @REG.add(
@@ -315,10 +316,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared oracle for the exact and fast n-gram-Jaccard twins: both produce
-# bit-identical output (the fast kernel returns only INTEGER intersection
-# sizes; the division and rounding stay in the same JVM expressions), so
-# both keys hash-check against the same blocked-formulation SQL.
+# Oracle for ``q_dedup_ngram_jaccard``: the confirm counts INTEGER
+# intersection sizes and the division and rounding mirror this SQL's, so
+# the key hash-checks against the blocked-formulation SQL bit for bit.
 #
 # r16 formulation (closes the r15 verdict's 6-key sf1 oracle gap): the
 # r15 form joined all same-lang pairs and list_intersect'ed per pair —
@@ -387,42 +387,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles Σ df² joined rows (9.4M at sf0.1) into a pair-keyed
     aggregate. PPJoin stays the kernel at every threshold."""
     return exact_jaccard_pairs(spark, sf_dir, threshold=0.1, shingle_n=2)
-
-
-@REG.add("q_dedup_ngram_jaccard_arrow", _NGRAM_JACCARD_ORACLE)
-def q_dedup_ngram_jaccard_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy twin of ``q_dedup_ngram_jaccard``: identical PPJoin
-    candidate generation, but the exact-Jaccard confirm runs as ONE
-    vectorized numpy pass per Arrow batch — a single ``lexsort`` over the
-    flattened (pair, hash) stream counts every pairwise intersection —
-    instead of ``array_intersect`` per pair.
-
-    Unlike the embedding twin (whose float summation order differs from
-    the oracle's), this kernel is EXACTLY oracle-checkable: set
-    intersection over int64 hashes has no rounding, the kernel emits only
-    integer counts, and the Jaccard division + ``round`` stay in the same
-    JVM expressions as the exact form — so both keys share one oracle and
-    both hash-check green.
-
-    MEASURED VERDICT (the reason this is not named ``_fast``): on the
-    identical materialized 2.35M-pair candidate input at sf0.1 the JVM
-    form's confirm stage medians 2.06 s vs 4.58 s for this kernel. The
-    per-pair work here is a *set intersection over variable-length
-    arrays already colocated with the row* — ``array_intersect`` is a
-    native codegen expression, and moving every pair's two hash arrays
-    across the Arrow boundary costs more than the intersection itself.
-    This is the opposite regime from ``q_dedup_embedding_fast``, where
-    rows are fixed-width float vectors, the JVM form was 32 *interpreted
-    lambda folds* per row, and one numpy matmul per batch buys real
-    FLOP-level wins. Rule of thumb this pair of twins documents: ship
-    rows to Python for dense fixed-width numeric kernels; keep
-    variable-length set/array ops on JVM intrinsics. The exact key IS
-    the production kernel for this operator; this twin is retained as
-    the oracle-green vectorized reference and the regression guard for
-    that conclusion."""
-    return exact_jaccard_pairs(
-        spark, sf_dir, threshold=0.1, shingle_n=2, kernel="arrow"
-    )
 
 
 # Containment threshold: fraction of the SMALLER side's shingles that must
@@ -1097,8 +1061,8 @@ def q_dedup_embedding_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``q_dedup_embedding`` stays exact on the sweep fixtures. Production
     callers use ``lsh_cosine_pairs_fast`` directly and get the joint
     ``auto_lsh_plan`` sizing — the registered, benched, probe-measured
-    form of that path is ``q_dedup_embedding_auto`` (recall recorded at
-    sf0.1/sf1 by ``tools/scale_probe.py autolsh``)."""
+    form of that path is ``q_dedup_embedding_auto`` (recall at sf0.1/sf1
+    in BASELINE.md "Round-11 auto-sized LSH probe")."""
     return lsh_cosine_pairs_fast(
         spark, sf_dir, bands=EMB_LSH_BANDS, bits=EMB_LSH_BITS
     )
@@ -1106,8 +1070,9 @@ def q_dedup_embedding_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @REG.add("q_dedup_embedding_auto")  # rows-only: the auto-sized plan's
 # pair set is corpus-size-dependent by design (bands, bits) =
-# auto_lsh_plan(n, threshold); tools/scale_probe.py records its recall
-# vs a driver-side exhaustive ground truth at sf0.1 and sf1.
+# auto_lsh_plan(n, threshold); its recall vs a driver-side exhaustive
+# ground truth at sf0.1 and sf1 is in BASELINE.md "Round-11 auto-sized
+# LSH probe".
 def q_dedup_embedding_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION-SIZED registration of ``lsh_cosine_pairs_fast``: both
     LSH knobs derived from the corpus count via ``auto_lsh_plan`` (the
@@ -1148,7 +1113,6 @@ def exact_jaccard_pairs(
     sf_dir: str,
     threshold: float,
     shingle_n: int = 2,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact set-similarity self-join with prefix filtering (the PPJoin
     family, Chaudhuri/Xiao et al.) — every pair with word-``shingle_n``-gram
@@ -1189,7 +1153,7 @@ def exact_jaccard_pairs(
     is writing the intermediate to a scratch table. Measured ~40% faster
     than the recompute form even at toy scale."""
     return prefix_jaccard_join(
-        _hashed_docs(spark, sf_dir, shingle_n), threshold, kernel=kernel
+        _hashed_docs(spark, sf_dir, shingle_n), threshold
     )
 
 
@@ -1238,9 +1202,7 @@ def _verify_pairs(docs2: DataFrame, cand: DataFrame) -> DataFrame:
     )
 
 
-def prefix_jaccard_join(
-    hashed: DataFrame, threshold: float, kernel: str = "expr"
-) -> DataFrame:
+def prefix_jaccard_join(hashed: DataFrame, threshold: float) -> DataFrame:
     """Core of ``exact_jaccard_pairs`` over any ``(doc_id, lang,
     hs: array<long>)`` DataFrame (``hs`` = the hashed element set, distinct
     values). Split out so property tests can drive it with generated sets;
@@ -1290,64 +1252,14 @@ def prefix_jaccard_join(
         .dropDuplicates(["doc_a", "doc_b"])
     )
     paired = _verify_pairs(docs2, cand)
-    if kernel == "arrow":
-        # Vectorized confirm: one numpy lexsort per Arrow batch over the
-        # flattened (pair_idx, hash) stream of BOTH sides. Each side's
-        # hashes are distinct within a pair, so a value in the
-        # intersection appears exactly twice under one pair_idx — count
-        # adjacent duplicates after the sort and bincount per pair. O(E
-        # log E) in C for E total elements per batch, vs an interpreted
-        # HOF fold per pair. Emits INTEGER counts only; division and
-        # rounding stay in the JVM expressions below, so output is
-        # bit-identical to the "expr" kernel (shared oracle).
-        import numpy as np
-        import pandas as pd
-
-        def confirm_batches(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                n = len(pdf)
-                lens_a = np.fromiter(
-                    (len(v) for v in pdf["hs_a"]), dtype="int64", count=n
-                )
-                lens_b = np.fromiter(
-                    (len(v) for v in pdf["hs_b"]), dtype="int64", count=n
-                )
-                idx = np.concatenate(
-                    [np.repeat(np.arange(n), lens_a),
-                     np.repeat(np.arange(n), lens_b)]
-                )
-                val = np.concatenate(
-                    [np.concatenate(list(pdf["hs_a"])).astype("int64"),
-                     np.concatenate(list(pdf["hs_b"])).astype("int64")]
-                )
-                order = np.lexsort((val, idx))
-                idx_s, val_s = idx[order], val[order]
-                dup = (idx_s[1:] == idx_s[:-1]) & (val_s[1:] == val_s[:-1])
-                n_inter = np.bincount(idx_s[1:][dup], minlength=n)
-                yield pd.DataFrame(
-                    {
-                        "doc_a": pdf["doc_a"],
-                        "doc_b": pdf["doc_b"],
-                        "n_inter": n_inter,
-                        "n_total": lens_a + lens_b,
-                    }
-                )
-
-        scored = paired.mapInPandas(
-            confirm_batches,
-            "doc_a long, doc_b long, n_inter long, n_total long",
-        )
-    else:
-        scored = paired.select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("hs_a", "hs_b"))
-            .cast("long")
-            .alias("n_inter"),
-            (F.size("hs_a") + F.size("hs_b")).cast("long").alias("n_total"),
-        )
+    scored = paired.select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("hs_a", "hs_b"))
+        .cast("long")
+        .alias("n_inter"),
+        (F.size("hs_a") + F.size("hs_b")).cast("long").alias("n_total"),
+    )
     jacc = F.col("n_inter").cast("double") / (
         F.col("n_total") - F.col("n_inter")
     )

@@ -491,21 +491,30 @@ HH_THRESHOLD_DENOM = 200
 HH_CAPACITY = 2 * HH_THRESHOLD_DENOM
 
 
+def misra_gries_step(counters: dict, items, capacity: int) -> dict:
+    """Fold ``items`` into a Misra-Gries sketch of at most ``capacity``
+    counters and return it: a known item increments, a new one is
+    admitted while there is room, otherwise every counter decrements and
+    zeros drop (the classic MG step, amortized O(1) via dict rebuild).
+    Shared by the batch heavy-hitters pass and
+    ``streaming/frequent.py::frequent_items_stateful``."""
+    for item in items:
+        if item in counters:
+            counters[item] += 1
+        elif len(counters) < capacity:
+            counters[item] = 1
+        else:
+            counters = {t: c - 1 for t, c in counters.items() if c > 1}
+    return counters
+
+
 def _misra_gries_partial(batches):
     """Per-partition Misra-Gries sketch over a 'term' column: bounded at
     HH_CAPACITY counters no matter how large the partition, emitting the
     surviving candidate terms once per partition."""
     counters: dict[str, int] = {}
     for pdf in batches:
-        for term in pdf["term"]:
-            if term in counters:
-                counters[term] += 1
-            elif len(counters) < HH_CAPACITY:
-                counters[term] = 1
-            else:
-                # decrement-all round; drop zeros (the classic MG step,
-                # amortized O(1) via dict rebuild)
-                counters = {t: c - 1 for t, c in counters.items() if c > 1}
+        counters = misra_gries_step(counters, pdf["term"], HH_CAPACITY)
     import pandas as pd
 
     yield pd.DataFrame({"term": list(counters.keys())})

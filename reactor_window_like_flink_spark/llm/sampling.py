@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.llm.text import _tokens
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -383,9 +384,7 @@ def q_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk-level dedup keys on (chunk_hash) exactly like
     ``q_dedup_exact`` keys on md5(text)."""
     docs = load(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
-    )
+    d = docs.select("doc_id", _tokens().alias("toks"))
     e = d.select(
         "doc_id",
         "toks",
@@ -639,9 +638,7 @@ def token_budget_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         "lang",
-        F.size(F.split(F.lower(F.col("text")), " ")).cast("long").alias(
-            "n_tokens"
-        ),
+        F.size(_tokens()).cast("long").alias("n_tokens"),
         pri.alias("pri"),
     )
 

@@ -755,8 +755,8 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @REG.add("q_knn_graph_auto")  # rows-only: auto-sized plan, corpus-size-
-# dependent by design; tools/scale_probe.py records recall@k vs a
-# driver-side exact kNN at sf0.1 and sf1.
+# dependent by design; its recall@k vs a driver-side exact kNN at sf0.1
+# and sf1 is in BASELINE.md "Round-11 auto-sized LSH probe".
 def q_knn_graph_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION-SIZED registration of ``knn_graph``: (bands, bits)
     jointly derived from the corpus count via ``auto_lsh_plan`` at

@@ -1704,8 +1704,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     list on single-node keys. At 100 TB the classic refinement is
     bucketing the edge list by source (the wedge join co-locates) —
     the layout the bucketed-table machinery already provides.
-    MEASURED (r15, `tools/scale_probe.py bucketed`, sf1 1.196M
-    oriented edges): bucketBy(32, src) halves executed-plan exchanges
+    MEASURED (r15, BASELINE.md "Round-15 bucketed-layout probe", sf1
+    1.196M oriented edges): bucketBy(32, src) halves executed-plan exchanges
     12 -> 6 and wall 5.11 -> 4.37 s for an identical 1,884,488-triangle
     count, with the 1.95 s layout build paid once and amortized over
     every src-keyed graph query."""

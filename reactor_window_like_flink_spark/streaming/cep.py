@@ -255,10 +255,15 @@ def not_followed_by_stateful(
         "pend_us array<long>, pend_id array<long>"
     )
 
+    # other types are dropped after the watermark, so they still advance
+    # it (see relaxed contiguity in followed_by_chain_stateful); a
+    # null-ts row that passes is kind -1, neither first nor absent
     tagged = (
         events_stream.select("user_id", "ts", "event_id", "event_type")
-        .filter(F.col("event_type").isin(first, absent))
         .withWatermark("ts", watermark_delay)
+        .filter(
+            F.col("event_type").isin(first, absent) | F.col("ts").isNull()
+        )
     )
 
     kind_of = {absent: 0, first: 1}  # the buf_first flag
@@ -275,9 +280,9 @@ def not_followed_by_stateful(
         wm_us, frontier, ready, buf = finalize(state, frontier, buf)
         out = []
         for e_us, e_id, e_first in zip(*ready):
-            if e_first:
+            if e_first == 1:
                 pend.append((e_us, e_id))
-            else:
+            elif e_first == 0:
                 # cancel every pending first this event follows inside
                 # the span: v_us < e_us <= v_us + span
                 pend = [(v, i) for v, i in pend if not v < e_us <= v + span]

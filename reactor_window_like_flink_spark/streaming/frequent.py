@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reactor_window_like_flink_spark.llm.retrieval import misra_gries_step
+
 OUTPUT_SCHEMA = "shard int, item string, lb_count long, n_seen long"
 STATE_SCHEMA = "sketch string, n_seen long"
 
@@ -62,16 +64,8 @@ def frequent_items_stateful(
         else:
             counters, n_seen = {}, 0
         for pdf in pdfs:
-            for item in pdf["item"]:
-                n_seen += 1
-                if item in counters:
-                    counters[item] += 1
-                elif len(counters) < capacity:
-                    counters[item] = 1
-                else:
-                    counters = {
-                        t: c - 1 for t, c in counters.items() if c > 1
-                    }
+            n_seen += len(pdf)
+            counters = misra_gries_step(counters, pdf["item"], capacity)
         state.update((json.dumps(counters), n_seen))
         if counters:
             yield pd.DataFrame(

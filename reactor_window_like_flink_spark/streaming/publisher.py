@@ -123,7 +123,9 @@ class FileStreamInput:
         10 producers) at ~340 events/s END TO END while the engine
         drained at ~90k events/s — the producers, not the stream, were
         the bottleneck; the reference's own floor is 5,000 events/s
-        (WindowPublisherTest.java:22-46, tools/throughput_probe.py).
+        (WindowPublisherTest.java:22-46; pinned by the soak test
+        ``tests/test_streaming.py::test_publisher_soak_reference_scale``
+        and measured by perfbench's ``stream_publish`` workload).
         Rows Spark accepts but arrow cannot convert fall back to the
         Spark-job path, same contract."""
         rows = list(rows)

@@ -103,8 +103,33 @@ def test_every_headline_key_has_a_bar():
 
 
 def test_guards_and_index_backed_reference_real_keys():
+    """Every key the bench and its tools name is a registered key: a
+    stale GUARD key would raise KeyError in ``bench.main``."""
+    import importlib.util
+
+    import __spark_entry__ as entry_mod
+
     assert set(GUARD.values()) <= set(HEADLINE)
     assert set(INDEX_BACKED) <= set(HEADLINE) | set(GUARD)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", os.path.join(root, "tools", "plan_audit.py")
+    )
+    plan_audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_audit)
+    with open(os.path.join(root, "tools", "bench_bar.json")) as f:
+        bars = json.load(f)
+    named = {
+        "HEADLINE": set(HEADLINE),
+        "GUARD": set(GUARD) | set(GUARD.values()),
+        "INDEX_BACKED": set(INDEX_BACKED),
+        "plan_audit.EXTRAS": set(plan_audit.EXTRAS),
+        "bench_bar.bar": set(bars["bar"]),
+        "bench_bar.first_commit": set(bars["first_commit"]),
+    }
+    keys = set(entry_mod.queries())
+    stale = {w: sorted(ks - keys) for w, ks in named.items() if ks - keys}
+    assert not stale, f"names that are not registered keys: {stale}"
 
 
 def test_failed_multicore_probe_records_null(monkeypatch):

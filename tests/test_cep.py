@@ -548,36 +548,51 @@ def test_quantified_state_survives_restart(spark, tmp_path):
 
 
 def test_chain_relaxed_watermark_advanced_by_non_pattern_rows(spark, tmp_path):
-    """Relaxed contiguity drops non-pattern types AFTER the watermark: a
-    sentinel whose type is in no stage still advances it, and the chain
-    it leaves behind emits."""
+    """The matchers that ignore other event types drop them AFTER the
+    watermark: a sentinel whose type no pattern reads still advances it,
+    so the relaxed chain it leaves behind emits and the pending view's
+    absence fires."""
     from reactor_window_like_flink_spark.streaming.cep import (
         followed_by_chain_stateful,
+        not_followed_by_stateful,
     )
 
-    src = FileStreamInput(spark, SCHEMA, str(tmp_path / "events"))
-    out = followed_by_chain_stateful(
-        src.stream(), ["a", "b"], watermark_delay="30 minutes"
-    )
-    query = (
-        out.writeStream.format("memory")
-        .queryName("t_cep_relaxed_wm")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        src.publish(
-            [(1, _ts(0), 1, "a", 0.0), (2, _ts(1), 1, "b", 0.0)]
+    cases = {
+        "chain": (
+            lambda s: followed_by_chain_stateful(
+                s, ["a", "b"], watermark_delay="30 minutes"
+            ),
+            [(1, _ts(0), 1, "a", 0.0), (2, _ts(1), 1, "b", 0.0)],
+            {(1, 1, 2, 60_000_000)},
+        ),
+        "absence": (
+            lambda s: not_followed_by_stateful(
+                s, watermark_delay="30 minutes", span_us=10 * 60 * 1_000_000
+            ).select("user_id", "view_id"),
+            [(1, _ts(0), 1, "view", 0.0)],
+            {(1, 1)},
+        ),
+    }
+    for name, (op, rows, want) in cases.items():
+        src = FileStreamInput(spark, SCHEMA, str(tmp_path / name / "events"))
+        query = (
+            op(src.stream()).writeStream.format("memory")
+            .queryName(f"t_cep_wm_{name}")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / name / "ckpt"))
+            .start()
         )
-        query.processAllAvailable()
-        src.publish(
-            [(9, _ts(0) + timedelta(hours=2), 99, "noise", 0.0)]
-        )
-        query.processAllAvailable()
-        got = {
-            tuple(r) for r in spark.sql("SELECT * FROM t_cep_relaxed_wm").collect()
-        }
-    finally:
-        query.stop()
-    assert got == {(1, 1, 2, 60_000_000)}
+        try:
+            src.publish(rows)
+            query.processAllAvailable()
+            src.publish(
+                [(9, _ts(0) + timedelta(hours=2), 99, "noise", 0.0)]
+            )
+            query.processAllAvailable()
+            got = {
+                tuple(r)
+                for r in spark.sql(f"SELECT * FROM t_cep_wm_{name}").collect()
+            }
+        finally:
+            query.stop()
+        assert got == want, name

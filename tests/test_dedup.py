@@ -86,29 +86,6 @@ def test_ngram_jaccard_matches_brute_force(spark, sf_dir, docs):
     assert got == truth
 
 
-def test_ngram_jaccard_arrow_kernel_bit_identical(spark, sf_dir):
-    """The vectorized-lexsort Arrow confirm kernel and the array_intersect
-    form are BIT-identical (not just pair-set-equal): intersection of
-    int64 hash sets has no float ambiguity, the kernel emits integer
-    counts only, and division+round stay in the same JVM expressions —
-    which is why both keys share one DuckDB oracle. (The measured kernel
-    choice — JVM intrinsic wins for variable-length set ops — is
-    documented on q_dedup_ngram_jaccard_arrow.)"""
-    exact = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in entry_mod.queries()["q_dedup_ngram_jaccard"](
-            spark, sf_dir
-        ).collect()
-    }
-    arrow = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in entry_mod.queries()["q_dedup_ngram_jaccard_arrow"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert arrow == exact
-
-
 def test_simhash_pairs_are_close(spark, sf_dir):
     """Every reported pair respects the Hamming bound; symmetry of the
     pigeonhole join (a<b) means no duplicates or self-pairs."""

@@ -211,6 +211,29 @@ def test_event_time_finalize_only_in_eventtime():
     assert not bad, f"event-time finalize outside streaming/eventtime.py: {bad}"
 
 
+def test_text_tokenized_only_in_text():
+    """One tokenizer: a ``split(lower(...))`` call appears only in
+    ``llm/text.py::_tokens``; every other site calls ``_tokens()``.
+    Oracle SQL strings are not Python calls, so they don't count."""
+    import ast
+
+    def name(func) -> str | None:
+        if isinstance(func, ast.Attribute):
+            return func.attr
+        return func.id if isinstance(func, ast.Name) else None
+
+    bad = [
+        where
+        for where, node in _package_nodes("llm/text.py")
+        if isinstance(node, ast.Call)
+        and name(node.func) == "split"
+        and node.args
+        and isinstance(node.args[0], ast.Call)
+        and name(node.args[0].func) == "lower"
+    ]
+    assert not bad, f"split(lower(...)) outside llm/text.py: {bad}"
+
+
 def test_fixture_tables_read_only_through_load():
     """Fixture tables are read only through ``sources/tables.py::load``
     (which memoizes their schemas): no ``.parquet(...)`` call elsewhere in

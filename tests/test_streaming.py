@@ -490,8 +490,10 @@ def test_publisher_soak_reference_scale(spark, tmp_path):
 
     # Reference floor: 50k events within 10 s (>= 5,000 events/s,
     # WindowPublisherTest.java:22-46). The r14 arrow admission path
-    # runs this in ~3 s (tools/throughput_probe.py: 16.5k events/s);
-    # the bound is 6x that so host-epoch swings can't flake it, while
+    # runs this in ~3 s (16.5k events/s, BASELINE.md "Round-14
+    # throughput parity"; perfbench's stream_publish workload holds the
+    # open-loop 5k events/s rate); the bound is 6x that so host-epoch
+    # swings can't flake it, while
     # still failing the pre-r14 regression class (a Spark job per
     # publish: 148 s end-to-end).
     assert wall < 60, f"soak took {wall:.1f}s — producer path regressed"

@@ -29,7 +29,6 @@ EXTRAS = (
     "q_corr_matrix",
     "q_similarity_join",
     "q_dedup_embedding",
-    "q_dedup_ngram_jaccard_arrow",
 )
 
 JOIN_NODES = [

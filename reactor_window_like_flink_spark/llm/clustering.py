@@ -9,28 +9,19 @@ survivor.
 
 Scale design:
 
-* **Min-label propagation** (each node repeatedly adopts the smallest
-  component id seen in its neighborhood) implemented as join + groupBy
-  rounds — every round is one shuffle keyed by node id, never an all-pairs
-  product. Rounds needed = graph diameter; near-dup clusters are
-  near-cliques (diameter 2-3), so the loop settles in a handful of rounds
-  even at corpus scale. For adversarial long-chain graphs the published
-  O(log n) alternative — large-star/small-star alternation (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC'14) — is
-  implemented as ``connected_components_star`` on the same join/groupBy
-  primitives and proven on a diameter-199 path the min-label loop cannot
-  close (tests/test_clustering.py).
-* **Driver controls only the loop**, data never leaves the cluster: the
-  per-round convergence signal is a single ``count()`` of changed labels,
-  and lineage is truncated every round with ``localCheckpoint`` so plans
-  stay O(1) deep instead of O(rounds). On a durable cluster use
-  ``checkpoint()`` (HDFS-backed) — ``localCheckpoint`` trades executor-loss
-  recovery for speed, the right call on local[32].
-* **One local finish for the iterative family** (``pagerank``,
-  ``label_propagation``, ``kcore``): one job sizes the materialized
-  adjacency, and a graph at or below ``LOCAL_FINISH_EDGES`` directed
+* **One local finish for the graph family** (``connected_components``,
+  ``pagerank``, ``label_propagation``, ``kcore``): each groups its edge
+  list once into a materialized adjacency (``_adjacency``), one job
+  sizes it, and a graph at or below ``LOCAL_FINISH_EDGES`` directed
   edges runs every round in one single-task numpy kernel
   (``_local_finish``); over the bound the distributed rounds run.
+* **Components over the bound** are large-star/small-star alternation
+  (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SoCC'14): O(log n) join + groupBy rounds whatever the graph's
+  diameter, each one shuffle keyed by node id, never an all-pairs
+  product. The driver reads only the per-round edge-set stability
+  check, and ``materialize`` truncates lineage every round so plans
+  stay O(1) deep instead of O(rounds).
 
 The pair graph comes from ``dedup.exact_jaccard_pairs`` (prefix-filtered
 exact word-bigram Jaccard, threshold 0.5) — deterministic and lossless, so
@@ -57,7 +48,7 @@ from reactor_window_like_flink_spark.sources.tables import load
 REG = Registry()
 
 GROUP_JACCARD_THRESHOLD = 0.5
-MAX_ROUNDS = 25
+MAX_ROUNDS = 25  # star-contraction rounds over the local-finish bound
 
 # DuckDB mirror of dedup._tokenized + _shingles_from_toks(2) pair generation
 # (same expression as the q_dedup_ngram_jaccard oracle, threshold 0.5).
@@ -82,17 +73,60 @@ _DUCK_PAIRS = """
 """
 
 
-def connected_components_star(
+def connected_components(
     edges: DataFrame, nodes: DataFrame, max_rounds: int = MAX_ROUNDS
 ) -> DataFrame:
-    """Connected components via large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round kernel for adversarial graphs whose
-    diameter defeats per-round label propagation (long chains, sparse
-    bridges). Returns ``(node, comp)`` with ``comp = min(node)``
-    reachable.
+    """Close an undirected edge list ``(u, v)`` over ``nodes (node)``
+    into components: ``(node, comp)`` for every node of ``nodes`` or
+    ``edges``, ``comp = min(node)`` reachable.
 
-    Round = two keyed groupBy/join passes over the edge list:
+    Each node enters as a self-loop, so the one sized ``_adjacency``
+    holds every node, isolated ones included. At or below
+    ``LOCAL_FINISH_EDGES`` the closure runs in one task
+    (``_components_kernel``), else at most ``max_rounds`` star rounds
+    (``_components_star_rounds``). The kernel's output is the whole
+    answer in one partition, so ``q_dedup_groups``'s size window over
+    it plans no exchange: 10 + 1 build + exec jobs at sf0.01, where a
+    left join of ``nodes`` to the labels measured 10 + 5."""
+    loops = nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
+    adj = _adjacency(edges.unionByName(loops))
+    _, two_m = _graph_size(adj)
+    labels = _local_finish(adj, two_m, _components_kernel, "node {t}, comp {t}")
+    if labels is None:
+        labels = _components_star_rounds(adj, max_rounds)
+    return labels
+
+
+def _components_kernel(batches):
+    """Single-task components over the (src, dst) rows: root hooking
+    with pointer jumping (Shiloach-Vishkin) until every row's ends share
+    a root. A root hooks only under a smaller one, so each root is its
+    tree's smallest index, i.e. smallest node id. Yields (node, comp)."""
+    import numpy as np
+    import pandas as pd
+
+    index = _edge_index(batches)
+    if index is None:
+        return
+    nodes, si, di = index
+    parent = np.arange(len(nodes))
+    while True:
+        # every node points at its root: hook each root under the
+        # smallest root across its rows
+        np.minimum.at(parent, parent[si], parent[di])
+        while not np.array_equal(grand := parent[parent], parent):
+            parent = grand
+        if np.array_equal(parent[si], parent[di]):
+            break
+    yield pd.DataFrame({"node": nodes, "comp": nodes[parent]})
+
+
+def _components_star_rounds(adj: DataFrame, max_rounds: int) -> DataFrame:
+    """The distributed rounds of ``connected_components`` (over-bound
+    side), large-star/small-star alternation (Kiveris et al., SoCC'14):
+    ``(node, comp)`` for every node of ``adj`` in O(log n) rounds
+    whatever the diameter. Round = two keyed groupBy/join passes over
+    the edge list ``src > dst`` read off the adjacency:
 
     * **large-star**: per node u with m = min(neighbors ∪ {u}), re-point
       every neighbor v > u at m — halves the height of tall subtrees.
@@ -101,22 +135,10 @@ def connected_components_star(
       flattens what large-star staged.
 
     The edge list contracts toward a star forest rooted at each
-    component's minimum; convergence is edge-set stability (a
-    ``subtract().isEmpty()`` check per round, same cost class as the
-    per-round shuffles). Each pass shuffles by node id only — no
-    all-pairs products — and ``localCheckpoint`` truncates lineage, so
-    the shape survives a 1000-executor graph. Prefer
-    ``connected_components`` (min-label) when components are known
-    near-cliques (dedup graphs: diameter 2-3); this kernel when diameter
-    is unknown or adversarial."""
-    # directed convention: src > dst, deduped
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .transform(materialize)
+    component's minimum; convergence is edge-set stability. Each pass
+    shuffles by node id only."""
+    e = adj.select("src", F.explode("dsts").alias("dst")).filter(
+        F.col("src") > F.col("dst")
     )
     for _ in range(max_rounds):
         # large-star over the symmetrized list: (v, m) for v > u
@@ -142,50 +164,17 @@ def connected_components_star(
             .distinct()
             .transform(materialize)
         )
-        if new.subtract(e).isEmpty() and e.subtract(new).isEmpty():
-            e = new
-            break
+        stable = new.subtract(e).isEmpty() and e.subtract(new).isEmpty()
         e = new
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_rounds} rounds")
-    # final star forest: every non-root points at its component root
-    roots = e.select(F.col("src").alias("node"), F.col("dst").alias("comp"))
-    return (
-        nodes.join(roots, "node", "left")
-        .select("node", F.coalesce("comp", "node").alias("comp"))
-    )
-
-
-def connected_components(
-    edges: DataFrame, nodes: DataFrame, max_rounds: int = MAX_ROUNDS
-) -> DataFrame:
-    """Close an undirected edge list ``(src, dst)`` over ``nodes (node)``
-    into components; returns ``(node, comp)`` with ``comp = min(node)``
-    reachable. Pure DataFrame ops — each round is one keyed shuffle.
-    Rounds needed = graph diameter, so use this for near-clique dedup
-    graphs; ``connected_components_star`` is the O(log n)-round kernel
-    for adversarial/long-chain graphs."""
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(materialize)  # reused every round
-    labels = materialize(nodes.select("node", F.col("node").alias("comp")))
-    for _ in range(max_rounds):
-        nbr = sym.join(labels, sym.src == labels.node).select(
-            F.col("dst").alias("node"), "comp"
-        )
-        new = materialize(
-            labels.union(nbr).groupBy("node").agg(F.min("comp").alias("comp"))
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"components did not converge in {max_rounds} rounds")
+        if stable:
+            # the star forest points every non-root at its root
+            forest = e.select(F.col("src").alias("node"), F.col("dst").alias("comp"))
+            return (
+                adj.select(F.col("src").alias("node"))
+                .join(forest, "node", "left")
+                .select("node", F.coalesce("comp", "node").alias("comp"))
+            )
+    raise RuntimeError(f"star contraction did not converge in {max_rounds} rounds")
 
 
 @REG.add(
@@ -218,7 +207,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``filter(~is_survivor)`` is the pipeline's drop list."""
     pairs = exact_jaccard_pairs(
         spark, sf_dir, GROUP_JACCARD_THRESHOLD, shingle_n=2
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     nodes = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
     comp = connected_components(pairs, nodes)
     out = comp.select(
@@ -272,18 +261,21 @@ def _graph_size(adj: DataFrame) -> tuple[int, int]:
     return row[0], row[1]
 
 
-# Local-finish bound of the iterative graph family (kcore, pagerank,
-# label_propagation): at or below this many directed edges the whole
-# iteration runs as ONE single-task numpy kernel instead of one or
+# Local-finish bound of the graph family (connected_components, kcore,
+# pagerank, label_propagation): at or below this many directed edges the
+# whole iteration runs as ONE single-task numpy kernel instead of one or
 # more Spark jobs per round. Peak RSS of the Python worker running each
 # kernel (``resource.getrusage`` inside it, worker baseline included)
 # on a random graph of 8.04M directed edges over 993,329 nodes, 4-vCPU
 # host: kcore peel 629 MiB, pagerank 629 MiB (both peak while indexing
 # the edge rows), label propagation 914 MiB (its per-round vote
-# ``np.unique``); all three fit a 1 GiB worker. Over the bound the
-# distributed rounds run unchanged: at 100 TB the gate does not fire,
-# so this is a size-adaptive final-stage collapse (the iterative
-# analog of a broadcast-join threshold), not a fixture shortcut.
+# ``np.unique``); all three fit a 1 GiB worker. The components kernel,
+# run outside Spark on 8.04M random directed edges over 999,658 nodes,
+# peaked at 743 MiB with its 301 MiB harness (imports and edge arrays)
+# included. Over the bound the distributed rounds run unchanged: at
+# 100 TB the gate does not fire, so this is a size-adaptive final-stage
+# collapse (the iterative analog of a broadcast-join threshold), not a
+# fixture shortcut.
 LOCAL_FINISH_EDGES = 8_000_000
 
 
@@ -303,7 +295,9 @@ def _local_finish(
     Measured on the registered co-purchase graph (sf0.1, build + exec
     jobs): pagerank 35 + 5 → 3 + 1, label propagation 10 + 8 → 3 + 1,
     kcore 6.87 s → 2.59 s (21 cascade rounds, identical 17,732-node
-    core)."""
+    core); ``q_dedup_groups`` (components of the near-duplicate pair
+    graph) 22 + 2 → 10 + 1 at sf0.001, sf0.01 and sf0.1, identical
+    groups."""
     if two_m > LOCAL_FINISH_EDGES:
         return None
     t = adj.schema["src"].dataType.simpleString()
@@ -526,7 +520,7 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     consensus on the near-clique communities this tier targets —
     communities form in 2-3 hops).
 
-    Unlike min-label ``connected_components`` (which floods one label
+    Unlike ``connected_components`` (which floods one label
     over everything reachable and answers "is A transitively tied to
     B"), LPA stops label takeover at the density boundary: a label
     needs majority support among a node's neighbors to cross, so two

@@ -1088,7 +1088,9 @@ def ivfpq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         path = tempfile.mkdtemp(prefix="ivfpq_index_")
         partitioned_write(joined, path, ["cell"])
-        return path, spark.read.parquet(path)
+        # the writer's schema (``cell`` is already last, where the reader
+        # puts a partition column): no schema-inference job
+        return path, spark.read.schema(joined.schema).parquet(path)
 
     def release(hit: tuple[str, DataFrame]) -> None:
         shutil.rmtree(hit[0], ignore_errors=True)

@@ -14,7 +14,7 @@ no analytics surface; north-star scope from BASELINE.json.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
@@ -2531,22 +2531,31 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise runs the whole rows × B draw on ONE input split (measured
     8.1 -> 1.3 s solo at sf0.1). ``q_bootstrap_ci_fast`` is the
     digest-cheap twin (one md5 per row + counter mixer)."""
+    return _bootstrap_ci(spark, sf_dir, F.col("event_id"), _BOOT_U_SPARK)
+
+
+def _bootstrap_ci(
+    spark: SparkSession, sf_dir: str, seed: Column, u_expr: str
+) -> DataFrame:
+    """The tree both bootstrap keys share: the one-row base estimate
+    crossed with the percentile CI of the ``BOOT_B`` Poissonized
+    replicate means. ``seed`` is the per-row column of ``events`` the
+    draw reads and ``u_expr`` the SQL uniform over it and the replicate
+    id ``b``."""
     events = load(spark, sf_dir, "events")
     # spread the few-file scan across all cores BEFORE the B-way fan-out
     # (the llm/dedup._tokenized device): without it the 10M-cell draw
     # runs on the scan's single input split
-    base_rows = events.select("event_id", "value").repartition(
+    base_rows = events.select(seed, "value").repartition(
         spark.sparkContext.defaultParallelism
     )
     rep = base_rows.select(
-        "event_id", "value", F.explode(F.expr(f"sequence(0, {BOOT_B - 1})")).alias("b")
+        "*", F.explode(F.expr(f"sequence(0, {BOOT_B - 1})")).alias("b")
     )
-    # materialize the weight ONCE per exploded row: the md5+ladder is the
+    # materialize the weight ONCE per exploded row: the draw is the
     # dominant cost and Spark does not CSE it across the two aggregate
     # expressions (measured ~2x at sf0.1)
-    rep = rep.select(
-        "b", "value", F.expr(_poisson_case(_BOOT_U_SPARK)).alias("w")
-    )
+    rep = rep.select("b", "value", F.expr(_poisson_case(u_expr)).alias("w"))
     means = rep.groupBy("b").agg(
         round_to(F.sum(F.col("w") * F.col("value")) / F.sum("w"), 6).alias("m")
     )
@@ -2663,36 +2672,9 @@ def q_bootstrap_ci_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to q_bootstrap_ci; wall cost drops by the
     digest share (measured 8.1 -> 2.1 s solo at sf0.1 with the fan-out
     repartitioned across cores)."""
-    events = load(spark, sf_dir, "events")
-    seeded = events.select(
-        F.expr(_H0_SPARK).cast("long").alias("h0"), "value"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    rep = seeded.select(
-        "h0",
-        "value",
-        F.explode(F.expr(f"sequence(0, {BOOT_B - 1})")).alias("b"),
-    ).select(
-        "b", "value", F.expr(_poisson_case(_fast_u("spark"))).alias("w")
+    return _bootstrap_ci(
+        spark, sf_dir, F.expr(_H0_SPARK).cast("long").alias("h0"), _fast_u("spark")
     )
-    means = rep.groupBy("b").agg(
-        round_to(F.sum(F.col("w") * F.col("value")) / F.sum("w"), 6).alias("m")
-    )
-    ranked = means.select(
-        "m", F.row_number().over(Window.orderBy("m", "b")).alias("r")
-    )
-    ci = ranked.agg(
-        F.min(F.when(F.col("r") == BOOT_LO_RANK, F.col("m"))).alias("ci_lo"),
-        F.min(F.when(F.col("r") == BOOT_HI_RANK, F.col("m"))).alias("ci_hi"),
-    )
-    base = events.agg(
-        F.count("*").cast("long").alias("n_events"),
-        round_to(F.avg("value"), 6).alias("est_mean"),
-    ).select(
-        "n_events",
-        F.lit(BOOT_B).cast("long").alias("boot_b"),
-        "est_mean",
-    )
-    return base.crossJoin(F.broadcast(ci))
 
 
 CUPED_SPLIT = "2024-01-16"  # pre-period covariate | post-period metric

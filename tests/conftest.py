@@ -33,3 +33,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def gate_sides(monkeypatch):
+    """Runs a graph algorithm on both sides of the local-finish gate:
+    ``sides(fn)`` -> {"local": rows, "distributed": rows}, asserting
+    each side took its path (one ``MapInPandas`` kernel, or none). The
+    distributed side sets the bound to -1, below every graph's edge
+    count, the empty graph's 0 included."""
+    from reactor_window_like_flink_spark.llm import clustering
+    from reactor_window_like_flink_spark.plans import node_counts
+
+    def sides(fn):
+        out = {}
+        for side, bound in (("local", clustering.LOCAL_FINISH_EDGES), ("distributed", -1)):
+            monkeypatch.setattr(clustering, "LOCAL_FINISH_EDGES", bound)
+            df = fn()
+            kernels = node_counts(df)["MapInPandas"]
+            assert kernels == (side == "local"), (side, kernels)
+            out[side] = df.collect()
+        monkeypatch.undo()
+        return out
+
+    return sides

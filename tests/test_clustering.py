@@ -12,7 +12,6 @@ import __spark_entry__ as entry_mod
 from reactor_window_like_flink_spark.llm.clustering import (
     GROUP_JACCARD_THRESHOLD,
     connected_components,
-    connected_components_star,
 )
 
 
@@ -32,52 +31,35 @@ def _union_find_groups(n_nodes: set[int], edges: list[tuple[int, int]]):
     return {v: find(v) for v in n_nodes}
 
 
-def test_component_kernel_transitive_chain(spark):
+def test_component_kernel_transitive_chain(spark, gate_sides):
     """A-B-C chain (A,C never share an edge) collapses to one component;
-    isolated node stays a singleton."""
-    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+    isolated node stays a singleton. On both sides of the gate."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "u long, v long")
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 99)], "node long")
-    got = {
-        r["node"]: r["comp"] for r in connected_components(edges, nodes).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
+    for side, rows in gate_sides(lambda: connected_components(edges, nodes)).items():
+        got = {r["node"]: r["comp"] for r in rows}
+        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}, side
 
 
-def test_star_kernel_matches_label_propagation(spark):
-    """Both kernels agree on a mixed graph (chain + clique + singletons)."""
-    raw = [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)]
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 21, 99)], "node long"
-    )
-    label = {
-        r["node"]: r["comp"] for r in connected_components(edges, nodes).collect()
-    }
-    star = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(edges, nodes).collect()
-    }
-    assert star == label
-    assert star[99] == 99  # isolated node survives as its own component
+def test_star_kernel_handles_adversarial_chain(spark, gate_sides, monkeypatch):
+    """A 200-node path has diameter 199, so per-round label propagation
+    would need 199 rounds. Both sides close it: the local kernel by
+    pointer jumping, star contraction within 12 of its O(log n) rounds.
+    Over the bound, ``max_rounds`` still stops a contraction that has
+    not converged."""
+    from reactor_window_like_flink_spark.llm import clustering
 
-
-def test_star_kernel_handles_adversarial_chain(spark):
-    """A 200-node path has diameter 199: per-round label propagation
-    cannot close it within MAX_ROUNDS (it would need 199 rounds), while
-    star contraction converges in O(log n) rounds. This is the named
-    adversarial case the star kernel exists for."""
     n = 200
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+        [(i, i + 1) for i in range(n - 1)], "u long, v long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    sides = gate_sides(lambda: connected_components(edges, nodes, max_rounds=12))
+    for side, rows in sides.items():
+        assert {r["node"]: r["comp"] for r in rows} == {i: 0 for i in range(n)}, side
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_EDGES", -1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, max_rounds=5)
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(edges, nodes, max_rounds=12).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
+        connected_components(edges, nodes, max_rounds=3)
 
 
 def test_dedup_groups_match_union_find(spark, sf_dir):
@@ -163,30 +145,6 @@ def _pagerank_reference(edges):
     return {x: rhalf(r[x], 6) for x in nodes}
 
 
-@pytest.fixture
-def gate_sides(monkeypatch):
-    """Runs a graph algorithm on both sides of the local-finish gate:
-    ``sides(fn)`` -> {"local": rows, "distributed": rows}, asserting
-    each side took its path (one ``MapInPandas`` kernel, or none). The
-    distributed side sets the bound to -1, below every graph's edge
-    count, the empty graph's 0 included."""
-    from reactor_window_like_flink_spark.llm import clustering
-    from reactor_window_like_flink_spark.plans import node_counts
-
-    def sides(fn):
-        out = {}
-        for side, bound in (("local", clustering.LOCAL_FINISH_EDGES), ("distributed", -1)):
-            monkeypatch.setattr(clustering, "LOCAL_FINISH_EDGES", bound)
-            df = fn()
-            kernels = node_counts(df)["MapInPandas"]
-            assert kernels == (side == "local"), (side, kernels)
-            out[side] = df.collect()
-        monkeypatch.undo()
-        return out
-
-    return sides
-
-
 def test_pagerank_matches_sequential_reference(spark, gate_sides):
     """PageRank equals a power iteration on the same symmetrized graph
     (same damping, same iteration count, same uniform start) to 1e-6
@@ -254,7 +212,6 @@ def test_lpa_keeps_planted_communities_components_would_merge(spark):
     collapse everything into one group; LPA must keep two communities
     (the bridge label lacks majority support to cross)."""
     from reactor_window_like_flink_spark.llm.clustering import (
-        connected_components,
         label_propagation,
     )
     from pyspark.sql import functions as F
@@ -273,12 +230,7 @@ def test_lpa_keeps_planted_communities_components_would_merge(spark):
     assert {comm[i] for i in range(10, 18)} == {comm[10]}
     assert comm[0] != comm[10]
 
-    comps = connected_components(
-        df.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        df.select(F.col("u").alias("node"))
-        .union(df.select(F.col("v").alias("node")))
-        .distinct(),
-    )
+    comps = connected_components(df, df.select(F.col("u").alias("node")))
     assert comps.select("comp").distinct().count() == 1
 
 
@@ -369,11 +321,12 @@ def _star():
 
 
 @pytest.mark.parametrize("graph", ["multigraph", "star", "empty"])
-@pytest.mark.parametrize("algo", ["pagerank", "lpa", "kcore"])
+@pytest.mark.parametrize("algo", ["pagerank", "lpa", "kcore", "components"])
 def test_graph_family_equal_on_both_sides_of_the_gate(spark, gate_sides, algo, graph):
     """Each algorithm of the local-finish family equals its sequential
     reference on both sides of the gate, on a multigraph with a
-    self-loop, on a hot-key star and on an empty graph."""
+    self-loop, on a hot-key star and on an empty graph. Components get
+    no ``nodes``: every edge endpoint is labeled all the same."""
     from reactor_window_like_flink_spark.llm.clustering import (
         LPA_ROUNDS,
         kcore,
@@ -387,8 +340,13 @@ def test_graph_family_equal_on_both_sides_of_the_gate(spark, gate_sides, algo, g
         fn, want = (lambda: pagerank(df)), _pagerank_reference(edges)
     elif algo == "lpa":
         fn, want = (lambda: label_propagation(df)), _lpa_reference(edges, LPA_ROUNDS)
-    else:
+    elif algo == "kcore":
         fn, want = (lambda: kcore(df, k=2)), _kcore_reference(edges, 2)
+    else:
+        no_nodes = spark.createDataFrame([], "node long")
+        fn, want = (lambda: connected_components(df, no_nodes)), _union_find_groups(
+            {x for e in edges for x in e}, edges
+        )
     for side, rows in gate_sides(fn).items():
         got = {r[0]: r[1] for r in rows}
         if algo == "pagerank":
@@ -410,17 +368,28 @@ def test_kcore_key_counts(spark, sf_dir):
     assert (r["build_jobs"], r["jobs"]) == (3, 1), r
 
 
-@pytest.mark.parametrize("name", ["q_pagerank", "q_communities_lpa"])
-def test_pagerank_and_lpa_key_counts(spark, sf_dir, name):
-    """Below the edge bound both keys build like ``q_kcore`` (3 jobs)
-    and write in one job: the single-task kernel, and for LPA the
-    ``community_size`` window over its single partition, no exchange."""
+# (build_jobs, jobs) at sf0.001 of the keys that finish in one task
+# below the edge bound
+_LOCAL_FINISH_KEY_COUNTS = {
+    "q_pagerank": (3, 1),
+    "q_communities_lpa": (3, 1),
+    "q_dedup_groups": (10, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(_LOCAL_FINISH_KEY_COUNTS))
+def test_local_finish_key_counts(spark, sf_dir, name):
+    """Below the edge bound ``q_pagerank`` and ``q_communities_lpa``
+    build like ``q_kcore`` (3 jobs); ``q_dedup_groups`` builds its pair
+    frame first. Each writes in one job: the single-task kernel, and
+    for LPA and the dedup groups the size window over its single
+    partition, no exchange."""
     from reactor_window_like_flink_spark.observe import run
 
     key = entry_mod.queries()[name]
     key(spark, sf_dir)
     r = run(spark, lambda: key(spark, sf_dir))
-    assert (r["build_jobs"], r["jobs"]) == (3, 1), r
+    assert (r["build_jobs"], r["jobs"]) == _LOCAL_FINISH_KEY_COUNTS[name], r
 
 
 def test_kcore_keeps_clique_peels_tendrils(spark):

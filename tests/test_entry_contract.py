@@ -234,6 +234,41 @@ def test_text_tokenized_only_in_text():
     assert not bad, f"split(lower(...)) outside llm/text.py: {bad}"
 
 
+def test_single_task_kernel_only_in_local_finish():
+    """One local-finish rule: a ``.mapInPandas`` over a ``.coalesce(1)``
+    frame (a whole-input kernel in one task) appears only in
+    ``llm/clustering.py::_local_finish``, behind its edge bound."""
+    import ast
+
+    def single_task_kernel(node) -> bool:
+        return (
+            _method_call(node, "mapInPandas")
+            and _method_call(inner := node.func.value, "coalesce")
+            and [getattr(a, "value", None) for a in inner.args] == [1]
+        )
+
+    def outside_local_finish(node):
+        for child in ast.iter_child_nodes(node):
+            if not (isinstance(child, ast.FunctionDef) and child.name == "_local_finish"):
+                yield child
+                yield from outside_local_finish(child)
+
+    helper = os.path.join(_REPO, _PACKAGE, "llm", "clustering.py")
+    with open(helper) as f:
+        tree = ast.parse(f.read())
+    bad = [
+        f"llm/clustering.py:{node.lineno}"
+        for node in outside_local_finish(tree)
+        if single_task_kernel(node)
+    ] + [
+        where
+        for where, node in _package_nodes("llm/clustering.py")
+        if single_task_kernel(node)
+    ]
+    assert any(single_task_kernel(node) for node in ast.walk(tree)), "rule sees no site"
+    assert not bad, f".coalesce(1).mapInPandas(...) outside _local_finish: {bad}"
+
+
 def test_fixture_tables_read_only_through_load():
     """Fixture tables are read only through ``sources/tables.py::load``
     (which memoizes their schemas): no ``.parquet(...)`` call elsewhere in

@@ -18,10 +18,7 @@ import hashlib
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from reactor_window_like_flink_spark.llm.clustering import (
-    connected_components,
-    connected_components_star,
-)
+from reactor_window_like_flink_spark.llm.clustering import connected_components
 from reactor_window_like_flink_spark.llm.dedup import prefix_jaccard_join
 from reactor_window_like_flink_spark.llm.sampling import pack_token_stream
 
@@ -66,19 +63,16 @@ def graphs(draw):
 
 @SETTINGS
 @given(graphs())
-def test_cc_kernels_match_union_find(spark, g):
+def test_cc_kernels_match_union_find(spark, gate_sides, g):
+    """Both sides of the local-finish gate: the single-task kernel and
+    the star-contraction rounds."""
     nodes, edges = g
     truth = _union_find(nodes, edges)
     nodes_df = spark.createDataFrame([(v,) for v in nodes], "node long")
-    edges_df = spark.createDataFrame(
-        edges or [(0, 0)], "src long, dst long"
-    ).filter("src != dst")
-    for kernel in (connected_components, connected_components_star):
-        got = {
-            r["node"]: r["comp"]
-            for r in kernel(edges_df, nodes_df, max_rounds=30).collect()
-        }
-        assert got == truth, kernel.__name__
+    edges_df = spark.createDataFrame(edges, "u long, v long")
+    sides = gate_sides(lambda: connected_components(edges_df, nodes_df, max_rounds=30))
+    for side, rows in sides.items():
+        assert {r["node"]: r["comp"] for r in rows} == truth, side
 
 
 @SETTINGS

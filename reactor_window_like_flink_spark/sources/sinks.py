@@ -1,6 +1,7 @@
-"""Sink surface (SURVEY.md §2 Part B "sinks" row): parquet (partitioned),
-CSV/JSON, memory, and the streaming ``foreachBatch`` path already
-exposed by ``streaming.publisher``.
+"""Sink surface (SURVEY.md §2 Part B "sinks" row): the bounded memory
+table and the exactly-once ``foreachBatch`` file sink. File formats are
+Spark's own writers (``df.write.parquet``/``.orc``/``.csv``/``.json``);
+the partitioned parquet layout is ``sources/layout.py::partitioned_write``.
 
 The reference's only sink is a consumer callback fed by a thread pool
 (``WindowPublisher.java:132-169``); here sinks are Spark writers, so
@@ -10,49 +11,9 @@ and the file-commit protocol instead of a SynchronousQueue.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 
 from reactor_window_like_flink_spark.functions.materialize import collect_bounded
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Parquet sink. ``partition_by`` produces hive-style directory
-    partitioning — the layout that turns downstream equality filters on
-    those columns into partition pruning (the single biggest scan lever at
-    100 TB). Writer-side, low-cardinality keys only: each task fans out
-    one file per (task, partition-value) pair."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink with the same hive-style partitioning lever as parquet."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 MEMORY_TABLE_MAX_ROWS = 100_000

@@ -18,6 +18,8 @@ property, counters are plain sums).
 Emission: after each micro-batch that touched a key, one row per probe
 item: (key, item, cms_est, n_seen). outputMode update — downstream
 reads latest-per-(key, item).
+The state rule, one fold of the key's whole micro-batch per trigger, is
+``streaming/keyed.py::keyed_sketch``.
 
 Reference parity note: the reference (``WindowPublisher.java``) has no
 aggregation surface; this extends its streaming core the same way the
@@ -27,9 +29,8 @@ Part B relational surface does (SURVEY.md §2, A10).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterable
-from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -39,6 +40,7 @@ from reactor_window_like_flink_spark.llm.retrieval import (
     CMS_DEPTH,
     CMS_WIDTH,
 )
+from reactor_window_like_flink_spark.streaming.keyed import keyed_sketch
 
 OUTPUT_SCHEMA = "key string, item string, cms_est long, n_seen long"
 STATE_SCHEMA = "counters array<long>, n long"
@@ -73,62 +75,41 @@ def continuous_cms(
         for p in probes
     }
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: Any
-    ) -> Iterable[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            counters_l, n = state.get
-            counters = np.asarray(counters_l, dtype="int64")
-        else:
-            counters = np.zeros(depth * width, dtype="int64")
-            n = 0
-        touched = False
-        # memo the per-item flat cell ids within this key's batch stream
+    def fold(state: tuple, rows: pd.DataFrame) -> tuple:
+        counters_l, n = state
+        counters = np.asarray(counters_l, dtype="int64")
+        # memo the per-item flat cell ids within this key's micro-batch
         # (Zipf: the same items recur; md5 per occurrence would dominate)
         cells: dict[str, list[int]] = {}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            touched = True
-            for item in pdf["item"]:
-                ids = cells.get(item)
-                if ids is None:
-                    ids = [
-                        d * width + cms_bucket(item, d, width)
-                        for d in range(depth)
-                    ]
-                    cells[item] = ids
-                counters[ids] += 1
-                n += 1
-        state.update(([int(c) for c in counters], int(n)))
-        if touched:
-            out = [
-                (
-                    key[0],
-                    p,
-                    int(min(counters[i] for i in ids)),
-                    int(n),
-                )
-                for p, ids in probe_cells.items()
-            ]
-            yield pd.DataFrame(
-                out, columns=["key", "item", "cms_est", "n_seen"]
-            )
+        for item in rows["item"]:
+            ids = cells.get(item)
+            if ids is None:
+                ids = [
+                    d * width + cms_bucket(item, d, width)
+                    for d in range(depth)
+                ]
+                cells[item] = ids
+            counters[ids] += 1
+            n += 1
+        return [int(c) for c in counters], int(n)
 
-    return (
+    def emit(key: str, state: tuple) -> pd.DataFrame:
+        counters, n = state
+        out = [
+            (key, p, int(min(counters[i] for i in ids)), int(n))
+            for p, ids in probe_cells.items()
+        ]
+        return pd.DataFrame(out, columns=["key", "item", "cms_est", "n_seen"])
+
+    return keyed_sketch(
         stream_df.select(
             F.col(key_col).cast("string").alias("key"),
             F.col(item_col).cast("string").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-        .groupBy("key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        ).filter(F.col("item").isNotNull()),
+        "key",
+        state_schema=STATE_SCHEMA,
+        output_schema=OUTPUT_SCHEMA,
+        init=([0] * (depth * width), 0),
+        fold=fold,
+        emit=emit,
     )

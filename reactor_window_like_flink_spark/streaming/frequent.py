@@ -15,7 +15,9 @@ groupBy(term).count() would grow state with lifetime cardinality.
 Emission: after each micro-batch that touched a shard, the shard emits
 its full current sketch (outputMode update downstream reads
 latest-per-(shard, item)); ``n_seen`` rides along so consumers can apply
-the error bound. State serializes as JSON — a few KB per shard row.
+the error bound. State serializes as JSON — a few KB per shard row. The
+state rule, one fold of the shard's whole micro-batch per trigger, is
+``streaming/keyed.py::keyed_sketch``.
 
 Reference parity note: the reference (``WindowPublisher.java``) has no
 frequency surface; this extends its streaming core the same way the Part
@@ -25,8 +27,6 @@ B relational surface does (SURVEY.md §2, A10).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable
-from typing import Any
 
 import pandas as pd
 
@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.llm.retrieval import misra_gries_step
+from reactor_window_like_flink_spark.streaming.keyed import keyed_sketch
 
 OUTPUT_SCHEMA = "shard int, item string, lb_count long, n_seen long"
 STATE_SCHEMA = "sketch string, n_seen long"
@@ -55,29 +56,24 @@ def frequent_items_stateful(
     counter — a lower bound within [true - n_seen/(capacity+1), true].
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: Any
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            sketch_json, n_seen = state.get
-            counters: dict[str, int] = json.loads(sketch_json)
-        else:
-            counters, n_seen = {}, 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            counters = misra_gries_step(counters, pdf["item"], capacity)
-        state.update((json.dumps(counters), n_seen))
-        if counters:
-            yield pd.DataFrame(
-                {
-                    "shard": [key[0]] * len(counters),
-                    "item": list(counters.keys()),
-                    "lb_count": list(counters.values()),
-                    "n_seen": [n_seen] * len(counters),
-                }
-            )
+    def fold(state: tuple, rows: pd.DataFrame) -> tuple:
+        sketch_json, n_seen = state
+        counters = misra_gries_step(json.loads(sketch_json), rows["item"], capacity)
+        return json.dumps(counters), n_seen + len(rows)
 
-    return (
+    def emit(shard: int, state: tuple) -> pd.DataFrame:
+        sketch_json, n_seen = state
+        counters: dict[str, int] = json.loads(sketch_json)
+        return pd.DataFrame(
+            {
+                "shard": [shard] * len(counters),
+                "item": list(counters.keys()),
+                "lb_count": list(counters.values()),
+                "n_seen": [n_seen] * len(counters),
+            }
+        )
+
+    return keyed_sketch(
         stream_df.select(
             F.pmod(F.xxhash64(F.col(item_col)), F.lit(n_shards))
             .cast("int")
@@ -87,13 +83,11 @@ def frequent_items_stateful(
         # a NULL item is "no observation", not a countable token: the JSON
         # state round-trip would coerce a None counter key to the string
         # "null", silently merging nulls with that literal token
-        .filter(F.col("item").isNotNull())
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        .filter(F.col("item").isNotNull()),
+        "shard",
+        state_schema=STATE_SCHEMA,
+        output_schema=OUTPUT_SCHEMA,
+        init=("{}", 0),
+        fold=fold,
+        emit=emit,
     )

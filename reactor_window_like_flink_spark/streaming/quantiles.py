@@ -21,7 +21,8 @@ exactly the batch histogram's numbers (asserted by
 
 Emission: after each micro-batch that touched a key, the key emits one
 row per requested quantile (outputMode update downstream reads
-latest-per-(key, q)).
+latest-per-(key, q)). The state rule, one fold of the key's whole
+micro-batch per trigger, is ``streaming/keyed.py::keyed_sketch``.
 
 Reference parity note: the reference (``WindowPublisher.java``) has no
 aggregation surface; this extends its streaming core the same way the
@@ -30,13 +31,13 @@ Part B relational surface does (SURVEY.md §2, A10).
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-from typing import Any
-
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from reactor_window_like_flink_spark.streaming.keyed import keyed_sketch
 
 OUTPUT_SCHEMA = (
     "key string, q double, est double, n_seen long, n_clamped long"
@@ -67,56 +68,41 @@ def continuous_quantiles(
         raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
     width = (hi - lo) / n_bins
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: Any
-    ) -> Iterable[pd.DataFrame]:
-        import numpy as np
+    def fold(state: tuple, rows: pd.DataFrame) -> tuple:
+        bins_l, n, n_clamped = state
+        bins = np.asarray(bins_l, dtype="int64")
+        v = rows["value"].to_numpy(dtype="float64")
+        idx = np.floor((v - lo) / width).astype("int64")
+        n_clamped += int(((idx < 0) | (idx >= n_bins)).sum())
+        idx = np.clip(idx, 0, n_bins - 1)
+        bins += np.bincount(idx, minlength=n_bins)
+        return [int(b) for b in bins], int(n + len(v)), int(n_clamped)
 
-        if state.exists:
-            bins_l, n, n_clamped = state.get
-            bins = np.asarray(bins_l, dtype="int64")
-        else:
-            bins = np.zeros(n_bins, dtype="int64")
-            n, n_clamped = 0, 0
-        touched = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            touched = True
-            v = pdf["value"].to_numpy(dtype="float64")
-            idx = np.floor((v - lo) / width).astype("int64")
-            n_clamped += int(((idx < 0) | (idx >= n_bins)).sum())
-            idx = np.clip(idx, 0, n_bins - 1)
-            bins += np.bincount(idx, minlength=n_bins)
-            n += len(v)
-        state.update(([int(b) for b in bins], int(n), int(n_clamped)))
-        if touched and n:
-            cum = np.cumsum(bins)
-            out = []
-            for q in qs:
-                target = q * n
-                b = int(np.searchsorted(cum, target, side="left"))
-                before = int(cum[b - 1]) if b else 0
-                est = lo + width * (b + (target - before) / int(bins[b]))
-                out.append((key[0], q, round(est, 4), n, n_clamped))
-            yield pd.DataFrame(
-                out, columns=["key", "q", "est", "n_seen", "n_clamped"]
-            )
+    def emit(key: str, state: tuple) -> pd.DataFrame:
+        bins, n, n_clamped = state
+        cum = np.cumsum(bins)
+        out = []
+        for q in qs:
+            target = q * n
+            b = int(np.searchsorted(cum, target, side="left"))
+            before = int(cum[b - 1]) if b else 0
+            est = lo + width * (b + (target - before) / int(bins[b]))
+            out.append((key, q, round(est, 4), n, n_clamped))
+        return pd.DataFrame(
+            out, columns=["key", "q", "est", "n_seen", "n_clamped"]
+        )
 
-    return (
+    return keyed_sketch(
         stream_df.select(
             F.col(key_col).cast("string").alias("key"),
             F.col(value_col).cast("double").alias("value"),
-        )
-        .filter(F.col("value").isNotNull())
-        .groupBy("key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        ).filter(F.col("value").isNotNull()),
+        "key",
+        state_schema=STATE_SCHEMA,
+        output_schema=OUTPUT_SCHEMA,
+        init=([0] * n_bins, 0, 0),
+        fold=fold,
+        emit=emit,
     )
 
 
@@ -142,11 +128,12 @@ def continuous_quantiles_kll(
     construction-time [lo, hi] contract, no clamping, rank error
     ~O(1/k) of the running count on ANY value distribution.
 
-    Per micro-batch per key: build a fresh deterministic KLL over the
-    batch's values in ``order_cols`` order, MERGE it into the key's
-    state sketch, emit one row per requested quantile. Merging a
-    per-batch sketch (rather than extending the state sketch value by
-    value) makes the streaming state EQUAL to the batch rollup's
+    Per micro-batch per key: build ONE fresh deterministic KLL over the
+    key's whole micro-batch in ``order_cols`` order (however many Arrow
+    batches Spark splits it into), MERGE it into the key's state
+    sketch, emit one row per requested quantile. Merging a
+    per-micro-batch sketch (rather than extending the state sketch value
+    by value) makes the streaming state EQUAL to the batch rollup's
     merge-in-chunk-order result whenever micro-batches align with the
     batch rollup's chunks — the replay-equivalence contract
     ``tests/test_sketches_stream.py`` asserts day-aligned. State per
@@ -160,47 +147,31 @@ def continuous_quantiles_kll(
 
     kk = KLL_K if k is None else k
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: Any
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            n, levels, coins = state.get
-            acc = KLLSketch.from_row(n, levels, coins, kk)
-        else:
-            acc = KLLSketch(kk)
-        touched = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            touched = True
-            pdf = pdf.sort_values(order_cols, kind="mergesort")
-            batch = KLLSketch(kk)
-            batch.extend(pdf["value"].to_numpy())
-            acc.merge(batch)
-        n, levels, coins = acc.to_row()
-        state.update((n, levels, coins))
-        if touched and acc.n:
-            yield pd.DataFrame(
-                [
-                    (key[0], q, round(acc.quantile(q), 4), acc.n)
-                    for q in qs
-                ],
-                columns=["key", "q", "est", "n_seen"],
-            )
+    def fold(state: tuple, rows: pd.DataFrame) -> tuple:
+        acc = KLLSketch.from_row(*state, kk)
+        batch = KLLSketch(kk)
+        batch.extend(rows["value"].to_numpy())
+        acc.merge(batch)
+        return acc.to_row()
 
-    return (
+    def emit(key: str, state: tuple) -> pd.DataFrame:
+        acc = KLLSketch.from_row(*state, kk)
+        return pd.DataFrame(
+            [(key, q, round(acc.quantile(q), 4), acc.n) for q in qs],
+            columns=["key", "q", "est", "n_seen"],
+        )
+
+    return keyed_sketch(
         stream_df.select(
             F.col(key_col).cast("string").alias("key"),
             F.col(value_col).cast("double").alias("value"),
             *order_cols,
-        )
-        .filter(F.col("value").isNotNull())
-        .groupBy("key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=KLL_OUTPUT_SCHEMA,
-            stateStructType=KLL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        ).filter(F.col("value").isNotNull()),
+        "key",
+        state_schema=KLL_STATE_SCHEMA,
+        output_schema=KLL_OUTPUT_SCHEMA,
+        init=KLLSketch(kk).to_row(),
+        fold=fold,
+        emit=emit,
+        order_by=order_cols,
     )

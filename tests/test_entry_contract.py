@@ -211,6 +211,30 @@ def test_event_time_finalize_only_in_eventtime():
     assert not bad, f"event-time finalize outside streaming/eventtime.py: {bad}"
 
 
+def test_keyed_sketch_state_only_in_keyed():
+    """One keyed-sketch state rule: an ``applyInPandasWithState`` call
+    whose ``timeoutConf`` is the literal ``"NoTimeout"`` appears only in
+    ``streaming/keyed.py::keyed_sketch``. A computed ``timeoutConf`` (the
+    TTL switch of ``joins.py::temporal_join``) is not this rule's."""
+    import ast
+
+    def no_timeout(node) -> bool:
+        if not _method_call(node, "applyInPandasWithState"):
+            return False
+        conf = next(
+            (kw.value for kw in node.keywords if kw.arg == "timeoutConf"),
+            node.args[4] if len(node.args) > 4 else None,
+        )
+        return isinstance(conf, ast.Constant) and conf.value == "NoTimeout"
+
+    bad = [
+        where
+        for where, node in _package_nodes("streaming/keyed.py")
+        if no_timeout(node)
+    ]
+    assert not bad, f"NoTimeout applyInPandasWithState outside streaming/keyed.py: {bad}"
+
+
 def test_text_tokenized_only_in_text():
     """One tokenizer: a ``split(lower(...))`` call appears only in
     ``llm/text.py::_tokens``; every other site calls ``_tokens()``.

@@ -1,56 +1,13 @@
-"""Source/sink roundtrips: parquet (partitioned → pruned), CSV, JSON,
-memory table, and a streaming console/memory sink smoke."""
+"""The memory-table sink (bounded driver collect) and the SQL view
+surface. Partitioned parquet pruning is tested with
+``sources/layout.py::partitioned_write`` in ``tests/test_layout.py``."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.plans import formatted_plan
-from reactor_window_like_flink_spark.sources.formats import read_csv, read_json
-from reactor_window_like_flink_spark.sources.sinks import (
-    to_memory_table,
-    write_csv,
-    write_json,
-    write_parquet,
-)
+from reactor_window_like_flink_spark.sources.sinks import to_memory_table
 from reactor_window_like_flink_spark.sources.tables import load
-
-
-def test_partitioned_parquet_roundtrip_and_pruning(spark, sf_dir, tmp_path):
-    orders = load(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_by_status")
-    write_parquet(orders, path, partition_by=["o_orderstatus"])
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    # equality filter on the partition column must become partition pruning
-    pruned = back.filter(F.col("o_orderstatus") == "O")
-    assert pruned.count() == orders.filter(F.col("o_orderstatus") == "O").count()
-    plan = formatted_plan(pruned)
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-
-
-def test_csv_roundtrip(spark, sf_dir, tmp_path):
-    nation = load(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_csv")
-    write_csv(nation, path)
-    back = read_csv(
-        spark,
-        path,
-        "n_nationkey bigint, n_name string, n_regionkey bigint",
-    )
-    assert sorted(r["n_name"] for r in back.collect()) == sorted(
-        r["n_name"] for r in nation.collect()
-    )
-
-
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    region = load(spark, sf_dir, "region")
-    path = str(tmp_path / "region_json")
-    write_json(region, path)
-    back = read_json(spark, path, "r_regionkey bigint, r_name string")
-    assert back.count() == region.count()
 
 
 def test_memory_table(spark, sf_dir):
@@ -58,26 +15,6 @@ def test_memory_table(spark, sf_dir):
     out = to_memory_table(spark, top, "t_top_orders")
     assert out.count() == 5
     assert spark.sql("SELECT count(*) FROM t_top_orders").first()[0] == 5
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from reactor_window_like_flink_spark.sources.formats import read_orc
-    from reactor_window_like_flink_spark.sources.sinks import write_orc
-
-    customer = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-    path = str(tmp_path / "customer_orc")
-    write_orc(customer, path)
-    back = read_orc(
-        spark, path, "c_custkey bigint, c_name string, c_acctbal double"
-    )
-    assert back.count() == customer.count()
-    # predicate pushdown + column pruning reach the ORC scan, like parquet
-    filtered = back.filter(F.col("c_acctbal") > 0).select("c_custkey")
-    plan = formatted_plan(filtered)
-    assert "PushedFilters" in plan and "c_acctbal" in plan
-    assert filtered.count() == customer.filter(F.col("c_acctbal") > 0).count()
 
 
 def test_register_views_enables_spark_sql_surface(spark, sf_dir):

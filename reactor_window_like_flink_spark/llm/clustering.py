@@ -15,6 +15,9 @@ Scale design:
   sizes it, and a graph at or below ``LOCAL_FINISH_EDGES`` directed
   edges runs every round in one single-task numpy kernel
   (``_local_finish``); over the bound the distributed rounds run.
+  ``operators/analytics.py``'s ``q_triangle_count`` and
+  ``q_degree_assortativity`` read the same co-purchase adjacency and
+  take each node's degree as ``size(dsts)``; they have no local finish.
 * **Components over the bound** are large-star/small-star alternation
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SoCC'14): O(log n) join + groupBy rounds whatever the graph's

@@ -18,7 +18,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
-from reactor_window_like_flink_spark.functions.materialize import materialize
+from reactor_window_like_flink_spark.functions.materialize import (
+    aggregate_row,
+    materialize,
+)
 from reactor_window_like_flink_spark.sources.tables import load
 
 REG = Registry()
@@ -1681,10 +1684,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Suri & Vassilvitskii's MapReduce node-iterator, WWW'11) — every
     edge is oriented from its LOWER-(degree, id) endpoint to the
     higher, and a triangle is an oriented edge (u, v) plus a common
-    out-neighbor (counted in-row as |N⁺(u) ∩ N⁺(v)| over sorted-free
-    adjacency arrays since r16 — the wedge-join form materialized
-    Σ C(d⁺, 2) wedge rows through an exchange; see the inline comment
-    at the tri aggregate). The orientation is a total order, so each triangle is
+    out-neighbor. The orientation is a total order, so each triangle is
     counted exactly ONCE under ANY such order — the count is
     orientation-invariant, which is why the oracle can keep the plain
     id-ordered triple join while Spark runs the degree-ordered form.
@@ -1692,78 +1692,49 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sqrt(edges)) on any graph, so the wedge volume Σ C(d⁺, 2) stays
     polynomial even when a raw hub's d² would explode. The fixture's
     co-purchase graph is near-uniform-degree (d≈120 for all 20k parts
-    at sf0.1), so the ordering buys little THERE (measured ~8 s either
-    way, the cost being the ~35M-row wedge join itself — broadcast vs
-    sort-merge measured within noise); the payoff is on skewed real
-    graphs, which is the regime this orientation exists for. Counts
-    are exact integers, so the oracle mirrors cell-for-cell; the
-    coefficient is the one order-dependent float and rounds at emit.
+    at sf0.1), so the ordering buys little THERE; the payoff is on
+    skewed real graphs, which is the regime this orientation exists
+    for. Counts are exact integers, so the oracle mirrors
+    cell-for-cell; the coefficient is the one order-dependent float
+    and rounds at emit.
 
-    Scale shape: the basket self-join is pair-keyed and map-side
-    deduped; the wedge and closing joins shuffle the oriented edge
-    list on single-node keys. At 100 TB the classic refinement is
-    bucketing the edge list by source (the wedge join co-locates) —
-    the layout the bucketed-table machinery already provides.
-    MEASURED (r15, BASELINE.md "Round-15 bucketed-layout probe", sf1
-    1.196M oriented edges): bucketBy(32, src) halves executed-plan exchanges
-    12 -> 6 and wall 5.11 -> 4.37 s for an identical 1,884,488-triangle
-    count, with the 1.95 s layout build paid once and amortized over
-    every src-keyed graph query."""
+    The graph is the graph family's one adjacency
+    (``llm/clustering.py::_adjacency``): one ``aggregate_row`` job reads
+    n_nodes, 2m and the wedge count Σ C(|dsts|, 2) off it, and each
+    end's degree is ``size(dsts)``, so no degree table is built.
+    Triangles are counted as Σ over oriented edges (u, v) of
+    |N⁺(u) ∩ N⁺(v)|: a triangle {a<b<c} (rank order) is counted once,
+    at its base edge (a, b). The O(V) out-neighbour arrays and the O(E)
+    oriented edge list are shuffled, never the Σ C(d⁺, 2) wedge rows,
+    and the intersection runs in-row."""
+    from reactor_window_like_flink_spark.llm.clustering import _adjacency
+
     lineitem = load(spark, sf_dir, "lineitem")
-    e = (
-        _basket_pairs(lineitem, "l_orderkey", "l_partkey")
-        .distinct()
-        .transform(materialize)  # read by 5 branches: nodes/edges/deg/orient
+    adj = _adjacency(_basket_pairs(lineitem, "l_orderkey", "l_partkey"))
+    deg = F.size("dsts").cast("long")
+    n_nodes, two_m, two_wedges = aggregate_row(
+        adj,
+        F.count("*"),
+        F.coalesce(F.sum(deg), F.lit(0)),
+        F.coalesce(F.sum(deg * (deg - 1)), F.lit(0)),
     )
-    n_nodes = (
-        e.select(F.col("u").alias("n"))
-        .union(e.select("v"))
-        .distinct()
-        .agg(F.count("*").cast("long").alias("n_nodes"))
-    )
-    n_edges = e.agg(F.count("*").cast("long").alias("n_edges"))
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-    ).transform(materialize)  # read by the wedge stat AND both orientations
-    wedges = deg.agg(
-        F.coalesce(F.sum(F.col("d") * (F.col("d") - 1) / 2), F.lit(0))
-        .cast("long")
-        .alias("n_wedges")
-    )
-    # orient each edge lower-(degree, id) -> higher: join degrees on,
-    # then swap where needed; rk packs (degree, id) into one sortable
-    # long key (ids are int-ranged) so comparisons stay codegen scalars
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
+    n_wedges = two_wedges // 2
+    # orient each edge lower-(degree, id) -> higher; rk packs (degree, id)
+    # into one sortable long key (ids are int-ranged)
     rk = lambda d, n: d * F.lit(2**32) + n  # noqa: E731
-    ed = e.join(du, "u").join(dv, "v")
-    eo = ed.select(
-        F.when(rk(F.col("du"), F.col("u")) < rk(F.col("dv"), F.col("v")),
-               F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(rk(F.col("du"), F.col("u")) < rk(F.col("dv"), F.col("v")),
-               F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).transform(materialize)  # read by the adjacency build AND the edge probe
-    # r16 rework (guide §2.3/§2.4): count triangles as
-    #   Σ over oriented edges (u, v) of |N⁺(u) ∩ N⁺(v)|
-    # — each triangle {a<b<c} (rank order) is counted exactly once, at
-    # its base edge (a, b), since c ∈ N⁺(a) ∩ N⁺(b) and neither (a, c)
-    # nor (b, c) can see the third vertex in both out-neighborhoods.
-    # The previous form materialized every wedge (Σ C(d⁺, 2) rows, ~35M
-    # at sf0.1) through a join and shuffled it against the closing-edge
-    # probe; this form shuffles only the O(V) adjacency arrays (total
-    # payload O(E) longs) plus the O(E) edge list, and the intersection
-    # runs in-row via codegen array_intersect. Out-degree under the
-    # degree-ordered orientation is O(sqrt(E)), so the per-row array is
-    # bounded and total intersect work is Σ_(u,v) (d⁺(u)+d⁺(v)) — the
-    # node-iterator bound, same as before, without the wedge exchange.
-    # Measured 10.3 s → 6.3 s at sf0.1, identical output row
-    # (1,884,488 triangles).
-    adj = eo.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    au = adj.select(F.col("src").alias("_u"), F.col("nbrs").alias("nu"))
-    av = adj.select(F.col("src").alias("_v"), F.col("nbrs").alias("nv"))
+    far = adj.select(F.col("src").alias("dst"), F.size("dsts").alias("dd"))
+    eo = (
+        adj.select(
+            "src", F.size("dsts").alias("ds"), F.explode("dsts").alias("dst")
+        )
+        .join(F.broadcast(far), "dst")
+        .filter(rk(F.col("ds"), F.col("src")) < rk(F.col("dd"), F.col("dst")))
+        .select("src", "dst")
+        .transform(materialize)  # read by the out-adjacency AND the edge probe
+    )
+    out_adj = eo.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
+    au = out_adj.select(F.col("src").alias("_u"), F.col("nbrs").alias("nu"))
+    av = out_adj.select(F.col("src").alias("_v"), F.col("nbrs").alias("nv"))
     tri = (
         eo.join(au, eo.src == au._u)
         .join(av, eo.dst == av._v, "left")
@@ -1777,19 +1748,14 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_triangles")
         )
     )
-    out = (
-        n_nodes.crossJoin(F.broadcast(n_edges))
-        .crossJoin(F.broadcast(tri))
-        .crossJoin(F.broadcast(wedges))
+    coeff = (
+        3.0 * F.col("n_triangles") / n_wedges if n_wedges else F.lit(0.0)
     )
-    coeff = F.when(F.col("n_wedges") == 0, F.lit(0.0)).otherwise(
-        3.0 * F.col("n_triangles") / F.col("n_wedges")
-    )
-    return out.select(
-        "n_nodes",
-        "n_edges",
-        "n_triangles",
-        "n_wedges",
+    return tri.select(
+        F.lit(n_nodes).cast("long").alias("n_nodes"),
+        F.lit(two_m // 2).cast("long").alias("n_edges"),
+        F.coalesce("n_triangles", F.lit(0).cast("long")).alias("n_triangles"),
+        F.lit(n_wedges).cast("long").alias("n_wedges"),
         round_to(coeff, 6).alias("clustering_coefficient"),
     )
 
@@ -2826,34 +2792,22 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     so r = (Σxy − (Σx)²/n) / (Σx² − (Σx)²/n) from ONE sufficient-
     statistics fold. Zero-variance (regular) graphs emit NULL.
 
-    Scale shape: the _basket_pairs in-row expansion builds edges with
-    one basket-keyed shuffle; degrees are a re-aggregate of the
-    adjacency; the ends join keys on the node (the degree side is
-    O(nodes) — broadcasts under AQE); the statistic folds to one row.
-    Integral degrees sum exactly; round(6) on the final ratios.
-    The adjacency and degree frames are localCheckpointed (lazy):
-    adj feeds the ends join AND both degree lookups, deg feeds both
-    join sides — without the truncation the basket-expansion subtree
-    is planned SIX times (r16 plan audit: 6 parquet scans -> 1)."""
+    The graph is the graph family's one adjacency
+    (``llm/clustering.py::_adjacency``): an end's degree is
+    ``size(dsts)``, so the exploded adjacency carries x in-row and one
+    join to the O(nodes) degree side (a broadcast under AQE) brings y;
+    the statistic folds to one row. Integral degrees sum exactly;
+    round(6) on the final ratios."""
+    from reactor_window_like_flink_spark.llm.clustering import _adjacency
+
     li = load(spark, sf_dir, "lineitem")
-    edges = (
-        _basket_pairs(
-            li.select("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey"
-        )
-        .toDF("u", "v")
-        .distinct()  # _basket_pairs dedups per basket, not globally
+    adj = _adjacency(_basket_pairs(li, "l_orderkey", "l_partkey"))
+    deg = adj.select(
+        F.col("src").alias("nbr"), F.size("dsts").cast("double").alias("y")
     )
-    adj = (
-        edges.selectExpr("u AS node", "v AS nbr")
-        .unionAll(edges.selectExpr("v AS node", "u AS nbr"))
-        .transform(materialize)  # read by deg AND the ends join
-    )
-    deg = adj.groupBy("node").agg(
-        F.count("*").cast("double").alias("d")
-    ).transform(materialize)  # read by both end-degree lookups
-    du = deg.select(F.col("node").alias("node"), F.col("d").alias("x"))
-    dv = deg.select(F.col("node").alias("nbr"), F.col("d").alias("y"))
-    ends = adj.join(du, "node").join(dv, "nbr")
+    ends = adj.select(
+        F.size("dsts").cast("double").alias("x"), F.explode("dsts").alias("nbr")
+    ).join(deg, "nbr")
     s = ends.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("x").alias("sx"),

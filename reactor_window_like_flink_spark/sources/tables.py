@@ -139,6 +139,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
+    """Register every fixture table as a temp view for ``spark.sql`` use
+    (idempotent: ``createOrReplaceTempView``). Views go through ``load``,
+    so the events-timestamp normalization applies to the SQL surface
+    too."""
     for name in TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)

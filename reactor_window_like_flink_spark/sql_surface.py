@@ -1,13 +1,13 @@
-"""Spark-SQL string surface: temp-view registration plus a ``spark.sql``
-twin for the flagship relational keys.
+"""Spark-SQL string surface: a ``spark.sql`` twin for the flagship
+relational keys.
 
 Every contract key is a DataFrame builder (``__spark_entry__.queries()``);
 this module honors the other half of the Spark SQL lifecycle (SURVEY §3) —
 a user who lives in SQL strings registers the dataset's tables once
-(``register_views``) and runs the same queries through ``spark.sql``.
-Twins are HASH-EQUAL to their DataFrame forms by construction (same
-engine, same plan family once Catalyst normalizes both); the equality is
-pinned per-key in ``tests/test_sql_surface.py``.
+(``sources.tables.register_views``) and runs the same queries through
+``spark.sql``. Twins are HASH-EQUAL to their DataFrame forms by
+construction (same engine, same plan family once Catalyst normalizes
+both); the equality is pinned per-key in ``tests/test_sql_surface.py``.
 
 Dialect notes vs the DuckDB oracle strings: ``date_format`` replaces
 ``strftime``; join-strategy hints ride SQL comments (``/*+ BROADCAST */``)
@@ -18,30 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from reactor_window_like_flink_spark.sources.tables import load
-
-VIEW_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every dataset table as a temp view (idempotent —
-    ``createOrReplaceTempView``). Views go through ``sources.tables.load``
-    so the events-timestamp normalization applies to the SQL surface
-    too."""
-    for t in VIEW_TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
+from reactor_window_like_flink_spark.sources.tables import register_views
 
 # Spark-dialect twins of the flagship relational keys. Aliases match the
 # DataFrame forms exactly (the driver-compare discipline).

@@ -7,6 +7,8 @@ from _round import rhalf
 
 from datetime import datetime, timedelta
 
+import pytest
+
 from reactor_window_like_flink_spark.operators.analytics import (
     cohort_retention,
     funnel,
@@ -594,28 +596,49 @@ def test_ewma_matches_sequential_reference(spark, sf_dir):
         )
 
 
-def test_triangle_count_on_planted_graph(spark, tmp_path):
-    """K4 (one 4-part order) has C(4,3)=4 triangles and clustering
-    coefficient 1.0; adding a pendant path edge adds a wedge but no
-    triangle."""
-    import __spark_entry__ as entry_mod
+# The hot-key star of tests/test_clustering.py::_star as baskets: hub 0
+# co-occurs with parts 1..200, and a short path among the leaves closes
+# 19 triangles through the hub.
+_STAR_BASKETS = [[0, i] for i in range(1, 201)] + [[i, i + 1] for i in range(1, 20)]
 
-    rows = []
-    for oid, parts in enumerate([[1, 2, 3, 4], [5, 6], [6, 7]]):
-        for p in parts:
-            rows.append((oid, p))
+
+def _write_baskets(spark, baskets, d):
+    rows = [(oid, p) for oid, parts in enumerate(baskets) for p in parts]
     spark.createDataFrame(
         rows, "l_orderkey long, l_partkey long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "lineitem.parquet")
-    )
+    ).coalesce(1).write.mode("overwrite").parquet(str(d / "lineitem.parquet"))
+
+
+@pytest.mark.parametrize("graph", ["k4", "star"])
+def test_triangle_count_on_planted_graph(spark, tmp_path, graph):
+    """K4 (one 4-part order) has C(4,3)=4 triangles and clustering
+    coefficient 1.0; adding a pendant path edge adds a wedge but no
+    triangle. The hot-key star's counts come from brute force."""
+    import __spark_entry__ as entry_mod
+
+    baskets = {"k4": [[1, 2, 3, 4], [5, 6], [6, 7]], "star": _STAR_BASKETS}[graph]
+    _write_baskets(spark, baskets, tmp_path)
     r = entry_mod.queries()["q_triangle_count"](spark, str(tmp_path)).first()
-    assert r["n_nodes"] == 7
-    assert r["n_edges"] == 6 + 1 + 1  # K4 pairs + {5,6} + {6,7}
-    assert r["n_triangles"] == 4
-    # wedges: K4 nodes have degree 3 -> 4*3=12; node 6 has degree 2 -> +1
-    assert r["n_wedges"] == 13
-    assert r["clustering_coefficient"] == rhalf(12 / 13, 6)
+    edges = {(u, v) for b in baskets for u in b for v in b if u < v}
+    nbrs: dict[int, set[int]] = {}
+    for u, v in edges:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    # each triangle u < v < w once, at its lowest edge
+    tri = sum(1 for u, v in edges for w in nbrs[u] & nbrs[v] if w > v)
+    wedges = sum(len(n) * (len(n) - 1) // 2 for n in nbrs.values())
+    assert tuple(r) == (
+        len(nbrs), len(edges), tri, wedges, rhalf(3 * tri / wedges, 6)
+    )
+    if graph == "k4":
+        assert r["n_nodes"] == 7
+        assert r["n_edges"] == 6 + 1 + 1  # K4 pairs + {5,6} + {6,7}
+        assert r["n_triangles"] == 4
+        # wedges: K4 nodes have degree 3 -> 4*3=12; node 6 has degree 2 -> +1
+        assert r["n_wedges"] == 13
+        assert r["clustering_coefficient"] == rhalf(12 / 13, 6)
+    else:
+        assert r["n_triangles"] == 19
 
 
 def test_holt_trend_matches_sequential_recurrence_and_catches_drift(
@@ -1033,12 +1056,17 @@ def test_fdr_bh_closed_form(spark, sf_dir):
         assert r["significant"] == want, et
 
 
-def test_degree_assortativity_closed_form(spark, sf_dir):
+@pytest.mark.parametrize("graph", ["fixture", "star"])
+def test_degree_assortativity_closed_form(spark, sf_dir, tmp_path, graph):
     """r recomputes from the explicit edge list (symmetric endpoint
-    Pearson over both orientations)."""
+    Pearson over both orientations), on the fixture's graph and on the
+    hot-key star."""
     import __spark_entry__ as entry_mod
     from reactor_window_like_flink_spark.sources.tables import load
 
+    if graph == "star":
+        _write_baskets(spark, _STAR_BASKETS, tmp_path)
+        sf_dir = str(tmp_path)
     baskets: dict[int, set[int]] = {}
     for r in load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"

@@ -392,6 +392,30 @@ def test_local_finish_key_counts(spark, sf_dir, name):
     assert (r["build_jobs"], r["jobs"]) == _LOCAL_FINISH_KEY_COUNTS[name], r
 
 
+# (build_jobs, jobs) at sf0.001 of the keys that read the co-purchase
+# adjacency without a local finish
+_ADJACENCY_KEY_COUNTS = {
+    "q_triangle_count": (4, 6),
+    "q_degree_assortativity": (2, 3),
+}
+
+
+@pytest.mark.parametrize("name", list(_ADJACENCY_KEY_COUNTS))
+def test_adjacency_key_counts(spark, sf_dir, name):
+    """``q_triangle_count`` builds 4 jobs (the basket and adjacency
+    shuffles' map stages, the one-job read of n_nodes, 2m and the wedge
+    count, and the far-end degree broadcast under the oriented edge
+    list's checkpoint) and ``q_degree_assortativity`` 2 (the two
+    shuffles' map stages); a ``.count()`` or a second degree table in
+    either would show here."""
+    from reactor_window_like_flink_spark.observe import run
+
+    key = entry_mod.queries()[name]
+    key(spark, sf_dir)
+    r = run(spark, lambda: key(spark, sf_dir))
+    assert (r["build_jobs"], r["jobs"]) == _ADJACENCY_KEY_COUNTS[name], r
+
+
 def test_kcore_keeps_clique_peels_tendrils(spark):
     """A 6-clique with a pendant path hanging off it: the 5-core is
     exactly the clique (every tendril node peels), and an empty edge

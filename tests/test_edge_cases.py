@@ -171,6 +171,14 @@ def test_round7_keys_survive_empty_tables(spark, empty_dir):
         assert qs[key](spark, empty_dir).collect() == [], key
 
 
+# The one row both engines emit on all-empty tables, pinned exactly
+# (the DuckDB oracle's row for each key).
+EMPTY_ROWS = {
+    "q_triangle_count": (0, 0, 0, 0, 0.0),
+    "q_degree_assortativity": (0, None, None),
+}
+
+
 def test_round11_keys_survive_empty_tables(spark, empty_dir):
     qs = entry_mod.queries()
     for key in (
@@ -185,8 +193,10 @@ def test_round11_keys_survive_empty_tables(spark, empty_dir):
         "q_dedup_embedding_auto",
     ):
         rows = qs[key](spark, empty_dir).collect()  # must not raise
-        if key in ("q_chi2_contingency", "q_triangle_count"):
-            # global one-row summaries in both engines: the empty input
+        if key in EMPTY_ROWS:
+            assert [tuple(r) for r in rows] == [EMPTY_ROWS[key]], key
+        elif key == "q_chi2_contingency":
+            # global one-row summary in both engines: the empty input
             # yields one row of zero counts / NULL statistics (ANSI
             # empty-aggregate), not an empty frame.
             assert len(rows) <= 1, key
@@ -289,5 +299,7 @@ def test_round12_keys_survive_empty_tables(spark, empty_dir):
     qs = entry_mod.queries()
     for key, want in ROUND12_EMPTY_EXPECT.items():
         rows = qs[key](spark, empty_dir).collect()  # must not raise
+        if key in EMPTY_ROWS:
+            assert [tuple(r) for r in rows] == [EMPTY_ROWS[key]], key
         if want is not None:
             assert len(rows) == want, key

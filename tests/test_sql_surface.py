@@ -11,11 +11,8 @@ import math
 import pytest
 
 import __spark_entry__ as entry_mod
-from reactor_window_like_flink_spark.sql_surface import (
-    SQL_TWINS,
-    register_views,
-    sql_twin,
-)
+from reactor_window_like_flink_spark.sources.tables import TABLES, register_views
+from reactor_window_like_flink_spark.sql_surface import SQL_TWINS, sql_twin
 
 
 def _canon(rows):
@@ -50,9 +47,7 @@ def test_register_views_is_idempotent_and_covers_all_tables(spark, sf_dir):
     register_views(spark, sf_dir)
     register_views(spark, sf_dir)  # createOrReplace: no error, no dupes
     tables = {t.name for t in spark.catalog.listTables()}
-    from reactor_window_like_flink_spark.sql_surface import VIEW_TABLES
-
-    assert set(VIEW_TABLES) <= tables
+    assert set(TABLES) <= tables
     assert spark.sql("SELECT count(*) AS n FROM lineitem").first()["n"] > 0
 
 

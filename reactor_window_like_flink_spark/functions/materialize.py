@@ -22,13 +22,17 @@ The rule:
   would have run anyway. An eager copy costs one whole extra job, and
   per-job scheduling overhead is the floor for small batches.
 * **Eager** only for a frame that feeds a broadcast build side AND its
-  probe in the same plan. Lazily, AQE plans the broadcast and the probe
-  stages concurrently and both race to fill the same checkpoint; the
-  eager copy gives one deterministic materialization before planning.
-  Measured on 32 cores (18 interleaved samples per arm): the
-  similarity-join banding frame, eager worst case 3.13 s vs lazy
-  6.38 s at flat medians; the incremental near-dup admission's batch
-  tokens, eager median 0.85 s vs lazy 0.99 s.
+  probe in the same plan, where AQE runs the two stages concurrently:
+  both race to fill the same checkpoint, and the eager copy gives one
+  deterministic materialization before planning. The incremental
+  near-dup admission's batch tokens (``llm/curation.py``) are the
+  case: eager median 0.85 s vs lazy 0.99 s, measured on 32 cores with
+  18 interleaved samples per arm. A plan whose broadcast stage AQE
+  creates before any stage that probes it has no race and stays lazy:
+  the similarity-join banding frame (``llm/similarity.py``) runs its
+  banding once either way, and lazily saves the eager copy's job
+  (sf0.1, 4-vCPU host, 12 alternating samples per arm: lazy median
+  1.94 s, worst 2.67 s; eager 2.10 s, worst 2.85 s).
 * **Never** a raw fact scan: narrow re-scans of a projection are
   cheaper than copying the table. Materialize the shared aggregate,
   explode or slice derived from it instead.

@@ -10,14 +10,17 @@ survivor.
 Scale design:
 
 * **One local finish for the graph family** (``connected_components``,
-  ``pagerank``, ``label_propagation``, ``kcore``): each groups its edge
-  list once into a materialized adjacency (``_adjacency``), one job
-  sizes it, and a graph at or below ``LOCAL_FINISH_EDGES`` directed
-  edges runs every round in one single-task numpy kernel
-  (``_local_finish``); over the bound the distributed rounds run.
-  ``operators/analytics.py``'s ``q_triangle_count`` and
-  ``q_degree_assortativity`` read the same co-purchase adjacency and
-  take each node's degree as ``size(dsts)``; they have no local finish.
+  ``pagerank``, ``label_propagation``, ``kcore``): each materializes
+  its undirected edge list ``(u, v)`` once and one job counts it. A
+  graph of at most ``LOCAL_FINISH_EDGES`` directed edges (2 × rows)
+  runs every round in one single-task numpy kernel over those rows
+  (``_local_finish``), which symmetrizes and dedups them itself
+  (``_edge_index``), so no adjacency shuffle runs. Over the bound the
+  distributed rounds run on the adjacency grouped from the same edge
+  list (``_adjacency``). ``operators/analytics.py``'s
+  ``q_triangle_count`` and ``q_degree_assortativity`` read the
+  co-purchase adjacency and take each node's degree as
+  ``size(dsts)``; they have no local finish.
 * **Components over the bound** are large-star/small-star alternation
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SoCC'14): O(log n) join + groupBy rounds whatever the graph's
@@ -36,6 +39,8 @@ dedup surface at all; this is north-star scope from BASELINE.json.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -83,25 +88,25 @@ def connected_components(
     into components: ``(node, comp)`` for every node of ``nodes`` or
     ``edges``, ``comp = min(node)`` reachable.
 
-    Each node enters as a self-loop, so the one sized ``_adjacency``
-    holds every node, isolated ones included. At or below
+    Each node enters as a self-loop, so the one counted edge list holds
+    every node, isolated ones included. At or below
     ``LOCAL_FINISH_EDGES`` the closure runs in one task
     (``_components_kernel``), else at most ``max_rounds`` star rounds
-    (``_components_star_rounds``). The kernel's output is the whole
-    answer in one partition, so ``q_dedup_groups``'s size window over
-    it plans no exchange: 10 + 1 build + exec jobs at sf0.01, where a
-    left join of ``nodes`` to the labels measured 10 + 5."""
+    over its adjacency (``_components_star_rounds``). The kernel's
+    output is the whole answer in one partition, so
+    ``q_dedup_groups``'s size window over it plans no exchange: the
+    write is one job, where a left join of ``nodes`` to the labels
+    measured 5."""
     loops = nodes.select(F.col("node").alias("u"), F.col("node").alias("v"))
-    adj = _adjacency(edges.unionByName(loops))
-    _, two_m = _graph_size(adj)
-    labels = _local_finish(adj, two_m, _components_kernel, "node {t}, comp {t}")
+    edges = materialize(edges.unionByName(loops))
+    labels = _local_finish(edges, _components_kernel, "node {t}, comp {t}")
     if labels is None:
-        labels = _components_star_rounds(adj, max_rounds)
+        labels = _components_star_rounds(_adjacency(edges), max_rounds)
     return labels
 
 
 def _components_kernel(batches):
-    """Single-task components over the (src, dst) rows: root hooking
+    """Single-task components over the edge rows: root hooking
     with pointer jumping (Shiloach-Vishkin) until every row's ends share
     a root. A root hooks only under a smaller one, so each root is its
     tree's smallest index, i.e. smallest node id. Yields (node, comp)."""
@@ -265,71 +270,80 @@ def _graph_size(adj: DataFrame) -> tuple[int, int]:
 
 
 # Local-finish bound of the graph family (connected_components, kcore,
-# pagerank, label_propagation): at or below this many directed edges the
-# whole iteration runs as ONE single-task numpy kernel instead of one or
-# more Spark jobs per round. Peak RSS of the Python worker running each
-# kernel (``resource.getrusage`` inside it, worker baseline included)
-# on a random graph of 8.04M directed edges over 993,329 nodes, 4-vCPU
-# host: kcore peel 629 MiB, pagerank 629 MiB (both peak while indexing
-# the edge rows), label propagation 914 MiB (its per-round vote
-# ``np.unique``); all three fit a 1 GiB worker. The components kernel,
-# run outside Spark on 8.04M random directed edges over 999,658 nodes,
-# peaked at 743 MiB with its 301 MiB harness (imports and edge arrays)
-# included. Over the bound the distributed rounds run unchanged: at
-# 100 TB the gate does not fire, so this is a size-adaptive final-stage
-# collapse (the iterative analog of a broadcast-join threshold), not a
-# fixture shortcut.
+# pagerank, label_propagation): at or below this many directed edges,
+# counted as 2 × the edge list's rows before dedup, the whole iteration
+# runs as ONE single-task numpy kernel instead of one or more Spark jobs
+# per round. Peak RSS of the Python worker running each kernel
+# (``resource.getrusage`` inside it, its 119 MiB baseline included) on
+# 4M random undirected rows over 1M node ids, 8M directed edges at the
+# bound, 4-vCPU host: components, pagerank and the kcore peel 566 MiB
+# (all three peak while indexing the rows), label propagation 909 MiB
+# (its per-round vote ``np.unique``); all four fit a 1 GiB worker.
+# ``_edge_index`` took 1.7-2.1 s there, against 3.7-4.2 s for the
+# adjacency-row index it replaced on the same graph. Over the bound the
+# distributed rounds run: at 100 TB the gate does not fire, so this is
+# a size-adaptive final-stage collapse (the iterative analog of a
+# broadcast-join threshold), not a fixture shortcut.
 LOCAL_FINISH_EDGES = 8_000_000
 
 
-def _local_finish(
-    adj: DataFrame, two_m: int, kernel, schema: str
-) -> DataFrame | None:
-    """The one local-finish gate. At or below ``LOCAL_FINISH_EDGES``
-    directed edges, the ``(src, dst)`` rows of ``adj`` stream into ONE
-    task that runs ``kernel`` (a ``mapInPandas`` function) over the
-    whole graph; ``schema`` is its output DDL, ``{t}`` standing for the
-    node id type. Over the bound, ``None``: the caller runs its
-    distributed rounds. The kernel reads the same adjacency as those
-    rounds, so duplicate edges and self-loops count the same on both
-    sides; its output reports ``SinglePartition``, so a keyed operator
-    over it plans no exchange.
+def _local_finish(edges: DataFrame, kernel, schema: str) -> DataFrame | None:
+    """The one local-finish gate, over a materialized undirected edge
+    list ``edges (u, v)``. One job counts its rows (``aggregate_row``,
+    which also fills the checkpoint). At or below
+    ``LOCAL_FINISH_EDGES`` directed edges, counted as 2 × rows (both
+    orientations of every row, before the kernel dedups them), the rows
+    stream into ONE task that runs ``kernel`` (a ``mapInPandas``
+    function that indexes them with ``_edge_index``) over the whole
+    graph; ``schema`` is its output DDL, ``{t}`` standing for the node
+    id type. Over the bound, ``None``: the caller groups
+    ``_adjacency(edges)`` and runs its distributed rounds.
+    ``_edge_index`` dedups with ``_adjacency``'s meaning, so duplicate
+    edges and self-loops count the same on both sides; the kernel's
+    output reports ``SinglePartition``, so a keyed operator over it
+    plans no exchange.
 
-    Measured on the registered co-purchase graph (sf0.1, build + exec
-    jobs): pagerank 35 + 5 → 3 + 1, label propagation 10 + 8 → 3 + 1,
-    kcore 6.87 s → 2.59 s (21 cascade rounds, identical 17,732-node
-    core); ``q_dedup_groups`` (components of the near-duplicate pair
-    graph) 22 + 2 → 10 + 1 at sf0.001, sf0.01 and sf0.1, identical
-    groups."""
-    if two_m > LOCAL_FINISH_EDGES:
+    The kernel reads the edge rows, not the adjacency: grouping them
+    only to explode them back into one task cost a job and most of the
+    key's shuffle bytes. Build + exec jobs of the registered keys at
+    sf0.001, sf0.01 and sf0.1: ``q_kcore``, ``q_pagerank`` and
+    ``q_communities_lpa`` 2 + 1 (3 + 1 through the adjacency; pagerank
+    35 + 5 and LPA 10 + 8 as distributed rounds), ``q_dedup_groups``
+    9 + 1 (10 + 1; 22 + 2 as rounds), identical output; ``q_kcore``'s
+    sf0.1 shuffle 16.1 → 5.1 MB."""
+    rows = aggregate_row(edges, F.count("*"))[0]
+    if 2 * rows > LOCAL_FINISH_EDGES:
         return None
-    t = adj.schema["src"].dataType.simpleString()
-    return (
-        adj.select("src", F.explode("dsts").alias("dst"))
-        .coalesce(1)
-        .mapInPandas(kernel, schema.format(t=t))
-    )
+    t = edges.schema["u"].dataType.simpleString()
+    return edges.coalesce(1).mapInPandas(kernel, schema.format(t=t))
 
 
 def _edge_index(batches):
-    """``(nodes, si, di)`` of the symmetric ``(src, dst)`` rows a
-    local-finish kernel receives: the sorted distinct node ids and each
-    row's endpoint indices into them (index order is id order); ``None``
-    for no rows. Every ``dst`` is a ``src`` (``_adjacency``), so the
-    node set is the distinct ``src`` values."""
+    """``(nodes, si, di)`` of the undirected ``(u, v)`` rows a
+    local-finish kernel receives, in any order and any batching: the
+    sorted distinct node ids and the endpoint indices into them (index
+    order is id order) of the symmetric distinct directed edge set,
+    sorted by ``(si, di)``; ``None`` for no rows. The meaning is
+    ``_adjacency``'s: a duplicate edge in either orientation counts
+    once, and a self-loop is one neighbour of its node."""
     import numpy as np
 
-    srcs, dsts = [], []
+    us, vs = [], []
     for pdf in batches:
         if len(pdf):
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-    if not srcs:
+            us.append(pdf["u"].to_numpy())
+            vs.append(pdf["v"].to_numpy())
+    if not us:
         return None
-    src = np.concatenate(srcs)
-    nodes, si = np.unique(src, return_inverse=True)
-    del src
-    di = np.searchsorted(nodes, np.concatenate(dsts))
+    m = sum(map(len, us))
+    nodes, ends = np.unique(np.concatenate(us + vs), return_inverse=True)
+    del us, vs
+    n = len(nodes)
+    # one key per directed edge, both orientations; unique dedups them
+    # (n <= 2 × rows under the bound, so n * n fits an int64)
+    keys = np.unique(np.concatenate((ends[:m] * n + ends[m:], ends[m:] * n + ends[:m])))
+    del ends
+    si, di = np.divmod(keys, n)
     return nodes, si, di
 
 
@@ -348,16 +362,17 @@ def pagerank(
     ``(u, v)`` (each undirected edge contributes both directions):
     rank_{t+1}(n) = (1-d)/N + d * Σ_{m -> n} rank_t(m)/outdeg(m).
 
-    The graph is grouped ONCE into O(nodes) (src, dsts) rows and
-    checkpointed (``_adjacency``), and one job sizes it. At or below
-    ``LOCAL_FINISH_EDGES`` the ``iters`` rounds run in one task
+    The edge list is checkpointed once and one job counts it. At or
+    below ``LOCAL_FINISH_EDGES`` the ``iters`` rounds run in one task
     (``_local_finish``, ``_pagerank_kernel``): a bincount-weighted
     inflow per round, the same per-edge shares and the same
     base + d·inflow as the rounds below.
 
     Over the bound, distributed shape — the canonical iterative-join
     algorithm (Page et al. '99; the Pregel/GraphX workload) on plain
-    DataFrame ops, in the ADJACENCY-LIST form: each round's rank join
+    DataFrame ops, in the ADJACENCY-LIST form: the graph is grouped
+    ONCE into O(nodes) (src, dsts) rows (``_adjacency``), one job sizes
+    it (N), and each round's rank join
     is O(nodes)-by-O(nodes) (the checkpoint keeps no partitioning, so
     the join exchanges node-sized rows, never edges) and the edge
     fan-out happens IN-ROW via ``explode``; only the exploded
@@ -370,19 +385,20 @@ def pagerank(
     sequential-reference pytest; the driver sees only the loop counter.
 
     Returns (node, rank) for every node, rank rounded to 6dp."""
-    adj = _adjacency(edges)
-    n_total, two_m = _graph_size(adj)
+    edges = materialize(edges)
     ranks = _local_finish(
-        adj, two_m, _pagerank_kernel(damping, iters), "node {t}, rank double"
+        edges, _pagerank_kernel(damping, iters), "node {t}, rank double"
     )
     if ranks is None:
+        adj = _adjacency(edges)
+        n_total, _ = _graph_size(adj)
         ranks = _pagerank_rounds(adj, n_total, damping, iters)
     return ranks.select("node", round_to("rank", 6).alias("rank"))
 
 
 def _pagerank_kernel(damping: float, iters: int):
-    """Single-task PageRank over the (src, dst) rows: yields (node,
-    rank) unrounded."""
+    """Single-task PageRank over the edge rows: yields (node, rank)
+    unrounded."""
 
     def rank(batches):
         import numpy as np
@@ -495,10 +511,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lineitem = load(spark, sf_dir, "lineitem")
-    # No .distinct() here: pagerank symmetrizes and dedups the union in
-    # ONE exchange (_adjacency's collect_set), so a pre-distinct pays a
-    # full extra shuffle of the pair stream for nothing (proven
-    # output-identical at sf0.1, all 20k ranks equal at 6dp).
+    # No .distinct() here: pagerank symmetrizes and dedups the pairs
+    # itself (_edge_index below the bound, _adjacency's collect_set over
+    # it), so a pre-distinct pays a full extra shuffle of the pair
+    # stream for nothing (proven output-identical at sf0.1, all 20k
+    # ranks equal at 6dp).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
     return pagerank(edges)
 
@@ -531,14 +548,14 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     the modularity-forming workload between "connected" and
     "centrality" that co-purchase and near-dup-graph analyses use.
 
-    The graph is grouped ONCE into O(nodes) (src, dsts) rows and
-    checkpointed (``_adjacency``), and one job sizes it. At or below
-    ``LOCAL_FINISH_EDGES`` the rounds run in one task
+    The edge list is checkpointed once and one job counts it. At or
+    below ``LOCAL_FINISH_EDGES`` the rounds run in one task
     (``_local_finish``, ``_lpa_kernel``): ``np.unique`` vote counts per
     (node, label), the same winner rule as the rounds below.
 
     Over the bound, distributed shape — the ``pagerank`` adjacency-list
-    discipline: each round joins labels on src (node-sized rows
+    discipline over ``_adjacency`` of the same edge list: each round
+    joins labels on src (node-sized rows
     exchange: the checkpoint keeps no partitioning), fans out IN-ROW
     via ``explode``, and re-aggregates with TWO map-side-combining
     shuffles: (node, label) vote counts, then per-node argmax via
@@ -549,18 +566,15 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     product.
 
     Returns (node, community) for every node with ≥1 edge."""
-    adj = _adjacency(edges)
-    _, two_m = _graph_size(adj)
-    labels = _local_finish(
-        adj, two_m, _lpa_kernel(rounds), "node {t}, community {t}"
-    )
+    edges = materialize(edges)
+    labels = _local_finish(edges, _lpa_kernel(rounds), "node {t}, community {t}")
     if labels is None:
-        labels = _lpa_rounds(adj, rounds)
+        labels = _lpa_rounds(_adjacency(edges), rounds)
     return labels
 
 
 def _lpa_kernel(rounds: int):
-    """Single-task synchronous LPA over the (src, dst) rows: yields
+    """Single-task synchronous LPA over the edge rows: yields
     (node, community). A label is a node index, so the smallest index
     is the smallest label."""
 
@@ -650,8 +664,8 @@ def q_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lineitem = load(spark, sf_dir, "lineitem")
-    # No .distinct(): label_propagation's collect_set adjacency dedups
-    # neighbors in its own groupBy (see _adjacency).
+    # No .distinct(): label_propagation dedups neighbours itself
+    # (_edge_index below the bound, _adjacency over it).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
     return label_propagation(edges).select(
         "node",
@@ -693,15 +707,16 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
     synchronous batch round is as correct as any sequential order — and
     deterministic).
 
-    The adjacency list (self-loops dropped: a k-core counts distinct
-    OTHER neighbours) is built in one shuffle and checkpointed once
-    (``_kcore_adjacency``), and one job sizes it. At or below
-    ``LOCAL_FINISH_EDGES`` the whole cascade runs as one single-task
-    numpy peel (``_local_finish``, ``_kcore_peel_kernel``); peeling is
-    confluent, so the exhaustive local peel returns the identical core.
+    The edge list (self-loops dropped: a k-core counts distinct OTHER
+    neighbours) is checkpointed once (``_kcore_edges``) and one job
+    counts it. At or below ``LOCAL_FINISH_EDGES`` the whole cascade
+    runs as one single-task numpy peel (``_local_finish``,
+    ``_kcore_peel_kernel``); peeling is confluent, so the exhaustive
+    local peel returns the identical core.
 
     Over the bound, distributed shape (DELTA peel, round-13 form): the
-    adjacency is never rewritten; the edge list and the degrees are
+    edge list is grouped once into its adjacency (``_adjacency``),
+    which is never rewritten; the edge list and the degrees are
     read off it with no further shuffle, and the degrees are then
     maintained incrementally. Each round:
 
@@ -734,33 +749,48 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
 
     Returns (node, degree) for every node in the k-core, with its
     degree INSIDE the core."""
-    adj = _kcore_adjacency(edges)
-    _, two_m = _graph_size(adj)
-    return _kcore_finish(adj, two_m, k, max_rounds)
+    return _kcore_finish(edges, k, max_rounds)
 
 
-def _kcore_adjacency(edges: DataFrame) -> DataFrame:
-    """``_adjacency`` over the edges minus self-loops: ``size(dsts)``
-    is each node's initial degree, counted once inside the groupBy."""
-    return _adjacency(edges.filter(F.col("u") != F.col("v")))
+def _kcore_edges(edges: DataFrame) -> DataFrame:
+    """The edge list minus self-loops, materialized: each node's
+    initial degree is its distinct-neighbour count, the node itself not
+    counted (``_edge_index``'s row count per node below the bound,
+    ``size(dsts)`` of its ``_adjacency`` over it)."""
+    return materialize(edges.filter(F.col("u") != F.col("v")))
+
+
+def _kcore_k(n_nodes: int, two_m: int) -> int:
+    """``q_kcore``'s scale-relative k of a graph of ``n_nodes`` nodes
+    and ``two_m`` directed edges: ceil(``KCORE_MEAN_FRACTION`` × mean
+    degree), at least 2; ``KCORE_K`` for the empty graph."""
+    if not n_nodes:
+        return KCORE_K
+    return max(2, math.ceil(KCORE_MEAN_FRACTION * float(two_m) / n_nodes))
 
 
 def _kcore_finish(
-    adj: DataFrame, two_m: int, k: int, max_rounds: int = KCORE_MAX_ROUNDS
+    edges: DataFrame, k: int | None, max_rounds: int = KCORE_MAX_ROUNDS
 ) -> DataFrame:
-    """The k-core of a sized ``_kcore_adjacency``: one local peel at or
-    below the bound, else the delta-peel rounds."""
-    core = _local_finish(
-        adj, two_m, _kcore_peel_kernel(k), "node {t}, degree long"
-    )
-    return core if core is not None else _kcore_loop(adj, k, max_rounds)
+    """The k-core of an undirected edge list: one local peel at or
+    below the bound, else the delta-peel rounds over its adjacency.
+    ``k=None`` is ``_kcore_k`` of the loop-free graph, read in the
+    kernel below the bound and off ``_graph_size`` over it."""
+    edges = _kcore_edges(edges)
+    core = _local_finish(edges, _kcore_peel_kernel(k), "node {t}, degree long")
+    if core is not None:
+        return core
+    adj = _adjacency(edges)
+    if k is None:
+        k = _kcore_k(*_graph_size(adj))
+    return _kcore_loop(adj, k, max_rounds)
 
 
-def _kcore_peel_kernel(k: int):
-    """Single-task exhaustive peel over the (src, dst) rows: numpy
-    bincount decrements iterated to the fixpoint — the same per-round
-    math as ``_kcore_round``, without the per-round job. Yields (node,
-    degree-in-core)."""
+def _kcore_peel_kernel(k: int | None):
+    """Single-task exhaustive peel over the edge rows: numpy bincount
+    decrements iterated to the fixpoint — the same per-round math as
+    ``_kcore_round``, without the per-round job. ``k=None`` is
+    ``_kcore_k`` of the indexed graph. Yields (node, degree-in-core)."""
 
     def peel(batches):
         import numpy as np
@@ -771,11 +801,12 @@ def _kcore_peel_kernel(k: int):
             return
         nodes, si, di = index
         n = len(nodes)
+        core_k = _kcore_k(n, len(si)) if k is None else k
         deg = np.bincount(si, minlength=n)
         alive = np.ones(n, dtype=bool)
         row_alive = np.ones(len(si), dtype=bool)
         while True:
-            bad = alive & (deg < k)
+            bad = alive & (deg < core_k)
             if not bad.any():
                 break
             alive &= ~bad
@@ -881,19 +912,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         _basket_pairs,
     )
 
-    import math
-
     lineitem = load(spark, sf_dir, "lineitem")
-    # No pre-distinct / pre-checkpoint on the pair stream: the adjacency's
-    # collect_set dedups, and k comes from the one sizing job the
-    # local-finish gate runs anyway — n_nodes = |adj| and 2m = Σ|dsts|
-    # (k value proven identical at sf0.1: k=84, same 17,732-node core).
+    # No pre-distinct on the pair stream: the graph family dedups it,
+    # and k is read off the deduplicated graph with no job of its own —
+    # in the kernel below the bound, off _graph_size over it (k=84 at
+    # sf0.1, the same 17,732-node core either way).
     edges = _basket_pairs(lineitem, "l_orderkey", "l_partkey")
-    adj = _kcore_adjacency(edges)
-    n_nodes, two_m = _graph_size(adj)
-    k = (
-        max(2, math.ceil(KCORE_MEAN_FRACTION * float(two_m) / n_nodes))
-        if n_nodes
-        else KCORE_K
-    )
-    return _kcore_finish(adj, two_m, k)
+    return _kcore_finish(edges, None)

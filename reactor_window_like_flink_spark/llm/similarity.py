@@ -974,9 +974,9 @@ def similarity_join(
     # bands×bits HOF fold per row for the exact one) runs twice over
     # the same parquet — once per side. One materialized pass serves
     # both filters: the broadcast query side qb and the probe side cb.
-    banded = materialize(
-        bander(emb, bands=bands, bits=bits), feeds_broadcast=True
-    )
+    # Lazy: AQE creates qb's broadcast stage before any stage that
+    # probes it, so the two never race to fill the checkpoint.
+    banded = materialize(bander(emb, bands=bands, bits=bits))
     banded_is_query = F.col("vec_id") % SIMJOIN_QUERY_MOD == 0
     qb = banded.filter(banded_is_query).withColumnRenamed(
         "vec_id", "query_id"

@@ -123,6 +123,33 @@ def _neighbours(edges, loops):
     return adj
 
 
+def test_edge_index_symmetrizes_and_dedups_raw_rows():
+    """``_edge_index`` (pure numpy, no Spark) turns raw undirected rows,
+    unsorted and split across batches, into ``_adjacency``'s graph: the
+    symmetric distinct directed edge set, a duplicate in either
+    orientation once, a self-loop one neighbour of its node. Node 50
+    appears only as a ``v``; an empty batch and no batches at all are
+    handled."""
+    import pandas as pd
+
+    from reactor_window_like_flink_spark.llm.clustering import _edge_index
+
+    rows = [(3, 1), (1, 3), (3, 1), (2, 2), (7, 2), (2, 7), (2, 2), (1, 50), (9, 3)]
+    batches = [
+        pd.DataFrame(rows[:3], columns=["u", "v"]),
+        pd.DataFrame({"u": pd.Series([], dtype="int64"), "v": pd.Series([], dtype="int64")}),
+        pd.DataFrame(rows[3:7], columns=["u", "v"]),
+        pd.DataFrame(rows[7:], columns=["u", "v"]),
+    ]
+    nodes, si, di = _edge_index(iter(batches))
+    assert nodes.tolist() == [1, 2, 3, 7, 9, 50]
+    got = list(zip(nodes[si].tolist(), nodes[di].tolist()))
+    assert got == sorted(
+        {(a, b) for u, v in rows for a, b in ((u, v), (v, u))}
+    ), got
+    assert _edge_index(iter([])) is None
+
+
 def _pagerank_reference(edges):
     """Sequential power iteration — the semantics spec: same damping,
     iteration count and uniform start; rank rounded to 6dp."""
@@ -298,13 +325,14 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark, gate_sides):
     from pyspark.sql import functions as F
 
     from reactor_window_like_flink_spark.llm.clustering import (
-        _kcore_adjacency,
+        _adjacency,
+        _kcore_edges,
         kcore,
     )
 
     multi, simple = _multigraph()
     df = spark.createDataFrame(multi, "u long, v long")
-    deg = _kcore_adjacency(df).select("src", F.size("dsts").alias("deg"))
+    deg = _adjacency(_kcore_edges(df)).select("src", F.size("dsts").alias("deg"))
     assert {r["src"]: r["deg"] for r in deg.collect()} == {
         n: len(s) for n, s in _neighbours(simple, loops=False).items()
     }
@@ -357,30 +385,31 @@ def test_graph_family_equal_on_both_sides_of_the_gate(spark, gate_sides, algo, g
 
 
 def test_kcore_key_counts(spark, sf_dir):
-    """``q_kcore`` at sf0.001: the build starts 3 jobs (the basket and
-    adjacency shuffles' map stages, and the one-job sizing read) and
-    the local-finish write 1."""
+    """``q_kcore`` at sf0.001: the build starts 2 jobs (the basket
+    shuffle's map stage under the edge list's checkpoint, and the
+    one-job count of its rows) and the local-finish write 1; no
+    adjacency shuffle runs below the bound."""
     from reactor_window_like_flink_spark.observe import run
 
     key = entry_mod.queries()["q_kcore"]
     key(spark, sf_dir)  # infers the lineitem schema once per process
     r = run(spark, lambda: key(spark, sf_dir))
-    assert (r["build_jobs"], r["jobs"]) == (3, 1), r
+    assert (r["build_jobs"], r["jobs"]) == (2, 1), r
 
 
 # (build_jobs, jobs) at sf0.001 of the keys that finish in one task
 # below the edge bound
 _LOCAL_FINISH_KEY_COUNTS = {
-    "q_pagerank": (3, 1),
-    "q_communities_lpa": (3, 1),
-    "q_dedup_groups": (10, 1),
+    "q_pagerank": (2, 1),
+    "q_communities_lpa": (2, 1),
+    "q_dedup_groups": (9, 1),
 }
 
 
 @pytest.mark.parametrize("name", list(_LOCAL_FINISH_KEY_COUNTS))
 def test_local_finish_key_counts(spark, sf_dir, name):
     """Below the edge bound ``q_pagerank`` and ``q_communities_lpa``
-    build like ``q_kcore`` (3 jobs); ``q_dedup_groups`` builds its pair
+    build like ``q_kcore`` (2 jobs); ``q_dedup_groups`` builds its pair
     frame first. Each writes in one job: the single-task kernel, and
     for LPA and the dedup groups the size window over its single
     partition, no exchange."""

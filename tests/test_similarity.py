@@ -460,6 +460,20 @@ def test_similarity_join_fast_equals_exact_and_stays_broadcast(spark, sf_dir):
         assert plan.count("Exchange hashpartitioning") <= 1
 
 
+def test_similarity_join_fast_key_counts(spark, sf_dir):
+    """``q_similarity_join_fast`` at sf0.001 builds with no job: the
+    banding frame is checkpointed lazily and filled by the write's
+    broadcast stage, which AQE creates before any stage that probes
+    it. The write starts 5 jobs. An eager copy of the banding frame
+    would show here as one build job."""
+    from reactor_window_like_flink_spark.observe import run
+
+    key = entry_mod.queries()["q_similarity_join_fast"]
+    key(spark, sf_dir)  # infers the embeddings schema once per process
+    r = run(spark, lambda: key(spark, sf_dir))
+    assert (r["build_jobs"], r["jobs"]) == (0, 5), r
+
+
 def test_knn_graph_default_sizes_bands_jointly_and_warns_when_clamped(spark):
     """Regression: the production default must size bands WITH bits
     (auto_lsh_plan), not hold the 16-band fixture literal while bits

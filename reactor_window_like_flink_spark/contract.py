@@ -77,6 +77,27 @@ def order_small(df: DataFrame, *cols: Column | str) -> DataFrame:
     return df.coalesce(1).orderBy(*cols)
 
 
+def join_small(left: DataFrame, right: DataFrame, on: Column) -> DataFrame:
+    """``left`` inner-joined to ``right`` on ``on`` in ONE task.
+
+    The rule: both sides must be dimension-bounded — nation (25 rows)
+    and region (5 rows) at every scale, or supplier (10,000 × SF rows)
+    when the key already broadcasts the joined result whole, so every
+    row of it is collected for the broadcast anyway. A frame that grows
+    with the facts keeps Catalyst's join. ``CoalesceExec(1)`` reports
+    ``SinglePartition`` on both children, which satisfies a
+    ``ShuffledHashJoin``'s distribution: no exchange and no broadcast
+    job is planned, and the join runs inside the task that reads the
+    two tables. The ``shuffle_hash`` hint is what keeps it there: under
+    the broadcast threshold Catalyst would broadcast the smaller side,
+    and on this build every broadcast is a job of its own (one more for
+    each broadcast nested in another's build side).
+    ``tests/test_plans.py`` pins the rewritten keys and fails on a join
+    over a ``.coalesce(1)`` frame written anywhere else.
+    """
+    return left.coalesce(1).join(right.coalesce(1).hint("shuffle_hash"), on)
+
+
 class Registry:
     """Per-module collection of (query builder, oracle SQL) pairs."""
 

@@ -59,7 +59,11 @@ GROUP_JACCARD_THRESHOLD = 0.5
 MAX_ROUNDS = 25  # star-contraction rounds over the local-finish bound
 
 # DuckDB mirror of dedup._tokenized + _shingles_from_toks(2) pair generation
-# (same expression as the q_dedup_ngram_jaccard oracle, threshold 0.5).
+# (the q_dedup_ngram_jaccard oracle's bigram sets, threshold 0.5). A pair's
+# intersection is counted over the (lang, bigram) equi-join of the
+# distinct bigrams, so only pairs sharing a bigram are formed: the whole
+# q_dedup_groups oracle runs in 11 s at sf0.1, where an all-pairs
+# list_intersect took 300-440 s.
 _DUCK_PAIRS = """
   shingled AS (
     SELECT doc_id, lang,
@@ -71,12 +75,15 @@ _DUCK_PAIRS = """
                     || string_split(lower(text), ' ')[i + 1]) END) AS bg
     FROM documents
   ),
+  grams AS (
+    SELECT doc_id, lang, len(bg) AS n, unnest(bg) AS g FROM shingled
+  ),
   pairs AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM shingled a JOIN shingled b
-      ON a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.bg, b.bg)) AS DOUBLE)
-          / (len(a.bg) + len(b.bg) - len(list_intersect(a.bg, b.bg))) >= 0.5
+    FROM grams a JOIN grams b
+      ON a.lang = b.lang AND a.g = b.g AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id, a.n, b.n
+    HAVING CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)) >= 0.5
   )
 """
 
@@ -277,8 +284,11 @@ def _graph_size(adj: DataFrame) -> tuple[int, int]:
 # (``resource.getrusage`` inside it, its 119 MiB baseline included) on
 # 4M random undirected rows over 1M node ids, 8M directed edges at the
 # bound, 4-vCPU host: components, pagerank and the kcore peel 566 MiB
-# (all three peak while indexing the rows), label propagation 909 MiB
-# (its per-round vote ``np.unique``); all four fit a 1 GiB worker.
+# (all three peak while indexing the rows); all four fit a 1 GiB worker.
+# Label propagation's per-round vote count sorts its keys in place and
+# stays under the index's peak: on the same graph in one standalone
+# process (236 MiB with the input batches), 560 MiB like components;
+# an ``np.unique`` vote count's copies peaked at 933 MiB there.
 # ``_edge_index`` took 1.7-2.1 s there, against 3.7-4.2 s for the
 # adjacency-row index it replaced on the same graph. Over the bound the
 # distributed rounds run: at 100 TB the gate does not fire, so this is
@@ -550,8 +560,9 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 
     The edge list is checkpointed once and one job counts it. At or
     below ``LOCAL_FINISH_EDGES`` the rounds run in one task
-    (``_local_finish``, ``_lpa_kernel``): ``np.unique`` vote counts per
-    (node, label), the same winner rule as the rounds below.
+    (``_local_finish``, ``_lpa_kernel``): vote counts per (node, label)
+    from one in-place sort of the round's keys, the same winner rule as
+    the rounds below.
 
     Over the bound, distributed shape — the ``pagerank`` adjacency-list
     discipline over ``_adjacency`` of the same edge list: each round
@@ -589,14 +600,31 @@ def _lpa_kernel(rounds: int):
         n = len(nodes)
         labels = np.arange(n)
         for _ in range(rounds):
-            # votes per (receiving node, offered label), keys sorted by
-            # node then label; a stable sort on (node, -votes) keeps the
-            # smallest label first among a node's tied maxima
-            keys, votes = np.unique(di * n + labels[si], return_counts=True)
-            node, label = np.divmod(keys, n)
-            order = np.lexsort((-votes, node))
-            win = order[np.r_[True, node[order][1:] != node[order][:-1]]]
-            labels[node[win]] = label[win]
+            # votes per (receiving node, offered label): the edge set is
+            # symmetric, so node si receives di's label; one in-place
+            # sort groups the keys by node, then label, and a run of
+            # equal keys is one vote count
+            keys = si * n
+            keys += labels[di]
+            keys.sort()
+            start = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+            keys = keys[start]
+            u = len(keys)
+            score = np.empty_like(start)
+            np.subtract(start[1:], start[:-1], out=score[:-1])
+            score[-1] = len(si) - start[-1]
+            del start
+            # score = votes * u - run (both <= 2 × rows under the bound,
+            # so it fits an int64): a node's highest score is its most
+            # votes, then its smallest label (labels ascend in a node)
+            score *= u
+            score -= np.arange(u)
+            node = keys // n
+            first = np.flatnonzero(np.r_[True, node[1:] != node[:-1]])
+            best = np.maximum.reduceat(score, first)
+            del score, node, first
+            win = keys[-best % u]
+            labels[win // n] = win % n
         yield pd.DataFrame({"node": nodes, "community": nodes[labels]})
 
     return propagate

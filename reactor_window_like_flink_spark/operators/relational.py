@@ -19,7 +19,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from reactor_window_like_flink_spark.contract import Registry, order_small, round_to
+from reactor_window_like_flink_spark.contract import (
+    Registry,
+    join_small,
+    order_small,
+    round_to,
+)
 from reactor_window_like_flink_spark.functions.materialize import materialize
 from reactor_window_like_flink_spark.sources.tables import load
 
@@ -226,9 +231,11 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped 5-table chain. Dims (nation, region) broadcast;
-    lineitem⋈orders is the only big-big join — Catalyst/AQE reorders and
-    picks the strategy. The orderdate filter pushes to the orders scan."""
+    """TPC-H Q5-shaped 5-table chain. nation⋈region runs in one task
+    (``join_small``) and broadcasts once; lineitem⋈orders is the only
+    big-big join — Catalyst/AQE reorders and picks the strategy. The
+    orderdate filter pushes to the orders scan. 5 jobs at sf0.001, sf0.01
+    and sf0.1: each dim broadcast apart would be one job more."""
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
@@ -238,11 +245,13 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load(spark, sf_dir, "region").filter(
         F.col("r_name").isin("ASIA", "EUROPE")
     )
+    nations = join_small(
+        nation, region, F.col("n_regionkey") == F.col("r_regionkey")
+    ).select("n_nationkey", "n_name")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(F.broadcast(nations), customer.c_nationkey == nations.n_nationkey)
         .groupBy("n_name")
         .agg(
             units_to_currency(F.sum(exact_units(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)), 4).alias("revenue")
@@ -1763,16 +1772,18 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a cross-table equality (customer and supplier share a nation)
     that rewards join reordering.
 
-    Scale shape: region/nation/supplier are broadcast dims, joined in
-    one order — region prunes nation, and supplier joins those asian
+    Scale shape: region prunes nation, and supplier joins those asian
     nations BEFORE being broadcast, carrying ``n_name``, so the
-    broadcast side really is region-pruned (≈1/5 of supplier) and
-    nation⋈region is planned once (a semi-join plus a final nation join
-    built it twice: 8 jobs → 7 at sf0.001). The date range pushes to
-    the orders scan; the only large shuffles are the two fact joins on
-    their keys; the final per-nation aggregate is O(nations) rows. The
-    c_nationkey = s_nationkey predicate rides the supplier join rather
-    than forcing a separate exchange."""
+    broadcast side really is region-pruned (≈1/5 of supplier). Both dim
+    joins run in the one task that reads the three tables
+    (``join_small``: supplier qualifies because the key broadcasts the
+    joined result whole), so the dims cost one broadcast job, where
+    nested broadcasts cost one job each: 5 jobs at sf0.001, sf0.01 and
+    sf0.1. The date range pushes to the orders scan; the only
+    large shuffles are the two fact joins on their keys; the final
+    per-nation aggregate is O(nations) rows. The c_nationkey =
+    s_nationkey predicate rides the supplier join rather than forcing a
+    separate exchange."""
     region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load(spark, sf_dir, "nation")
     supplier = load(spark, sf_dir, "supplier")
@@ -1782,12 +1793,11 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     li = load(spark, sf_dir, "lineitem")
-    asian_nations = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
+    asian_nations = join_small(
+        nation, region, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
-    supplier = supplier.join(
-        F.broadcast(asian_nations),
-        supplier.s_nationkey == asian_nations.n_nationkey,
+    supplier = join_small(
+        supplier, asian_nations, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", "s_nationkey", "n_name")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey)
@@ -2857,7 +2867,12 @@ def q_tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     their rows BEFORE the fact joins — the pair disjunction then runs
     on the tiny joined dims, not the fact. Output is
     2 nations x 2 years rows; the big shuffles are the two fact joins
-    on their natural keys."""
+    on their natural keys. supplier⋈nation stays a broadcast join, not
+    a ``join_small``: both nation roles read the same filtered scan, so
+    the customer side reuses the supplier side's nation broadcast
+    (``ReusedExchange``), and taking it out of the supplier side only
+    moves its job to the customer side (5 jobs at sf0.001, 7 at sf0.1,
+    either way)."""
     two = [Q7_NATION_A, Q7_NATION_B]
     nation = load(spark, sf_dir, "nation").filter(F.col("n_name").isin(two))
     sn = nation.select(
@@ -2932,7 +2947,10 @@ def q_tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the LIKE filter prunes part before its join (predicate
     can't push to parquet as a range but runs in the scan's codegen
-    stage); supplier⋈nation broadcasts; the two fact joins (part on
+    stage); supplier⋈nation runs in one task (``join_small``) and
+    broadcasts whole, one job where a nested broadcast costs two; the
+    two fact
+    joins (part on
     l_partkey, orders on l_orderkey) are the shuffles. Catalyst's AQE
     picks broadcast for the filtered part side when it fits — at 100 TB
     with a billion-row part table it degrades to a shuffle join on
@@ -2942,9 +2960,8 @@ def q_tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
     orders = load(spark, sf_dir, "orders")
-    sn = supplier.join(
-        F.broadcast(nation),
-        supplier.s_nationkey == nation.n_nationkey,
+    sn = join_small(
+        supplier, nation, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey", "n_name")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.1 * (
         F.col("p_retailprice") * F.col("l_quantity")
@@ -3015,7 +3032,9 @@ def q_tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE grouped aggregate (localCheckpoint'd so the rows
     and the threshold derive from the same materialization instead of
-    re-running the 3-table join twice); the total re-aggregates the
+    re-running the 3-table join twice); supplier⋈nation runs in one
+    task (``join_small``) and broadcasts whole, one job where a nested
+    broadcast costs two; the total re-aggregates the
     O(parts) frame; the threshold joins back as a 1-row broadcast
     cross. Arithmetic is integer-CENTS end to end (per-line revenue
     quantized before the sum, BIGINT-exact under any partitioning, see
@@ -3029,8 +3048,8 @@ def q_tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").filter(
         F.col("n_name") == Q11_NATION
     )
-    sn = supplier.join(
-        F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey
+    sn = join_small(
+        supplier, nation, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     # Order-free arithmetic: each line's revenue quantizes to integer
     # CENTS before the sum (the two-op double product is bit-identical

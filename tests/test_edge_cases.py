@@ -303,3 +303,28 @@ def test_round12_keys_survive_empty_tables(spark, empty_dir):
             assert [tuple(r) for r in rows] == [EMPTY_ROWS[key]], key
         if want is not None:
             assert len(rows) == want, key
+
+
+def test_join_small_matches_plain_join(spark):
+    """``contract.join_small`` gives a plain inner join's rows on a null
+    key (never matches), duplicate keys on both sides (their product)
+    and an empty side (no rows)."""
+    from pyspark.sql import functions as F
+
+    from reactor_window_like_flink_spark.contract import join_small
+
+    left = spark.createDataFrame(
+        [(None, "l0"), (1, "l1"), (1, "l2"), (2, "l3"), (3, "l4")], "lk int, lv string"
+    )
+    right = spark.createDataFrame(
+        [(None, "r0"), (1, "r1"), (1, "r2"), (2, "r3"), (4, "r4")], "rk int, rv string"
+    )
+    empty = right.limit(0)
+    on = F.col("lk") == F.col("rk")
+    for a, b in ((left, right), (left, empty), (empty.toDF("lk", "lv"), right)):
+        got = sorted(join_small(a, b, on).collect())
+        assert got == sorted(a.join(b, on).collect())
+    rows = sorted(join_small(left, right, on).collect())
+    assert [(r.lv, r.rv) for r in rows] == [
+        ("l1", "r1"), ("l1", "r2"), ("l2", "r1"), ("l2", "r2"), ("l3", "r3"),
+    ]

@@ -645,7 +645,7 @@ def test_node_counts_reads_the_numbered_node_list(q):
     """``node_counts`` counts each operator once, from the numbered node
     list (the rendered tree above it repeats every name)."""
     c = node_counts(q("q_join_multi"))
-    assert (c["Exchange"], c["BroadcastExchange"]) == (1, 4), c
+    assert (c["Exchange"], c["BroadcastExchange"]) == (1, 3), c
 
 
 def test_run_record_of_a_window_key(spark, q):
@@ -742,3 +742,74 @@ def test_single_task_sort_only_through_order_small():
         and [getattr(a, "value", None) for a in inner.args] == [1]
     ]
     assert not bad, f".coalesce(1).orderBy(...) outside contract.order_small: {bad}"
+
+
+# key -> observe.run (build jobs, write jobs) at sf0.001
+_JOIN_SMALL_KEYS = {
+    "q_join_multi": (0, 5),
+    "q_tpch_q5_shape": (0, 5),
+    "q_tpch_q9_shape": (0, 5),
+    "q_tpch_q11_shape": (2, 5),
+}
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The rendered subtree under each ``node`` line of a plan tree
+    string: the following lines indented deeper than it."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if ln.lstrip(" :+-").startswith(node):
+            j = i + 1
+            while j < len(lines) and depth[j] > depth[i]:
+                j += 1
+            out.append("\n".join(lines[i + 1 : j]))
+    return out
+
+
+@pytest.mark.parametrize("key", sorted(_JOIN_SMALL_KEYS))
+def test_dimension_joins_run_in_one_task(spark, q, monkeypatch, key):
+    """``contract.join_small``: each dimension join is a
+    ``ShuffledHashJoin`` with no shuffle and no broadcast beneath it, so
+    it costs no job of its own, and the key runs in its pinned jobs."""
+    from reactor_window_like_flink_spark.observe import run
+    from reactor_window_like_flink_spark.operators import relational
+
+    q(key)  # infers the tables' schemas once per process
+    r = run(spark, lambda: q(key))
+    assert (r["build_jobs"], r["jobs"]) == _JOIN_SMALL_KEYS[key], r
+    # q11 checkpoints the aggregate over its join: read the join in the
+    # plan with the checkpoint taken out
+    monkeypatch.setattr(relational, "materialize", lambda df: df)
+    plan = q(key)._jdf.queryExecution().executedPlan().toString()
+    under = _subtrees(plan, "ShuffledHashJoin")
+    assert under, plan
+    assert not [t for t in under if "Exchange" in t], plan
+
+
+def test_single_task_join_only_through_join_small():
+    """``contract.join_small`` is the only place a join reads a
+    ``.coalesce(1)`` frame, on either side: the one-task join rule has
+    one home."""
+    import ast
+
+    from test_entry_contract import _method_call, _package_nodes
+
+    def coalesced(node) -> bool:
+        """Whether the method chain ``node`` passes a ``.coalesce(1)``."""
+        while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if _method_call(node, "coalesce") and [
+                getattr(a, "value", None) for a in node.args
+            ] == [1]:
+                return True
+            node = node.func.value
+        return False
+
+    bad = [
+        where
+        for where, node in _package_nodes("contract.py")
+        if _method_call(node, "join")
+        and (coalesced(node.func.value) or any(coalesced(a) for a in node.args[:1]))
+    ]
+    assert not bad, f"join over a .coalesce(1) frame outside contract.join_small: {bad}"

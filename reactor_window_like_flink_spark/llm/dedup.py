@@ -728,19 +728,51 @@ def auto_lsh_plan(
     return bands, bits
 
 
-def emb_band_buckets_fast(
+def _lsh_widths(
+    emb: DataFrame,
+    bands: int | None,
+    bits: int | None,
+    n_vectors: int | None,
+) -> tuple[int, int]:
+    """(bands, bits) for a signature pass: ``bands=None`` is the
+    ``EMB_LSH_BANDS`` literal, ``bits=None`` ``auto_lsh_bits`` of
+    ``n_vectors``, or of one ``emb.count()`` job when that is None."""
+    if bands is None:
+        bands = EMB_LSH_BANDS
+    if bits is None:
+        bits = auto_lsh_bits(
+            emb.count() if n_vectors is None else n_vectors
+        )
+    return bands, bits
+
+
+def explode_sig(signed: DataFrame, *keep: str | F.Column) -> DataFrame:
+    """``keep`` plus (band, bucket), one row per band of ``signed.sig``.
+    ``posexplode_outer``, not ``posexplode``: on a named array column
+    the non-outer generator makes Catalyst infer a ``size(sig) > 0``
+    filter and inline ``sig``'s whole expression into it, which
+    evaluates every plane dot twice per row. ``sig`` always holds
+    ``bands`` elements, so the rows are the same."""
+    return signed.select(
+        *keep, F.posexplode_outer("sig").alias("band", "bucket")
+    )
+
+
+def emb_band_sig_fast(
     emb: DataFrame,
     bands: int | None = None,
     bits: int | None = None,
     seed: int = EMB_LSH_SEED,
     n_vectors: int | None = None,
 ) -> DataFrame:
-    """Production-kernel twin of ``emb_band_buckets``: the same sign-LSH
-    assignment as ONE numpy matmul per Arrow batch instead of
+    """Production-kernel twin of ``emb_band_sig``: the same ``sig``
+    column computed as ONE numpy matmul per Arrow batch instead of
     bands x bits interpreted HOF folds per row (the measured
-    fixed-width-numeric kernel rule, BASELINE.md). ReusedExchange can't
-    fire across the Python mapInPandas, so a caller that reads the
-    buckets more than once materializes them itself.
+    fixed-width-numeric kernel rule, BASELINE.md). Every column of
+    ``emb`` passes through the kernel as the same Arrow buffers, so pass
+    only what the caller reads. ReusedExchange can't fire across the
+    Python ``mapInArrow``, so a caller that reads the signatures more
+    than once materializes them itself.
 
     ``bits=None`` (the default) sizes the bucket width from the corpus
     count via ``auto_lsh_bits`` because banded candidate volume is
@@ -758,67 +790,79 @@ def emb_band_buckets_fast(
     fixture-pinned oracle/equality keys pass the
     ``EMB_LSH_BANDS``/``EMB_LSH_BITS`` literals explicitly."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    if bands is None:
-        bands = EMB_LSH_BANDS
-    if bits is None:
-        bits = auto_lsh_bits(
-            emb.count() if n_vectors is None else n_vectors
-        )
+    bands, bits = _lsh_widths(emb, bands, bits, n_vectors)
     planes_t = _emb_hyperplanes(bands * bits, seed)
 
     def sig_batches(batches):
         h_mat = np.array(planes_t).T  # (dim, planes)
-        for pdf in batches:
-            if not len(pdf):
+        lanes = np.arange(bits, dtype="int32")
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            e_mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            bits_m = (e_mat @ h_mat) > 0  # (n, planes)
-            buckets = np.zeros((len(e_mat), bands), dtype="int32")
-            for j in range(bands):
-                for lane in range(bits):
-                    buckets[:, j] |= (
-                        bits_m[:, j * bits + lane].astype("int32") << lane
-                    )
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
-                    "band": np.tile(
-                        np.arange(bands, dtype="int32"), len(e_mat)
-                    ),
-                    "bucket": buckets.reshape(-1),
-                }
+            e_mat = (
+                batch.column("embedding").flatten().to_numpy()
+                .reshape(n, -1).astype("float64")
+            )
+            bits_m = (e_mat @ h_mat) > 0  # (n, planes), band-major
+            sig = (
+                bits_m.reshape(n, bands, bits).astype("int32") << lanes
+            ).sum(axis=2, dtype="int32")
+            offsets = np.arange(0, n * bands + 1, bands, dtype="int32")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *batch.columns,
+                    pa.ListArray.from_arrays(offsets, sig.reshape(-1)),
+                ],
+                names=[*batch.schema.names, "sig"],
             )
 
-    return emb.mapInPandas(sig_batches, "vec_id long, band int, bucket int")
+    schema = StructType(
+        emb.schema.fields + [StructField("sig", ArrayType(IntegerType()))]
+    )
+    return emb.mapInArrow(sig_batches, schema)
 
 
-def emb_band_buckets(
+def emb_band_buckets_fast(
     emb: DataFrame,
     bands: int | None = None,
     bits: int | None = None,
     seed: int = EMB_LSH_SEED,
     n_vectors: int | None = None,
 ) -> DataFrame:
-    """Sign-LSH band/bucket assignment: (vec_id, band, bucket), one row
-    per band. Shared by the embedding near-dup join (which pins the
-    oracle literals explicitly) and the kNN-graph builder
-    (llm/similarity.py — which pins its own KNN_LSH_BANDS=16 ×
-    KNN_LSH_BITS=4 literals at its own seed, since kNN needs recall at
-    moderate cosine where near-dup only needs it near 1.0).
+    """``emb_band_sig_fast`` exploded to (vec_id, band, bucket), one row
+    per band; same sizing contract."""
+    return explode_sig(emb_band_sig_fast(
+        emb.select("vec_id", "embedding"), bands, bits, seed, n_vectors
+    ), "vec_id")
+
+
+def emb_band_sig(
+    emb: DataFrame,
+    bands: int | None = None,
+    bits: int | None = None,
+    seed: int = EMB_LSH_SEED,
+    n_vectors: int | None = None,
+) -> DataFrame:
+    """Sign-LSH signature: ``emb``'s columns plus ``sig``, an
+    ``array<int>`` of ``bands`` bucket ids, where bucket ``j`` sets bit
+    ``lane`` when the embedding's dot with hyperplane
+    ``j * bits + lane`` is positive. Shared by the embedding near-dup
+    join (which pins the oracle literals explicitly), the cross-corpus
+    similarity join and the kNN-graph builder (llm/similarity.py —
+    which pins its own KNN_LSH_BANDS=16 × KNN_LSH_BITS=4 literals at
+    its own seed, since kNN needs recall at moderate cosine where
+    near-dup only needs it near 1.0).
     The interpreted HOF dot products are the oracle-exact form; the fast
-    twin (`lsh_cosine_pairs_fast`) does the same banding as one numpy
+    twin (``emb_band_sig_fast``) does the same banding as one numpy
     matmul. ``bits=None`` derives from the corpus count via
     ``auto_lsh_bits`` (same sizing contract — and same lineage-recount
     and recall caveats — as the fast twin; pass ``n_vectors`` to skip
     the count job)."""
-    if bands is None:
-        bands = EMB_LSH_BANDS
-    if bits is None:
-        bits = auto_lsh_bits(
-            emb.count() if n_vectors is None else n_vectors
-        )
+    bands, bits = _lsh_widths(emb, bands, bits, n_vectors)
     planes = _emb_hyperplanes(bands * bits, seed)
 
     def plane_dot(h: list[float]) -> F.Column:
@@ -841,11 +885,22 @@ def emb_band_buckets(
             bucket = bucket + bit
         return bucket
 
-    return emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[band_bucket(j) for j in range(bands)])
-        ).alias("band", "bucket"),
+    return emb.withColumn(
+        "sig", F.array(*[band_bucket(j) for j in range(bands)])
+    )
+
+
+def emb_band_buckets(
+    emb: DataFrame,
+    bands: int | None = None,
+    bits: int | None = None,
+    seed: int = EMB_LSH_SEED,
+    n_vectors: int | None = None,
+) -> DataFrame:
+    """``emb_band_sig`` exploded to (vec_id, band, bucket), one row per
+    band; same sizing contract."""
+    return explode_sig(
+        emb_band_sig(emb, bands, bits, seed, n_vectors), "vec_id"
     )
 
 

@@ -21,6 +21,9 @@ from reactor_window_like_flink_spark.sources.tables import load
 REG = Registry()
 
 TARGET_SMOOTHING = 100.0  # pseudo-observations of the global prior
+# The encoding ledger's layout as ``encoding_ingest_sink`` writes it;
+# ``current_encoding`` reads with it, so the read infers nothing.
+LEDGER_SCHEMA = "category string, n long, s double, batch_id int"
 
 
 @REG.add(
@@ -373,7 +376,8 @@ def encoding_ingest_sink(spark: SparkSession, ledger_dir: str):
     the serving join never touches raw events."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        agg = batch_df.groupBy("category").agg(
+        category = F.col("category").cast("string").alias("category")
+        agg = batch_df.groupBy(category).agg(
             F.count("*").cast("long").alias("n"),
             F.sum(F.col("target").cast("double")).alias("s"),
         )
@@ -399,8 +403,9 @@ def current_encoding(
     from the same O(categories) frame, and emit the identical
     (category, n, seg_mean, encoded) formula as ``q_target_encoding``
     — so a batch recompute and the streamed ledger agree exactly
-    (pytest-pinned)."""
-    ledger = spark.read.parquet(ledger_dir)
+    (pytest-pinned). The ledger is read with the sink's
+    ``LEDGER_SCHEMA``: no schema-inference job."""
+    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
     seg = ledger.groupBy("category").agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("s").alias("s"),

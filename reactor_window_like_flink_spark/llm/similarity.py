@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from reactor_window_like_flink_spark.contract import Registry, round_to
 from reactor_window_like_flink_spark.functions.materialize import materialize
@@ -916,25 +917,36 @@ def similarity_join(
     corpus; this finds eval-set leakage INTO a corpus (the embedding
     analog of q_decontaminate's n-gram shingle match).
 
-    The asymmetry is the plan: the query side (eval sets are thousands
-    of rows, not billions) is banded with the SAME sign-LSH literals as
-    the self-join family and then BROADCAST — the corpus side's bucket
-    stream joins it with zero corpus shuffle, and both confirm joins
-    broadcast the (small) candidate frame back against the narrow
-    embedding scans. At 100 TB the corpus is read once and never
+    The plan has one broadcast and no shuffle. One signature frame holds
+    a row per vector, ``(vec_id, embedding, nrm, sig)``: the norm and
+    the ``bands`` sign-LSH bucket ids (``emb_band_sig``, the SAME
+    hyperplane literals as the self-join family), computed once and
+    checkpointed lazily. The query side (eval sets are thousands of
+    rows, not billions) is that frame filtered and exploded to one row
+    per band, carrying its embedding, norm and signature, and it is the
+    only broadcast: query rows × ``bands`` rows. The corpus side streams
+    the same frame, exploded the same way, and probes it on
+    ``(band, bucket)``. At 100 TB the corpus is read once and never
     exchanged; compare the self-join, which must shuffle both sides by
-    bucket. Only the candidate dedup shuffles, and that is O(collisions
-    with the eval set), not O(corpus).
+    bucket. No candidate-sized frame is shuffled or broadcast anywhere.
 
-    ``fast_banding`` switches the bucket assignment to the numpy-matmul
-    kernel (the measured fixed-width-numeric rule, BASELINE.md); the
-    cosine CONFIRM stays the JVM fold either way — the candidate frame
-    is small, so the fast path's win is the corpus-side banding pass.
-    The exact form's buckets (and therefore its full row set) hash-check
-    against DuckDB via the shared hyperplane literals, same contract as
-    q_dedup_embedding; the fast twin can diverge only when a plane dot
-    sits within float-summation error of zero (pair-set equality on the
-    fixtures is pytest-asserted).
+    First-band rule: a pair that collides in several bands meets in
+    each of them, and is kept only at the lowest one, i.e. where
+    ``sig_q[j] != sig_c[j]`` for every ``j < band``. The test is
+    unrolled over the build-time ``bands`` into plain element compares,
+    so every distinct pair is emitted exactly once (the set a
+    ``dropDuplicates`` over all colliding bands gives), and its cosine
+    is computed per pair, not per colliding band, with both embeddings
+    already on the probe row.
+
+    ``fast_banding`` switches the signature pass to the numpy-matmul
+    kernel (``emb_band_sig_fast``, the measured fixed-width-numeric
+    rule, BASELINE.md); the cosine CONFIRM stays the JVM fold either
+    way. The exact form's buckets (and therefore its full row set)
+    hash-check against DuckDB via the shared hyperplane literals, same
+    contract as q_dedup_embedding; the fast twin can diverge only when
+    a plane dot sits within float-summation error of zero (pair-set
+    equality on the fixtures is pytest-asserted).
 
     ``bands``/``bits`` default to ``None`` = the production sizing:
     ``(bands, bits) = auto_lsh_plan(corpus_count, threshold)`` — one
@@ -944,65 +956,64 @@ def similarity_join(
     driver-maxResultSize failure; 11 auto bits → 186,490 candidates,
     10.6 s single-run end-to-end) and bands scale with bits to hold
     recall ≥ 0.9 at the configured threshold (occupancy-only sizing
-    let recall decay as bits grew — the round-10 ADVICE fix). Two
-    broadcast frames, each with its own bound: the candidate ID pairs
-    (never joined to embeddings before broadcast — that product is
-    what blew up) and the eval-set embeddings. The fixture-pinned
-    registered keys (``q_similarity_join[_fast]``) pass the oracle
-    literals explicitly."""
+    let recall decay as bits grew — the round-10 ADVICE fix). The
+    fixture-pinned registered keys (``q_similarity_join[_fast]``) pass
+    the oracle literals explicitly."""
     from reactor_window_like_flink_spark.llm.dedup import (
         EMB_COSINE_THRESHOLD,
+        EMB_LSH_BANDS,
         auto_lsh_bits,
         auto_lsh_plan,
-        emb_band_buckets,
-        emb_band_buckets_fast,
+        emb_band_sig,
+        emb_band_sig_fast,
+        explode_sig,
     )
 
-    bander = emb_band_buckets_fast if fast_banding else emb_band_buckets
+    signer = emb_band_sig_fast if fast_banding else emb_band_sig
     emb = load(spark, sf_dir, "embeddings")
     is_query = F.col("vec_id") % SIMJOIN_QUERY_MOD == 0
-    queries = emb.filter(is_query)
-    corpus = emb.filter(~is_query)
-    if bands is None and bits is None:
+    if bits is None:
         # size by the big (corpus) side — it dominates candidate volume
-        bands, bits = auto_lsh_plan(corpus.count(), EMB_COSINE_THRESHOLD)
-    elif bits is None:
-        bits = auto_lsh_bits(corpus.count())
-    # band the WHOLE table once and split after: banding is row-local,
-    # so banding(union) == banding(each side), but as two calls the
-    # banding pass (a Python mapInPandas for the fast kernel, a
-    # bands×bits HOF fold per row for the exact one) runs twice over
-    # the same parquet — once per side. One materialized pass serves
-    # both filters: the broadcast query side qb and the probe side cb.
-    # Lazy: AQE creates qb's broadcast stage before any stage that
-    # probes it, so the two never race to fill the checkpoint.
-    banded = materialize(bander(emb, bands=bands, bits=bits))
-    banded_is_query = F.col("vec_id") % SIMJOIN_QUERY_MOD == 0
-    qb = banded.filter(banded_is_query).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    cb = banded.filter(~banded_is_query)
-    cand = (
-        cb.join(F.broadcast(qb), ["band", "bucket"])
-        .select("query_id", F.col("vec_id").alias("corpus_id"))
-        .dropDuplicates(["query_id", "corpus_id"])
-    )
-    q_emb = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("emb_q"),
-        _norm("embedding").alias("nrm_q"),
-    )
-    c_emb = corpus.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.col("embedding").alias("emb_c"),
-        _norm("embedding").alias("nrm_c"),
-    )
-    paired = c_emb.join(F.broadcast(cand), "corpus_id").join(
-        F.broadcast(q_emb), "query_id"
-    )
+        n_corpus = emb.filter(~is_query).count()
+        if bands is None:
+            bands, bits = auto_lsh_plan(n_corpus, EMB_COSINE_THRESHOLD)
+        else:
+            bits = auto_lsh_bits(n_corpus)
+    if bands is None:
+        bands = EMB_LSH_BANDS
+    # Lazy: AQE creates the query side's broadcast stage before the
+    # stage that probes it, so the two never race to fill the checkpoint,
+    # and the banding pass runs once for both sides.
+    signed = materialize(signer(
+        emb.select("vec_id", "embedding", _norm("embedding").alias("nrm")),
+        bands=bands,
+        bits=bits,
+    ))
+
+    def side(rows: DataFrame, id_col: str, tag: str) -> DataFrame:
+        return explode_sig(
+            rows,
+            F.col("vec_id").alias(id_col),
+            F.col("embedding").alias(f"emb_{tag}"),
+            F.col("nrm").alias(f"nrm_{tag}"),
+            F.col("sig").alias(f"sig_{tag}"),
+        )
+
+    first_band = F.lit(True)
+    for j in range(bands - 1):
+        first_band = first_band & (
+            (F.col("band") <= j)
+            | (F.element_at("sig_q", j + 1) != F.element_at("sig_c", j + 1))
+        )
     cos = _dot("emb_q", "emb_c") / (F.col("nrm_q") * F.col("nrm_c"))
     return (
-        paired.withColumn("_cos", cos)
+        side(signed.filter(~is_query), "corpus_id", "c")
+        .join(
+            F.broadcast(side(signed.filter(is_query), "query_id", "q")),
+            ["band", "bucket"],
+        )
+        .filter(first_band)
+        .withColumn("_cos", cos)
         .filter(F.col("_cos") >= EMB_COSINE_THRESHOLD)
         .select(
             "query_id", "corpus_id", round_to("_cos", 4).alias("cosine")
@@ -1323,6 +1334,8 @@ class AnnIngestIndex:
         self.recent_n = 0
         self.gen = 0
         self.rebuilds = 0
+        # the layout's schema, set when generation 0 is written
+        self.schema: StructType | None = None
 
     @property
     def gen_dir(self) -> str:
@@ -1331,8 +1344,9 @@ class AnnIngestIndex:
     def table(self) -> DataFrame:
         """The current generation as a DataFrame (batch_id and cell are
         partition columns — ``cell IN (...)`` probes prune at planning
-        time exactly like ``ivfpq_table``'s layout)."""
-        return self.spark.read.parquet(self.gen_dir)
+        time exactly like ``ivfpq_table``'s layout), read with the
+        layout's ``schema``: no schema-inference job."""
+        return self.spark.read.schema(self.schema).parquet(self.gen_dir)
 
     def search(
         self,
@@ -1417,6 +1431,12 @@ def fit_ann_ingest_index(
     centroids, codebooks = _fit_ann_params(sample, cells, m, k, seed)
     index = AnnIngestIndex(spark, root, centroids, codebooks, 0.0)
     rows = materialize(_encoded(index, bootstrap))
+    # partition columns read back last, in directory order
+    index.schema = StructType(
+        [f for f in rows.schema.fields if f.name not in ("cell", "qerr")]
+        + [StructField("batch_id", IntegerType()),
+           StructField("cell", IntegerType())]
+    )
     rows.drop("qerr").write.mode("overwrite").partitionBy("cell").parquet(
         f"{index.gen_dir}/batch_id=-1"
     )

@@ -2872,7 +2872,12 @@ def q_tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer side reuses the supplier side's nation broadcast
     (``ReusedExchange``), and taking it out of the supplier side only
     moves its job to the customer side (5 jobs at sf0.001, 7 at sf0.1,
-    either way)."""
+    either way).
+
+    The result is empty at sf0.001: none of its 10 suppliers is in
+    either nation (13 of its 150 customers are), so the supplier side
+    empties the join. sf0.01 and sf0.1 give 4 rows each (DuckDB), and
+    ``tests/test_plans.py`` pins the sf0.01 result as non-empty."""
     two = [Q7_NATION_A, Q7_NATION_B]
     nation = load(spark, sf_dir, "nation").filter(F.col("n_name").isin(two))
     sn = nation.select(

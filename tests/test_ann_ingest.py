@@ -4,6 +4,8 @@ EXECUTED drift-triggered rebuild."""
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 import pytest
 
@@ -235,3 +237,22 @@ def test_ann_ingest_live_stream(spark, tmp_path):
     assert n == 300
     codes = index.table().select("code").first()["code"]
     assert len(codes) == 16  # PQ_M ints per row
+
+
+def test_table_reads_layout_schema_without_a_job(spark, ingested):
+    """``AnnIngestIndex.table`` reads with the schema recorded when
+    generation 0 was written, the one an inferring read finds, so it
+    starts no job (an inferring read starts one). A missing generation
+    directory raises the same ``PATH_NOT_FOUND`` as an inferring
+    read."""
+    from _jobs import count_jobs
+    from pyspark.errors import AnalysisException
+
+    index, _ = ingested
+    assert count_jobs(spark, index.table) == 0
+    assert count_jobs(spark, lambda: spark.read.parquet(index.gen_dir)) == 1
+    assert index.table().schema == spark.read.parquet(index.gen_dir).schema
+    missing = copy.copy(index)
+    missing.gen += 100
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        missing.table()

@@ -7,9 +7,12 @@ from _round import rhalf
 
 import math
 
+import pytest
+
 import __spark_entry__ as entry_mod
 from reactor_window_like_flink_spark.llm.features import (
     FEATURE_COLS,
+    LEDGER_SCHEMA,
     TARGET_SMOOTHING,
 )
 from reactor_window_like_flink_spark.plans import formatted_plan, has_node
@@ -207,3 +210,29 @@ def test_encoding_ingest_sink_stream_equals_batch_and_replays(spark, tmp_path):
     assert {c: (r["n"], r["encoded"]) for c, r in got.items()} == {
         c: (r["n"], r["encoded"]) for c, r in again.items()
     }
+
+
+def test_current_encoding_reads_ledger_with_sink_schema(spark, tmp_path):
+    """``current_encoding`` reads the ledger with the sink's
+    ``LEDGER_SCHEMA``, the schema an inferring read finds, so building
+    the frame starts no job (an inferring read starts one). A missing
+    ledger raises the same ``PATH_NOT_FOUND`` as an inferring read."""
+    from _jobs import count_jobs
+    from pyspark.errors import AnalysisException
+
+    from reactor_window_like_flink_spark.llm.features import (
+        current_encoding,
+        encoding_ingest_sink,
+    )
+
+    ledger = str(tmp_path / "enc_ledger")
+    encoding_ingest_sink(spark, ledger)(
+        spark.createDataFrame([("a", 1.0), ("b", 2.0)], "category string, target double"),
+        0,
+    )
+    assert count_jobs(spark, lambda: current_encoding(spark, ledger)) == 0
+    assert count_jobs(spark, lambda: spark.read.parquet(ledger)) == 1
+    got = spark.read.schema(LEDGER_SCHEMA).parquet(ledger).schema
+    assert got == spark.read.parquet(ledger).schema
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        current_encoding(spark, str(tmp_path / "missing"))

@@ -536,6 +536,17 @@ def test_tpch_q7_broadcasts_both_nation_dims_and_pushes_dates(q):
     assert len(li_scans) == 1
 
 
+def test_tpch_q7_is_non_empty_at_sf0_01(spark):
+    """At sf0.001 none of the 10 suppliers is in either Q7 nation, so
+    the supplier side empties ``q_tpch_q7_shape`` and the oracle check
+    there compares two empty results. At sf0.01 the key has rows (the
+    DuckDB oracle gives 4, as at sf0.1), so that scale's check is not
+    vacuous."""
+    from conftest import SF_MEDIUM
+
+    assert entry_mod.queries()["q_tpch_q7_shape"](spark, SF_MEDIUM).collect()
+
+
 def test_tpch_q9_single_fact_scan_five_way_star(q):
     """Q9's five-relation star must resolve to equi-joins only (no
     nested loop from the LIKE), scan lineitem exactly once, and join

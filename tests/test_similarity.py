@@ -438,10 +438,10 @@ def test_semdedup_greedy_prune_matches_sequential_reference(spark):
 def test_similarity_join_fast_equals_exact_and_stays_broadcast(spark, sf_dir):
     """Cross-corpus similarity join: the numpy-banded production twin
     must emit the identical (query, corpus) pair set as the
-    oracle-checked HOF form, and the plan must keep the corpus side
-    unshuffled — broadcast joins only, with the single hash exchange
-    being the candidate dedup (O(eval-set collisions), not corpus)."""
-    from reactor_window_like_flink_spark.plans import formatted_plan
+    oracle-checked HOF form, and the plan must keep both sides
+    unshuffled: no hash exchange at all, and exactly one broadcast,
+    the query side's banded rows (query rows x bands)."""
+    from reactor_window_like_flink_spark.plans import node_counts
 
     qs = entry_mod.queries()
     exact = qs["q_similarity_join"](spark, sf_dir)
@@ -453,25 +453,219 @@ def test_similarity_join_fast_equals_exact_and_stays_broadcast(spark, sf_dir):
     assert e_rows.keys() == f_rows.keys() and len(e_rows) > 0
     # the confirm kernel is shared JVM code: cosines are bit-equal
     assert all(e_rows[k] == f_rows[k] for k in e_rows)
-    for df in (exact, fast):
-        plan = formatted_plan(df)
-        assert "SortMergeJoin" not in plan
-        assert "CartesianProduct" not in plan
-        assert plan.count("Exchange hashpartitioning") <= 1
+    for key in ("q_similarity_join", "q_similarity_join_fast"):
+        nodes = node_counts(qs[key](spark, sf_dir))  # the unexecuted plan
+        assert nodes["Exchange"] == 0, nodes
+        assert nodes["BroadcastExchange"] == 1, nodes
+        assert nodes["SortMergeJoin"] == 0 and nodes["CartesianProduct"] == 0
 
 
 def test_similarity_join_fast_key_counts(spark, sf_dir):
-    """``q_similarity_join_fast`` at sf0.001 builds with no job: the
-    banding frame is checkpointed lazily and filled by the write's
-    broadcast stage, which AQE creates before any stage that probes
-    it. The write starts 5 jobs. An eager copy of the banding frame
-    would show here as one build job."""
+    """Both similarity-join keys at sf0.001 build with no job: the
+    signature frame is checkpointed lazily and filled by the write's
+    one broadcast stage, which AQE creates before the stage that probes
+    it. The write starts 2 jobs, that broadcast and the result. An
+    eager copy of the signature frame would show here as one build
+    job, a candidate dedup as a shuffle."""
     from reactor_window_like_flink_spark.observe import run
 
-    key = entry_mod.queries()["q_similarity_join_fast"]
-    key(spark, sf_dir)  # infers the embeddings schema once per process
-    r = run(spark, lambda: key(spark, sf_dir))
-    assert (r["build_jobs"], r["jobs"]) == (0, 5), r
+    for key in ("q_similarity_join_fast", "q_similarity_join"):
+        fn = entry_mod.queries()[key]
+        fn(spark, sf_dir)  # infers the embeddings schema once per process
+        r = run(spark, lambda: fn(spark, sf_dir))
+        assert (r["build_jobs"], r["jobs"]) == (0, 2), (key, r)
+        assert (r["shuffles"], r["broadcasts"]) == (0, 1), (key, r)
+
+
+def test_signature_pass_evaluated_once_per_side(spark, sf_dir, monkeypatch):
+    """Each hyperplane dot of the exact signature is evaluated once per
+    side that explodes it: the bucket rows (``emb_band_buckets``) read
+    the 8 x 4 plane dots once, and ``q_similarity_join``, with its lazy
+    checkpoint taken out so the signature pass shows in the key's own
+    plan, once for the query side and once for the corpus side. A
+    non-outer ``posexplode`` of the named ``sig`` column fails this:
+    Catalyst infers a ``size(sig) > 0`` filter and inlines every plane
+    dot into it, so each appears twice per side."""
+    from reactor_window_like_flink_spark.llm import similarity
+    from reactor_window_like_flink_spark.llm.dedup import (
+        EMB_LSH_BANDS,
+        EMB_LSH_BITS,
+        emb_band_buckets,
+    )
+    from reactor_window_like_flink_spark.sources.tables import load
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    planes = EMB_LSH_BANDS * EMB_LSH_BITS
+    emb = load(spark, sf_dir, "embeddings")
+    plan = optimized(
+        emb_band_buckets(emb, bands=EMB_LSH_BANDS, bits=EMB_LSH_BITS)
+    )
+    assert plan.count("zip_with(embedding") == planes
+    assert "size(" not in plan
+    monkeypatch.setattr(similarity, "materialize", lambda df: df)
+    plan = optimized(entry_mod.queries()["q_similarity_join"](spark, sf_dir))
+    assert plan.count("zip_with(embedding") == 2 * planes
+    assert "size(" not in plan
+
+
+def _signature(v):
+    """``emb_band_sig``'s bucket ids of ``v`` in numpy, and the smallest
+    |plane dot| (how far ``v`` sits from a sign boundary)."""
+    from reactor_window_like_flink_spark.llm.dedup import (
+        EMB_LSH_BANDS,
+        EMB_LSH_BITS,
+        EMB_LSH_SEED,
+        _emb_hyperplanes,
+    )
+
+    planes = np.array(
+        _emb_hyperplanes(EMB_LSH_BANDS * EMB_LSH_BITS, EMB_LSH_SEED)
+    )
+    dots = planes @ np.asarray(v, dtype="float64")
+    bits = (dots > 0).reshape(EMB_LSH_BANDS, EMB_LSH_BITS).astype(int)
+    sig = (bits << np.arange(EMB_LSH_BITS)).sum(axis=1)
+    return sig.tolist(), float(np.abs(dots).min())
+
+
+def _planted_embeddings():
+    """(vec_id, embedding) rows around three centres, every vector at
+    least 1e-3 from every hyperplane's sign boundary, plus two planted
+    pairs: corpus row 1 is a copy of query row 0 (all 8 bands collide),
+    and query 10 / corpus 11 collide in the last band only, at a cosine
+    over the threshold. Query rows are the ``SIMJOIN_QUERY_MOD``
+    multiples."""
+    from reactor_window_like_flink_spark.llm.dedup import (
+        EMB_COSINE_THRESHOLD,
+        EMB_DIM,
+    )
+
+    rng = np.random.default_rng(17)
+
+    def vec(x):
+        v = [float(np.float32(t)) for t in x]
+        return v if _signature(v)[1] > 1e-3 else None
+
+    q0 = None
+    while q0 is None:
+        q0 = vec(rng.standard_normal(EMB_DIM))
+    rows = {0: q0, 1: list(q0)}
+    while 10 not in rows:
+        q = vec(rng.standard_normal(EMB_DIM))
+        c = q and vec(np.array(q) + 0.9 * rng.standard_normal(EMB_DIM))
+        if not c:
+            continue
+        sq, sc = _signature(q)[0], _signature(c)[0]
+        cos = np.dot(q, c) / (np.linalg.norm(q) * np.linalg.norm(c))
+        same = [a == b for a, b in zip(sq, sc)]
+        if same == [False] * 7 + [True] and cos >= EMB_COSINE_THRESHOLD + 0.05:
+            rows[10], rows[11] = q, c
+    centres = rng.standard_normal((3, EMB_DIM))
+    vid = 12
+    while vid < 60:
+        v = vec(centres[vid % 3] + 0.6 * rng.standard_normal(EMB_DIM))
+        if v:
+            rows[vid] = v
+            vid += 1
+    return sorted(rows.items())
+
+
+def _write_embeddings(spark, path, rows):
+    spark.createDataFrame(
+        [(i, v, "x") for i, v in rows],
+        "vec_id long, embedding array<float>, label string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/embeddings.parquet")
+    return str(path)
+
+
+def _reference_join(spark, sf):
+    """Every colliding (query, corpus) pair by the bucket rows: a join
+    on (band, bucket) over ``emb_band_buckets``, ``dropDuplicates``,
+    then the same cosine and rounding as the key."""
+    from reactor_window_like_flink_spark.contract import round_to
+    from reactor_window_like_flink_spark.llm.dedup import (
+        EMB_COSINE_THRESHOLD,
+        EMB_LSH_BANDS,
+        EMB_LSH_BITS,
+        emb_band_buckets,
+    )
+    from reactor_window_like_flink_spark.llm.similarity import (
+        SIMJOIN_QUERY_MOD,
+        _dot,
+        _norm,
+    )
+
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    is_q = F.col("vec_id") % SIMJOIN_QUERY_MOD == 0
+    b = emb_band_buckets(emb, bands=EMB_LSH_BANDS, bits=EMB_LSH_BITS)
+    cand = (
+        b.filter(is_q).withColumnRenamed("vec_id", "query_id")
+        .join(b.filter(~is_q).withColumnRenamed("vec_id", "corpus_id"),
+              ["band", "bucket"])
+        .select("query_id", "corpus_id")
+        .dropDuplicates()
+    )
+
+    def side(id_col, tag):
+        return emb.select(
+            F.col("vec_id").alias(id_col),
+            F.col("embedding").alias(f"emb_{tag}"),
+            _norm("embedding").alias(f"nrm_{tag}"),
+        )
+
+    cos = _dot("emb_q", "emb_c") / (F.col("nrm_q") * F.col("nrm_c"))
+    return sorted(
+        tuple(r)
+        for r in cand.join(side("query_id", "q"), "query_id")
+        .join(side("corpus_id", "c"), "corpus_id")
+        .withColumn("_cos", cos)
+        .filter(F.col("_cos") >= EMB_COSINE_THRESHOLD)
+        .select("query_id", "corpus_id", round_to("_cos", 4))
+        .collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "key", ["q_similarity_join", "q_similarity_join_fast"]
+)
+def test_similarity_join_first_band_rule(spark, tmp_path, key):
+    """Each colliding pair is emitted once, at its lowest colliding
+    band: a corpus copy of a query collides in all 8 bands and appears
+    once at cosine 1.0; a pair colliding only in the last band is still
+    found; and the whole output equals a join of the exploded bucket
+    rows deduplicated afterwards."""
+    rows = _planted_embeddings()
+    sf = _write_embeddings(spark, tmp_path, rows)
+    got = sorted(
+        tuple(r) for r in entry_mod.queries()[key](spark, sf).collect()
+    )
+    pairs = [(q, c) for q, c, _ in got]
+    assert len(pairs) == len(set(pairs))
+    assert [r for r in got if r[:2] == (0, 1)] == [(0, 1, 1.0)]
+    assert [r[:2] for r in got if r[:2] == (10, 11)] == [(10, 11)]
+    assert got == _reference_join(spark, sf)
+    assert len(got) > 2
+
+
+@pytest.mark.parametrize(
+    "key", ["q_similarity_join", "q_similarity_join_fast"]
+)
+@pytest.mark.parametrize("only", ["corpus", "queries"])
+def test_similarity_join_one_sided_input_is_empty(spark, tmp_path, key, only):
+    """With no query rows, or with nothing but query rows, the join
+    returns no row and raises nothing."""
+    from reactor_window_like_flink_spark.llm.similarity import (
+        SIMJOIN_QUERY_MOD,
+    )
+
+    rows = [
+        (i, v) for i, v in _planted_embeddings()
+        if (i % SIMJOIN_QUERY_MOD == 0) == (only == "queries")
+    ]
+    assert rows
+    sf = _write_embeddings(spark, tmp_path, rows)
+    assert entry_mod.queries()[key](spark, sf).collect() == []
 
 
 def test_knn_graph_default_sizes_bands_jointly_and_warns_when_clamped(spark):
